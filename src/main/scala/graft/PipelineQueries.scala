@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.pipeline.Etl
+import graft.schemas.Schemas
 import graft.sinks.ParquetSink
 
 /** Star-pipeline queries (E1: S4–S6, P3, O1): run the full drop → create →
@@ -23,10 +24,11 @@ object PipelineQueries {
   }
 
   /** Full readback of the materialized songplay parquet — hashes the actual
-    * bytes the sink wrote (join fanout, null dim keys, presort included). */
+    * bytes the sink wrote (join fanout, null dim keys, presort included).
+    * Read with the declared schema, so the read-back infers nothing. */
   val q14StarSongplay: Q = (s, d) => {
     Etl.run(s, d)
-    new ParquetSink(Etl.starRoot(d)).read(s, "songplay")
+    new ParquetSink(Etl.starRoot(d)).read(s, "songplay", Schemas.songplay)
   }
 
   /** q233: in-flight audit metrics — A5 (the reference's five count(*)

@@ -14,9 +14,8 @@ import org.apache.spark.sql.functions._
   * jobs are the scheduler round-trips an iterative loop pays per round —
   * on a busy 1000-executor cluster each is real latency, which is why the
   * loop's budget is pinned (OperationalSpec) and measured here, not
-  * guessed. Listener delivery is async; the probe sleeps briefly after the
-  * run so the counter has settled (a fixed 2 s is far beyond bus drain
-  * time for tens of events).
+  * guessed. Listener delivery is async; the probe drains the listener bus
+  * after the run so the counter has settled.
   *
   * Usage: `runMain graft.StarJobsProbe [sfDir]` (default sf0.1).
   */
@@ -53,7 +52,7 @@ object StarJobsProbe {
         adaptiveLoop = false) // match q191's production call (r18 opt)
     labels.write.format("noop").mode("overwrite").save()
     val sec = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(2000) // let the listener bus drain (async delivery)
+    org.apache.spark.sql.graftshim.GraftSqlShim.drainListenerBus(spark.sparkContext)
     spark.sparkContext.removeSparkListener(listener)
     println(s"""{"sf":"$sfDir","rounds":$rounds,"jobs":${jobs.get},""" +
       f""""sec":$sec%.3f}""")

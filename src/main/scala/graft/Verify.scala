@@ -1,7 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (`tools/check_oracle.py`).
+  * Also writes attempted.txt (every name tried, one per line) and
+  * failures.txt (each name that threw, tab, its message), so a query that
+  * throws is a listed failure rather than a silently missing dump. The exit
+  * status does not depend on failures. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -16,15 +20,21 @@ object Verify {
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    val attempted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failures = attempted.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(s"$name\t${String.valueOf(e.getMessage).replaceAll("\\s+", " ")}")
       }
     }
+    def lines(xs: Seq[String]): String = xs.map(_ + "\n").mkString
+    Files.writeString(Paths.get(s"$outDir/attempted.txt"), lines(attempted.map(_._1)))
+    Files.writeString(Paths.get(s"$outDir/failures.txt"), lines(failures))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -3,7 +3,7 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
-import scala.concurrent.{Await, Future}
+import scala.concurrent.{Await, Future, blocking}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
@@ -28,9 +28,12 @@ import graft.sources.{Fixtures, JsonSource}
   * `diststyle all`, README.md:73-75 — ~15k rows in the reference), so the
   * event stream never shuffles; the dims are full-tuple DISTINCTs (keyed
   * shuffles on low-cardinality outputs); nothing collects to the driver.
-  * The whole pipeline is 5 independent lazy plans over 2 shared staged
-  * scans — on a cluster these run as separate jobs against cached staging
-  * or (as here) re-scan; either way each is a single shuffle stage.
+  * The whole pipeline is 5 independent lazy plans over 2 materialized
+  * staging tables. Every read-back carries its schema (the frame just
+  * written, or [[Schemas.star]]), so no read pays an inference job. A cold
+  * build schedules 14 Spark jobs: one per staging write, two per insert (the
+  * DISTINCT's shuffle-map stage or songplay's broadcast, then the write),
+  * and two for the validation count (its one exchange, then the result).
   */
 object Etl {
 
@@ -152,18 +155,16 @@ object Etl {
     * only after EVERY sibling has finished. Rethrowing while other writes
     * are still in flight would let a retried runOnce re-enter the drop
     * phase racing live writers to the same output dirs; draining first
-    * guarantees nothing is running when the failure escapes. */
-  private def awaitAll(jobs: Future[Unit]*): Unit =
-    throwAll(jobs.flatMap(j =>
-      Await.ready(j, Duration.Inf).value.get.failed.toOption))
-
-  /** One exception escapes; the siblings ride along as suppressed so a
-    * multi-write failure keeps every diagnostic, not just the first.
-    * No-op on an empty list. */
-  private def throwAll(failures: Seq[Throwable]): Unit =
-    failures.headOption.foreach { first =>
-      failures.drop(1).filter(_ ne first).foreach(first.addSuppressed)
-      throw first
+    * guarantees nothing is running when the failure escapes. One exception
+    * escapes; the siblings ride along as suppressed so a multi-write failure
+    * keeps every diagnostic. A staging failure reaches each dependent insert
+    * as the same instance, so duplicates collapse (Throwable equality is
+    * identity). */
+  private def awaitAll(jobs: Future[_]*): Unit =
+    jobs.flatMap(j => Await.ready(j, Duration.Inf).value.get.failed.toOption)
+      .distinct match {
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
+      case _ => ()
     }
 
   /** Drop the in-process memo for `sfDir` so the next [[run]] measures a
@@ -208,67 +209,58 @@ object Etl {
     (staging ++ tables).foreach(sink.drop)        // S4: idempotent drop ×7
 
     // The pipeline is a dependency DAG, not a statement list: each insert
-    // launches the moment its staging input MATERIALIZES, instead of
+    // launches the moment its own staging inputs MATERIALIZE, instead of
     // waiting behind a global stage-then-insert barrier. (Redshift
     // serializes the reference's statement list — sql_queries.py:197 —
     // because one leader runs it; results are order-independent, and on a
     // 1000-executor cluster every artificial barrier idles the pool.)
     //
-    //   stage_events ──┬─▶ users, time, songplay(+songs staging)
+    //   stage_events ──┬─▶ users, time
+    //                  ├─▶ songplay
     //   stage_songs ───┴─▶ songs, artists
     //
     // S1/S2 stay the COPY semantic (sql_queries.py:121-128): each staging
     // table is physically materialized columnar BEFORE any insert reads
-    // it — one JSON parse total, inserts read pruned parquet.
-    val evF = Future {
-      sink.write(stageEvents(spark, sfDir), "staging_events")
-      sink.read(spark, "staging_events")
+    // it — one JSON parse total, inserts read pruned parquet. The read-back
+    // takes the written frame's schema, so it schedules no job. Staging
+    // tables are addressable by name for the pipeline's duration, like the
+    // reference's staging_events/staging_songs (sql_queries.py:28-64).
+    def stage(table: String, staged: => DataFrame): Future[DataFrame] = Future {
+      val frame = staged
+      blocking(sink.write(frame, table))
+      val df = sink.read(spark, table, frame.schema)
+      df.createOrReplaceTempView(table)
+      df
     }
-    val sgF = Future {
-      sink.write(stageSongs(spark, sfDir), "staging_songs")
-      sink.read(spark, "staging_songs")
-    }
-    // song-side inserts start as soon as staging_songs lands (typically
-    // while the larger events COPY is still parsing)
-    val songSideF = sgF.map { sg =>
-      awaitAll(
-        Future(sink.write(songs(sg),   "songs",   Schemas.sortKeys.get("songs"))),
-        Future(sink.write(artists(sg), "artists", Schemas.sortKeys.get("artists"))))
-    }
-    // Same drain discipline as awaitAll: if a staging COPY fails, the
-    // sibling staging future AND the detached song-side writes must land
-    // before the exception escapes — a retry must never race live writers.
-    // On the happy path songSideF is NOT awaited here: it keeps running
-    // concurrently with the event-side inserts (the final awaitAll joins it).
-    val staged = Seq(evF, sgF).map(f => Await.ready(f, Duration.Inf).value.get)
-    if (staged.exists(_.isFailure)) {
-      val drained = Await.ready(songSideF, Duration.Inf).value.get
-      throwAll(staged.flatMap(_.failed.toOption) ++ drained.failed.toOption)
-    }
-    val ev = staged(0).get
-    val sg = staged(1).get
-    // Staging tables are addressable by name for the pipeline's duration,
-    // like the reference's staging_events/staging_songs (sql_queries.py:28-64).
-    ev.createOrReplaceTempView("staging_events")
-    sg.createOrReplaceTempView("staging_songs")
-    // event-side inserts (S6, each with its sortkey presort O1)
-    awaitAll(
-      Future(sink.write(songplay(ev, sg), "songplay", Schemas.sortKeys.get("songplay"))),
-      Future(sink.write(users(ev),        "users",    Schemas.sortKeys.get("users"))),
-      Future(sink.write(time(ev),         "time",     Schemas.sortKeys.get("time"))),
-      songSideF)
+    // S6: each insert with its sortkey presort O1. `blocking` lets the pool
+    // grow past its core count, so all five writes can be in flight at once.
+    def insert(table: String, df: DataFrame): Unit =
+      blocking(sink.write(df, table, Schemas.sortKeys.get(table)))
+    val evF = stage("staging_events", stageEvents(spark, sfDir))
+    val sgF = stage("staging_songs", stageSongs(spark, sfDir))
+    // One await joins everything: a failed staging COPY fails its dependent
+    // inserts without running them, and every other write drains first.
+    awaitAll(evF, sgF,
+      evF.map(ev => insert("users", users(ev))),
+      evF.map(ev => insert("time", time(ev))),
+      sgF.map(sg => insert("songs", songs(sg))),
+      sgF.map(sg => insert("artists", artists(sg))),
+      evF.zip(sgF).map { case (ev, sg) => insert("songplay", songplay(ev, sg)) })
 
     // S8: drop staging (sql_queries.py:198, etl.py:31-34) — the materialized
     // staging parquet goes away with the temp views, like the reference's
     // post-ETL staging drop.
     staging.foreach { t => spark.catalog.dropTempView(t); sink.drop(t) }
-    // The reference's five count(*) validation queries, as ONE union job
-    // (per-table counts still come from the materialized files). A grouped
-    // count over an empty table yields NO row — restore the 0 explicitly so
-    // an empty table reports 0 instead of vanishing from the map.
+    // The reference's five count(*) validation queries, as ONE aggregate
+    // over the union of the five declared-schema reads: one exchange, so
+    // two jobs (the shuffle-map stage, then the result). Per-table counts
+    // still come from the materialized files. A grouped count over an empty
+    // table yields NO row — restore the 0 explicitly so an empty table
+    // reports 0 instead of vanishing from the map.
     val counted = tables
-      .map(t => sink.read(spark, t).select(lit(t).as("t")).groupBy("t").count())
+      .map(t => sink.read(spark, t, Schemas.star(t)).select(lit(t).as("t")))
       .reduce(_ union _)
+      .groupBy("t").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     tables.map(t => t -> counted.getOrElse(t, 0L)).toMap
   }

@@ -127,6 +127,15 @@ object Schemas {
     StructField("month", IntegerType),
     StructField("year", IntegerType)))
 
+  /** The five star tables by name — the schemas the pipeline writes and
+    * reads back with, so a validation read never infers. */
+  val star: Map[String, StructType] = Map(
+    "songplay" -> songplay,
+    "users"    -> users,
+    "songs"    -> songs,
+    "artists"  -> artists,
+    "time"     -> time)
+
   /** Per-table sortkey (sql_queries.py:68,81,90,100,110; README.md:79-89) —
     * applied as a `sortWithinPartitions` presort before every write (O1). */
   val sortKeys: Map[String, String] = Map(

@@ -56,6 +56,14 @@ final class ParquetSink(root: String) extends TableSink {
   override def drop(table: String): Unit =
     graft.operators.Scale.deleteRecursively(Paths.get(path(table)))
 
+  /** Read `table` back with its declared schema: no inference job, and
+    * the plan is fixed before any file is opened. */
+  def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path(table))
+
+  /** Schema-inferring read: one Spark job per call to read the file
+    * footers. The pipeline never uses it; perfbench's layer decomposition
+    * (`perfbench/src/perfbench/Layers.scala`) still calls it. */
   def read(spark: SparkSession, table: String): DataFrame =
     spark.read.parquet(path(table))
 }

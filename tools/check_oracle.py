@@ -7,6 +7,10 @@ Reads each <verify_out_dir>/<name>/ parquet (written by graft.Verify),
 runs the matching SQL from oracle_sql.json in DuckDB against the sf_dir
 parquet tables, and compares: row count, column names, and a hash of the
 value matrix with columns sorted by name and rows sorted.
+
+When Verify's attempted.txt is present, every attempted name without a dump
+directory is a FAIL ("no dump"), with its message from failures.txt if the
+query threw.
 """
 import sys, json, glob, os
 import duckdb
@@ -56,6 +60,17 @@ def main(out_dir: str, sf_dir: str) -> int:
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(os.path.join(out_dir, d)))
     n_pass = n_fail = n_weak = 0
+    attempted_txt = os.path.join(out_dir, "attempted.txt")
+    if os.path.exists(attempted_txt):
+        threw = {}
+        failures_txt = os.path.join(out_dir, "failures.txt")
+        if os.path.exists(failures_txt):
+            for line in open(failures_txt).read().splitlines():
+                name, _, msg = line.partition("\t")
+                threw[name] = msg
+        for name in sorted(set(open(attempted_txt).read().split()) - set(names)):
+            print(f"✗ {name}: no dump" + (f" (threw: {threw[name]})" if name in threw else ""))
+            n_fail += 1
     for name in names:
         files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
         got = pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame()
