@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** A/B evidence for the native AS-OF JOIN (q256): the SAME point-in-time
   * lookup, run through the composable union+window formulation (q50's —
@@ -62,13 +63,13 @@ object AsofEvidence {
       // drain the bus BEFORE the first reset too: the checksum/count
       // queries that ran just before measure() still have task-end
       // events in flight, and they must not inflate iteration 1
-      Thread.sleep(1000)
+      GraftSqlShim.drainListenerBus(spark.sparkContext)
       for (_ <- 1 to iters) {
         shuffleRecords.set(0); shuffleBytes.set(0)
         val t0 = System.nanoTime()
         mk().write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(1000) // listener bus drain, before the counter reads
+        GraftSqlShim.drainListenerBus(spark.sparkContext) // before the counter reads
         if (sec < best._1) best = (sec, shuffleRecords.get, shuffleBytes.get)
       }
       best

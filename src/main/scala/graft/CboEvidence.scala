@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 import graft.operators.Scale
 
@@ -95,13 +96,13 @@ object CboEvidence {
         var best = Double.MaxValue
         var recs = 0L
         for (_ <- 1 to iters) {
-          Thread.sleep(500) // listener bus drain before the reset
+          GraftSqlShim.drainListenerBus(spark.sparkContext) // before the reset
           shuffleRecords.set(0)
           val t0 = System.nanoTime()
           ScaleQueries.q239Agg(spark, sf, dim)
             .write.format("noop").mode("overwrite").save()
           val sec = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(500) // and after, so the counter has settled
+          GraftSqlShim.drainListenerBus(spark.sparkContext) // and after, so the counter has settled
           if (sec < best) best = sec
           recs = math.max(recs, shuffleRecords.get) // stable across iters
         }
@@ -161,13 +162,13 @@ object CboEvidence {
         var best = Double.MaxValue
         var recs = 0L
         for (_ <- 1 to iters) {
-          Thread.sleep(500)
+          GraftSqlShim.drainListenerBus(spark.sparkContext)
           shuffleRecords.set(0)
           val t0 = System.nanoTime()
           ScaleQueries.q243Join(spark, sf)
             .write.format("noop").mode("overwrite").save()
           val sec = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(500)
+          GraftSqlShim.drainListenerBus(spark.sparkContext)
           best = math.min(best, sec)
           recs = math.max(recs, shuffleRecords.get)
         }

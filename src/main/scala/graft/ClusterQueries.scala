@@ -27,24 +27,17 @@ object ClusterQueries {
   private[graft] val DIM = 64
   private val SCALE = 1000000.0
 
-  /** 0.0-seeded left-fold squared L2 in element order (the q76 contract);
-    * native fused expression when registered, HOF fallback otherwise. */
-  private def dist2For(s: SparkSession)(a: Column, b: Column): Column =
-    if (s.catalog.functionExists("l2_sq"))
-      call_function("l2_sq", a, b.cast("array<double>"))
-    else
-      aggregate(
-        zip_with(a, b.cast("array<double>"), (x, y) =>
-          (x.cast(DoubleType) - y) * (x.cast(DoubleType) - y)),
-        lit(0.0), (acc, v) => acc + v)
+  /** 0.0-seeded left-fold squared L2 in element order (the q76 contract),
+    * as the native fused expression. */
+  private def dist2(a: Column, b: Column): Column =
+    GraftExtensions.call("l2_sq", a, b.cast("array<double>"))
 
   /** Nearest-centroid assignment: broadcast the K-row centroid table,
     * argmin via min(struct(dist, cluster)) — an algebraic aggregate with
     * map-side partials and the oracle's (dist, cluster) tie-break. The
     * corpus side never shuffles raw vectors: the exchange carries one
     * partial minimum per (vec_id, task). */
-  private def assign(s: SparkSession, vectors: DataFrame, cents: DataFrame): DataFrame = {
-    val dist2 = dist2For(s) _
+  private def assign(vectors: DataFrame, cents: DataFrame): DataFrame =
     vectors.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("embedding"),
         struct(dist2(col("embedding"), col("cent")).as("dist"), col("cluster")).as("dc"))
@@ -52,7 +45,6 @@ object ClusterQueries {
       .agg(min(col("dc")).as("best"), first(col("embedding")).as("embedding"))
       .select(col("vec_id"), col("embedding"),
         col("best.cluster").as("cluster"), col("best.dist").as("dist2"))
-  }
 
   /** Fixed-point centroid refinement: per-(cluster, dim) BIGINT sums of
     * floor(x·1e6), rebuilt into ordered double arrays at K rows. ONE keyed
@@ -86,8 +78,8 @@ object ClusterQueries {
     val seeds = vectors.filter(col("vec_id") < K)
       .select(col("vec_id").cast(IntegerType).as("cluster"),
         col("embedding").cast("array<double>").as("cent"))
-    val refined = refine(assign(s, vectors, seeds))
-    assign(s, vectors, refined)
+    val refined = refine(assign(vectors, seeds))
+    assign(vectors, refined)
   }
 
   val q81Kmeans: Q = (s, d) =>
@@ -143,7 +135,6 @@ object ClusterQueries {
   private[graft] val SEM_TAU = 0.42
 
   val q99SemDedup: Q = (s, d) => {
-    val cos = SimilarityQueries.cosineFnFor(s)
     val asg = finalAssignment(s, d)
     val a = asg.select(col("cluster"), col("vec_id").as("a_id"),
       col("embedding").as("a_emb"))
@@ -151,7 +142,7 @@ object ClusterQueries {
       col("embedding").as("b_emb"))
     val dups = a.join(b, Seq("cluster"))
       .filter(col("a_id") < col("b_id"))
-      .filter(cos(col("a_emb"), col("b_emb")) >= SEM_TAU)
+      .filter(GraftExtensions.call("cosine_sim", col("a_emb"), col("b_emb")) >= SEM_TAU)
       .groupBy(col("b_id")).agg(min(col("a_id")).as("dup_of"))
       .withColumnRenamed("b_id", "vec_id")
     asg.select(col("vec_id"), col("cluster"))
@@ -179,10 +170,10 @@ object ClusterQueries {
       .select(col("vec_id").cast(IntegerType).as("cluster"),
         col("embedding").cast("array<double>").as("cent"))
     val ckpt = Scale.writeOnce(
-      refine(assign(s, vectors, seeds)),
+      refine(assign(vectors, seeds)),
       s"graft_kmeans_ckpt_${ScaleQueries.sfTag(d)}",
       Scale.dirFingerprint(s"$d/embeddings.parquet"))
-    assign(s, vectors, s.read.parquet(ckpt))
+    assign(vectors, s.read.parquet(ckpt))
       .select(col("vec_id"), col("cluster"), col("dist2"))
   }
 

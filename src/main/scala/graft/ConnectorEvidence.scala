@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 import graft.sources.SeriesSource
 
@@ -99,11 +100,11 @@ object ConnectorEvidence {
         val j = leg("a").join(leg("b"),
           col("aid") === col("bid") && col("aslice") === col("bslice"))
           .agg(count(lit(1)))
-        Thread.sleep(1000)
+        GraftSqlShim.drainListenerBus(spark.sparkContext)
         shuffleRecords.set(0)
         val n = j.head().getLong(0)
         require(n == 1000000L, s"SPJ answer wrong: $n")
-        Thread.sleep(1000)
+        GraftSqlShim.drainListenerBus(spark.sparkContext)
         shuffleRecords.get
       }
       val off = run()

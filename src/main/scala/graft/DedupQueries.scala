@@ -53,8 +53,7 @@ object DedupQueries {
     (0 until ND_BANDS).map(b => Similarity.mdGrid(s"nd$b", ND_PLANES, 64))
 
   val q35DedupEmbedding: Q = (s, d) =>
-    Dedup.cosineNearDupPairs(Tables.embeddings(s, d), ND_TAU, ndGrids,
-      SimilarityQueries.cosineFnFor(s))
+    Dedup.cosineNearDupPairs(Tables.embeddings(s, d), ND_TAU, ndGrids)
 
   /** q44: duplicate-cluster resolution — connected components over the
     * q21 MinHash/LSH verified pairs, labeling EVERY document with its
@@ -115,15 +114,15 @@ object DedupQueries {
     * follow integer-exactly. Chunking is per-row column arithmetic — zero
     * shuffles; the cut array materializes ONCE per doc behind the
     * q84/q86 nondeterministic fence. */
-  private val CDC_W = 4
-  private val CDC_MASK = 64
+  private[graft] val CDC_W = 4
+  private[graft] val CDC_MASK = 64
 
   val q110CdcChunks: Q = (s, d) =>
-    cdcChunks(Tables.documentsDistributed(s, d), s)
+    cdcChunks(Tables.documentsDistributed(s, d))
 
-  /** The composable cut scan — the fallback on vanilla sessions, and the
-    * definition the native `cdc_cuts` expression must reproduce
-    * bit-for-bit (FallbackSpec pins the equality). */
+  /** The composable cut scan — the definition the native `cdc_cuts`
+    * expression must reproduce bit-for-bit (ExprEquivalenceSpec pins the
+    * equality). */
   private[graft] def cdcCutsComposable: org.apache.spark.sql.Column = {
     import org.apache.spark.sql.types.LongType
     // boundary candidates W..len (guard: sequence() auto-steps DOWN when
@@ -141,12 +140,8 @@ object DedupQueries {
   /** The chunker over any (doc_id, text) frame — OperationalSpec drives it
     * with an edited twin to pin the boundary-locality property (a prefix
     * edit must leave suffix chunk digests intact). */
-  private[graft] def cdcChunks(docs: org.apache.spark.sql.DataFrame,
-                               s: org.apache.spark.sql.SparkSession) = {
-    val cuts =
-      if (s.catalog.functionExists("cdc_cuts"))
-        call_function("cdc_cuts", col("text"), lit(CDC_W), lit(CDC_MASK))
-      else cdcCutsComposable
+  private[graft] def cdcChunks(docs: org.apache.spark.sql.DataFrame) = {
+    val cuts = GraftExtensions.call("cdc_cuts", col("text"), lit(CDC_W), lit(CDC_MASK))
     val bounds = zip_with(
       col("cuts"),
       slice(col("cuts"), lit(2), size(col("cuts"))), // one shorter: tail hi null

@@ -1,23 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 import graft.functions.{CdcCutsExpr, CharClassCountsExpr, CosineSimilarity, DotFD, HashedShinglesExpr, HilbertIndexExpr, JaccardSimilarity, L2SquaredDistance, LshBandKeysExpr, MinHash60Expr, MinMd5Shingle60Expr, SimHash60Expr, SubstrCountExpr}
 
 /** Engine extension point (the public `SparkSessionExtensions` API):
-  * registers the native expressions so SQL and `call_function` can reach
-  * them, the materialized-view rewrite rule
+  * registers the native expressions so SQL callers can reach them, the
+  * materialized-view rewrite rule
   * ([[graft.plans.MvRewriteRule]]) into the operator-optimization
   * fixpoint — inert (a registry-emptiness check) unless a query scope
   * registers an MV — and the AS-OF JOIN planner strategy
   * ([[graft.plans.AsofJoinStrategy]]), inert unless a plan contains
   * [[graft.plans.AsofJoinPlan]]. Installed by [[GraftSession]] via
-  * `spark.sql.extensions`; any session built elsewhere simply falls back
-  * to the composable built-in implementations (see SimilarityQueries'
-  * guard) and to direct scans (the MV rule never installed means every
-  * aggregate reads its source — correct, just unaccelerated). */
+  * `spark.sql.extensions`. Operators never depend on the registrations:
+  * they build the same expressions through [[GraftExtensions.call]], so a
+  * session built elsewhere plans them identically. Such a session loses
+  * SQL access to the functions, v2 view resolution, the MV rule (every
+  * aggregate reads its source — correct, just unaccelerated) and the
+  * AS-OF strategy (operators.Asof takes its composable formulation). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
@@ -42,8 +45,9 @@ object GraftExtensions {
       builder: Seq[Expression] => Expression): FunctionDescription =
     (new FunctionIdentifier(name), new ExpressionInfo(clazz.getName, null, name), builder)
 
-  /** The registrations, exposed so specs can drop/restore them to exercise
-    * the composable fallback paths vanilla sessions take. */
+  /** The one name → expression table: registered for SQL callers and
+    * applied directly by [[call]]. Exposed so specs can drop the
+    * registrations and show the operators do not need them. */
   val functions: Seq[FunctionDescription] = Seq(
     desc("cosine_sim", classOf[CosineSimilarity])(c => CosineSimilarity(c.head, c(1))),
     desc("l2_sq", classOf[L2SquaredDistance])(c => L2SquaredDistance(c.head, c(1))),
@@ -80,4 +84,13 @@ object GraftExtensions {
       classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain])(
       c => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
         c.head, c(1))))
+
+  private lazy val builders: Map[String, Seq[Expression] => Expression] =
+    functions.map { case (ident, _, builder) => ident.funcName -> builder }.toMap
+
+  /** `name`'s expression over `args`, built directly from [[functions]]:
+    * the DataFrame counterpart of `call_function(name, args*)` that needs
+    * no registry, so it plans the same in any session. */
+  def call(name: String, args: Column*): Column =
+    GraftSqlShim.column(builders(name)(args.map(GraftSqlShim.expression)))
 }

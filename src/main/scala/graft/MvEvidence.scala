@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** A/B evidence for the materialized-view rewrite family (q245–q247 scan
   * MVs, q249 join-aggregate MV): the SAME user-shaped reporting queries,
@@ -56,13 +57,13 @@ object MvEvidence {
       var recs = 0L
       var best = Double.MaxValue
       for (_ <- 1 to iters) {
-        Thread.sleep(500)
+        GraftSqlShim.drainListenerBus(spark.sparkContext)
         shuffleRecords.set(0)
         val df = q()
         val t0 = System.nanoTime()
         scanRows = Metrics.scannedRows(df).map(_._2).sum
         best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        Thread.sleep(500)
+        GraftSqlShim.drainListenerBus(spark.sparkContext)
         recs = math.max(recs, shuffleRecords.get)
       }
       // checksum once per arm, outside the timed iterations — it is the

@@ -681,13 +681,12 @@ object RetrievalQueries {
   val q98HybridRrf: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     val lex = q80Bm25(s, d).select(col("doc_id"), col("rank").as("lex_rank"))
-    val cos = SimilarityQueries.cosineFnFor(s)
     val qv = Tables.embeddings(s, d).filter(col("vec_id") === 0)
       .select(col("embedding").as("q_emb"))
     val vec = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(qv))
       .select(col("vec_id").as("doc_id"),
-        cos(col("q_emb"), col("embedding")).as("sim"))
+        GraftExtensions.call("cosine_sim", col("q_emb"), col("embedding")).as("sim"))
       .orderBy(col("sim").desc, col("doc_id")).limit(HYBRID_K)
       .withColumn("vec_rank", row_number().over(
         Window.orderBy(col("sim").desc, col("doc_id"))).cast(LongType))

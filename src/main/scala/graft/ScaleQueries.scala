@@ -526,11 +526,11 @@ object ScaleQueries {
     * write-once discipline, same one range exchange paid at build, same
     * 2-D range probe; the gate pins the h arithmetic (an unrolled CTE
     * chain in the oracle — [[graft.operators.Scale.hilbert2Ctes]]) and
-    * that the layout never changes the data. The fold-based expression
-    * keeps the plan linear in bits; OperationalSpec proves adjacency and
-    * bijectivity exhaustively and pins the fold to the JVM reference. */
+    * that the layout never changes the data. OperationalSpec proves
+    * adjacency and bijectivity exhaustively and pins the native expression
+    * to the JVM reference. */
   val q205HilbertLayout: Q = (s, d) => {
-    val h = Scale.hilbert2For(s)(col("user_id"),
+    val h = Scale.hilbert2(col("user_id"),
       floor(col("value")).cast(org.apache.spark.sql.types.LongType), Z_BITS)
     val dir = Scale.writeOnce(
       Tables.events(s, d).select(col("event_id"), col("user_id"), col("value"))
@@ -538,9 +538,8 @@ object ScaleQueries {
         .repartitionByRange(8, col("h"))
         .sortWithinPartitions(col("h")),
       s"graft_events_h_${sfTag(d)}",
-      // native and fold paths are value-identical (FallbackSpec), so the
-      // fingerprint carries an explicit algorithm version, not the
-      // Column's identity — switching paths must NOT rebuild the layout
+      // the fingerprint carries an explicit algorithm version, not the
+      // Column's identity: only a change of the h VALUES may rebuild
       Scale.dirFingerprint(s"$d/events.parquet") + s"|h=hilbert2/v2/b=$Z_BITS")
     s.read.parquet(dir)
       .filter(col("user_id").between(10, 40) && col("value").between(5.0, 10.0))

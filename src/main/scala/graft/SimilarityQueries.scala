@@ -25,16 +25,6 @@ object SimilarityQueries {
   private def queriesOf(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.embeddings(s, d).filter(col("vec_id") < 8)
 
-  /** Prefer the native fused-loop expression (registered by
-    * [[GraftExtensions]]; bit-identical to the composable fold — see
-    * CosineSimilarity's scaladoc) and fall back to the built-in
-    * higher-order-function version on sessions without the extension. */
-  private[graft] def cosineFnFor(s: org.apache.spark.sql.SparkSession) =
-    if (s.catalog.functionExists("cosine_sim"))
-      (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-        call_function("cosine_sim", a, b)
-    else Similarity.cosine _
-
   /** q23: exact cosine top-k, in the scale shape — the typed partial top-k
     * Aggregator ([[graft.functions.TopKAgg]]): each map task keeps only its
     * local k best per query, so the aggregation exchange carries ≤ k rows
@@ -46,11 +36,10 @@ object SimilarityQueries {
     aggregatedTopK(s, d)
 
   val q24AnnLsh: Q = (s, d) =>
-    Similarity.lshTopK(Tables.embeddings(s, d), queriesOf(s, d), K_ANN, grid, cosineFnFor(s))
+    Similarity.lshTopK(Tables.embeddings(s, d), queriesOf(s, d), K_ANN, grid)
 
   val q33AnnIvf: Q = (s, d) =>
-    Similarity.ivfTopK(Tables.embeddings(s, d), queriesOf(s, d), K_ANN, cents,
-      NPROBE, cosineFnFor(s))
+    Similarity.ivfTopK(Tables.embeddings(s, d), queriesOf(s, d), K_ANN, cents, NPROBE)
 
   /** q52: q33's IVF over a cell-partitioned corpus layout — the probe's
     * cell join dynamically prunes the partitioned scan to the probed
@@ -78,21 +67,19 @@ object SimilarityQueries {
           graft.operators.Scale.dirFingerprint(s"$d/embeddings.parquet") +
             s"|cents=$centsSig")
         s.read.parquet(dir)
-      },
-      cosineFnFor(s))
+      })
 
   /** The shared bounded-shuffle formulation behind q23 (see its scaladoc). */
   private def aggregatedTopK(s: org.apache.spark.sql.SparkSession, d: String) = {
     import org.apache.spark.sql.functions.udaf
     val vectors = Tables.embeddings(s, d)
     val queries = queriesOf(s, d)
-    val cos = cosineFnFor(s)
     val scored = vectors.as("v").join(broadcast(queries.as("q")),
         col("q.vec_id") =!= col("v.vec_id"))
       .select(
         col("q.vec_id").as("query_id"),
         col("v.vec_id").as("neighbor_id"),
-        cos(col("q.embedding"), col("v.embedding")).as("sim"))
+        GraftExtensions.call("cosine_sim", col("q.embedding"), col("v.embedding")).as("sim"))
     val topk = udaf(graft.functions.TopKAgg.topK(K_BRUTE))
     scored.groupBy(col("query_id"))
       .agg(topk(col("neighbor_id"), col("sim")).as("top"))
@@ -109,7 +96,7 @@ object SimilarityQueries {
     * exact answer: the oracle is the SAME SQL, so the bounded Aggregator
     * can never silently drift from the reference semantics. */
   val q34TopkWindowTwin: Q = (s, d) =>
-    Similarity.bruteForceTopK(Tables.embeddings(s, d), queriesOf(s, d), K_BRUTE, cosineFnFor(s))
+    Similarity.bruteForceTopK(Tables.embeddings(s, d), queriesOf(s, d), K_BRUTE)
 
   /** q69: scalar int8 quantization of the embedding column — per-vector
     * min/max affine codes in [0,255], the compression step every
@@ -151,26 +138,12 @@ object SimilarityQueries {
     * aggregate with map-side partials and a deterministic (dist, k)
     * lexicographic tie-break (the oracle's ORDER BY dist, k). ONE keyed
     * shuffle of (vec_id, m) partial minima — linear in vectors, scale-free
-    * in K·M. Distances run through the fused native l2_sq when registered
-    * (bit-identical fold — see L2SquaredDistance), the zip_with/aggregate
-    * HOF otherwise. OperationalSpec bounds the reconstruction quality
-    * against q23's exact cosine ranking. */
+    * in K·M. Distances run through the fused native l2_sq (a fixed-order
+    * left fold — see L2SquaredDistance). OperationalSpec bounds the
+    * reconstruction quality against q23's exact cosine ranking. */
   private[graft] val PQ_M = 8
   private[graft] val PQ_SUBDIM = 8
   private[graft] val PQ_K = 16
-
-  private def dist2For(s: org.apache.spark.sql.SparkSession)(
-      a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    if (s.catalog.functionExists("l2_sq"))
-      call_function("l2_sq", a, b.cast("array<double>"))
-    else
-      aggregate(
-        zip_with(a, b, (x, y) =>
-          (x.cast(org.apache.spark.sql.types.DoubleType) -
-            y.cast(org.apache.spark.sql.types.DoubleType)) *
-            (x.cast(org.apache.spark.sql.types.DoubleType) -
-              y.cast(org.apache.spark.sql.types.DoubleType))),
-        lit(0.0), (acc, v) => acc + v)
 
   /** (vec_id, m, sv): the M subvectors of every embedding, exploded. */
   private[graft] def pqSubvectors(s: org.apache.spark.sql.SparkSession, d: String) =
@@ -186,16 +159,15 @@ object SimilarityQueries {
       .select(col("vec_id").cast(org.apache.spark.sql.types.IntegerType).as("k"),
         col("m"), col("sv").as("cent"))
 
-  val q76PqCodes: Q = (s, d) => {
-    val dist2 = dist2For(s) _
+  val q76PqCodes: Q = (s, d) =>
     pqSubvectors(s, d)
       .join(broadcast(pqCodebook(s, d)), Seq("m"))
       .select(col("vec_id"), col("m"),
-        struct(dist2(col("sv"), col("cent")).as("dist"), col("k")).as("dk"))
+        struct(GraftExtensions.call("l2_sq", col("sv"), col("cent").cast("array<double>"))
+          .as("dist"), col("k")).as("dk"))
       .groupBy(col("vec_id"), col("m"))
       .agg(min(col("dk")).as("best"))
       .select(col("vec_id"), col("m"), col("best.k").as("code"))
-  }
 
   /** q79: IVF-PQ search — the q33 (coarse cells) × q76 (PQ codes)
     * composition, i.e. the modern ANN index end-to-end: probe nprobe
@@ -210,8 +182,7 @@ object SimilarityQueries {
 
   val q79AnnIvfPq: Q = (s, d) =>
     Similarity.ivfPqTopK(Tables.embeddings(s, d), queriesOf(s, d), K_ANN,
-      cents, NPROBE, PQ_SHORTLIST, q76PqCodes(s, d), pqCodebook(s, d),
-      cosineFnFor(s))
+      cents, NPROBE, PQ_SHORTLIST, q76PqCodes(s, d), pqCodebook(s, d))
 
   /** q107: ANN recall audit — recall@k of each approximate index (q24's
     * banded LSH, q33's IVF) against the q23 exact ranking, per query and
@@ -290,8 +261,8 @@ object SimilarityQueries {
     * on these vectors): q107 audits the INDEX's recall, q212 audits the
     * SPACE's label coherence.
     *
-    * Determinism: similarities are q23's exact cosine fold (one shared
-    * expression tree, native or fallback — bit-identical either way);
+    * Determinism: similarities are q23's exact cosine fold (the same
+    * native expression);
     * the k-neighbor cut ranks by the TOTAL order (sim desc, train id);
     * the vote breaks count ties by smaller label — every choice is a
     * declared total order the oracle replays.
@@ -303,7 +274,6 @@ object SimilarityQueries {
     * pairing swaps for q33's IVF candidates — the vote stage is
     * unchanged. */
   val q212KnnClassify: Q = (s, d) => {
-    val cos = cosineFnFor(s)
     val test = Tables.embeddings(s, d).filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("label").as("true_label"))
@@ -317,7 +287,7 @@ object SimilarityQueries {
     // runs at core width instead of one task per input row group
     val scored = train.join(broadcast(test), lit(true))
       .select(col("q_id"), col("true_label"), col("t_id"), col("t_label"),
-        cos(col("q_emb"), col("t_emb")).as("sim"))
+        GraftExtensions.call("cosine_sim", col("q_emb"), col("t_emb")).as("sim"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("t_id"))
     val nbrs = scored.withColumn("rn", row_number().over(w))

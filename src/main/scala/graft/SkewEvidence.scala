@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 import graft.operators.Scale
 
@@ -122,12 +123,12 @@ object SkewEvidence {
       var share = 0.0
       var hotRecords = 0L
       for (_ <- 1 to iters) {
-        Thread.sleep(500)
+        GraftSqlShim.drainListenerBus(spark.sparkContext)
         stageReads.clear()
         val t0 = System.nanoTime()
         build(probe, dim).write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // listener bus drain
+        GraftSqlShim.drainListenerBus(spark.sparkContext)
         if (sec < best) best = sec
         // the most skewed shuffle-read stage of this run: the one holding
         // the largest single-task read

@@ -121,18 +121,15 @@ object TextQueries {
     * identically), argmax with alphabetical tie-break, 'und' on zero
     * evidence. Single-pass, in-scan, shuffle-free. */
   /** Per-language summed trigram scores — q41 and q112 share this one
-    * definition. Fast path: the native fixed-substring counter (24 direct
-    * scans, no regex machinery); fallback: regexp_count — the profile
-    * n-grams are letters/spaces only, so the literal is metachar-free and
-    * the two counts are identical (FallbackSpec pins it; DuckDB's oracle
-    * uses the regexp form either way). */
-  private[graft] def ngramScores(s: org.apache.spark.sql.SparkSession): Seq[(String, Column)] = {
-    val cnt: String => Column =
-      if (s.catalog.functionExists("substr_count"))
-        g => call_function("substr_count", col("text"), lit(g))
-      else g => regexp_count(col("text"), lit(g))
-    charNgrams.map { case (code, ngs) => code -> ngs.map(cnt).reduce(_ + _) }
-  }
+    * definition: the native fixed-substring counter (24 direct scans, no
+    * regex machinery). The profile n-grams are letters/spaces only, so
+    * each count equals `regexp_count` on the same literal
+    * (ExprEquivalenceSpec pins it; DuckDB's oracle uses the regexp form). */
+  private[graft] def ngramScores: Seq[(String, Column)] =
+    charNgrams.map { case (code, ngs) =>
+      code -> ngs.map(g => GraftExtensions.call("substr_count", col("text"), lit(g)))
+        .reduce(_ + _)
+    }
 
   /** q112: classifier agreement matrix — q16's stopword language-ID and
     * q41's character-n-gram language-ID audited AGAINST EACH OTHER (and
@@ -151,7 +148,7 @@ object TextQueries {
     Tables.documentsDistributed(s, d)
       .select(col("lang"),
         argmaxLang(stopwordScores).as("pred_stop"),
-        argmaxLang(ngramScores(s)).as("pred_ngram"))
+        argmaxLang(ngramScores).as("pred_ngram"))
       .groupBy(col("pred_stop"), col("pred_ngram"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("lang") === col("pred_stop"), 1L).otherwise(0L))
@@ -179,7 +176,7 @@ object TextQueries {
   val q230CohensKappa: Q = (s, d) => {
     val preds = Tables.documentsDistributed(s, d)
       .select(argmaxLang(stopwordScores).as("r1"),
-        argmaxLang(ngramScores(s)).as("r2"))
+        argmaxLang(ngramScores).as("r2"))
       .localCheckpoint(true)
     val base = preds.agg(count(lit(1)).as("n_docs"),
       sum(when(col("r1") === col("r2"), 1L).otherwise(0L)).as("n_agree"))
@@ -198,7 +195,7 @@ object TextQueries {
   }
 
   val q41LangIdNgram: Q = (s, d) => {
-    val scores = ngramScores(s)
+    val scores = ngramScores
     val best = greatest(scores.map(_._2): _*)
     val predicted = argmaxLang(scores)
     // 24 regex scans per row: compute-dense → rebalance before scoring
@@ -224,24 +221,16 @@ object TextQueries {
   /** q18: document fingerprint — min 60-bit md5 hash over distinct 8-word
     * shingles (the min-hash member of a winnowing-style fingerprint family):
     * two documents sharing any 8-word run have a chance of colliding, equal
-    * fingerprints are a strong containment signal. Uses the native
-    * min_hash60 expression when registered (one digest pass per shingle);
-    * the interpreted HOF chain is the portable fallback — same value. */
+    * fingerprints are a strong containment signal. Shingle construction
+    * is fused into the digest loop (min_md5_shingle60: the md5 hash60 of
+    * every shingle string, minimized); the distinct count comes from the
+    * fused hashed-shingle set. */
   val q18Fingerprint: Q = (s, d) => {
     val w = TextOps.words(col("text"))
-    val sh = TextOps.wordShingles(w, 8)
-    // Fast path: shingle construction fused into the digest loop, distinct
-    // count via the fused hashed-shingle set; fallback: the HOF chain.
-    val (fp, nSh) =
-      if (s.catalog.functionExists("min_md5_shingle60"))
-        (call_function("min_md5_shingle60", w, lit(8)),
-          size(call_function("hashed_shingles", w, lit(8))))
-      else
-        (array_min(transform(sh, x => TextOps.hash60(x))), size(sh))
     Tables.documents(s, d).select(
       col("doc_id"),
-      fp.as("fingerprint"),
-      nSh.as("n_shingles"))
+      GraftExtensions.call("min_md5_shingle60", w, lit(8)).as("fingerprint"),
+      size(GraftExtensions.call("hashed_shingles", w, lit(8))).as("n_shingles"))
   }
 
   /** q19: 60-bit SimHash over word occurrences (term frequency included).
@@ -254,26 +243,12 @@ object TextQueries {
     * pair detector (q30). Aggregation output = safe to reference many
     * times downstream (pipeline barrier, no projection-collapse risk). */
   def simhashDf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (docs.sparkSession.catalog.functionExists("sim_hash60"))
-      // Fused native path: the whole fingerprint is one scalar projection —
-      // no explode to |tokens| rows, no 60-column aggregation, no shuffle.
-      // The isNotNull filter mirrors the explode path's presence semantics
-      // (a null token array contributes no row there).
-      docs.filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          call_function("sim_hash60", TextOps.words(col("text"))).as("simhash"))
-    else {
-      val exploded = docs
-        .select(col("doc_id"), explode(TextOps.words(col("text"))).as("w"))
-        .select(col("doc_id"), TextOps.hash60(col("w")).as("h"))
-      val votes = (0 until 60).map(b =>
-        sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1)).as(s"b$b"))
-      val grouped = exploded.groupBy(col("doc_id")).agg(votes.head, votes.tail: _*)
-      val simhash = (0 until 60)
-        .map(b => when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-        .reduce(_ + _)
-      grouped.select(col("doc_id"), simhash.as("simhash"))
-    }
+    // The whole fingerprint is one scalar projection — no explode to
+    // |tokens| rows, no 60-column aggregation, no shuffle. A NULL text has
+    // no tokens to vote, so it yields no row.
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"),
+        GraftExtensions.call("sim_hash60", TextOps.words(col("text"))).as("simhash"))
 
   val q19Simhash: Q = (s, d) => simhashDf(Tables.documentsDistributed(s, d))
 
@@ -323,12 +298,8 @@ object TextQueries {
     val w = TextOps.words(col("text"))
     val total3 = greatest(size(w) - 2, lit(1))
     // distinct count via the fused hashed-shingle set (one loop/doc; equal
-    // to the string-set count up to ~2^-64 collisions — q18's precedent);
-    // the interpreted string-shingle chain is the vanilla-session fallback
-    val distinct3 =
-      if (s.catalog.functionExists("hashed_shingles"))
-        size(call_function("hashed_shingles", w, lit(3)))
-      else size(TextOps.wordShingles(w, 3))
+    // to the string-set count up to ~2^-64 collisions — q18's precedent)
+    val distinct3 = size(GraftExtensions.call("hashed_shingles", w, lit(3)))
     val dupFrac = lit(1.0) - distinct3.cast(DoubleType) / total3.cast(DoubleType)
     Tables.documentsDistributed(s, d)
       .filter(col("text").isNotNull) // oracle and plan agree: no score for NULL text
@@ -749,25 +720,13 @@ object TextQueries {
     * engine's ln(2), for the same reason. */
   val q75CharEntropy: Q = (s, d) => {
     val n = length(col("text"))
-    // Fast path: the native char_class_counts expression — all six counts
-    // in ONE byte scan (value-identical to the regex definition, see its
-    // scaladoc; FallbackSpec pins it). Fallback: six regexp_replace
-    // passes, one per class. At test SF the query is scan/job-overhead
-    // bound either way (bench unchanged); the fused scan's win is
-    // per-text-byte CPU, which is what dominates at corpus scale.
-    val native = s.catalog.functionExists("char_class_counts")
-    val counts = call_function("char_class_counts", col("text"))
-    def cls(i: Int, pattern: String): Column =
-      if (native) element_at(counts, i + 1)
-      else n - length(regexp_replace(col("text"), pattern, ""))
-    val cLower = cls(0, "[a-z]")
-    val cUpper = cls(1, "[A-Z]")
-    val cDigit = cls(2, "[0-9]")
-    val cSpace = cls(3, "[ ]")
-    val cPunct = cls(4, "[.,;:!?]")
-    val cOther =
-      if (native) element_at(counts, 6)
-      else n - cLower - cUpper - cDigit - cSpace - cPunct
+    // The native char_class_counts expression: all six counts in ONE byte
+    // scan, value-identical to the per-class regex definition
+    // (`[a-z]`, `[A-Z]`, `[0-9]`, `[ ]`, `[.,;:!?]`, other — see its
+    // scaladoc; ExprEquivalenceSpec pins it).
+    val counts = GraftExtensions.call("char_class_counts", col("text"))
+    val Seq(cLower, cUpper, cDigit, cSpace, cPunct, cOther) =
+      (1 to 6).map(i => element_at(counts, i))
     val nD = n.cast(DoubleType)
     def term(c: Column): Column = {
       val p = c.cast(DoubleType) / nD

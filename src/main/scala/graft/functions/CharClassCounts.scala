@@ -17,7 +17,7 @@ object CharClassCounts {
     * `length(x) - length(regexp_replace(x, class, ''))` definition; the
     * `other` bucket is numChars minus the ASCII matches, so non-ASCII
     * text (multi-byte CJK, supplementary emoji) lands there by code
-    * point, exactly as the regex fallback counts it. */
+    * point, exactly as the regex definition counts it. */
   def compute(s: UTF8String): ArrayData = {
     var lower = 0L; var upper = 0L; var digit = 0L; var space = 0L; var punct = 0L
     var i = 0

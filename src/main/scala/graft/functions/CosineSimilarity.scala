@@ -18,11 +18,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * order as the corresponding fold (float×float widened to double is
   * exact: 24-bit mantissas multiply into 53).
   *
-  * Malformed inputs agree with the fallback: a length mismatch or a null
+  * Malformed inputs agree with the fold: a length mismatch or a null
   * element yields NULL (exactly what `zip_with`'s null-padding + null
-  * arithmetic produce), so the two paths are interchangeable even on bad
+  * arithmetic produce), so the two are interchangeable even on bad
   * embeddings. One divergence outside the contract: an all-zero vector
-  * yields NaN here but raises DIVIDE_BY_ZERO on the ANSI-mode fallback —
+  * yields NaN here but raises DIVIDE_BY_ZERO on the ANSI-mode fold —
   * embeddings are non-zero by contract.
   */
 case class CosineSimilarity(left: Expression, right: Expression)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * vector with an `array<double>` constant (LSH hyperplane), one fused
   * codegen loop. BIT-IDENTICAL to the `zip_with` + `aggregate` fold (same
   * element order, same IEEE ops: (float→double) × double accumulated
-  * left-to-right). Null semantics match the fallback: ragged lengths or a
+  * left-to-right). Null semantics match the fold: ragged lengths or a
   * null element yield NULL. */
 case class DotFD(left: Expression, right: Expression) extends BinaryExpression {
 

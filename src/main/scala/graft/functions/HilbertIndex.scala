@@ -6,13 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native Catalyst expression: the Hilbert curve index of a 2-D point —
-  * the q205 layout key, fused into whole-stage codegen as one Java loop
-  * instead of the interpreted `aggregate`-fold fallback (the fold is
-  * correct but pays per-row struct allocation × `bits` iterations; the
-  * loop is branch-and-shift arithmetic). BIT-IDENTICAL to
-  * [[graft.operators.Scale.hilbert2Jvm]] (the interpreted eval calls it
-  * directly) and to the fold — FallbackSpec pins all three together.
-  * Inputs truncate to `bits` bits like the fold; nulls propagate. */
+  * the q205 layout key, fused into whole-stage codegen as one Java loop of
+  * branch-and-shift arithmetic (an `aggregate` fold over the levels would
+  * pay per-row struct allocation × `bits` iterations). BIT-IDENTICAL to
+  * [[graft.operators.Scale.hilbert2Jvm]]: the interpreted eval calls it
+  * directly, and ExprEquivalenceSpec pins the generated code to it.
+  * Inputs truncate to `bits` bits; nulls propagate. */
 case class HilbertIndexExpr(left: Expression, right: Expression, bits: Int)
     extends BinaryExpression {
 

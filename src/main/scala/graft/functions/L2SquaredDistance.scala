@@ -10,14 +10,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * `array<float>` vector and an `array<double>` reference point (IVF
   * centroid), in one fused codegen loop.
   *
-  * The composable fallback (`zip_with` difference + `aggregate` fold) is
+  * The composable form (`zip_with` difference + `aggregate` fold) is
   * interpreted per element — for a 16-centroid assignment over a corpus
   * that is 16 × dim lambda invocations per row; this expression turns each
   * centroid distance into a tight multiply-add loop. Results are
   * BIT-IDENTICAL to the fold: same element order, same IEEE double ops
   * ((float→double) − double, squared, accumulated left-to-right).
   *
-  * Null semantics match the fallback: ragged lengths or a null element
+  * Null semantics match the fold: ragged lengths or a null element
   * yield NULL (zip_with's null-padding + null arithmetic).
   */
 case class L2SquaredDistance(left: Expression, right: Expression)

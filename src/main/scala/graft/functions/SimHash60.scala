@@ -20,9 +20,10 @@ object SimHash60 {
     * vote sum is positive. Integer votes are order-free, so this equals the
     * explode → 60×sum(CASE) → reassemble formulation exactly. */
   /** Null-propagating wrapper: an array containing a null element yields a
-    * NULL hash (matching the explode-fallback's NULL propagation) instead
-    * of an NPE — the expression is SQL-registered and callable on arbitrary
-    * array<string> input, not just TextOps.words output. */
+    * NULL hash (a null token has no md5 to vote with) instead of an NPE —
+    * the expression is SQL-registered and callable on arbitrary
+    * array<string> input, not just TextOps.words output, which never holds
+    * a null element. */
   def computeOrNull(words: ArrayData): java.lang.Long = {
     var i = 0
     val n = words.numElements()

@@ -17,7 +17,8 @@ object SubstrCount {
     * (surrogate-pair) character contributes TWO positions, not one — the
     * expression is SQL-registered, so ad-hoc SQL treating it as a drop-in
     * must get drop-in semantics on every edge, including non-BMP text
-    * (FallbackSpec pins it dynamically against regexp_count on emoji). */
+    * (ExprEquivalenceSpec pins it dynamically against regexp_count on
+    * emoji). */
   def count(str: UTF8String, pat: UTF8String): Int = {
     val plen = pat.numChars()
     if (plen == 0) {
@@ -46,7 +47,8 @@ object SubstrCount {
   * fixed-substring occurrence counter behind the language-ID profile scans
   * (q41 runs 24 of these per row; each regex literal pays Pattern/Matcher
   * overhead that a direct scan does not). Value-identical to
-  * `regexp_count` on a metachar-free pattern (FallbackSpec pins it). */
+  * `regexp_count` on a metachar-free pattern (ExprEquivalenceSpec pins
+  * it). */
 case class SubstrCountExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 

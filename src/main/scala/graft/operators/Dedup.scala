@@ -1,8 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.types._
+
+import graft.GraftExtensions.call
 
 /** Deduplication operators (LLM-data-pipeline extension family 1).
   *
@@ -36,18 +41,13 @@ object Dedup {
   /** Sorted distinct hashed-shingle set of `text`, as 64-bit longs so the
     * verification can merge-intersect without re-comparing strings (Jaccard
     * over the hashed sets equals Jaccard over the strings up to a ~2^-64
-    * per-pair collision chance). Fast path: the native hashed_shingles
-    * expression (one fused loop); fallback: the composable higher-order
-    * chain (distinct → xxhash64 → sort), interpreted. */
-  private def shingleCol(docs: DataFrame, k: Int): Column =
-    if (docs.sparkSession.catalog.functionExists("hashed_shingles"))
-      call_function("hashed_shingles", TextOps.words(col("text")), lit(k))
-    else
-      array_sort(transform(TextOps.wordShingles(TextOps.words(col("text")), k),
-        s => xxhash64(s)))
+    * per-pair collision chance): the native hashed_shingles expression,
+    * one fused loop per document. */
+  private def shingleCol(k: Int): Column =
+    call("hashed_shingles", TextOps.words(col("text")), lit(k))
 
   private def shingled(docs: DataFrame, k: Int): DataFrame =
-    docs.select(col("doc_id"), shingleCol(docs, k).as("sh"))
+    docs.select(col("doc_id"), shingleCol(k).as("sh"))
 
   /** Public handle on the per-doc sorted distinct hashed-shingle sets
     * (doc_id, sh: array<bigint>) — the corpus fingerprint a write-once
@@ -56,72 +56,44 @@ object Dedup {
     * through unchanged (e.g. the partition key of a partitioned
     * fingerprint layout). */
   def shingleSets(docs: DataFrame, k: Int, keep: Seq[String] = Nil): DataFrame =
-    docs.select(col("doc_id") +: keep.map(col) :+ shingleCol(docs, k).as("sh"): _*)
+    docs.select(col("doc_id") +: keep.map(col) :+ shingleCol(k).as("sh"): _*)
 
   /** LSH band keys (doc_id, b, bk) for a (doc_id, sh) shingle-set table —
     * the banding stage of [[minhashLshPairs]], factored out so a corpus
     * build can materialize it once and a batch probe can compute the SAME
     * keys for new documents (identical hashing ⇒ identical buckets).
     *
-    * Fast path: the native lsh_band_keys expression fuses signature +
-    * banding into one projection loop — no explode of shingles, no wide
-    * aggregation, no signature shuffle. Fallback (vanilla session): the
-    * signature as a grouped aggregation, which is ALSO the structural
-    * safeguard — a projection-only signature expression would get inlined
-    * by CollapseProject into every band-key reference (measured 100×). */
+    * The native lsh_band_keys expression fuses signature + banding into
+    * one projection loop — no explode of shingles, no wide aggregation, no
+    * signature shuffle. */
   def bandKeys(sh: DataFrame, bands: Int, rows: Int, keep: Seq[String] = Nil): DataFrame = {
     val ids = "doc_id" +: keep
-    val outNames = ids ++ Seq("b", "bk")
-    if (sh.sparkSession.catalog.functionExists("lsh_band_keys"))
-      sh.select(ids.map(col) :+
-          posexplode(call_function("lsh_band_keys", col("sh"), lit(bands), lit(rows))): _*)
-        .toDF(outNames: _*)
-    else {
-      val n = bands * rows
-      val hashed = sh.select(ids.map(col) :+ explode(col("sh")).as("h"): _*)
-      val minCols = (0 until n).map(i => min(xxhash64(col("h"), lit(i))).as(s"m$i"))
-      val sig = hashed.groupBy(ids.map(col): _*).agg(minCols.head, minCols.tail: _*)
-      val bandKeyCols = (0 until bands).map(bd =>
-        xxhash64(lit(bd) +: (0 until rows).map(r => col(s"m${bd * rows + r}")): _*))
-      sig.select(ids.map(col) :+ posexplode(array(bandKeyCols: _*)): _*)
-        .toDF(outNames: _*)
-    }
+    sh.select(ids.map(col) :+
+        posexplode(call("lsh_band_keys", col("sh"), lit(bands), lit(rows))): _*)
+      .toDF(ids ++ Seq("b", "bk"): _*)
   }
 
-  /** Exact Jaccard of two shingle-set columns: native sorted-merge
-    * intersection when the session has GraftExtensions (no per-pair hash-set
-    * allocation), built-in array_intersect otherwise — identical value
-    * either way: |A∩B| / (|A|+|B|-|A∩B|). */
-  private def jaccardOf(session: DataFrame, a: Column, b: Column): Column =
-    if (session.sparkSession.catalog.functionExists("jaccard_sim"))
-      call_function("jaccard_sim", a, b)
-    else {
-      val inter = size(array_intersect(a, b))
-      inter.cast(DoubleType) / (size(a) + size(b) - inter)
-    }
+  /** Exact Jaccard of two sorted shingle-set columns, |A∩B| / (|A|+|B|-|A∩B|),
+    * by the native sorted-merge intersection (no per-pair hash-set
+    * allocation). */
+  private def jaccardOf(a: Column, b: Column): Column = call("jaccard_sim", a, b)
 
   /** MinHash + LSH near-duplicate pairs, exact-verified.
     *
-    * Hashing strategy: each shingle string is xxhash64'd ONCE; the 128
-    * minhash permutations re-hash that fixed 8-byte value with the hash
-    * index as `xxhash64(h, i)` — codegen'd fixed-width hashing, so the
-    * per-shingle cost is one string hash plus 128 short-input hashes
-    * (wrapping affine mixes would be cheaper still, but ANSI mode rejects
-    * overflowing long multiplication). The Spark-side hash choice is
-    * semantically free — the verification step recomputes exact Jaccard. Bands of 4 rows → collision probability 1-(1-j^4)^32 ≥
-    * 1 - 6e-8 at j = 0.8: banding misses essentially nothing above the
-    * threshold, and verification discards everything below it.
+    * Hashing strategy: each shingle is hashed ONCE into the document's
+    * sorted 64-bit set (hashed_shingles); the 128 minhash permutations
+    * re-mix that fixed value as `fmix64(h ^ seed_k)` inside lsh_band_keys
+    * (see [[graft.functions.Lsh.bandKeys]]). The hash family is
+    * semantically free — the verification step recomputes exact Jaccard.
+    * Bands of 4 rows → collision probability 1-(1-j^4)^32 ≥ 1 - 6e-8 at
+    * j = 0.8: banding misses essentially nothing above the threshold, and
+    * verification discards everything below it.
     *
-    * Plan shape — and the load-bearing subtlety: the signature lives behind
-    * a grouped aggregation (explode shingles → 128 map-side `min` columns
-    * keyed by doc), which is a pipeline BARRIER. Deriving band keys from a
-    * projection-only signature expression instead lets Catalyst's
-    * CollapseProject inline the whole 128-hash computation into every one
-    * of the 32×4 band-key references — a measured 100× blowup. The explode
-    * collapses map-side (partial min per task), so the shuffle is one
-    * 128-long row per document; candidates come from an equi-join on
-    * (band, bandKey); verification joins candidate ids back to shingle
-    * sets. All shuffles keyed; cost scales with docs + candidate pairs. */
+    * Plan shape: signature and banding are one projection per document
+    * (posexplode of the 32 band keys), so nothing shuffles before the
+    * candidate equi-join on (band, bandKey); verification joins candidate
+    * ids back to shingle sets. All shuffles keyed; cost scales with docs +
+    * candidate pairs. */
   def minhashLshPairs(docs: DataFrame, threshold: Double,
                       shingleK: Int = 3, bands: Int = 32, rows: Int = 4): DataFrame = {
     val sh = shingled(docs, shingleK)
@@ -235,7 +207,7 @@ object Dedup {
       .join(broadcast(candWithSh).as("p"), col("c.doc_id") === col("p.corpus_id"))
       .filter(least(na, nb).cast(DoubleType) >= lit(threshold) * greatest(na, nb))
       .select(col("p.batch_id"), col("p.corpus_id"),
-        jaccardOf(corpusShingles, col("p.bsh"), col("c.sh")).as("jaccard"))
+        jaccardOf(col("p.bsh"), col("c.sh")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .distinct()
   }
@@ -361,35 +333,22 @@ object Dedup {
     * bloom filter has NO false negatives, so the exact equi-join
     * downstream returns exactly [[contaminationPairs]]' answer — the gate
     * shares q38's oracle; false positives cost only wasted shuffle rows
-    * (fpp-bounded), never wrong results.
-    *
-    * On a vanilla session (no GraftExtensions) the prefilter is dropped —
-    * same equi-join, same exact answer, just without the semi-join
-    * reduction (FallbackSpec pins the equality). */
+    * (fpp-bounded), never wrong results. */
   def bloomContaminationPairs(corpus: DataFrame, eval: DataFrame,
                               shingleK: Int, minOverlap: Int,
                               estItems: Long, numBits: Long): DataFrame = {
-    val spark = corpus.sparkSession
-    shingled(corpus, shingleK)
+    val corpusSh = shingled(corpus, shingleK)
       .select(col("doc_id").as("corpus_id"), explode(col("sh")).as("h"))
-      .createOrReplaceTempView("graft_bloom_corpus_sh")
-    shingled(eval, shingleK)
+    val evalSh = shingled(eval, shingleK)
       .select(col("doc_id").as("eval_id"), explode(col("sh")).as("h"))
-      .createOrReplaceTempView("graft_bloom_eval_sh")
-    val prefilter =
-      if (spark.catalog.functionExists("bloom_might_contain"))
-        s"""WHERE bloom_might_contain(
-           |  (SELECT bloom_agg(h, ${estItems}L, ${numBits}L)
-           |   FROM graft_bloom_eval_sh), c.h)""".stripMargin
-      else ""
-    spark.sql(
-      s"""SELECT /*+ MERGE(c, e) */ corpus_id, eval_id,
-         |  count(*) AS shared_ngrams
-         |FROM graft_bloom_corpus_sh c
-         |JOIN graft_bloom_eval_sh e ON c.h = e.h
-         |$prefilter
-         |GROUP BY corpus_id, eval_id
-         |HAVING count(*) >= $minOverlap""".stripMargin)
+    val bloom = evalSh.agg(GraftSqlShim.column(new BloomFilterAggregate(
+        GraftSqlShim.expression(col("h")), Literal(estItems), Literal(numBits))
+      .toAggregateExpression())).scalar()
+    corpusSh.filter(call("bloom_might_contain", bloom, col("h"))).hint("merge")
+      .join(evalSh.hint("merge"), "h")
+      .groupBy(col("corpus_id"), col("eval_id"))
+      .agg(count(lit(1)).as("shared_ngrams"))
+      .filter(col("shared_ngrams") >= minOverlap)
   }
 
   /** Embedding-cosine near-duplicate pairs: banded random-hyperplane LSH
@@ -405,10 +364,8 @@ object Dedup {
     * grid shape, verified exact; the candidate count per band is
     * |corpus|²/2^planes in expectation, the scale knob at 100 TB. */
   def cosineNearDupPairs(vectors: DataFrame, threshold: Double,
-                         grids: Seq[Array[Array[Int]]],
-                         cosineFn: (Column, Column) => Column): DataFrame = {
-    val native = vectors.sparkSession.catalog.functionExists("dot_fd")
-    val bandCols = grids.map(g => Similarity.signBucket(col("embedding"), g, native))
+                         grids: Seq[Array[Array[Int]]]): DataFrame = {
+    val bandCols = grids.map(g => Similarity.signBucket(col("embedding"), g))
     val banded = vectors
       .select(col("vec_id"), col("embedding"), posexplode(array(bandCols: _*)))
       .withColumnRenamed("pos", "band")
@@ -418,7 +375,7 @@ object Dedup {
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
-        cosineFn(col("x.embedding"), col("y.embedding")).as("cosine"))
+        call("cosine_sim", col("x.embedding"), col("y.embedding")).as("cosine"))
       .filter(col("cosine") >= threshold)
       .distinct()
   }
@@ -653,7 +610,7 @@ object Dedup {
                             threshold: Double): DataFrame = {
     val na = size(col("sa.sh"))
     val nb = size(col("sb.sh"))
-    val jaccard = jaccardOf(candidates, col("sa.sh"), col("sb.sh"))
+    val jaccard = jaccardOf(col("sa.sh"), col("sb.sh"))
     candidates
       .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sh.as("sb"), col("doc_b") === col("sb.doc_id"))

@@ -429,53 +429,17 @@ object Scale {
     * recurrence): per level, the quadrant index pays s²·((3·rx) xor ry)
     * and the lower bits are rotated/reflected into the quadrant's frame.
     *
-    * Implemented as a FOLD over the level array with built-ins only
-    * (`aggregate` + struct accumulator): sequential state rules out the
-    * zOrder2-style flat sum, and a fold keeps the expression tree LINEAR
-    * in `bits` where naive per-level substitution would grow 3^bits
-    * nodes. Pure integer arithmetic on non-negatives — deterministic
-    * everywhere, replayed by the oracle as an unrolled CTE chain
-    * ([[hilbert2Ctes]]) and by [[hilbert2Jvm]] for spec ground truth.
-    * Coordinates are truncated to `bits` bits, matching zOrder2's
-    * contract; d < 4^bits so bits ≤ 31 stays in BIGINT. */
-  def hilbert2(a: Column, b: Column, bits: Int = 16): Column = {
-    require(bits >= 1 && bits <= 31, s"hilbert2 bits must be in [1,31] (got $bits)")
-    val mask = lit((1L << bits) - 1)
-    val svals = array((0 until bits).reverse.map(l => lit(1L << l)): _*)
-    aggregate(
-      svals,
-      struct(a.cast(org.apache.spark.sql.types.LongType).bitwiseAND(mask).as("x"),
-        b.cast(org.apache.spark.sql.types.LongType).bitwiseAND(mask).as("y"),
-        lit(0L).as("d")),
-      (acc, s) => {
-        // the reflection uses the FULL grid size n−1, not s−1: that is
-        // the variant whose intermediates stay in [0, n) — and therefore
-        // the only one whose //-and-% replay is engine-independent
-        // (C-style % on a negative coordinate diverges from floor-%)
-        val n1 = lit((1L << bits) - 1)
-        val x = acc.getField("x"); val y = acc.getField("y")
-        val rx = when(x.bitwiseAND(s) === 0L, 0L).otherwise(1L)
-        val ry = when(y.bitwiseAND(s) === 0L, 0L).otherwise(1L)
-        struct(
-          when(ry === 1L, x).when(rx === 1L, n1 - y).otherwise(y).as("x"),
-          when(ry === 1L, y).when(rx === 1L, n1 - x).otherwise(x).as("y"),
-          (acc.getField("d") + s * s *
-            (rx * (lit(3L) - ry) + (lit(1L) - rx) * ry)).as("d"))
-      },
-      acc => acc.getField("d"))
-  }
-
-  /** Native-or-fold dispatch for [[hilbert2]] (the cosineFnFor
-    * discipline): sessions carrying GraftExtensions get the fused codegen
-    * loop ([[graft.functions.HilbertIndexExpr]]); vanilla sessions take
-    * the built-ins fold — bit-identical either way (FallbackSpec). */
-  def hilbert2For(s: org.apache.spark.sql.SparkSession)(
-      a: Column, b: Column, bits: Int = 16): Column =
-    if (s.catalog.functionExists("hilbert2"))
-      call_function("hilbert2",
-        a.cast(org.apache.spark.sql.types.LongType),
-        b.cast(org.apache.spark.sql.types.LongType), lit(bits))
-    else hilbert2(a, b, bits)
+    * Runs as the native `hilbert2` expression
+    * ([[graft.functions.HilbertIndexExpr]]), one codegen loop per row whose
+    * values are [[hilbert2Jvm]]'s. Pure integer arithmetic on
+    * non-negatives — deterministic everywhere, replayed by the oracle as
+    * an unrolled CTE chain ([[hilbert2Ctes]]). Coordinates are truncated
+    * to `bits` bits, matching zOrder2's contract; d < 4^bits so bits ≤ 31
+    * stays in BIGINT. */
+  def hilbert2(a: Column, b: Column, bits: Int = 16): Column =
+    graft.GraftExtensions.call("hilbert2",
+      a.cast(org.apache.spark.sql.types.LongType),
+      b.cast(org.apache.spark.sql.types.LongType), lit(bits))
 
   /** JVM twin of [[hilbert2]] — spec-side ground truth. */
   def hilbert2Jvm(a: Long, b: Long, bits: Int): Long = {
@@ -500,9 +464,13 @@ object Scale {
     * yield columns `x0`, `y0` (non-negative, already truncated) plus any
     * pass-through columns; the returned text appends one CTE per level
     * and ends with a `SELECT *` exposing `h`. A single nested expression
-    * would grow 3^bits nodes — the chain stays linear, like the fold. */
+    * would grow 3^bits nodes — the chain stays linear in bits. */
   def hilbert2Ctes(baseCte: String, bits: Int = 16): String = {
     val levels = (0 until bits).map { i =>
+      // the reflection uses the FULL grid size n−1, not s−1: that is the
+      // variant whose intermediates stay in [0, n) — and therefore the
+      // only one whose //-and-% replay is engine-independent (C-style %
+      // on a negative coordinate diverges from floor-%)
       val s = 1L << (bits - 1 - i)
       val (px, py, pd) = (s"x$i", s"y$i", if (i == 0) "CAST(0 AS BIGINT)" else s"d$i")
       val rx = s"(($px // $s) % 2)"

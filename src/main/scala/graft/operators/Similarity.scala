@@ -8,15 +8,18 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.GraftExtensions.call
+
 /** Similarity search over an embedding column (LLM-data-pipeline extension
   * family 2): brute-force cosine top-k as the exact baseline and a
   * random-hyperplane-LSH bucketed variant as the scale path.
   *
-  * All vector math is built-in higher-order functions (`zip_with` +
-  * `aggregate` left fold) over `array<float>` cast element-wise to double —
-  * exact IEEE products (24-bit mantissas fit in 53), a fixed summation
-  * order, and therefore bit-identical results in any engine that folds
-  * left-to-right (the DuckDB oracle does).
+  * All vector math is a left fold over `array<float>` widened element-wise
+  * to double — exact IEEE products (24-bit mantissas fit in 53), a fixed
+  * summation order, and therefore bit-identical results in any engine that
+  * folds left-to-right (the DuckDB oracle does). The operators run the
+  * fold as the fused native expressions (`cosine_sim`, `dot_fd`, `l2_sq`);
+  * [[cosine]] is the same fold in built-ins, the reference they match.
   */
 object Similarity {
 
@@ -27,6 +30,8 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** The cosine fold in built-ins — the reference
+    * [[graft.functions.CosineSimilarity]] is checked against. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Exact top-k neighbors for each query vector.
@@ -38,15 +43,14 @@ object Similarity {
     * rows; for large query sets swap the window for a partial top-k
     * aggregation — for ANN at scale use [[lshTopK]] instead, which bounds
     * the candidate set per bucket. */
-  def bruteForceTopK(vectors: DataFrame, queries: DataFrame, k: Int,
-                     cosineFn: (Column, Column) => Column = cosine): DataFrame = {
+  def bruteForceTopK(vectors: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val joined = vectors.as("v").join(broadcast(queries.as("q")),
         col("q.vec_id") =!= col("v.vec_id"))
     rankTopK(joined
       .select(
         col("q.vec_id").as("query_id"),
         col("v.vec_id").as("neighbor_id"),
-        cosineFn(col("q.embedding"), col("v.embedding")).as("sim")), k)
+        call("cosine_sim", col("q.embedding"), col("v.embedding")).as("sim")), k)
   }
 
   /** Deterministic pseudo-random grid: component (p, j) is derived from
@@ -66,15 +70,13 @@ object Similarity {
 
   /** Sign-bucket of a vector under the hyperplane grid: bit p is set iff
     * dot(v, h_p) >= 0. Vectors in the same bucket agree on every plane —
-    * the standard random-hyperplane LSH for cosine similarity. `native`
-    * selects the fused `dot_fd` expression (bit-equal to the HOF fold —
-    * see [[graft.functions.DotFD]]); callers pass
-    * `session.catalog.functionExists("dot_fd")`. */
-  def signBucket(v: Column, grid: Array[Array[Int]], native: Boolean = false): Column =
+    * the standard random-hyperplane LSH for cosine similarity. The dot is
+    * the fused `dot_fd` expression (bit-equal to [[dot]] — see
+    * [[graft.functions.DotFD]]). */
+  def signBucket(v: Column, grid: Array[Array[Int]]): Column =
     grid.zipWithIndex.map { case (h, p) =>
       val hCol = array(h.toIndexedSeq.map(x => lit(x / 1000.0)): _*)
-      val d = if (native) call_function("dot_fd", v, hCol) else dot(v, hCol)
-      when(d >= 0, lit(1 << p)).otherwise(lit(0))
+      when(call("dot_fd", v, hCol) >= 0, lit(1 << p)).otherwise(lit(0))
     }.reduce(_ + _)
 
   /** ANN top-k: candidates are restricted to the query's sign bucket, then
@@ -83,37 +85,30 @@ object Similarity {
     * shuffles on bucket keys instead of fanning out all pairs. Recall is
     * approximate by design (bucket boundaries drop some true neighbors). */
   def lshTopK(vectors: DataFrame, queries: DataFrame, k: Int,
-              grid: Array[Array[Int]],
-              cosineFn: (Column, Column) => Column = cosine): DataFrame = {
-    val native = vectors.sparkSession.catalog.functionExists("dot_fd")
-    val bucketed = vectors.withColumn("bucket", signBucket(col("embedding"), grid, native))
-    val qb = queries.withColumn("bucket", signBucket(col("embedding"), grid, native))
+              grid: Array[Array[Int]]): DataFrame = {
+    val bucketed = vectors.withColumn("bucket", signBucket(col("embedding"), grid))
+    val qb = queries.withColumn("bucket", signBucket(col("embedding"), grid))
     val joined = qb.as("q").join(bucketed.as("v"),
         col("q.bucket") === col("v.bucket") && col("q.vec_id") =!= col("v.vec_id"))
     rankTopK(joined
       .select(
         col("q.vec_id").as("query_id"),
         col("v.vec_id").as("neighbor_id"),
-        cosineFn(col("q.embedding"), col("v.embedding")).as("sim")), k)
+        call("cosine_sim", col("q.embedding"), col("v.embedding")).as("sim")), k)
   }
 
   /** Squared L2 distance of a float-array column to a constant centroid —
-    * the native fused loop when the session registers `l2_sq` (bit-equal,
-    * see [[graft.functions.L2SquaredDistance]]), else the HOF fold. */
-  private def dist2(v: Column, cent: Array[Int], native: Boolean): Column = {
-    val c = array(cent.toIndexedSeq.map(x => lit(x / 1000.0)): _*)
-    if (native) call_function("l2_sq", v, c)
-    else
-      aggregate(zip_with(v, c, (x, y) => (x.cast(DoubleType) - y) * (x.cast(DoubleType) - y)),
-        lit(0.0), (acc, d) => acc + d)
-  }
+    * the fused `l2_sq` loop (a fixed-order left fold, see
+    * [[graft.functions.L2SquaredDistance]]). */
+  private def dist2(v: Column, cent: Array[Int]): Column =
+    call("l2_sq", v, array(cent.toIndexedSeq.map(x => lit(x / 1000.0)): _*))
 
   /** (dist², centroidIdx) structs for every centroid — struct order is
     * lexicographic, so array_min/array_sort give the (nearest, lowest-idx)
     * deterministic assignment and probe order. */
-  private def centroidDists(v: Column, cents: Array[Array[Int]], native: Boolean): Column =
+  private def centroidDists(v: Column, cents: Array[Array[Int]]): Column =
     array(cents.zipWithIndex.toIndexedSeq.map { case (c, i) =>
-      struct(dist2(v, c, native).as("dist"), lit(i).as("c"))
+      struct(dist2(v, c).as("dist"), lit(i).as("c"))
     }: _*)
 
   /** IVF (inverted-file) ANN top-k: vectors are assigned to their nearest
@@ -126,36 +121,33 @@ object Similarity {
     * (write the corpus partitioned by cell → each probe reads nprobe/cells
     * of the data). */
   /** Nearest-cell assignment column (the IVF inverted-file key). */
-  private[graft] def cellAssign(cents: Array[Array[Int]], native: Boolean): Column =
-    array_min(centroidDists(col("embedding"), cents, native)).getField("c")
+  private[graft] def cellAssign(cents: Array[Array[Int]]): Column =
+    array_min(centroidDists(col("embedding"), cents)).getField("c")
 
   /** One row per (query, probed cell): the nprobe nearest cells in
     * deterministic (distance, idx) order — the single definition of the
     * probe contract both IVF variants and the oracle must agree on. */
   private[graft] def cellProbes(queries: DataFrame, cents: Array[Array[Int]],
-      nprobe: Int, native: Boolean): DataFrame =
+      nprobe: Int): DataFrame =
     queries.withColumn("cell",
       explode(transform(
-        slice(array_sort(centroidDists(col("embedding"), cents, native)), 1, nprobe),
+        slice(array_sort(centroidDists(col("embedding"), cents)), 1, nprobe),
         s => s.getField("c"))))
 
   /** The (query_id, neighbor_id, sim) projection both IVF variants rank. */
-  private def scoredSelect(joined: DataFrame,
-      cosineFn: (Column, Column) => Column): DataFrame =
+  private def scoredSelect(joined: DataFrame): DataFrame =
     joined.select(
       col("q.vec_id").as("query_id"),
       col("v.vec_id").as("neighbor_id"),
-      cosineFn(col("q.embedding"), col("v.embedding")).as("sim"))
+      call("cosine_sim", col("q.embedding"), col("v.embedding")).as("sim"))
 
   def ivfTopK(vectors: DataFrame, queries: DataFrame, k: Int,
-              cents: Array[Array[Int]], nprobe: Int,
-              cosineFn: (Column, Column) => Column = cosine): DataFrame = {
-    val native = vectors.sparkSession.catalog.functionExists("l2_sq")
-    val assigned = vectors.withColumn("cell", cellAssign(cents, native))
-    val joined = cellProbes(queries, cents, nprobe, native).as("q")
+              cents: Array[Array[Int]], nprobe: Int): DataFrame = {
+    val assigned = vectors.withColumn("cell", cellAssign(cents))
+    val joined = cellProbes(queries, cents, nprobe).as("q")
       .join(assigned.as("v"),
         col("q.cell") === col("v.cell") && col("q.vec_id") =!= col("v.vec_id"))
-    rankTopK(scoredSelect(joined, cosineFn), k)
+    rankTopK(scoredSelect(joined), k)
   }
 
   /** The physically-clustered variant [[ivfTopK]]'s scaladoc promises:
@@ -169,14 +161,12 @@ object Similarity {
     * [[ivfTopK]] — the oracle asserts exactly that. */
   def ivfTopKPartitioned(vectors: DataFrame, queries: DataFrame, k: Int,
       cents: Array[Array[Int]], nprobe: Int,
-      materialize: DataFrame => DataFrame,
-      cosineFn: (Column, Column) => Column = cosine): DataFrame = {
-    val native = vectors.sparkSession.catalog.functionExists("l2_sq")
-    val corpus = materialize(vectors.withColumn("cell", cellAssign(cents, native)))
+      materialize: DataFrame => DataFrame): DataFrame = {
+    val corpus = materialize(vectors.withColumn("cell", cellAssign(cents)))
     val joined = corpus.as("v")
-      .join(broadcast(cellProbes(queries, cents, nprobe, native).as("q")),
+      .join(broadcast(cellProbes(queries, cents, nprobe).as("q")),
         col("q.cell") === col("v.cell") && col("q.vec_id") =!= col("v.vec_id"))
-    rankTopK(scoredSelect(joined, cosineFn), k)
+    rankTopK(scoredSelect(joined), k)
   }
 
   /** IVF-PQ ANN top-k — the full modern vector-index stack in one plan:
@@ -208,16 +198,13 @@ object Similarity {
     * lookup join for the exact re-rank. */
   def ivfPqTopK(vectors: DataFrame, queries: DataFrame, k: Int,
       cents: Array[Array[Int]], nprobe: Int, shortlist: Int,
-      codes: DataFrame, codebook: DataFrame,
-      cosineFn: (Column, Column) => Column = cosine): DataFrame = {
-    val native = vectors.sparkSession.catalog.functionExists("l2_sq")
-
+      codes: DataFrame, codebook: DataFrame): DataFrame = {
     // The index: one row per vector — coarse cell + the M codes in
     // subspace order (array_sort on (m, code) structs: deterministic).
     val codesArr = codes.groupBy(col("vec_id"))
       .agg(transform(array_sort(collect_list(struct(col("m"), col("code")))),
         x => x.getField("code")).as("codes"))
-    val index = vectors.select(col("vec_id"), cellAssign(cents, native).as("cell"))
+    val index = vectors.select(col("vec_id"), cellAssign(cents).as("cell"))
       .join(codesArr, "vec_id")
 
     // The codebook as ONE nested-array row [m][k][d], broadcast to every
@@ -229,7 +216,7 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct(col("m"), col("row")))),
         x => x.getField("row")).as("cb"))
 
-    val probes = cellProbes(queries, cents, nprobe, native)
+    val probes = cellProbes(queries, cents, nprobe)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("cell"))
 
     // ADC: reconstruct each candidate's subvectors from its codes (1-based
@@ -242,7 +229,7 @@ object Similarity {
         col("q.cell") === col("v.cell") && col("q.qid") =!= col("v.vec_id"))
       .crossJoin(broadcast(cbNested))
       .select(col("q.qid"), col("q.qe"), col("v.vec_id").as("nid"),
-        cosineFn(col("q.qe"), rec).as("adc"))
+        call("cosine_sim", col("q.qe"), rec).as("adc"))
     val short = scored
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("nid"))))
@@ -256,7 +243,7 @@ object Similarity {
           col("embedding").as("qe")), "qid")),
         col("n.vec_id") === col("nid"))
       .select(col("qid").as("query_id"), col("nid").as("neighbor_id"),
-        cosineFn(col("qe"), col("n.embedding")).as("sim"))
+        call("cosine_sim", col("qe"), col("n.embedding")).as("sim"))
     rankTopK(exact, k)
   }
 

@@ -1,11 +1,14 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Dataset, ExpressionUtils,
+  SparkSession => ClassicSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** The engine's private-API doorway, kept to two methods so the surface
+/** The engine's private-API doorway: every `private[sql]`/`private[spark]`
+  * member the engine touches goes through this one object, so the surface
   * stays auditable.
   *
   * `ofRows` wraps a custom [[LogicalPlan]] node into a user-facing
@@ -16,6 +19,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * idiom for Spark-native libraries (Delta, Sedona, Iceberg all ship
   * `org.apache.spark.sql.*` shims) is a package-scoped accessor like this.
   *
+  * `column` and `expression` convert between a Catalyst [[Expression]] and
+  * a [[Column]] (`private[sql]` `classic.ExpressionUtils.column` and
+  * `classic.ColumnNodeToExpressionConverter`). Operators build the
+  * engine's expression classes directly through them, so a plan never
+  * asks the session's function registry for them. `expression` converts
+  * eagerly — `ExpressionUtils.expression` defers conversion to analysis,
+  * and an unconverted literal cannot be evaluated — so an expression
+  * builder can read its literal arguments (`lsh_band_keys`' band count).
+  *
   * `drainListenerBus` blocks until every event posted so far has reached
   * every [[org.apache.spark.scheduler.SparkListener]]
   * (`private[spark]` `listenerBus.waitUntilEmpty()`). Listener delivery is
@@ -24,6 +36,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
+
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

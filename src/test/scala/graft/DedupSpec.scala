@@ -207,8 +207,7 @@ class DedupSpec extends SparkSpec {
     val v3 = (0 until dim).map(j => if (j % 2 == 0) (j + 1).toFloat else -(j + 1).toFloat)
     val vecs = Seq((1L, v1), (2L, v2), (3L, v3)).toDF("vec_id", "embedding")
     val grids = (0 until 4).map(b => Similarity.mdGrid(s"t$b", 4, dim))
-    val out = Dedup.cosineNearDupPairs(vecs, 0.9, grids,
-      SimilarityQueries.cosineFnFor(spark)).collect()
+    val out = Dedup.cosineNearDupPairs(vecs, 0.9, grids).collect()
     out.length shouldBe 1                       // (1,2) exactly once despite 4 band hits
     out.head.getAs[Long]("vec_a") shouldBe 1L
     out.head.getAs[Long]("vec_b") shouldBe 2L

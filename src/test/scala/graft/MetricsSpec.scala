@@ -105,12 +105,11 @@ class MetricsSpec extends SparkSpec {
       SimilarityQueries.ivfPrunedWith(spark, sf, one))
     val layout = scans.filter(_._1.contains("graft_emb_ivf")).map(_._2).sum
 
-    val native = spark.catalog.functionExists("l2_sq")
     val probed = Similarity.cellProbes(one, SimilarityQueries.cents,
-        SimilarityQueries.NPROBE, native)
+        SimilarityQueries.NPROBE)
       .select(col("cell")).collect().map(_.getInt(0)).toSet
     val expected = Tables.embeddings(spark, sf)
-      .withColumn("cell", Similarity.cellAssign(SimilarityQueries.cents, native))
+      .withColumn("cell", Similarity.cellAssign(SimilarityQueries.cents))
       .filter(col("cell").isin(probed.toSeq: _*)).count()
     withClue(s"scanned $scans, probed cells $probed: ") {
       layout shouldBe expected

@@ -682,7 +682,7 @@ class OperationalSpec extends SparkSpec {
     val textA = (1 to 80).map(i => f"tok${(i * 37) % 101}%03d").mkString(" ")
     val textB = "EDIT! " + textA
     val chunks = DedupQueries.cdcChunks(
-        Seq((1L, textA), (2L, textB)).toDF("doc_id", "text"), spark)
+        Seq((1L, textA), (2L, textB)).toDF("doc_id", "text"))
       .collect().groupBy(_.getLong(0))
     val da = chunks(1L).sortBy(_.getInt(1)).map(_.getString(3)).toSeq
     val db = chunks(2L).sortBy(_.getInt(1)).map(_.getString(3)).toSeq
