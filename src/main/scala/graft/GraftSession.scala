@@ -16,6 +16,14 @@ import org.apache.spark.sql.SparkSession
   *    this would be ~2-3× total executor cores, or left to AQE).
   */
 object GraftSession {
+
+  /** The one root of the engine's on-disk state: the catalog, the
+    * warehouse, the star-build memo and the fixtures all live under it.
+    * Absolute, so the directory a process is launched from never moves
+    * them; perfbench's build rewrites this one literal to give each run its
+    * own directory (`perfbench/build.sbt`). */
+  val WorkRoot: String = "/root/repo/work"
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -43,13 +51,13 @@ object GraftSession {
       // versioned-manifest tables): spark.sql("... graft_cat.db.t ...")
       .config("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftTableCatalog].getName)
-      // absolute, like warehouse.dir: catalog tables must land inside
-      // the repo regardless of where the harness launches us
-      .config("spark.sql.catalog.graft_cat.root", "/root/repo/work/graft_cat")
+      // under the work root, like warehouse.dir: the catalog's own
+      // default is cwd-relative
+      .config("spark.sql.catalog.graft_cat.root", s"$WorkRoot/graft_cat")
       // Pinned: the default derives from the process cwd, and managed
-      // tables (bucketed joins) must land inside the repo regardless of
-      // where the harness launches us.
-      .config("spark.sql.warehouse.dir", "/root/repo/work/warehouse")
+      // tables (bucketed joins) must land under the work root wherever
+      // the process is launched from.
+      .config("spark.sql.warehouse.dir", s"$WorkRoot/warehouse")
       .config("spark.ui.enabled", "false")
       // The UI is off, but every execution still feeds the driver's
       // in-memory status store — at Spark defaults it retains 1000 jobs,

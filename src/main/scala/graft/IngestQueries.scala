@@ -465,6 +465,13 @@ object IngestQueries {
     t
   }
 
+  /** `<graft_cat root>/db/<stem>`: a catalog table's directory, resolved
+    * from the session's catalog root, so a manifest read sees what the
+    * catalog wrote wherever the process was launched from. */
+  private def catDir(s: org.apache.spark.sql.SparkSession,
+      stem: String): java.io.File =
+    new java.io.File(s.conf.get("spark.sql.catalog.graft_cat.root"), s"db/$stem")
+
   /** q267: the CATALOG SQL LIFECYCLE — CTAS + INSERT INTO over
     * `graft_cat`, the engine's [[graft.sources.GraftTableCatalog]]
     * TableCatalog plugin (versioned-manifest tables, the Iceberg/Delta
@@ -753,10 +760,10 @@ object IngestQueries {
     * multisets) and aggregates the reconstruction — hash-equal to DuckDB
     * replaying the mutations directly, which proves the feed carries
     * exactly the net changes (CatalogSpec pins the fold identity, the
-    * MOR delta positions, and that compaction emits nothing; the
-    * StreamingEvidence twin pins batch ≡ streamed-fold). The Delta CDF
-    * surface: downstream consumers sync incrementally instead of
-    * re-reading 100 TB. */
+    * MOR delta positions, and that compaction emits nothing; its
+    * streaming-source case pins batch ≡ streamed fold across restarts).
+    * The Delta CDF surface: downstream consumers sync incrementally
+    * instead of re-reading 100 TB. */
   val q280CatalogCdf: Q = (s, d) => {
     val t = catTable(s, d, "ev280")
     s.sql(s"""CREATE TABLE $t (k BIGINT, cents BIGINT)
@@ -1078,7 +1085,7 @@ object IngestQueries {
                |SELECT k, (k * 2654435761L) % 1048576 AS y, cents
                |FROM (${catEventsSql(d)}) src WHERE k % 8 = $i""".stripMargin)
     }
-    val dir = new java.io.File(s"work/graft_cat/db/$stem")
+    val dir = catDir(s, stem)
     val m = graft.sources.GraftTableCatalog.readManifest(dir,
       graft.sources.GraftTableCatalog.readLatest(dir))
     val bytes = m.files.map(_.bytes).sum
@@ -1149,7 +1156,7 @@ object IngestQueries {
                |SELECT k, (k * 2654435761L) % 1048576 AS y, cents
                |FROM (${catEventsSql(d)}) src WHERE k % 8 = $i""".stripMargin)
     }
-    val dir = new java.io.File(s"work/graft_cat/db/$stem")
+    val dir = catDir(s, stem)
     val m = graft.sources.GraftTableCatalog.readManifest(dir,
       graft.sources.GraftTableCatalog.readLatest(dir))
     val bytes = m.files.map(_.bytes).sum
@@ -1193,7 +1200,7 @@ object IngestQueries {
     // non-pushable predicate -> MOR position-delete files the sweep
     // must recognize as referenced
     s.sql(s"DELETE FROM $t WHERE k % 10 = 3")
-    val dataDir = new java.io.File(s"work/graft_cat/db/$stem/data")
+    val dataDir = new java.io.File(catDir(s, stem), "data")
     val o1 = new java.io.File(dataDir, "orphan-q298.bin")
     val o2 = new java.io.File(dataDir, "orphan-q298.bin.bloom")
     java.nio.file.Files.write(o1.toPath, Array.fill(64)(7.toByte))
@@ -1306,8 +1313,7 @@ object IngestQueries {
     val t = catTable(s, d, "ev294")
     val stem = s"ev294_${ScaleQueries.sfTag(d)}"
     s.sql(s"CREATE TABLE $t AS ${catEventsSql(d)} AND event_id % 3 = 0")
-    val v = graft.sources.GraftTableCatalog.readLatest(
-      new java.io.File(s"work/graft_cat/db/$stem"))
+    val v = graft.sources.GraftTableCatalog.readLatest(catDir(s, stem))
     s.sql(s"CALL graft_cat.sys.tag('db', '$stem', 'base', $v)")
     s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 3 = 1")
     s.sql(s"CALL graft_cat.sys.branch('db', '$stem', 'audit')")
@@ -1358,7 +1364,7 @@ object IngestQueries {
     val t = catTable(s, d, "ev292")
     val stem = s"ev292_${ScaleQueries.sfTag(d)}"
     s.sql(s"CREATE TABLE $t (k BIGINT, cents BIGINT)")
-    val dir = new java.io.File(s"work/graft_cat/db/$stem")
+    val dir = catDir(s, stem)
     val v0 = graft.sources.GraftTableCatalog.readLatest(dir)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (0 until 4).map { i =>

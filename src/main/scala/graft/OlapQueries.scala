@@ -2052,8 +2052,8 @@ object OlapQueries {
   /** q241: the SAME profile store serving a trailing-7-day range — range
     * independence as a gated entry. Rows-only like q238 (DataSketches
     * binaries are not replayable in DuckDB), anchored by SketchSpec to
-    * the exact 7-day range profile over the shared unpivot, and in the
-    * committed sketch-bounds artifact (SketchEvidence). A store built
+    * the exact 7-day range profile over the shared unpivot ("q241 range-7
+    * serve", the same bounds as q238's 28-day case). A store built
     * once serves every window; only the serve filter changes. */
   val q241ProfileRange7: Q = (s, d) => profileServe(s, d, 7)
 

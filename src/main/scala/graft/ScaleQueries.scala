@@ -762,8 +762,9 @@ object ScaleQueries {
     * BroadcastHashJoin; the identical query with CBO off keeps the
     * table-level size through the Filter (above threshold by
     * construction) and static-plans a SortMergeJoin. PlanSpec pins BOTH
-    * directions of the flip; `work/ab_q239_cbo.json` (CboEvidence)
-    * measures what the static decision is worth at sf0.1: with CBO the
+    * directions of the flip ("q239 CBO: the broadcast decision is
+    * provably stats-driven"); the committed `work/ab_q239_cbo.json`
+    * recorded what the static decision is worth at sf0.1: with CBO the
     * fact side pays ZERO shuffle-write records, without it the whole
     * orders projection rides an exchange before AQE can rescue the join.
     * That is the 100 TB point — AQE converts SMJ→BHJ only after the

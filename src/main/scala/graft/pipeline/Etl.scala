@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Epoch
+import graft.{Epoch, GraftSession}
 import graft.schemas.Schemas
 import graft.sinks.{ParquetSink, TableSink}
 import graft.sources.{Fixtures, JsonSource}
@@ -40,7 +40,7 @@ object Etl {
   val tables: Seq[String] = Seq("songplay", "users", "songs", "artists", "time")
 
   def starRoot(sfDir: String): String =
-    s"/root/repo/work/star/${Paths.get(sfDir).getFileName}"
+    s"${GraftSession.WorkRoot}/star/${Paths.get(sfDir).getFileName}"
 
   /** The jsonpaths field→column mapping for the events staging shape (the
     * staging_events contract of `sql_queries.py:28-49`) — shared by the

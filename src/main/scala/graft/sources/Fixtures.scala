@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Epoch, Tables}
+import graft.{Epoch, GraftSession, Tables}
 
 /** Deterministic JSON fixtures for the ingestion + pipeline queries.
   *
@@ -24,7 +24,7 @@ import graft.{Epoch, Tables}
 object Fixtures {
 
   private val V = "v3"
-  val root = s"/root/repo/work/fixtures/$V"
+  val root = s"${GraftSession.WorkRoot}/fixtures/$V"
 
   private def sfName(sfDir: String): String =
     Paths.get(sfDir).getFileName.toString

@@ -1225,11 +1225,25 @@ object GraftTableCatalog {
     * FileAlreadyExistsException). The lock spans only the
     * read-apply-write of a <1 KiB JSON file; contention waits briefly
     * then fails loudly; a crashed holder's lock reclaims after
-    * [[OrphanReclaimMs]], mirroring manifest reservations. */
+    * [[OrphanReclaimMs]], mirroring manifest reservations. Threads of one
+    * process first queue on a per-lock monitor, so the file protocol only
+    * ever arbitrates between processes: a waiter that read a stale mtime
+    * before another thread reclaimed the orphan would otherwise steal the
+    * new holder's FRESH lock, and while it sat in the tomb a third thread
+    * could create the lock and run alongside the holder. */
   def mutateBranchRefs(dir: File)(
       f: Map[String, BranchRef] => Map[String, BranchRef])
       : Map[String, BranchRef] = {
     val lock = new File(dir, ".branches.lock")
+    branchLockMonitors.computeIfAbsent(lock.getCanonicalPath,
+      _ => new Object).synchronized(lockedMutateBranchRefs(dir, lock, f))
+  }
+  private val branchLockMonitors =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  private def lockedMutateBranchRefs(dir: File, lock: File,
+      f: Map[String, BranchRef] => Map[String, BranchRef])
+      : Map[String, BranchRef] = {
     var held = false
     var attempts = 0
     while (!held) {
@@ -1249,10 +1263,10 @@ object GraftTableCatalog {
             // re-check on the tomb is race-free: a genuinely stale tomb
             // is discarded (both waiters then retry createFile fairly);
             // a FRESH tomb means we just stole a live holder's lock —
-            // restore it by renaming back (the path can only be empty,
-            // nobody else could create while the theft was in flight
-            // unseen; if somehow occupied, fail LOUDLY rather than let
-            // two holders proceed).
+            // restore it by renaming back (the path is empty unless
+            // another PROCESS created the lock while the theft was in
+            // flight; then fail LOUDLY rather than let two holders
+            // proceed).
             val tomb = new File(dir,
               s".branches.lock.tomb.${java.util.UUID.randomUUID}")
             try {
@@ -5511,8 +5525,9 @@ private object RefsTable {
   * merge-on-read delete emits exactly its delta positions. UPDATE/MERGE
   * appear as delete+insert pairs (their replaced/added files), compact
   * emits nothing (layout, not change). Folding the feed (inserts minus
-  * deletes, as multisets) reproduces the table at any version — the
-  * StreamingEvidence twin pins it md5-equal. Readable as a batch table
+  * deletes, as multisets) reproduces the table at any version —
+  * CatalogSpec pins it for the batch read and for a streamed fold across
+  * restarts. Readable as a batch table
   * or a streaming source (offsets are versions; `startingVersion`
   * skips the backlog). */
 private class ChangesTable(dir: File, tableName: String) extends Table

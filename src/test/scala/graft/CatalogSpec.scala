@@ -20,10 +20,11 @@ class CatalogSpec extends SparkSpec {
   private def rows(q: String): Seq[Seq[Any]] =
     sql(q).collect().toSeq.map(_.toSeq)
 
-  private def freshTable(name: String, ddlCols: String): String = {
+  private def freshTable(name: String, ddlCols: String,
+                         props: String = ""): String = {
     sql(s"CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
     sql(s"DROP TABLE IF EXISTS graft_cat.db.$name")
-    sql(s"CREATE TABLE graft_cat.db.$name ($ddlCols)")
+    sql(s"CREATE TABLE graft_cat.db.$name ($ddlCols) $props")
     s"graft_cat.db.$name"
   }
 
@@ -299,53 +300,163 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("streaming into a catalog table: each micro-batch is a versioned commit; a replayed epoch is a no-op even after later commits") {
-    val t = freshTable("strm", "k BIGINT, v BIGINT")
+    // the same stream into a plain table and into a `write.upsert.key`
+    // table, where each epoch supersedes by key
+    def streamInto(name: String, upsert: Boolean): Unit = withClue(name) {
+      val t = freshTable(name, "k BIGINT, v BIGINT",
+        if (upsert) "TBLPROPERTIES ('write.upsert.key'='k')" else "")
+      val dir = new File(s"work/graft_cat/db/$name")
+      def dataFiles(): Set[String] = GraftTableCatalog.readManifest(dir,
+        GraftTableCatalog.readLatest(dir)).files.map(_.name).toSet
+      implicit val sqlCtx = spark.sqlContext
+      import sqlCtx.sparkSession.implicits._
+      val input = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, Long)]
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+      val q = input.toDF().toDF("k", "v").writeStream
+        .option("checkpointLocation", ckpt).outputMode("append")
+        .toTable(t)
+      val queryId = q.id.toString // the STABLE checkpoint id epochs key on
+      // overlapping keys: epoch 2 rewrites k=2, epoch 3 rewrites k=1
+      val epochs = Seq(Seq((1L, 10L), (2L, 20L)), Seq((2L, 21L), (3L, 30L)),
+        Seq((1L, 11L)))
+      try epochs.foreach { e =>
+        val before = dataFiles()
+        input.addData(e: _*); q.processAllAvailable()
+        // an upsert epoch retracts by key, never by rewriting a file
+        dataFiles().intersect(before) shouldBe before
+      } finally q.stop()
+      val landed =
+        if (upsert) Seq(Seq(1L, 11L), Seq(2L, 21L), Seq(3L, 30L)) // last writer wins
+        else epochs.flatten.sorted.map { case (k, v) => Seq(k, v) }
+      rows(s"SELECT k, v FROM $t ORDER BY k, v") shouldBe landed
+      // every micro-batch is a version — time travel works over the stream
+      rows(s"SELECT count(*) FROM $t.snapshots WHERE operation = 'stream-epoch'")
+        .head.head.asInstanceOf[Long] should be >= 2L
+      // the feed resolves every epoch's retractions: it folds to the rows
+      rows(s"""WITH folded AS (SELECT k, v,
+        |    sum(CASE WHEN _change_type = 'insert' THEN 1 ELSE -1 END) AS n
+        |  FROM $t.changes GROUP BY k, v HAVING n != 0)
+        |SELECT (SELECT count(*) FROM folded WHERE n = 1),
+        |       (SELECT count(*) FROM folded WHERE n != 1)""".stripMargin) shouldBe
+        Seq(Seq(landed.size.toLong, 0L))
+      // a batch append carries the stream's epoch markers forward...
+      sql(s"INSERT INTO $t VALUES (4, 40)")
+      val versionsBefore = GraftTableCatalog.readLatest(dir)
+      // ...so the post-crash replay of an already-committed epoch is a
+      // NO-OP at the protocol level: no new version, no new rows
+      val schema = GraftTableCatalog.readSchema(dir)
+      // the replay arrives WITH freshly re-written task files: the no-op
+      // commit must delete them, or they strand forever (referenced by no
+      // manifest, so expire never touches them)
+      val staged = new File(dir, "data/fake-replay.bin")
+      java.nio.file.Files.write(staged.toPath, Array[Byte](1, 2, 3))
+      new graft.sources.CatalogStreamingWrite(dir, schema, None, queryId)
+        .commit(0L, Array(graft.sources.CatalogCommit(Seq(
+          GraftTableCatalog.Entry("fake-replay.bin", 1L, 3L, 2, Map.empty)))))
+      GraftTableCatalog.readLatest(dir) shouldBe versionsBefore
+      staged.exists() shouldBe false
+      rows(s"SELECT count(*) FROM $t") shouldBe Seq(Seq(landed.size + 1L))
+      // ...while the SAME epoch id from a DIFFERENT query (a fresh
+      // checkpoint whose epochs restart at 0) is NOT a replay: its first
+      // micro-batch commits instead of being silently dropped — replay
+      // detection is namespaced per-stream
+      val staged2 = new File(dir, "data/fresh-stream.bin")
+      java.nio.file.Files.write(staged2.toPath, Array[Byte](1, 2, 3))
+      new graft.sources.CatalogStreamingWrite(dir, schema, None, "other-q")
+        .commit(0L, Array(graft.sources.CatalogCommit(Seq(
+          GraftTableCatalog.Entry("fresh-stream.bin", 0L, 3L, 2, Map.empty)))))
+      GraftTableCatalog.readLatest(dir) shouldBe versionsBefore + 1
+    }
+    streamInto("strm", upsert = false)
+    streamInto("strmups", upsert = true)
+  }
+
+  test("streaming the change feed across restarts: a fold and a per-group rollup kept from deltas alone equal the batch reads of the mutated table") {
+    val t = "graft_cat.db.cdfstrm"
+    sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
+    sql(s"DROP TABLE IF EXISTS $t")
+    sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) TBLPROPERTIES ('delete.mode'='merge-on-read')")
+    val fold = collection.mutable.Map.empty[(Long, Long), Long]
+    val rollup = collection.mutable.Map.empty[Long, (Long, Long)] // g -> (n, sum v)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdf-ckpt").toString
+    // one stop/resume per mutation phase, always from the same checkpoint
+    def drain(): Unit = {
+      val q = spark.readStream.table(s"$t.changes")
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          df.collect().foreach { r =>
+            val key = (r.getLong(0), r.getLong(1))
+            val n = fold.getOrElse(key, 0L) + (if (r.getString(2) == "insert") 1L else -1L)
+            if (n == 0L) fold.remove(key) else fold(key) = n
+          }
+          // the rollup merges each batch's own delta aggregate, O(groups) rows
+          df.selectExpr("k % 9 AS g",
+              "CASE WHEN _change_type = 'insert' THEN 1 ELSE -1 END AS sgn", "v")
+            .groupBy("g").agg(org.apache.spark.sql.functions.expr("sum(sgn)"),
+              org.apache.spark.sql.functions.expr("sum(sgn * v)"))
+            .collect().foreach { r =>
+              val (n0, v0) = rollup.getOrElse(r.getLong(0), (0L, 0L))
+              val (n1, v1) = (n0 + r.getLong(1), v0 + r.getLong(2))
+              if (n1 == 0L) rollup.remove(r.getLong(0)) else rollup(r.getLong(0)) = (n1, v1)
+            }
+          ()
+        }.start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    sql(s"INSERT INTO $t SELECT id, id * 2 FROM range(0, 400, 2, 2)")
+    sql(s"INSERT INTO $t SELECT id, id * 2 FROM range(1, 400, 2, 2)")
+    drain()
+    sql(s"UPDATE $t SET v = v * 3 WHERE k % 5 = 0")
+    drain()
+    sql(s"DELETE FROM $t WHERE v >= 600")
+    sql(s"CALL graft_cat.sys.compact('db', 'cdfstrm', ${64L * 1024 * 1024})")
+    drain()
+    fold.values.forall(_ > 0) shouldBe true // no delete without its insert
+    fold.toSeq.flatMap { case (kv, n) => Seq.fill(n.toInt)(Seq(kv._1, kv._2)) }
+      .sortBy(_.head) shouldBe rows(s"SELECT k, v FROM $t ORDER BY k")
+    rollup.toSeq.map { case (g, (n, v)) => Seq(g, n, v) }.sortBy(_.head) shouldBe
+      rows(s"SELECT k % 9, count(*), sum(v) FROM $t GROUP BY 1 ORDER BY 1")
+  }
+
+  test("streaming write-audit-publish: a stream committing to a branch leaves main unmoved; fast_forward publishes it as one version main's feed emits exactly") {
+    val t = freshTable("wapstrm", "k BIGINT, v BIGINT")
+    sql(s"INSERT INTO $t SELECT id, id FROM range(0, 100, 1, 1)")
+    sql("CALL graft_cat.sys.branch('db', 'wapstrm', 'audit')")
     implicit val sqlCtx = spark.sqlContext
     import sqlCtx.sparkSession.implicits._
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-wap-ckpt").toString
     val q = input.toDF().toDF("k", "v").writeStream
       .option("checkpointLocation", ckpt).outputMode("append")
-      .toTable("graft_cat.db.strm")
-    val queryId = q.id.toString // the STABLE checkpoint id epochs key on
-    try {
-      input.addData((1L, 10L), (2L, 20L)); q.processAllAvailable()
-      input.addData((3L, 30L)); q.processAllAvailable()
+      .toTable(s"$t.branch_audit")
+    val streamed = (100L until 160L).map(k => (k, k * 7))
+    try streamed.grouped(20).foreach { c =>
+      input.addData(c: _*); q.processAllAvailable()
     } finally q.stop()
-    rows(s"SELECT k, v FROM $t ORDER BY k") shouldBe
-      Seq(Seq(1L, 10L), Seq(2L, 20L), Seq(3L, 30L))
-    // every micro-batch is a version — time travel works over the stream
-    rows(s"SELECT count(*) FROM $t.snapshots WHERE operation = 'stream-epoch'")
-      .head.head.asInstanceOf[Long] should be >= 2L
-    // a batch append carries the stream's epoch markers forward...
-    sql(s"INSERT INTO $t VALUES (4, 40)")
-    val dir = new File("work/graft_cat/db/strm")
-    val versionsBefore = GraftTableCatalog.readLatest(dir)
-    // ...so the post-crash replay of an already-committed epoch is a
-    // NO-OP at the protocol level: no new version, no new rows
-    val schema = GraftTableCatalog.readSchema(dir)
-    // the replay arrives WITH freshly re-written task files: the no-op
-    // commit must delete them, or they strand forever (referenced by no
-    // manifest, so expire never touches them)
-    val staged = new File(dir, "data/fake-replay.bin")
-    java.nio.file.Files.write(staged.toPath, Array[Byte](1, 2, 3))
-    new graft.sources.CatalogStreamingWrite(dir, schema, None, queryId)
-      .commit(0L, Array(graft.sources.CatalogCommit(Seq(
-        GraftTableCatalog.Entry("fake-replay.bin", 1L, 3L, 2, Map.empty)))))
-    GraftTableCatalog.readLatest(dir) shouldBe versionsBefore
-    staged.exists() shouldBe false
-    rows(s"SELECT count(*) FROM $t") shouldBe Seq(Seq(4L))
-    // ...while the SAME epoch id from a DIFFERENT query (a fresh
-    // checkpoint whose epochs restart at 0) is NOT a replay: its first
-    // micro-batch commits instead of being silently dropped — replay
-    // detection is namespaced per-stream
-    val staged2 = new File(dir, "data/fresh-stream.bin")
-    java.nio.file.Files.write(staged2.toPath, Array[Byte](1, 2, 3))
-    new graft.sources.CatalogStreamingWrite(dir, schema, None, "other-q")
-      .commit(0L, Array(graft.sources.CatalogCommit(Seq(
-        GraftTableCatalog.Entry("fresh-stream.bin", 0L, 3L, 2, Map.empty)))))
-    GraftTableCatalog.readLatest(dir) shouldBe versionsBefore + 1
+    rows(s"SELECT count(*) FROM $t") shouldBe Seq(Seq(100L)) // main unmoved
+    rows(s"SELECT count(*) FROM $t.branch_audit") shouldBe Seq(Seq(160L))
+    // a consumer of main's change feed, attached before the publish
+    val feed = collection.mutable.ArrayBuffer.empty[(Long, Long, String, Long)]
+    val feedCkpt = java.nio.file.Files.createTempDirectory("graft-wap-feed").toString
+    def drain(): Unit = {
+      val c = spark.readStream.table(s"$t.changes")
+        .writeStream.option("checkpointLocation", feedCkpt)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          feed ++= df.collect().map(r =>
+            (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3))); ()
+        }.start()
+      try c.processAllAvailable() finally c.stop()
+    }
+    drain()
+    feed.map(_._1).sorted shouldBe (0L until 100L) // the seed
+    feed.clear()
+    sql("CALL graft_cat.sys.fast_forward('db', 'wapstrm', 'audit')")
+    drain()
+    feed.map(r => (r._1, r._2)).sortBy(_._1) shouldBe streamed
+    feed.map(_._3).toSet shouldBe Set("insert")
+    feed.map(_._4).toSet should have size 1 // the whole stream, one version
   }
 
   test("V2 custom metrics: filesOpened and rowsRead surface as SQL metrics — the file-skipping story on the executed plan") {

@@ -149,4 +149,23 @@ class MetricsSpec extends SparkSpec {
       IngestQueries.q234PayloadDrift(spark, sf))
     withClue(s"shuffled $n: ") { n should (be > 0L and be <= 2000L) }
   }
+
+  test("one measurement path: the only mains in src/main are Bench, Verify and Explain") {
+    // A contract belongs in a spec and a timing in the benchmark, so a new
+    // one-off probe or evidence main fails here.
+    import scala.jdk.CollectionConverters._
+    val objectDecl = """(?m)^\s*(?:private\s+|case\s+)*object\s+(\w+)""".r
+    val mainDecl = """\bdef\s+main\s*\(""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val mains = try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        val objects = objectDecl.findAllMatchIn(text).map(m => m.start -> m.group(1)).toSeq
+        // each main belongs to the nearest object declared before it
+        mainDecl.findAllMatchIn(text).map(m =>
+          objects.takeWhile(_._1 < m.start).lastOption.map(_._2).getOrElse(s"$f: no object"))
+      }.toSet
+      finally files.close()
+    mains shouldBe Set("Bench", "Verify", "Explain")
+  }
 }

@@ -820,7 +820,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import EventStream.TypedEvent
     // scoped through SessionConf (serialized per session), not a
-    // hand-rolled set/restore — same discipline as StreamingEvidence
+    // hand-rolled set/restore — the same scoping CatalogSpec's
+    // storage-partitioned-join and CBO cases use
     SessionConf.withValue(spark, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val feed = Seq(TypedEvent("click", 120L), TypedEvent("view", 10L),
