@@ -17,18 +17,18 @@ import graft.functions.{CdcCutsExpr, CharClassCountsExpr, CosineSimilarity, DotF
   * [[graft.plans.AsofJoinPlan]]. Installed by [[GraftSession]] via
   * `spark.sql.extensions`. Operators never depend on the registrations:
   * they build the same expressions through [[GraftExtensions.call]], so a
-  * session built elsewhere plans them identically. Such a session loses
-  * SQL access to the functions, v2 view resolution, the MV rule (every
-  * aggregate reads its source — correct, just unaccelerated) and the
-  * AS-OF strategy (operators.Asof takes its composable formulation). */
+  * session built elsewhere plans them identically, and
+  * [[graft.operators.Asof]] installs the AS-OF strategy into such a
+  * session itself. Such a session loses SQL access to the functions, v2
+  * view resolution and the MV rule (every aggregate reads its source —
+  * correct, just unaccelerated). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(s => new graft.plans.MvRewriteRule(s))
     // the whole-operator extension path: AS-OF JOIN as a custom logical
     // node lowered by a planner strategy to a co-partitioned streaming
-    // merge (graft.plans.AsofJoinExec); vanilla sessions fall back to the
-    // composable union+window formulation (operators.Asof's guard)
+    // merge (graft.plans.AsofJoinExec)
     ext.injectPlannerStrategy(_ => new graft.plans.AsofJoinStrategy)
     // V2 view resolution (graft.plans.ResolveGraftViews): OSS Spark ships
     // the ViewCatalog API but resolves no v2 views — this rule expands a

@@ -52,35 +52,26 @@ object GraphQueries {
     * the reference's diststyle choice (README.md:73-75): ALL (broadcast)
     * for small dims, KEY (co-partition) for big ones.
     *
-    * The switch: `spark.graft.graph.mode` = broadcast | keyed | auto
-    * (default auto; the env var SPARK_GRAFT_GRAPH_MODE seeds the default
-    * so a driver run can force a path without code changes). Auto
-    * compares an upper bound on the node count — the customer + supplier
-    * dimension sizes, two parquet-footer reads performed PER CALL
-    * (deliberately unmemoized: a rewritten scale dir must never be served
-    * a stale count; if per-call listing cost ever matters at very large
-    * file counts, memoize keyed by (path, mtime)) — against
-    * `spark.graft.graph.broadcastNodeLimit` (default 10M
-    * nodes ≈ 160 MB of (node,rank) rows: safely inside executor memory
-    * as a broadcast, and far past every test scale). Both paths produce
-    * bit-identical results (every update is integer min/sum —
-    * OperationalSpec proves keyed ≡ broadcast on all three queries);
-    * only the physical plan moves. */
+    * The switch compares an upper bound on the node count — the
+    * customer + supplier dimension sizes, two parquet-footer reads
+    * performed PER CALL (deliberately unmemoized: a rewritten scale dir
+    * must never be served a stale count; if per-call listing cost ever
+    * matters at very large file counts, memoize keyed by (path, mtime))
+    * — against [[BroadcastNodeLimit]]. Both paths produce bit-identical
+    * results (every update is integer min/sum — OperationalSpec proves
+    * keyed ≡ broadcast on all three queries); only the physical plan
+    * moves. */
   private[graft] def graphKeyed(s: org.apache.spark.sql.SparkSession,
                                 d: String): Boolean =
-    s.conf.get("spark.graft.graph.mode",
-        sys.env.getOrElse("SPARK_GRAFT_GRAPH_MODE", "auto")) match {
-      case "keyed" => true
-      case "broadcast" => false
-      case _ =>
-        val limit = s.conf.get("spark.graft.graph.broadcastNodeLimit",
-          "10000000").toLong
-        footerRowCount(s, s"$d/customer.parquet") +
-          footerRowCount(s, s"$d/supplier.parquet") > limit
-    }
+    footerRowCount(s, s"$d/customer.parquet") +
+      footerRowCount(s, s"$d/supplier.parquet") > BroadcastNodeLimit
+
+  /** 10M nodes ≈ 160 MB of (node,rank) rows: safely inside executor
+    * memory as a broadcast, and far past every test scale. */
+  private val BroadcastNodeLimit = 10000000L
 
   /** Row count straight from parquet footer metadata — a driver-side
-    * metadata read, NOT a Spark job, so the auto-mode probe charges
+    * metadata read, NOT a Spark job, so the size probe charges
     * nothing to the first benchmarked execution and can never serve a
     * stale memo after the files under a scale dir are rewritten. */
   private def footerRowCount(s: org.apache.spark.sql.SparkSession,

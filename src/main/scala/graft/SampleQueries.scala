@@ -667,13 +667,9 @@ object SampleQueries {
   private val CH_SHARDS = 8
   private val CH_VNODES = 16
 
-  /** JVM twin of TextOps.hash60 / the oracle's md5 incantation — used only
-    * at PLAN BUILD time to embed ring positions as literals. */
-  private def hash60Jvm(s: String): Long = TextOps.hash60Jvm(s)
-
   private def ring(k: Int): (Seq[Long], Seq[Int]) = {
     val nodes = for (s <- 0 until k; v <- 0 until CH_VNODES)
-      yield (hash60Jvm(s"ring:$s:$v"), s)
+      yield (TextOps.hash60Jvm(s"ring:$s:$v"), s)
     val sorted = nodes.sortBy(n => (n._1, n._2))
     (sorted.map(_._1), sorted.map(_._2))
   }

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graftshim.GraftSqlShim
+
+import graft.plans.{AsofJoinPlan, AsofJoinStrategy}
 
 /** AS-OF JOIN builder — point-in-time lookup as a first-class operator.
   *
@@ -15,19 +16,13 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * unique (key, time) for a deterministic answer (the discipline the
   * gated queries and their DuckDB `ASOF LEFT JOIN` oracles follow).
   *
-  * Two physical paths, same semantics (AsofSpec proves them equal):
-  *
-  *  - NATIVE (preferred, used when [[graft.GraftExtensions]] is
-  *    installed): plans [[graft.plans.AsofJoinPlan]], which
-  *    [[graft.plans.AsofJoinStrategy]] lowers to the co-partitioned
-  *    streaming merge [[graft.plans.AsofJoinExec]] — each side pays its
-  *    own (narrow) key exchange + sort, then one forward pass with a
-  *    single buffered right row.
-  *  - COMPOSABLE fallback (vanilla sessions, mirroring
-  *    SimilarityQueries' guard discipline): union + partitioned sort +
-  *    `last(payload, ignoreNulls)` over the strictly-preceding frame —
-  *    q50's formulation generalized. Correct everywhere, but both sides
-  *    ride ONE union exchange carrying null-padded struct payloads.
+  * One plan in every session: [[graft.plans.AsofJoinPlan]], which
+  * [[graft.plans.AsofJoinStrategy]] lowers to the co-partitioned
+  * streaming merge [[graft.plans.AsofJoinExec]] — each side pays its own
+  * (narrow) key exchange + sort, then one forward pass with a single
+  * buffered right row. [[graft.GraftExtensions]] injects the strategy
+  * into sessions built by [[graft.GraftSession]]; any other session gets
+  * it installed on its first as-of join.
   *
   * Output columns: left's then right's (right nullable); names must be
   * disjoint — rename before joining, as with any join producing a flat
@@ -47,68 +42,27 @@ object Asof {
       s"key types differ: ${typ(left, leftKey)} vs ${typ(right, rightKey)}")
     require(typ(left, leftTime) == typ(right, rightTime),
       s"time types differ: ${typ(left, leftTime)} vs ${typ(right, rightTime)}")
-    if (nativeAvailable(left.sparkSession))
-      native(left, right, leftKey, leftTime, rightKey, rightTime, strict)
-    else
-      composable(left, right, leftKey, leftTime, rightKey, rightTime, strict)
-  }
-
-  private def nativeAvailable(s: SparkSession): Boolean =
-    s.sessionState.planner.strategies
-      .exists(_.isInstanceOf[graft.plans.AsofJoinStrategy])
-
-  private[graft] def native(
-      left: DataFrame, right: DataFrame,
-      leftKey: String, leftTime: String,
-      rightKey: String, rightTime: String,
-      strict: Boolean): DataFrame = {
+    installStrategy(left.sparkSession)
     // fresh-alias the right side: a self-as-of (both legs off the same
     // scan) would otherwise present the same exprIds on both children
     val r2 = right.select(right.columns.toIndexedSeq.map(c => right.col(c).as(c)): _*)
     val lp = left.queryExecution.analyzed
     val rp = r2.queryExecution.analyzed
-    def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        n: String) = p.output.find(_.name == n).getOrElse(
+    def attr(p: LogicalPlan, n: String) = p.output.find(_.name == n).getOrElse(
       sys.error(s"asofJoin: no column '$n' in ${p.output.map(_.name)}"))
-    org.apache.spark.sql.graftshim.GraftSqlShim.ofRows(left.sparkSession,
-      graft.plans.AsofJoinPlan(lp, rp,
+    GraftSqlShim.ofRows(left.sparkSession,
+      AsofJoinPlan(lp, rp,
         attr(lp, leftKey), attr(rp, rightKey),
         attr(lp, leftTime), attr(rp, rightTime), strict))
   }
 
-  /** The q50 union+window formulation, generalized to any pair of frames.
-    * Equal-time safety rides the __side rank: strict puts LEFT first at
-    * an equal instant (a same-time right row is "not earlier" and must
-    * stay invisible to the (unboundedPreceding, -1) frame); inclusive
-    * puts RIGHT first so the same-instant row IS visible. Right rows
-    * with a null key or time can never match and are dropped up front,
-    * which also keeps null-key left rows from "matching" null-key right
-    * rows inside the null partition. */
-  private[graft] def composable(
-      left: DataFrame, right: DataFrame,
-      leftKey: String, leftTime: String,
-      rightKey: String, rightTime: String,
-      strict: Boolean): DataFrame = {
-    val lPayT = StructType(left.schema.fields)
-    val rPayT = StructType(right.schema.fields)
-    def pay(df: DataFrame): Column = struct(df.columns.toIndexedSeq.map(col): _*)
-    val lTag = left.select(
-      col(leftKey).as("__k"), col(leftTime).as("__t"),
-      lit(if (strict) 0 else 1).as("__side"),
-      pay(left).as("__lpay"), lit(null).cast(rPayT).as("__rpay"))
-    val rTag = right
-      .filter(col(rightKey).isNotNull && col(rightTime).isNotNull)
-      .select(
-        col(rightKey).as("__k"), col(rightTime).as("__t"),
-        lit(if (strict) 1 else 0).as("__side"),
-        lit(null).cast(lPayT).as("__lpay"), pay(right).as("__rpay"))
-    val w = Window.partitionBy(col("__k"))
-      .orderBy(col("__t"), col("__side"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    lTag.unionByName(rTag)
-      .withColumn("__asof", last(col("__rpay"), ignoreNulls = true).over(w))
-      .filter(col("__lpay").isNotNull)
-      .select(col("__lpay.*") +: right.columns.toIndexedSeq.map(c =>
-        col(s"__asof.$c").as(c)): _*)
-  }
+  /** Install-if-missing (idempotent): a session whose planner already
+    * carries the strategy — injected or installed earlier — is left as
+    * it is. */
+  private def installStrategy(s: SparkSession): Unit =
+    s.experimental.synchronized {
+      if (!s.sessionState.planner.strategies.exists(_.isInstanceOf[AsofJoinStrategy]))
+        s.experimental.extraStrategies =
+          new AsofJoinStrategy +: s.experimental.extraStrategies
+    }
 }

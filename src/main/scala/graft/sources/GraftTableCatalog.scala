@@ -910,22 +910,6 @@ object GraftTableCatalog {
     * `_change_type` would duplicate-name the CDF schema). */
   val ReservedCols: Set[String] =
     Set(FileMetaCol, PosMetaCol, ChangeTypeCol, ChangeVersionCol)
-  /** Columnar (vectorized) batch reads are the default; set
-    * `-Dgraft.catalog.columnar=false` for the row-reader path (the
-    * committed A/B in catalog_evidence_r16.json measures both). */
-  def columnarEnabled: Boolean =
-    !"false".equals(System.getProperty("graft.catalog.columnar"))
-
-  /** Kill switch + A/B handle for the scan-reported per-column
-    * statistics (CBO inputs). */
-  def colStatsEnabled: Boolean =
-    !"false".equals(System.getProperty("graft.catalog.colstats"))
-
-  /** Kill switch + A/B handle for the manifest-derived equi-height
-    * histograms riding the column statistics. */
-  def histogramEnabled: Boolean =
-    !"false".equals(System.getProperty("graft.catalog.histogram"))
-
   /** Synthesize an EQUI-HEIGHT histogram from per-file (lo, hi, rows,
     * ndv) spans — the piecewise-uniform density the manifest already
     * implies, no data scan: the CDF at any point is the sum of each
@@ -2082,26 +2066,9 @@ object GraftTableCatalog {
     }
 
     /** Reads one row's `fileCols` values (boxed; strings as java
-      * String); the caller projects by field id. */
-    def read(in: DataInputStream, types: Array[DataType],
-        fileCols: Int): Array[Any] = {
-      val bits = in.readLong()
-      val out = new Array[Any](fileCols)
-      (0 until fileCols).foreach { i =>
-        if ((bits & (1L << i)) == 0) out(i) = types(i) match {
-          case LongType => in.readLong()
-          case DoubleType => in.readDouble()
-          case StringType =>
-            val b = new Array[Byte](in.readInt()); in.readFully(b)
-            new String(b, StandardCharsets.UTF_8)
-          case t => sys.error(s"unsupported $t")
-        }
-      }
-      out
-    }
-
-    /** Same decode off a (memory-mapped) buffer — the driver-side
-      * rewrite/compact path's variant; big-endian matches the writer. */
+      * String) off a (memory-mapped) buffer — the driver-side
+      * rewrite/compact decode; big-endian matches the writer. The caller
+      * projects by field id. */
     def read(buf: java.nio.ByteBuffer, types: Array[DataType],
         fileCols: Int): Array[Any] = {
       val bits = buf.getLong()
@@ -2904,7 +2871,7 @@ object GraftTableCatalog {
   /** Decode one whole file (skipping already-deleted positions), each
     * row ALIGNED to the current schema by field id. Returns (rawPos,
     * alignedRow) pairs — the boundary-delete and compact machinery. */
-  private[sources] def readAligned(dir: File, e: Entry, schema: StructType,
+  private[graft] def readAligned(dir: File, e: Entry, schema: StructType,
       mp: ColMapping,
       eqCtx: Option[(Int, Seq[EqDelete])] = None)
       : IndexedSeq[(Long, Array[Any])] = {
@@ -3863,11 +3830,9 @@ private class CatalogScan(dir: File, tableSchema: StructType,
       liveFiles.map(_.partition).distinct.length)
   }
 
-  /** COLUMNAR by default (the vectorized codec decode); the system
-    * property is the row-path A/B + kill switch. */
+  /** Always COLUMNAR: the vectorized codec decode. */
   override def createReaderFactory(): PartitionReaderFactory =
-    if (columnarEnabled) CatalogColumnarReaderFactory
-    else CatalogReaderFactory
+    CatalogColumnarReaderFactory
   /** V2 CUSTOM METRICS: files actually opened and rows decoded, as
     * first-class SQL metrics — the file-skipping story, observable on
     * every executed plan rather than only via the test counters. */
@@ -3893,7 +3858,6 @@ private class CatalogScan(dir: File, tableSchema: StructType,
       val out = new java.util.HashMap[
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-      if (!colStatsEnabled) return out
       val totalRows = files.map(_.liveRows).sum
       val totalBytes = files.map(_.bytes).sum
       def put(name: String, loOpt: Option[Long], hiOpt: Option[Long],
@@ -3979,9 +3943,9 @@ private class CatalogScan(dir: File, tableSchema: StructType,
               }
             // histogram only when bounds did NOT decline — every live
             // file contributed an exact span, so the piecewise density
-            // is honest (the kill switch is the A/B handle)
+            // is honest
             val hist =
-              if (loOpt.isEmpty || !histogramEnabled) None
+              if (loOpt.isEmpty) None
               else manifestHistogram(
                 files.zip(per).collect {
                   case (e, Some(Some((lo, hi)))) if e.liveRows > 0 =>
@@ -4026,101 +3990,21 @@ private case class CatalogFilePartition(path: String, fileName: String,
   override def partitionKey(): InternalRow = new GenericInternalRow(keyVals)
 }
 
-private object CatalogReaderFactory extends PartitionReaderFactory {
-  import GraftTableCatalog._
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[CatalogFilePartition]
-    val types = fp.typeJson.map(DataType.fromJson)
-    filesOpened.incrementAndGet()
-    new PartitionReader[InternalRow] {
-      private val in = new DataInputStream(new BufferedInputStream(
-        new FileInputStream(fp.path), 1 << 16))
-      private val fileTag = UTF8String.fromString(fp.fileName)
-      private val skips = loadDeletePositions(fp.deletePaths)
-      private val eqKeys: GraftTableCatalog.EqKeys.Lookup =
-        EqKeys.lookup(fp.eqDeletePaths, fp.eqKeyIsStr, fp.fileSeq)
-      // CDF retraction mode: emit ONLY rows whose key an upsert replaced
-      private val keysOnly: Option[GraftTableCatalog.EqKeys.Lookup] =
-        if (fp.keysOnlyPaths.isEmpty) None
-        else Some(EqKeys.lookup(fp.keysOnlyPaths, fp.eqKeyIsStr))
-      private val only = fp.positions.map(_.sorted)
-      private var pos = -1L
-      private var si = 0
-      private var oi = 0
-      private var cur: Array[Any] = _
-      private var read = 0L
-      override def currentMetricsValues(): Array[CustomTaskMetric] =
-        Array(CatalogScanMetrics.task("filesOpened", 1L),
-          CatalogScanMetrics.task("rowsRead", read))
-      override def next(): Boolean = {
-        if (only.exists(o => oi >= o.length)) return false
-        while (pos + 1 < fp.rows) {
-          pos += 1
-          // the whole row decodes (the codec is positional); projection
-          // picks from it — pruning saves materialization, not I/O,
-          // which matches the format's floor
-          val vals = Codec.read(in, types, types.length)
-          var emit = only match {
-            case Some(o) =>
-              if (oi < o.length && o(oi) == pos) { oi += 1; true }
-              else false
-            case None =>
-              if (si < skips.length && skips(si) == pos) { si += 1; false }
-              else true
-          }
-          // upsert: a newer commit's key file supersedes this row
-          if (emit && fp.eqKeyPos >= 0 &&
-              (fp.eqDeletePaths.nonEmpty || keysOnly.isDefined)) {
-            val boxed: Any = vals(fp.eqKeyPos)
-            if (boxed != null && eqKeys.contains(boxed)) emit = false
-            if (emit) keysOnly.foreach { inc =>
-              if (boxed == null || !inc.contains(boxed)) emit = false
-            }
-          }
-          if (emit) { cur = vals; read += 1; return true }
-        }
-        false
-      }
-      override def get(): InternalRow = {
-        val extra = if (fp.changeType.isEmpty) 0 else 2
-        val row = new GenericInternalRow(fp.srcIdx.length + extra)
-        fp.srcIdx.indices.foreach { i =>
-          val v: Any = fp.srcIdx(i) match {
-            case -1 => fileTag
-            case -3 => pos // the raw in-file position (the row id)
-            case s if s >= 0 && s < cur.length => cur(s) match {
-              case str: String => UTF8String.fromString(str)
-              case other => other
-            }
-            case _ => null // the file predates this (evolved) column
-          }
-          row.update(i, v)
-        }
-        if (extra == 2) {
-          row.update(fp.srcIdx.length, UTF8String.fromString(fp.changeType))
-          row.update(fp.srcIdx.length + 1, fp.changeVersion)
-        }
-        row
-      }
-      override def close(): Unit = in.close()
-    }
-  }
-}
-
-/** The COLUMNAR read path ([[PartitionReaderFactory.supportColumnarReads]]):
+/** The one read path ([[PartitionReaderFactory.supportColumnarReads]]):
   * decodes the codec stream straight into `OnHeapColumnVector`s — no
   * per-row `GenericInternalRow`, no boxed values, and strings land as raw
-  * UTF-8 bytes (the row reader round-trips bytes → java String →
-  * UTF8String). Constant columns (`_file`, null-pads for columns a file
-  * predates, CDF stamps) ride `ConstantColumnVector`s. Delete-file
-  * skips, equality-delete key filtering and CDF positions-only mode
-  * follow the row reader's emit logic EXACTLY — a filtered row simply
-  * never advances the batch slot. The row `createReader` remains for
-  * Spark surfaces that ask for it. */
+  * UTF-8 bytes. Constant columns (`_file`, null-pads for columns a file
+  * predates, CDF stamps) ride `ConstantColumnVector`s. A row is skipped
+  * when a position delete names it, when a newer upsert key file holds
+  * its key, or (CDF positions-only mode) when it is not a listed
+  * position; a skipped row never advances the batch slot. Every
+  * partition reads columnar, so Spark never asks for a row reader. */
 private object CatalogColumnarReaderFactory extends PartitionReaderFactory {
   import GraftTableCatalog._
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    CatalogReaderFactory.createReader(p)
+    throw new UnsupportedOperationException(
+      "graft_cat scans read columnar only: supportColumnarReads is true " +
+        "for every partition, so no row reader exists")
   override def supportColumnarReads(p: InputPartition): Boolean = true
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -4141,10 +4025,9 @@ private class CatalogColumnarReader(fp: CatalogFilePartition)
     fp.outTypeJson.map(DataType.fromJson)
   // memory-mapped decode: the codec writes java.io.DataOutput big-endian,
   // which is ByteBuffer's default order — values read straight off the
-  // page cache with no stream indirection (the row reader's
-  // DataInputStream pays method-call + bounds overhead per VALUE; at
-  // 4096-row batches that overhead, not boxing, dominated the first
-  // columnar cut)
+  // page cache with no stream indirection (a DataInputStream pays
+  // method-call + bounds overhead per VALUE; at 4096-row batches that
+  // overhead, not boxing, dominated the first columnar cut)
   private val buf: java.nio.ByteBuffer = {
     val ch = java.nio.channels.FileChannel.open(
       java.nio.file.Paths.get(fp.path))
@@ -4955,8 +4838,7 @@ private class CatalogCowScan(base: CatalogScan, op: CatalogRowLevelOperation)
   override def supportedCustomMetrics(): Array[CustomMetric] =
     CatalogScanMetrics.supported
   override def createReaderFactory(): PartitionReaderFactory =
-    if (GraftTableCatalog.columnarEnabled) CatalogColumnarReaderFactory
-    else CatalogReaderFactory
+    CatalogColumnarReaderFactory
 
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -5563,8 +5445,7 @@ private class ChangesScan(dir: File, base: StructType, out: StructType,
     changeSplits(dir, base, startingVersion, readLatest(dir),
       failOnExpiredStart = false)
   override def createReaderFactory(): PartitionReaderFactory =
-    if (GraftTableCatalog.columnarEnabled) CatalogColumnarReaderFactory
-    else CatalogReaderFactory
+    CatalogColumnarReaderFactory
 }
 
 private class ChangesMicroBatchStream(dir: File, base: StructType,
@@ -5592,8 +5473,7 @@ private class ChangesMicroBatchStream(dir: File, base: StructType,
       end.asInstanceOf[VersionOffset].v,
       failOnExpiredStart = true)
   override def createReaderFactory(): PartitionReaderFactory =
-    if (GraftTableCatalog.columnarEnabled) CatalogColumnarReaderFactory
-    else CatalogReaderFactory
+    CatalogColumnarReaderFactory
 }
 
 /** The catalog table as a STREAMING SOURCE — version-offset tailing:
@@ -5691,8 +5571,7 @@ private class CatalogMicroBatchStream(dir: File, tableSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    if (GraftTableCatalog.columnarEnabled) CatalogColumnarReaderFactory
-    else CatalogReaderFactory
+    CatalogColumnarReaderFactory
 }
 
 private case class VersionOffset(v: Long)

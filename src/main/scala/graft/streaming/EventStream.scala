@@ -340,8 +340,8 @@ object EventStream {
     * other left rows ⇒ the union of per-micro-batch outputs equals the
     * one-shot as-of over the same rows however the feed is chopped
     * (StreamingSpec asserts the decomposition). Inside foreachBatch the
-    * batch is a plain DataFrame, so the NATIVE AsofJoinExec path serves
-    * each micro-batch when the extensions are installed. */
+    * batch is a plain DataFrame, so AsofJoinExec serves each
+    * micro-batch. */
   def asofProbeStream(leftStream: DataFrame, right: DataFrame,
       leftKey: String, leftTime: String, rightKey: String, rightTime: String,
       strict: Boolean = true)(

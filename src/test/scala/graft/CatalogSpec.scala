@@ -20,6 +20,10 @@ class CatalogSpec extends SparkSpec {
   private def rows(q: String): Seq[Seq[Any]] =
     sql(q).collect().toSeq.map(_.toSeq)
 
+  /** `rel` under the catalog root this session is configured with. */
+  private def catFile(rel: String): File =
+    new File(spark.conf.get("spark.sql.catalog.graft_cat.root"), rel)
+
   private def freshTable(name: String, ddlCols: String,
                          props: String = ""): String = {
     sql(s"CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
@@ -139,7 +143,7 @@ class CatalogSpec extends SparkSpec {
   test("schema evolution: ADD COLUMN null-pads old files without rewriting them; new inserts carry the column") {
     val t = freshTable("evo", "k BIGINT, v BIGINT")
     sql(s"INSERT INTO $t VALUES (1, 10), (2, 20)")
-    val dataDir = new File("work/graft_cat/db/evo/data")
+    val dataDir = catFile("db/evo/data")
     val filesBefore = dataDir.listFiles().map(f => (f.getName, f.length())).toSet
     sql(s"ALTER TABLE $t ADD COLUMN note STRING")
     sql(s"INSERT INTO $t VALUES (3, 30, 'three')")
@@ -216,7 +220,7 @@ class CatalogSpec extends SparkSpec {
     rows(s"SELECT * FROM $t") shouldBe before
     // two writers committing over the same base version: the second
     // manifest create must throw (fail-if-exists), never overwrite
-    val dir = new File("work/graft_cat/db/atomic")
+    val dir = catFile("db/atomic")
     val latest = GraftTableCatalog.readLatest(dir)
     GraftTableCatalog.commitVersion(dir, latest, "append", Seq.empty)
     intercept[Exception] {
@@ -238,7 +242,7 @@ class CatalogSpec extends SparkSpec {
     (0 until 3).foreach { i =>
       sql(s"INSERT INTO $t SELECT id, id FROM range(${i * 100}, ${i * 100 + 100}, 1, 1)")
     }
-    val dir = new File("work/graft_cat/db/upd")
+    val dir = catFile("db/upd")
     val before = GraftTableCatalog
       .readManifest(dir, GraftTableCatalog.readLatest(dir))
       .files.map(_.name)
@@ -266,7 +270,7 @@ class CatalogSpec extends SparkSpec {
     rows(s"SELECT k, v FROM $t ORDER BY k") shouldBe
       ((0L until 5L).map(k => Seq(k, k)) ++
         (5L until 15L).map(k => Seq(k, k * 100)))
-    val dir = new File("work/graft_cat/db/mrg")
+    val dir = catFile("db/mrg")
     GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir)).op shouldBe "merge"
   }
@@ -305,7 +309,7 @@ class CatalogSpec extends SparkSpec {
     def streamInto(name: String, upsert: Boolean): Unit = withClue(name) {
       val t = freshTable(name, "k BIGINT, v BIGINT",
         if (upsert) "TBLPROPERTIES ('write.upsert.key'='k')" else "")
-      val dir = new File(s"work/graft_cat/db/$name")
+      val dir = catFile(s"db/$name")
       def dataFiles(): Set[String] = GraftTableCatalog.readManifest(dir,
         GraftTableCatalog.readLatest(dir)).files.map(_.name).toSet
       implicit val sqlCtx = spark.sqlContext
@@ -491,7 +495,7 @@ class CatalogSpec extends SparkSpec {
     sql("""INSERT INTO graft_cat.db.ord
           |SELECT (id * 48271 + 12345) % 100000 AS k, id AS v
           |FROM range(0, 100000, 1, 8)""".stripMargin)
-    val dir = new File("work/graft_cat/db/ord")
+    val dir = catFile("db/ord")
     val files = GraftTableCatalog
       .readManifest(dir, GraftTableCatalog.readLatest(dir)).files
     files.length should be > 1
@@ -576,7 +580,7 @@ class CatalogSpec extends SparkSpec {
     sql(s"INSERT INTO $t VALUES (200, 1000)")
     rows("SELECT count(*) FROM graft_cat.db.v_doubled") shouldBe Seq(Seq(91L))
     // the stored definition lives beside the table dirs
-    new File("work/graft_cat/db/v_doubled.view.json").exists() shouldBe true
+    catFile("db/v_doubled.view.json").exists() shouldBe true
     // a table cannot shadow a view, nor a view a table
     intercept[Exception](
       sql("CREATE TABLE graft_cat.db.v_doubled (k BIGINT)"))
@@ -591,7 +595,7 @@ class CatalogSpec extends SparkSpec {
     sql(s"INSERT INTO $t SELECT id, id FROM range(0, 10, 1, 1)")  // v2
     Thread.sleep(25)
     sql(s"INSERT INTO $t SELECT id, id FROM range(10, 40, 1, 1)") // v3
-    val dir = new File("work/graft_cat/db/tstrav")
+    val dir = catFile("db/tstrav")
     val t2 = GraftTableCatalog.readManifest(dir, 2).commitMs
     val lit = java.time.format.DateTimeFormatter
       .ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
@@ -649,7 +653,7 @@ class CatalogSpec extends SparkSpec {
     sql("DROP TABLE IF EXISTS graft_cat.db.pid")
     sql("CREATE TABLE graft_cat.db.pid (g BIGINT, v BIGINT) PARTITIONED BY (g)")
     sql("INSERT INTO graft_cat.db.pid SELECT id % 4 AS g, id AS v FROM range(0, 8000, 1, 4)")
-    val dir = new File("work/graft_cat/db/pid")
+    val dir = catFile("db/pid")
     val files = GraftTableCatalog
       .readManifest(dir, GraftTableCatalog.readLatest(dir)).files
     files.length shouldBe 16 // 4 writer tasks x 4 tuples (fanout writer)
@@ -715,7 +719,7 @@ class CatalogSpec extends SparkSpec {
     sql("""CREATE TABLE graft_cat.db.mor (k BIGINT, v BIGINT)
           |TBLPROPERTIES ('delete.mode'='merge-on-read')""".stripMargin)
     sql("INSERT INTO graft_cat.db.mor SELECT id, id * 7 FROM range(0, 10000, 1, 1)")
-    val dir = new File("work/graft_cat/db/mor")
+    val dir = catFile("db/mor")
     val before = GraftTableCatalog
       .readManifest(dir, GraftTableCatalog.readLatest(dir)).files
     before.length shouldBe 1
@@ -760,7 +764,7 @@ class CatalogSpec extends SparkSpec {
       .map(_.getString(1)) should not contain "actas"
     intercept[Exception](rows("SELECT * FROM graft_cat.db.actas"))
     // and no staging debris in the namespace dir
-    new File("work/graft_cat/db").listFiles().map(_.getName)
+    catFile("db").listFiles().map(_.getName)
       .filter(_.startsWith(".stg-")) shouldBe empty
     // the happy path lands whole
     sql("CREATE TABLE graft_cat.db.actas AS SELECT id AS k FROM range(0, 100)")
@@ -777,7 +781,7 @@ class CatalogSpec extends SparkSpec {
     sql("DROP TABLE IF EXISTS graft_cat.db.evo")
     sql("CREATE TABLE graft_cat.db.evo (a BIGINT, b STRING)")
     sql("INSERT INTO graft_cat.db.evo SELECT id, concat('x', id) FROM range(0, 1000, 1, 1)")
-    val dir = new File("work/graft_cat/db/evo")
+    val dir = catFile("db/evo")
     val gen1 = GraftTableCatalog
       .readManifest(dir, GraftTableCatalog.readLatest(dir)).files.map(_.name)
     sql("ALTER TABLE graft_cat.db.evo RENAME COLUMN a TO a2")
@@ -909,7 +913,7 @@ class CatalogSpec extends SparkSpec {
           |PARTITIONED BY (g)
           |TBLPROPERTIES ('write.distribution'='hash')""".stripMargin)
     sql("INSERT INTO graft_cat.db.phash SELECT id % 4 AS g, id AS v FROM range(0, 8000, 1, 4)")
-    val dir = new File("work/graft_cat/db/phash")
+    val dir = catFile("db/phash")
     val files = GraftTableCatalog
       .readManifest(dir, GraftTableCatalog.readLatest(dir)).files
     // the identity-partitioning test's fanout control lands 16 files for
@@ -932,8 +936,8 @@ class CatalogSpec extends SparkSpec {
     // reported size must dwarf the broadcast overhead)
     sql("INSERT INTO graft_cat.db.dppf SELECT id % 8 AS g, id AS v FROM range(0, 2000000, 1, 4)")
     // 8 partitions x 4 tasks = 32 files
-    GraftTableCatalog.readManifest(new File("work/graft_cat/db/dppf"),
-      GraftTableCatalog.readLatest(new File("work/graft_cat/db/dppf")))
+    GraftTableCatalog.readManifest(catFile("db/dppf"),
+      GraftTableCatalog.readLatest(catFile("db/dppf")))
       .files.length shouldBe 32
     val dim = Tables.nation(spark, "/root/testdata/sf0.001")
       .filter(col("n_regionkey") === 2)
@@ -959,7 +963,7 @@ class CatalogSpec extends SparkSpec {
           |TBLPROPERTIES ('write.upsert.key'='k')""".stripMargin)
     sql("INSERT INTO graft_cat.db.ups SELECT id, id FROM range(0, 1000, 1, 2)")
     sql("INSERT INTO graft_cat.db.ups SELECT id, id + 1000000 FROM range(500, 1500, 1, 2)")
-    val dir = new File("work/graft_cat/db/ups")
+    val dir = catFile("db/ups")
     val m = GraftTableCatalog.readManifest(dir, GraftTableCatalog.readLatest(dir))
     m.op shouldBe "upsert"
     m.eqDeletes should not be empty
@@ -1034,7 +1038,7 @@ class CatalogSpec extends SparkSpec {
     sql("""CREATE TABLE graft_cat.db.mu (k BIGINT, v BIGINT)
           |TBLPROPERTIES ('update.mode'='merge-on-read')""".stripMargin)
     sql("INSERT INTO graft_cat.db.mu SELECT id, id FROM range(0, 100000, 1, 4)")
-    val dir = new File("work/graft_cat/db/mu")
+    val dir = catFile("db/mu")
     val before = GraftTableCatalog
       .readManifest(dir, GraftTableCatalog.readLatest(dir)).files.map(_.name)
     sql("UPDATE graft_cat.db.mu SET v = v + 7 WHERE k >= 10 AND k < 20")
@@ -1106,7 +1110,7 @@ class CatalogSpec extends SparkSpec {
     // '?' type codes still decode by current-schema prefix
     val t = freshTable("adv16", "k BIGINT, v BIGINT")
     sql(s"INSERT INTO $t VALUES (1, 10)")
-    val dir = new File("work/graft_cat/db/adv16")
+    val dir = catFile("db/adv16")
     val latest = GraftTableCatalog.readLatest(dir)
     val m = GraftTableCatalog.readManifest(dir, latest)
     val legacy = m.files.map(_.copy(fieldIds = Seq.empty, typeCodes = ""))
@@ -1142,8 +1146,9 @@ class CatalogSpec extends SparkSpec {
   }
 
 
-  test("columnar read path: catalog scans report ColumnarBatch reads, and every mutation surface answers identically to the row reader") {
-    val t = freshTable("colnar", "k BIGINT, x DOUBLE, s STRING")
+  test("columnar read path: catalog scans report ColumnarBatch reads, and every mutation surface answers like an independent reference") {
+    val t = freshTable("colnar", "k BIGINT, x DOUBLE, s STRING",
+      "TBLPROPERTIES ('update.mode'='merge-on-read')")
     sql(s"INSERT INTO $t SELECT id, id * 0.5, concat('s', id) " +
       "FROM range(0, 50000, 1, 4)")
     sql(s"INSERT INTO $t VALUES (50000, NULL, NULL)")
@@ -1152,21 +1157,39 @@ class CatalogSpec extends SparkSpec {
     val df = sql(s"SELECT k, x, s FROM $t WHERE k >= 10 AND k < 40000")
     df.collect().length shouldBe 39990
     df.queryExecution.executedPlan.toString should include ("ColumnarToRow")
-    // row-reader A/B: identical answers over nulls, metadata columns,
-    // MOR position deletes, upsert equality deletes and evolution pads
+    // nulls, MOR position deletes and evolution pads against the same
+    // rows generated by Spark itself with the same DELETE applied
     sql(s"ALTER TABLE $t ADD COLUMN pad BIGINT")
     sql(s"INSERT INTO $t VALUES (70000, 7.0, 'new', 77)")
     sql(s"DELETE FROM $t WHERE k % 9999 = 17")
-    val probes = Seq(
-      s"SELECT sum(k), sum(x), count(s), sum(pad), count(*) FROM $t",
-      s"SELECT count(DISTINCT _file), sum(_pos * (k % 7)) FROM $t",
-      s"SELECT k, x, s, pad FROM $t WHERE k >= 49995 ORDER BY k")
-    def run() = probes.map(q => rows(q))
-    val colnar = run()
-    System.setProperty("graft.catalog.columnar", "false")
-    try run() shouldBe colnar
-    finally System.clearProperty("graft.catalog.columnar")
-    // MOR + upsert twin: columnar reader resolves delete files equally
+    val ref = spark.range(0, 50000)
+      .selectExpr("id AS k", "id * 0.5 AS x", "concat('s', id) AS s",
+        "CAST(NULL AS BIGINT) AS pad")
+      .union(sql("SELECT 50000L, CAST(NULL AS DOUBLE), CAST(NULL AS STRING), " +
+        "CAST(NULL AS BIGINT)"))
+      .union(sql("SELECT 70000L, 7.0D, 'new', 77L"))
+      .where("k % 9999 != 17")
+    rows(s"SELECT sum(k), sum(x), count(s), sum(pad), count(*) FROM $t") shouldBe
+      ref.selectExpr("sum(k)", "sum(x)", "count(s)", "sum(pad)", "count(*)")
+        .collect().toSeq.map(_.toSeq)
+    rows(s"SELECT k, x, s, pad FROM $t WHERE k >= 49995 ORDER BY k") shouldBe
+      ref.where("k >= 49995").orderBy("k").collect().toSeq.map(_.toSeq)
+    // metadata columns against the head manifest's files decoded directly
+    val dir = catFile("db/colnar")
+    val schema = GraftTableCatalog.readSchema(dir)
+    val mp = GraftTableCatalog.readMapping(dir, schema)
+    val head = GraftTableCatalog.readManifest(dir,
+      GraftTableCatalog.readLatest(dir))
+    head.files.exists(_.deletes.nonEmpty) shouldBe true
+    val decoded = head.files.flatMap { e =>
+      GraftTableCatalog.readAligned(dir, e, schema, mp).map { case (pos, row) =>
+        (e.name, pos, row(0).asInstanceOf[Long]) }
+    }
+    decoded.length shouldBe 50001 - 5 + 1
+    sql(s"SELECT _file, _pos, k FROM $t").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet shouldBe
+      decoded.toSet
+    // MOR + upsert twin: position deletes and equality deletes both apply
     sql("DROP TABLE IF EXISTS graft_cat.db.colnar_ups")
     sql("""CREATE TABLE graft_cat.db.colnar_ups (k BIGINT, v STRING)
       |TBLPROPERTIES ('write.upsert.key'='k',
@@ -1176,13 +1199,10 @@ class CatalogSpec extends SparkSpec {
     sql("INSERT INTO graft_cat.db.colnar_ups " +
       "SELECT id, concat('u', id) FROM range(5000, 6000, 1, 1)")
     sql("DELETE FROM graft_cat.db.colnar_ups WHERE k >= 19990 AND k < 19995")
-    val q = "SELECT count(*), sum(k), count(CASE WHEN v LIKE 'u%' THEN 1 END) " +
-      "FROM graft_cat.db.colnar_ups"
-    val colUps = rows(q)
-    System.setProperty("graft.catalog.columnar", "false")
-    try rows(q) shouldBe colUps
-    finally System.clearProperty("graft.catalog.columnar")
-    colUps.head.head shouldBe 19995L
+    // 20000 keys, 5 deleted (sum 19990..19994 = 99960), 1000 upserted
+    rows("SELECT count(*), sum(k), count(CASE WHEN v LIKE 'u%' THEN 1 END) " +
+      "FROM graft_cat.db.colnar_ups") shouldBe
+      Seq(Seq(19995L, 19999L * 20000L / 2 - 99960L, 1000L))
   }
 
 
@@ -1193,7 +1213,7 @@ class CatalogSpec extends SparkSpec {
     sql("CALL graft_cat.sys.branch('db', 'wap', 'audit')")
     // write to the branch; audit it through the branch handle; main is
     // untouched in content AND in version history
-    val dir = new File("work/graft_cat/db/wap")
+    val dir = catFile("db/wap")
     val latestBefore = GraftTableCatalog.readLatest(dir)
     sql(s"INSERT INTO $t.branch_audit SELECT id, id * 2 FROM range(1000, 2000, 1, 2)")
     sql(s"UPDATE $t.branch_audit SET v = 0 WHERE k >= 1900")
@@ -1249,7 +1269,7 @@ class CatalogSpec extends SparkSpec {
     // generation 0: identity(g) — one task, 4 partition files
     sql("INSERT INTO graft_cat.db.specev SELECT id % 4, " +
       "(19700 + id % 3) * 86400000, id FROM range(0, 40000, 1, 1)")
-    val dir = new File("work/graft_cat/db/specev")
+    val dir = catFile("db/specev")
     def entries() = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir)).files
     val gen0 = entries().map(_.name).toSet
@@ -1313,7 +1333,7 @@ class CatalogSpec extends SparkSpec {
       .map(_.getString(0)) shouldBe Array("g=2")
     // DROP PARTITION is metadata-only: entries leave the manifest, no
     // data file is read or rewritten
-    val dir = new File("work/graft_cat/db/pmgmt")
+    val dir = catFile("db/pmgmt")
     val before = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir)).files.map(_.name).toSet
     GraftTableCatalog.filesOpened.set(0)
@@ -1362,7 +1382,7 @@ class CatalogSpec extends SparkSpec {
     sql("INSERT INTO graft_cat.db.eqmem " +
       "SELECT (id * 48271 + 7) % 100000, concat('u', id) " +
       "FROM range(0, 10000, 1, 2)")
-    val dir = new File("work/graft_cat/db/eqmem")
+    val dir = catFile("db/eqmem")
     val m = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir))
     m.eqDeletes should not be empty
@@ -1383,14 +1403,14 @@ class CatalogSpec extends SparkSpec {
         }
       } finally in.close()
     }
-    // correctness through the mmap probe path, columnar AND row readers
+    // correctness through the mmap probe path: the scramble is a
+    // bijection mod 100000, so exactly its 10000 keys carry the new value
     val probe = "SELECT count(*), count(CASE WHEN v LIKE 'u%' THEN 1 END) " +
       "FROM graft_cat.db.eqmem"
     val col = rows(probe)
     col shouldBe Seq(Seq(100000L, 10000L))
-    System.setProperty("graft.catalog.columnar", "false")
-    try rows(probe) shouldBe col
-    finally System.clearProperty("graft.catalog.columnar")
+    rows("SELECT sum(k) FROM graft_cat.db.eqmem WHERE v LIKE 'u%'") shouldBe
+      Seq(Seq((0L until 10000L).map(id => (id * 48271 + 7) % 100000).sum))
     // STRING keys: sorted in UTF8 binary order, offset footer present
     sql("DROP TABLE IF EXISTS graft_cat.db.eqmems")
     sql("""CREATE TABLE graft_cat.db.eqmems (k STRING, v BIGINT)
@@ -1442,7 +1462,7 @@ class CatalogSpec extends SparkSpec {
     // land in a small insert file
     sql("UPDATE graft_cat.db.mucdf SET v = v + 100000 " +
       "WHERE k >= 100 AND k < 200")
-    val dir = new File("work/graft_cat/db/mucdf")
+    val dir = catFile("db/mucdf")
     GraftTableCatalog.readManifest(dir, GraftTableCatalog.readLatest(dir))
       .files.exists(_.deletes.nonEmpty) shouldBe true
     // UPSERT the same key range plus untouched keys: retractions must
@@ -1619,7 +1639,7 @@ class CatalogSpec extends SparkSpec {
     // type-shape torture: nulls in every column, empty + 4-byte + long
     // strings (the mmap reader's position-arithmetic edge), negative
     // longs, double specials — written by the primitive-array encoder,
-    // read back by BOTH readers
+    // read back against the values written
     sql("DROP TABLE IF EXISTS graft_cat.db.vecw")
     sql("CREATE TABLE graft_cat.db.vecw (k BIGINT, x DOUBLE, s STRING)")
     sql("INSERT INTO graft_cat.db.vecw VALUES " +
@@ -1636,11 +1656,13 @@ class CatalogSpec extends SparkSpec {
       case v => v
     })
     val colRes = rows(q)
-    System.setProperty("graft.catalog.columnar", "false")
-    try canon(rows(q)) shouldBe canon(colRes)
-    finally System.clearProperty("graft.catalog.columnar")
-    colRes.length shouldBe 5
-    colRes(2)(2).asInstanceOf[String].length shouldBe 100000 // k=0 row
+    // SQL's -0.0 is a DECIMAL literal (no negative zero) cast to +0.0
+    canon(colRes) shouldBe canon(Seq(
+      Seq(null, null, null),
+      Seq(Long.MinValue, 0.0, ""),
+      Seq(0L, Double.PositiveInfinity, "x" * 100000),
+      Seq(42L, 1.5e-300, "μδ→"),
+      Seq(Long.MaxValue, Double.NaN, "abcd")))
     // extreme values stay exact through the new encoder (the file with
     // the all-NULL k row has no k stats, so this scans — correctness
     // check; the 0-file metadata proof runs on vecs below)
@@ -1650,7 +1672,7 @@ class CatalogSpec extends SparkSpec {
     sql("DROP TABLE IF EXISTS graft_cat.db.vecs")
     sql("CREATE TABLE graft_cat.db.vecs AS SELECT id AS k " +
       "FROM range(0, 1000, 1, 1)")
-    val sdir = new File("work/graft_cat/db/vecs")
+    val sdir = catFile("db/vecs")
     val se = GraftTableCatalog.readManifest(sdir,
       GraftTableCatalog.readLatest(sdir)).files.head
     se.sums(s"#${se.fieldIds.head}") shouldBe 499500L
@@ -1686,7 +1708,7 @@ class CatalogSpec extends SparkSpec {
   test("optimistic concurrency: contended appends all land, held reservations fail loudly after bounded retries, overwrite refuses to rebase") {
     import GraftTableCatalog._
     val t = freshTable("occ", "k BIGINT, v BIGINT")
-    val dir = new File("work/graft_cat/db/occ")
+    val dir = catFile("db/occ")
     // (1) 6 concurrent INSERT writers: every one must land (losers
     // rebase onto the advanced head and retry), one commit each
     val v0 = readLatest(dir)
@@ -1768,29 +1790,26 @@ class CatalogSpec extends SparkSpec {
         "SELECT concat('k', id) AS s, id * 7 AS v " +
         "FROM range(0, 200000, 1, 4)")
     }
-    def planWith(colStats: Boolean): (Long, String) = {
-      if (!colStats) System.setProperty("graft.catalog.colstats", "false")
-      try {
-        SessionConf.withValue(spark, "spark.sql.cbo.enabled", "true") {
-          SessionConf.withValue(spark, "spark.sql.adaptive.enabled", "false") {
-            SessionConf.withValue(spark,
-              "spark.sql.autoBroadcastJoinThreshold", "262144") {
-              val df = sql("SELECT count(*) AS n FROM graft_cat.db.cbos_a a " +
-                "JOIN graft_cat.db.cbos_b b ON a.s = b.s WHERE b.s = 'k17'")
-              (df.collect().head.getLong(0),
-                df.queryExecution.executedPlan.toString)
-            }
+    def planWith(pred: String): (Long, String) =
+      SessionConf.withValue(spark, "spark.sql.cbo.enabled", "true") {
+        SessionConf.withValue(spark, "spark.sql.adaptive.enabled", "false") {
+          SessionConf.withValue(spark,
+            "spark.sql.autoBroadcastJoinThreshold", "262144") {
+            val df = sql("SELECT count(*) AS n FROM graft_cat.db.cbos_a a " +
+              s"JOIN graft_cat.db.cbos_b b ON a.s = b.s WHERE $pred")
+            (df.collect().head.getLong(0),
+              df.queryExecution.executedPlan.toString)
           }
         }
-      } finally System.clearProperty("graft.catalog.colstats")
-    }
+      }
     // with the writer's linear-counting ndv the CBO prices `s = 'k17'`
     // at ~1/200000 selectivity -> the filtered leg is tiny -> broadcast
-    val (nOn, planOn) = planWith(colStats = true)
+    val (nOn, planOn) = planWith("b.s = 'k17'")
     nOn shouldBe 1L
     planOn should include ("BroadcastHashJoin")
-    // stats withheld: the equality is unpriceable, shuffle join
-    val (nOff, planOff) = planWith(colStats = false)
+    // the same answer through a function the statistics cannot price:
+    // the filtered leg stays over the threshold, shuffle join
+    val (nOff, planOff) = planWith("lower(b.s) = 'k17'")
     nOff shouldBe 1L
     planOff should not include "BroadcastHashJoin"
     planOff should include ("SortMergeJoin")
@@ -1801,7 +1820,7 @@ class CatalogSpec extends SparkSpec {
     sql("DROP TABLE IF EXISTS graft_cat.db.hb")
     sql("CREATE TABLE graft_cat.db.hb AS SELECT id AS k " +
       "FROM range(0, 1000, 1, 1)")
-    val dir = new File("work/graft_cat/db/hb")
+    val dir = catFile("db/hb")
     def attrStats = SessionConf.withValue(spark,
         "spark.sql.cbo.enabled", "true") {
       sql("SELECT k FROM graft_cat.db.hb").queryExecution.optimizedPlan
@@ -1837,30 +1856,27 @@ class CatalogSpec extends SparkSpec {
       sql(s"CREATE TABLE graft_cat.db.$t AS SELECT id AS k, id * 7 AS v " +
         "FROM range(0, 200000, 1, 4)")
     }
-    def planWith(colStats: Boolean): (Long, String) = {
-      if (!colStats) System.setProperty("graft.catalog.colstats", "false")
-      try {
-        SessionConf.withValue(spark, "spark.sql.cbo.enabled", "true") {
-          SessionConf.withValue(spark, "spark.sql.adaptive.enabled", "false") {
-            SessionConf.withValue(spark,
-              "spark.sql.autoBroadcastJoinThreshold", "262144") {
-              val df = sql("SELECT count(*) AS n FROM graft_cat.db.cbo_a a " +
-                "JOIN graft_cat.db.cbo_b b ON a.k = b.k WHERE b.k < 300")
-              (df.collect().head.getLong(0),
-                df.queryExecution.executedPlan.toString)
-            }
+    def planWith(pred: String): (Long, String) =
+      SessionConf.withValue(spark, "spark.sql.cbo.enabled", "true") {
+        SessionConf.withValue(spark, "spark.sql.adaptive.enabled", "false") {
+          SessionConf.withValue(spark,
+            "spark.sql.autoBroadcastJoinThreshold", "262144") {
+            val df = sql("SELECT count(*) AS n FROM graft_cat.db.cbo_a a " +
+              s"JOIN graft_cat.db.cbo_b b ON a.k = b.k WHERE $pred")
+            (df.collect().head.getLong(0),
+              df.queryExecution.executedPlan.toString)
           }
         }
-      } finally System.clearProperty("graft.catalog.colstats")
-    }
+      }
     // with manifest column stats the CBO prices `k < 300` over the
     // known [0, 200000) range -> the filtered leg is tiny -> broadcast
-    val (nOn, planOn) = planWith(colStats = true)
+    val (nOn, planOn) = planWith("b.k < 300")
     nOn shouldBe 300L
     planOn should include ("BroadcastHashJoin")
-    // same query, stats withheld: the filter's output is unpriceable,
-    // both legs stay over the threshold -> shuffle join, same answer
-    val (nOff, planOff) = planWith(colStats = false)
+    // the same rows through a function the statistics cannot price: the
+    // filter's output is unpriceable, both legs stay over the threshold
+    // -> shuffle join, same answer
+    val (nOff, planOff) = planWith("abs(b.k) < 300")
     nOff shouldBe 300L
     planOff should not include "BroadcastHashJoin"
     planOff should include ("SortMergeJoin")
@@ -1933,7 +1949,7 @@ class CatalogSpec extends SparkSpec {
       "FROM range(500, 1500, 1, 1)")
     sql("INSERT INTO graft_cat.db.eqrw SELECT id, concat('d', id) " +
       "FROM range(9000, 9100, 1, 1)")
-    val dir = new File("work/graft_cat/db/eqrw")
+    val dir = catFile("db/eqrw")
     def eqDels = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir)).eqDeletes
     eqDels.length shouldBe 3
@@ -1979,8 +1995,8 @@ class CatalogSpec extends SparkSpec {
     // ... and compaction still repays the whole debt after a merge
     sql("CALL graft_cat.sys.compact('db', 'eqrws', 1073741824)")
     rows(sProbe) shouldBe sBefore
-    GraftTableCatalog.readManifest(new File("work/graft_cat/db/eqrws"),
-      GraftTableCatalog.readLatest(new File("work/graft_cat/db/eqrws")))
+    GraftTableCatalog.readManifest(catFile("db/eqrws"),
+      GraftTableCatalog.readLatest(catFile("db/eqrws")))
       .eqDeletes shouldBe empty
   }
 
@@ -1995,7 +2011,7 @@ class CatalogSpec extends SparkSpec {
       "FROM range(100, 300, 1, 1)")
     sql("INSERT INTO graft_cat.db.eqrb SELECT id, concat('c', id) " +
       "FROM range(200, 400, 1, 1)")
-    val dir = new File("work/graft_cat/db/eqrb")
+    val dir = catFile("db/eqrb")
     def eqDels = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir)).eqDeletes
     eqDels.length shouldBe 2
@@ -2062,7 +2078,7 @@ class CatalogSpec extends SparkSpec {
     sql("CREATE TABLE graft_cat.db.brocc AS SELECT id AS k " +
       "FROM range(0, 100, 1, 1)")
     sql("CALL graft_cat.sys.branch('db', 'brocc', 'aud')")
-    val dir = new File("work/graft_cat/db/brocc")
+    val dir = catFile("db/brocc")
     val stale = GraftTableCatalog.headVersion(dir, Some("aud"))
     // writer A advances the branch while writer B still holds `stale`
     sql("INSERT INTO graft_cat.db.brocc.branch_aud " +
@@ -2084,7 +2100,7 @@ class CatalogSpec extends SparkSpec {
     sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
     sql("DROP TABLE IF EXISTS graft_cat.db.brlock")
     sql("CREATE TABLE graft_cat.db.brlock AS SELECT id FROM range(10)")
-    val dir = new File("work/graft_cat/db/brlock")
+    val dir = catFile("db/brlock")
     // a crashed holder's orphan: present and older than the reclaim window
     val lock = new File(dir, ".branches.lock")
     java.nio.file.Files.createFile(lock.toPath)
@@ -2113,7 +2129,7 @@ class CatalogSpec extends SparkSpec {
       sql(s"INSERT INTO graft_cat.db.segs SELECT $g, id " +
         s"FROM range(${g * 100}, ${g * 100 + 100}, 1, 1)")
     }
-    val dir = new File("work/graft_cat/db/segs")
+    val dir = catFile("db/segs")
     val m = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir))
     // eight partition-disjoint appends -> eight segments, reused by
@@ -2168,7 +2184,7 @@ class CatalogSpec extends SparkSpec {
       sql(s"INSERT INTO graft_cat.db.seggc SELECT id, id " +
         s"FROM range(${i * 100}, ${i * 100 + 100}, 1, 1)")
     }
-    val dir = new File("work/graft_cat/db/seggc")
+    val dir = catFile("db/seggc")
     // full compaction rewrites everything into one fresh segment
     sql("CALL graft_cat.sys.compact('db', 'seggc', 1073741824)")
     def segsOnDisk = dir.listFiles().map(_.getName)
@@ -2220,7 +2236,7 @@ class CatalogSpec extends SparkSpec {
     sql("DROP TABLE IF EXISTS graft_cat.db.vref")
     sql("CREATE TABLE graft_cat.db.vref AS SELECT id AS k " +
       "FROM range(0, 1000, 1, 1)")
-    val ctasV = GraftTableCatalog.readLatest(new File("work/graft_cat/db/vref"))
+    val ctasV = GraftTableCatalog.readLatest(catFile("db/vref"))
     sql(s"CALL graft_cat.sys.tag('db', 'vref', 'first', $ctasV)")
     sql("INSERT INTO graft_cat.db.vref SELECT id FROM range(1000, 1500, 1, 1)")
     sql("CALL graft_cat.sys.branch('db', 'vref', 'audit')")
@@ -2258,7 +2274,7 @@ class CatalogSpec extends SparkSpec {
     sql("INSERT INTO graft_cat.db.bloomt " +
       "SELECT hash(id) * 1000000007L + id, concat('key', id), id " +
       "FROM range(0, 80000, 1, 8)")
-    val dir = new File("work/graft_cat/db/bloomt")
+    val dir = catFile("db/bloomt")
     val m = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir))
     m.files.length shouldBe 8
@@ -2343,7 +2359,7 @@ class CatalogSpec extends SparkSpec {
     GraftTableCatalog.filesOpened.get shouldBe 0L
     // (2) branches.json mutations are lock-serialized: interleaved
     // operations on DIFFERENT branches never lose an update
-    val dir = new File("work/graft_cat/db/adv17d")
+    val dir = catFile("db/adv17d")
     import GraftTableCatalog.{mutateBranchRefs, readBranchRefs, BranchRef}
     val threads = (0 until 4).map { t =>
       new Thread(() => (0 until 25).foreach { i =>
@@ -2372,7 +2388,7 @@ class CatalogSpec extends SparkSpec {
     sql("CREATE TABLE graft_cat.db.adv17s (g BIGINT, k BIGINT) " +
       "PARTITIONED BY (g)")
     sql("INSERT INTO graft_cat.db.adv17s VALUES (1, 10)")
-    val sdir = new File("work/graft_cat/db/adv17s")
+    val sdir = catFile("db/adv17s")
     val gen0 = java.nio.file.Files.readString(
       new File(sdir, "partition.json").toPath)
     sql("CALL graft_cat.sys.set_partition_spec('db', 'adv17s', 'bucket(8,k)')")
@@ -2412,7 +2428,7 @@ class CatalogSpec extends SparkSpec {
     // an unpublished branch commit pins ITS files too
     sql("CALL graft_cat.sys.branch('db', 'orph', 'wip')")
     sql(s"INSERT INTO $t.branch_wip SELECT id, id FROM range(100, 120)")
-    val dir = new File("work/graft_cat/db/orph")
+    val dir = catFile("db/orph")
     val dataDir = new File(dir, "data")
     val before = dataDir.listFiles().map(_.getName).toSet
     before.size should be > 4
@@ -2455,7 +2471,7 @@ class CatalogSpec extends SparkSpec {
       sql(s"INSERT INTO $t SELECT id, (id * 2654435761) % 65536, id " +
         s"FROM range(${i * 4096}, ${(i + 1) * 4096}, 1, 1)")
     }
-    val dir = new File("work/graft_cat/db/zord")
+    val dir = catFile("db/zord")
     val preV = GraftTableCatalog.readLatest(dir)
     val check = s"SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy, " +
       s"sum(x * y % 97) AS mix FROM $t"
@@ -2509,7 +2525,7 @@ class CatalogSpec extends SparkSpec {
     val t = freshTable("mani", "k BIGINT, v BIGINT")
     sql(s"INSERT INTO $t SELECT id, id FROM range(0, 100, 1, 1)")
     sql(s"INSERT INTO $t SELECT id, id FROM range(100, 300, 1, 1)")
-    val dir = new File("work/graft_cat/db/mani")
+    val dir = catFile("db/mani")
     val m = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir))
     GraftTableCatalog.segmentsRead.set(0)
@@ -2533,23 +2549,26 @@ class CatalogSpec extends SparkSpec {
       "SELECT id % 100, id FROM range(0, 90000, 1, 4)")
     sql("INSERT INTO graft_cat.db.histo " +
       "SELECT 100 + (id * 1000), id FROM range(0, 10000, 1, 2)")
-    def estimate(hist: Boolean): BigInt = {
-      if (!hist) System.setProperty("graft.catalog.histogram", "false")
-      try {
-        SessionConf.withValue(spark, "spark.sql.cbo.enabled", "true") {
-          // v < 200000 cuts MID-tail-file, so absorption declines, the
-          // filter stays residual, and the estimate is genuinely priced
-          // (a file-aligned cutoff would be answered exactly by file
-          // skipping with or without a histogram)
-          val plan = sql(
-            "SELECT v, p FROM graft_cat.db.histo WHERE v < 200000")
-            .queryExecution.optimizedPlan
-          plan.stats.rowCount.getOrElse(sys.error("no rowCount estimate"))
-        }
-      } finally System.clearProperty("graft.catalog.histogram")
-    }
-    val withHist = estimate(hist = true)
-    val without = estimate(hist = false)
+    // the same rows in ONE file: a single span yields no histogram
+    sql("DROP TABLE IF EXISTS graft_cat.db.histo1")
+    sql("CREATE TABLE graft_cat.db.histo1 AS " +
+      "SELECT /*+ COALESCE(1) */ v, p FROM graft_cat.db.histo")
+    val one = catFile("db/histo1")
+    GraftTableCatalog.readManifest(one, GraftTableCatalog.readLatest(one))
+      .files.length shouldBe 1
+    def estimate(table: String): BigInt =
+      SessionConf.withValue(spark, "spark.sql.cbo.enabled", "true") {
+        // v < 200000 cuts MID-tail-file, so absorption declines, the
+        // filter stays residual, and the estimate is genuinely priced
+        // (a file-aligned cutoff would be answered exactly by file
+        // skipping with or without a histogram)
+        val plan = sql(
+          s"SELECT v, p FROM graft_cat.db.$table WHERE v < 200000")
+          .queryExecution.optimizedPlan
+        plan.stats.rowCount.getOrElse(sys.error("no rowCount estimate"))
+      }
+    val withHist = estimate("histo")
+    val without = estimate("histo1")
     // truth ~90200 (the dense 90k + ~200 tail rows). The bare span
     // prices v < 200000 uniformly over [0, ~10M] -> ~2% of rows; the
     // histogram knows 90% of the mass sits below 100.
@@ -2557,6 +2576,7 @@ class CatalogSpec extends SparkSpec {
     withHist.toLong should be <= 120000L
     without.toLong should be <= 10000L
     sql("DROP TABLE graft_cat.db.histo")
+    sql("DROP TABLE graft_cat.db.histo1")
   }
 
   test("sys.rewrite_sorted mode 'distributed': the cluster rewrites through the catalog's own writer; probes prune on both columns, content is byte-equivalent, the change feed skips it; partitioned tables decline loudly, append-evolved tables rewrite with null-pads") {
@@ -2565,7 +2585,7 @@ class CatalogSpec extends SparkSpec {
       sql(s"INSERT INTO $t SELECT id, (id * 2654435761) % 65536, id " +
         s"FROM range(${i * 8192}, ${(i + 1) * 8192}, 1, 1)")
     }
-    val dir = new File("work/graft_cat/db/zdist")
+    val dir = catFile("db/zdist")
     val preV = GraftTableCatalog.readLatest(dir)
     val check = s"SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy, " +
       s"sum(x * y % 97) AS mix FROM $t"

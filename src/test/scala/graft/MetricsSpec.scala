@@ -168,4 +168,29 @@ class MetricsSpec extends SparkSpec {
       finally files.close()
     mains shouldBe Set("Bench", "Verify", "Explain")
   }
+
+  test("no knobs: src/main reads only the driver's SPARK_GRAFT_* env in its mains and the oracle's scale property") {
+    // Each operator has one plan, so no property, env var or spark.graft.*
+    // conf key may pick between plans; a read outside the allow-list
+    // fails here.
+    import scala.jdk.CollectionConverters._
+    val read = """(System\.getProperty|System\.getenv|sys\.props|sys\.env|"spark\.graft\.)""".r
+    val key = """^(?:\s*\.\s*\w+)?\s*\(\s*"([^"]*)"""".r
+    val mains = Set("Bench.scala", "Verify.scala", "Explain.scala")
+    def allowed(file: String, call: String, k: Option[String]): Boolean =
+      (call == "sys.env" && mains(file) && k.exists(_.startsWith("SPARK_GRAFT_"))) ||
+        (call == "sys.props" && file == "IngestQueries.scala" && k.contains("graft.oracle.sf"))
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val knobs = try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        val file = f.getFileName.toString
+        read.findAllMatchIn(text).map { m =>
+          val k = key.findPrefixMatchOf(text.substring(m.end)).map(_.group(1))
+          (file, m.group(1), k)
+        }.filterNot { case (file, call, k) => allowed(file, call, k) }
+      }.toList
+      finally files.close()
+    knobs shouldBe Nil
+  }
 }
