@@ -173,7 +173,7 @@ object ClusterQueries {
       refine(assign(vectors, seeds)),
       s"graft_kmeans_ckpt_${ScaleQueries.sfTag(d)}",
       Scale.dirFingerprint(s"$d/embeddings.parquet"))
-    assign(vectors, s.read.parquet(ckpt))
+    assign(vectors, ckpt.read(s))
       .select(col("vec_id"), col("cluster"), col("dist2"))
   }
 

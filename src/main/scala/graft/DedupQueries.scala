@@ -219,14 +219,14 @@ object DedupQueries {
     val corpus = Tables.documentsDistributed(s, d).filter(col("doc_id") >= BATCH_MAX_ID)
     // Shingle once, band from the materialized shingles: the corpus text is
     // read exactly once across both layout builds.
-    val shDir = graft.operators.Scale.writeOnce(
+    val sh = graft.operators.Scale.writeOnce(
       Dedup.shingleSets(corpus, INC_K), s"graft_corpus_sh_$tag", fp)
-    val bandsDir = graft.operators.Scale.writeOnce(
-      Dedup.bandKeys(s.read.parquet(shDir), bands = 32, rows = 4),
+    val bands = graft.operators.Scale.writeOnce(
+      Dedup.bandKeys(sh.read(s), bands = 32, rows = 4),
       s"graft_corpus_bands_$tag", fp)
     val batch = Tables.documents(s, d).filter(col("doc_id") < BATCH_MAX_ID)
     Dedup.incrementalNearDupPairs(
-      s.read.parquet(bandsDir), s.read.parquet(shDir), batch, INC_TAU, INC_K)
+      bands.read(s), sh.read(s), batch, INC_TAU, INC_K)
   }
 
   /** q78: the daily operational loop, closed end-to-end — the piece that
@@ -252,7 +252,7 @@ object DedupQueries {
   val q78IncrementalRefresh: Q = (s, d) => {
     import graft.operators.{Merge, Scale}
     val tag = ScaleQueries.sfTag(d)
-    val baseDir = ScaleQueries.mergeBaseDir(s, d)
+    val base = ScaleQueries.mergeBaseDir(s, d)
     val srcFp = Scale.dirFingerprint(s"$d/documents.parquet") +
       s"|k=$INC_K|b=32|r=4|split=$BATCH_MAX_ID"
     def shOf(df: org.apache.spark.sql.DataFrame) =
@@ -266,22 +266,22 @@ object DedupQueries {
     // day 0: fingerprint layouts over whatever the base currently holds
     // (pre-merge on a cold run; the refresh below makes the final state
     // identical either way — the merge only ever changes en)
-    val fpShDir = Scale.writePartitioned(
-      shOf(s.read.parquet(baseDir)), s"graft_corpus_fp_$tag", "lang", srcFp)
-    val fpBandsDir = Scale.writePartitioned(
-      Dedup.bandKeys(s.read.parquet(fpShDir), bands = 32, rows = 4, keep = Seq("lang")),
+    val fpSh = Scale.writePartitioned(
+      shOf(base.read(s)), s"graft_corpus_fp_$tag", "lang", srcFp)
+    val fpBands = Scale.writePartitioned(
+      Dedup.bandKeys(fpSh.read(s), bands = 32, rows = 4, keep = Seq("lang")),
       s"graft_corpus_fpb_$tag", "lang", srcFp)
     // day 1: merge arrives; fingerprints refresh ONLY the affected partition
-    Merge.upsertPartitioned(s, baseDir, "lang", "doc_id",
+    Merge.upsertPartitioned(s, base, "lang", "doc_id",
       ScaleQueries.mergeBatch(Tables.documents(s, d)))
-    Merge.replacePartitions(fpShDir, "lang", Seq("en"),
-      shOf(s.read.parquet(baseDir).filter(col("lang") === "en")))
-    Merge.replacePartitions(fpBandsDir, "lang", Seq("en"),
-      Dedup.bandKeys(s.read.parquet(fpShDir).filter(col("lang") === "en"),
+    Merge.replacePartitions(fpSh.dir, "lang", Seq("en"),
+      shOf(base.read(s).filter(col("lang") === "en")))
+    Merge.replacePartitions(fpBands.dir, "lang", Seq("en"),
+      Dedup.bandKeys(fpSh.read(s).filter(col("lang") === "en"),
         bands = 32, rows = 4, keep = Seq("lang")))
     // day 2: the next batch probes the refreshed fingerprints (q73's operator)
     Dedup.incrementalNearDupPairs(
-      s.read.parquet(fpBandsDir), s.read.parquet(fpShDir),
+      fpBands.read(s), fpSh.read(s),
       Tables.documents(s, d).filter(col("doc_id") < BATCH_MAX_ID), INC_TAU, INC_K)
   }
 

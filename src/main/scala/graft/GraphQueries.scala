@@ -302,24 +302,27 @@ object GraphQueries {
     * scale path; the recursive CTE is the right surface for
     * hierarchy-depth walks like this one, where each iteration's frontier
     * is a shrinking fraction of a node-sized table. */
-  val q250RecursiveCte: Q = (s, d) => s.sql(
-    // Measured (r18 opt): materializing the edge relation once (the q141
-    // treatment) did NOT move q250 — this loop's invariant subtree is a
-    // trivial 15k-row scan and the cost is UnionLoop's per-iteration
-    // re-plan itself. Kept in the plain shared-SQL form.
-    s"""WITH RECURSIVE anc(node, anc_node, depth) AS (
-       |  SELECT c_custkey, c_custkey div 2, 1
-       |    FROM parquet.`$d/customer.parquet` WHERE c_custkey > 1
-       |  UNION ALL
-       |  SELECT a.node, e.parent, a.depth + 1
-       |  FROM anc a JOIN (SELECT c_custkey AS child, c_custkey div 2 AS parent
-       |                     FROM parquet.`$d/customer.parquet`
-       |                    WHERE c_custkey > 1) e
-       |    ON e.child = a.anc_node
-       |)
-       |SELECT node, CAST(count(*) AS BIGINT) AS n_ancestors,
-       |  CAST(max(depth) AS INT) AS root_depth
-       |FROM anc GROUP BY node""".stripMargin)
+  val q250RecursiveCte: Q = (s, d) => {
+    val customer = Tables.view(s, d, "customer")
+    s.sql(
+      // Measured (r18 opt): materializing the edge relation once (the q141
+      // treatment) did NOT move q250 — this loop's invariant subtree is a
+      // trivial 15k-row scan and the cost is UnionLoop's per-iteration
+      // re-plan itself. Kept in the plain shared-SQL form.
+      s"""WITH RECURSIVE anc(node, anc_node, depth) AS (
+         |  SELECT c_custkey, c_custkey div 2, 1
+         |    FROM $customer WHERE c_custkey > 1
+         |  UNION ALL
+         |  SELECT a.node, e.parent, a.depth + 1
+         |  FROM anc a JOIN (SELECT c_custkey AS child, c_custkey div 2 AS parent
+         |                     FROM $customer
+         |                    WHERE c_custkey > 1) e
+         |    ON e.child = a.anc_node
+         |)
+         |SELECT node, CAST(count(*) AS BIGINT) AS n_ancestors,
+         |  CAST(max(depth) AS INT) AS root_depth
+         |FROM anc GROUP BY node""".stripMargin)
+  }
 
   val q178BfsKhop: Q = (s, d) =>
     bfsDistances(s, d, graphKeyed(s, d)).select(

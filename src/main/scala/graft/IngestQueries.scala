@@ -68,7 +68,7 @@ object IngestQueries {
       docs.filter(col("doc_id") >= EVO_SPLIT)
         .select(col("doc_id"), col("lang"), col("n_chars")),
       s"graft_evo_b_$tag", fp)
-    s.read.option("mergeSchema", "true").parquet(early, late)
+    s.read.option("mergeSchema", "true").parquet(early.dir, late.dir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
   }
 
@@ -215,8 +215,9 @@ object IngestQueries {
     * Hive-lineage half of the columnar world, reads first-class with zero
     * added dependencies). The orders table materializes once as ORC
     * ([[graft.operators.Scale.writeOnce]] with format=orc, fingerprint-
-    * chained to the source parquet) and is read back with a DECLARED
-    * schema — no inference pass, the q11/q170 discipline. Column pruning
+    * chained to the source parquet) and is read back with the written
+    * frame's schema ([[graft.operators.Scale.Layout]]) — no inference
+    * pass, the q11/q170 discipline. Column pruning
     * and predicate pushdown work through the same DSv1 scan machinery as
     * parquet (ORC carries its own stripe/row-group stats), so every
     * pushdown claim PlanSpec pins for parquet holds here structurally.
@@ -226,22 +227,16 @@ object IngestQueries {
     * timestamps survive two independent columnar codecs bit-for-bit. */
   val q237OrcScan: Q = (s, d) => {
     import graft.operators.Scale
-    val dir = Scale.writeOnce(
+    // the layout's schema is the written frame's: `o_orderdate` stays
+    // TIMESTAMP_NTZ (the source's zoneless timestamp[us]), which ORC
+    // preserves; reading it as TIMESTAMP (LTZ) is an unsupported ORC cast
+    Scale.writeOnce(
       Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
         col("o_orderpriority")),
       s"graft_orders_orc_${ScaleQueries.sfTag(d)}",
       Scale.dirFingerprint(s"$d/orders.parquet"), format = "orc")
-    val declared = StructType(Seq(
-      StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
-      StructField("o_orderstatus", StringType),
-      StructField("o_totalprice", DoubleType),
-      // the source parquet's timestamp[us] carries no zone → Spark reads
-      // it as TIMESTAMP_NTZ, and ORC preserves that distinction; a
-      // declared TIMESTAMP (LTZ) here is an unsupported ORC cast
-      StructField("o_orderdate", TimestampNTZType),
-      StructField("o_orderpriority", StringType)))
-    s.read.schema(declared).orc(dir)
+      .read(s)
   }
 
   /** q258: the CUSTOM DataSource V2 — `graft-series`
@@ -452,10 +447,10 @@ object IngestQueries {
 
   /** Shared derivation for the graft_cat lifecycle queries: events'
     * exact integer cents keyed by event_id, the q262 discipline. */
-  private def catEventsSql(d: String): String =
+  private def catEventsSql(s: org.apache.spark.sql.SparkSession, d: String): String =
     s"""SELECT event_id AS k,
        |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-       |FROM parquet.`$d/events.parquet` WHERE value IS NOT NULL""".stripMargin
+       |FROM ${graft.Tables.view(s, d, "events")} WHERE value IS NOT NULL""".stripMargin
 
   private def catTable(s: org.apache.spark.sql.SparkSession, d: String,
       stem: String): String = {
@@ -484,8 +479,8 @@ object IngestQueries {
     * DuckDB aggregates events directly. */
   val q267CatalogLifecycle: Q = (s, d) => {
     val t = catTable(s, d, "ev267")
-    s.sql(s"CREATE TABLE $t AS ${catEventsSql(d)} AND event_id % 2 = 0")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 1")
+    s.sql(s"CREATE TABLE $t AS ${catEventsSql(s, d)} AND event_id % 2 = 0")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 1")
     s.sql(s"""SELECT k % 7 AS g, count(*) AS n,
              |  sum(cents) AS cents, min(k) AS min_k, max(k) AS max_k
              |FROM $t GROUP BY 1""".stripMargin)
@@ -500,7 +495,7 @@ object IngestQueries {
     * the source rows the predicate keeps. */
   val q268CatalogDelete: Q = (s, d) => {
     val t = catTable(s, d, "ev268")
-    s.sql(s"CREATE TABLE $t AS ${catEventsSql(d)}")
+    s.sql(s"CREATE TABLE $t AS ${catEventsSql(s, d)}")
     s.sql(s"DELETE FROM $t WHERE cents >= 10000")
     s.sql(s"""SELECT k % 5 AS g, count(*) AS n, sum(cents) AS cents,
              |  min(cents) AS min_c, max(cents) AS max_c
@@ -518,8 +513,8 @@ object IngestQueries {
   val q269CatalogTimeTravel: Q = (s, d) => {
     val t = catTable(s, d, "ev269")
     s.sql(s"CREATE TABLE $t (k BIGINT, cents BIGINT)")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 0")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 1")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 0")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 1")
     s.sql(s"DELETE FROM $t WHERE cents >= 10000")
     s.sql((2 to 4).map(v =>
       s"""SELECT CAST($v AS BIGINT) AS version, count(*) AS n,
@@ -539,8 +534,8 @@ object IngestQueries {
   val q270CatalogSnapshots: Q = (s, d) => {
     val t = catTable(s, d, "ev270")
     s.sql(s"CREATE TABLE $t (k BIGINT, cents BIGINT)")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 0")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 1")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 0")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 1")
     s.sql(s"DELETE FROM $t WHERE cents >= 10000")
     s.sql(s"""SELECT version, operation, `rows` AS n_rows
              |FROM $t.snapshots""".stripMargin)
@@ -558,8 +553,8 @@ object IngestQueries {
   val q271CatalogCompact: Q = (s, d) => {
     val t = catTable(s, d, "ev271")
     s.sql(s"CREATE TABLE $t (k BIGINT, cents BIGINT)")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 0")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 1")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 0")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 1")
     s.sql(s"CALL graft_cat.sys.compact('db', 'ev271_${ScaleQueries.sfTag(d)}', ${64L * 1024 * 1024})")
     s.sql(s"""SELECT k % 9 AS g, count(*) AS n, sum(cents) AS cents,
              |  min(k) AS min_k, max(k) AS max_k
@@ -576,7 +571,7 @@ object IngestQueries {
     * rewrite, never the table's. Oracle: DuckDB applies the same CASE. */
   val q272CatalogUpdate: Q = (s, d) => {
     val t = catTable(s, d, "ev272")
-    s.sql(s"CREATE TABLE $t AS ${catEventsSql(d)}")
+    s.sql(s"CREATE TABLE $t AS ${catEventsSql(s, d)}")
     s.sql(s"UPDATE $t SET cents = cents + 1000000 WHERE cents >= 10000")
     s.sql(s"""SELECT k % 6 AS g, count(*) AS n, sum(cents) AS cents,
              |  min(cents) AS min_c, max(cents) AS max_c
@@ -594,12 +589,12 @@ object IngestQueries {
   val q273CatalogMerge: Q = (s, d) => {
     val t = catTable(s, d, "ev273")
     s.sql(s"CREATE TABLE $t (k BIGINT, cents BIGINT)")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 0")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 0")
     s.sql(s"""CREATE OR REPLACE TEMPORARY VIEW ev273_src AS
              |SELECT event_id AS k,
              |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) * 2
              |    AS cents
-             |FROM parquet.`$d/events.parquet`
+             |FROM ${graft.Tables.view(s, d, "events")}
              |WHERE value IS NOT NULL AND event_id % 3 = 0""".stripMargin)
     s.sql(s"""MERGE INTO $t AS tgt USING ev273_src AS src
              |ON tgt.k = src.k
@@ -624,11 +619,11 @@ object IngestQueries {
     val t = catTable(s, d, "ev274")
     s.sql(s"""CREATE TABLE $t AS
              |SELECT CAST(n_nationkey AS BIGINT) AS k, n_name AS name
-             |FROM parquet.`$d/nation.parquet`""".stripMargin)
+             |FROM ${graft.Tables.view(s, d, "nation")}""".stripMargin)
     s.sql(s"""SELECT d.name AS name, count(*) AS n,
              |  sum(CAST(CAST(e.value AS DECIMAL(18,2)) * 100 AS BIGINT))
              |    AS cents
-             |FROM parquet.`$d/events.parquet` e
+             |FROM ${graft.Tables.view(s, d, "events")} e
              |JOIN $t d ON e.event_id % 25 = d.k
              |WHERE e.value IS NOT NULL
              |GROUP BY 1""".stripMargin)
@@ -649,7 +644,7 @@ object IngestQueries {
   val q275CatalogView: Q = (s, d) => {
     val t = catTable(s, d, "ev275")
     val vName = s"ev275v_${ScaleQueries.sfTag(d)}"
-    s.sql(s"CREATE TABLE $t AS ${catEventsSql(d)}")
+    s.sql(s"CREATE TABLE $t AS ${catEventsSql(s, d)}")
     s.sql(s"CALL graft_cat.sys.drop_view('db', '$vName')")
     s.sql(s"CALL graft_cat.sys.create_view('db', '$vName', " +
       s"'SELECT k % 11 AS g, cents FROM $t WHERE cents >= 500')")
@@ -675,7 +670,7 @@ object IngestQueries {
     s.sql(s"""CREATE TABLE $t (k BIGINT, cents BIGINT)
              |TBLPROPERTIES ('write.order_by'='cents',
              |               'write.partitions'='8')""".stripMargin)
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)}")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)}")
     s.sql(s"""SELECT k % 4 AS g, count(*) AS n, sum(cents) AS cents,
              |  min(cents) AS min_c, max(cents) AS max_c
              |FROM $t WHERE cents BETWEEN 2000 AND 5999
@@ -696,7 +691,7 @@ object IngestQueries {
   val q277CatalogPartitioned: Q = (s, d) => {
     val t = catTable(s, d, "ev277")
     s.sql(s"""CREATE TABLE $t PARTITIONED BY (g) AS
-             |SELECT k, k % 8 AS g, cents FROM (${catEventsSql(d)}) src""".stripMargin)
+             |SELECT k, k % 8 AS g, cents FROM (${catEventsSql(s, d)}) src""".stripMargin)
     s.sql(s"""SELECT g, count(*) AS n, sum(cents) AS cents,
              |  min(k) AS min_k, max(k) AS max_k
              |FROM $t WHERE g IN (2, 5) GROUP BY g""".stripMargin)
@@ -715,9 +710,9 @@ object IngestQueries {
   val q278CatalogSpj: Q = (s, d) => {
     val a = catTable(s, d, "ev278a")
     val b = catTable(s, d, "ev278b")
-    s.sql(s"CREATE TABLE $a PARTITIONED BY (bucket(16, k)) AS ${catEventsSql(d)}")
+    s.sql(s"CREATE TABLE $a PARTITIONED BY (bucket(16, k)) AS ${catEventsSql(s, d)}")
     s.sql(s"""CREATE TABLE $b PARTITIONED BY (bucket(16, k)) AS
-             |SELECT k, k % 997 AS m FROM (${catEventsSql(d)}) src""".stripMargin)
+             |SELECT k, k % 997 AS m FROM (${catEventsSql(s, d)}) src""".stripMargin)
     graft.SessionConf.withValue(s,
         "spark.sql.sources.v2.bucketing.enabled", "true") {
       graft.SessionConf.withValue(s,
@@ -746,7 +741,7 @@ object IngestQueries {
   val q279CatalogMorDelete: Q = (s, d) => {
     val t = catTable(s, d, "ev279")
     s.sql(s"""CREATE TABLE $t TBLPROPERTIES ('delete.mode'='merge-on-read')
-             |AS ${catEventsSql(d)}""".stripMargin)
+             |AS ${catEventsSql(s, d)}""".stripMargin)
     s.sql(s"DELETE FROM $t WHERE cents >= 10000")
     s.sql(s"""SELECT k % 11 AS g, count(*) AS n, sum(cents) AS cents,
              |  min(cents) AS min_c, max(cents) AS max_c
@@ -768,8 +763,8 @@ object IngestQueries {
     val t = catTable(s, d, "ev280")
     s.sql(s"""CREATE TABLE $t (k BIGINT, cents BIGINT)
              |TBLPROPERTIES ('delete.mode'='merge-on-read')""".stripMargin)
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 0")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 1")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 0")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 1")
     s.sql(s"UPDATE $t SET cents = cents * 3 WHERE k % 5 = 0")
     s.sql(s"DELETE FROM $t WHERE cents >= 30000")
     s.sql(s"""SELECT k % 6 AS g, count(*) AS n, sum(cents) AS cents
@@ -791,11 +786,11 @@ object IngestQueries {
   val q281CatalogEvolution: Q = (s, d) => {
     val t = catTable(s, d, "ev281")
     s.sql(s"CREATE TABLE $t (k BIGINT, cents BIGINT)")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 0")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 0")
     s.sql(s"ALTER TABLE $t RENAME COLUMN cents TO pennies")
     s.sql(s"ALTER TABLE $t ADD COLUMN src BIGINT")
     s.sql(s"""INSERT INTO $t
-             |SELECT k, cents, 1 FROM (${catEventsSql(d)} AND event_id % 2 = 1) src""".stripMargin)
+             |SELECT k, cents, 1 FROM (${catEventsSql(s, d)} AND event_id % 2 = 1) src""".stripMargin)
     s.sql(s"""SELECT k % 7 AS g, count(*) AS n, sum(pennies) AS pennies,
              |  count(src) AS n_src, min(k) AS min_k
              |FROM $t GROUP BY 1""".stripMargin)
@@ -812,8 +807,8 @@ object IngestQueries {
     * definition directly. */
   val q282CatalogRtas: Q = (s, d) => {
     val t = catTable(s, d, "ev282")
-    s.sql(s"CREATE TABLE $t AS ${catEventsSql(d)} AND event_id % 2 = 0")
-    s.sql(s"REPLACE TABLE $t AS ${catEventsSql(d)}")
+    s.sql(s"CREATE TABLE $t AS ${catEventsSql(s, d)} AND event_id % 2 = 0")
+    s.sql(s"REPLACE TABLE $t AS ${catEventsSql(s, d)}")
     s.sql(s"""SELECT k % 10 AS g, count(*) AS n, sum(cents) AS cents,
              |  max(k) AS max_k
              |FROM $t GROUP BY 1""".stripMargin)
@@ -834,9 +829,9 @@ object IngestQueries {
     val t = catTable(s, d, "ev283")
     val stem = s"ev283_${ScaleQueries.sfTag(d)}"
     s.sql(s"CREATE TABLE $t (k BIGINT, cents BIGINT)")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 0")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 0")
     s.sql(s"CALL graft_cat.sys.tag('db', '$stem', 'snap', 2)")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 1")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 1")
     s.sql(s"DELETE FROM $t WHERE cents >= 10000")
     s.sql(s"CALL graft_cat.sys.expire_versions('db', '$stem', 1)")
     s.sql(s"""SELECT k % 8 AS g, count(*) AS n, sum(cents) AS cents,
@@ -859,7 +854,7 @@ object IngestQueries {
     s.sql(s"""CREATE TABLE $t PARTITIONED BY (days(ms)) AS
              |SELECT k, (19700 + k % 5) * 86400000 + (k % 1440) * 60000 AS ms,
              |       cents
-             |FROM (${catEventsSql(d)}) src""".stripMargin)
+             |FROM (${catEventsSql(s, d)}) src""".stripMargin)
     s.sql(s"""SELECT count(*) AS n, sum(cents) AS cents,
              |  min(k) AS min_k, max(k) AS max_k
              |FROM $t
@@ -883,9 +878,9 @@ object IngestQueries {
     val t = catTable(s, d, "ev285")
     s.sql(s"""CREATE TABLE $t (k BIGINT, cents BIGINT)
              |TBLPROPERTIES ('write.upsert.key'='k')""".stripMargin)
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 0")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 0")
     s.sql(s"""INSERT INTO $t
-             |SELECT k, cents * 2 FROM (${catEventsSql(d)} AND event_id % 3 = 0) src""".stripMargin)
+             |SELECT k, cents * 2 FROM (${catEventsSql(s, d)} AND event_id % 3 = 0) src""".stripMargin)
     s.sql(s"""SELECT k % 12 AS g, count(*) AS n, sum(cents) AS cents,
              |  min(k) AS min_k, max(k) AS max_k
              |FROM $t GROUP BY 1""".stripMargin)
@@ -907,7 +902,7 @@ object IngestQueries {
   val q286CatalogMorUpdate: Q = (s, d) => {
     val t = catTable(s, d, "ev286")
     s.sql(s"""CREATE TABLE $t TBLPROPERTIES ('update.mode'='merge-on-read')
-             |AS ${catEventsSql(d)}""".stripMargin)
+             |AS ${catEventsSql(s, d)}""".stripMargin)
     s.sql(s"UPDATE $t SET cents = cents + 1000000 WHERE cents >= 10000")
     s.sql(s"""SELECT k % 13 AS g, count(*) AS n, sum(cents) AS cents,
              |  min(cents) AS min_c, max(cents) AS max_c
@@ -928,9 +923,9 @@ object IngestQueries {
   val q287CatalogBranchWap: Q = (s, d) => {
     val t = catTable(s, d, "ev287")
     val stem = s"ev287_${ScaleQueries.sfTag(d)}"
-    s.sql(s"CREATE TABLE $t AS ${catEventsSql(d)} AND event_id % 2 = 0")
+    s.sql(s"CREATE TABLE $t AS ${catEventsSql(s, d)} AND event_id % 2 = 0")
     s.sql(s"CALL graft_cat.sys.branch('db', '$stem', 'audit')")
-    s.sql(s"INSERT INTO $t.branch_audit ${catEventsSql(d)} AND event_id % 2 = 1")
+    s.sql(s"INSERT INTO $t.branch_audit ${catEventsSql(s, d)} AND event_id % 2 = 1")
     s.sql(s"DELETE FROM $t.branch_audit WHERE cents >= 10000")
     s.sql(s"CALL graft_cat.sys.fast_forward('db', '$stem', 'audit')")
     s.sql(s"""SELECT k % 9 AS g, count(*) AS n, sum(cents) AS cents,
@@ -953,11 +948,11 @@ object IngestQueries {
     val stem = s"ev288_${ScaleQueries.sfTag(d)}"
     s.sql(s"""CREATE TABLE $t PARTITIONED BY (g) AS
              |SELECT k % 8 AS g, (19700 + k % 5) * 86400000 AS ms, k, cents
-             |FROM (${catEventsSql(d)} AND event_id % 2 = 0) src""".stripMargin)
+             |FROM (${catEventsSql(s, d)} AND event_id % 2 = 0) src""".stripMargin)
     s.sql(s"CALL graft_cat.sys.set_partition_spec('db', '$stem', 'days(ms)')")
     s.sql(s"""INSERT INTO $t
              |SELECT k % 8 AS g, (19700 + k % 5) * 86400000 AS ms, k, cents
-             |FROM (${catEventsSql(d)} AND event_id % 2 = 1) src""".stripMargin)
+             |FROM (${catEventsSql(s, d)} AND event_id % 2 = 1) src""".stripMargin)
     s.sql(s"""SELECT g, count(*) AS n, sum(cents) AS cents,
              |  min(k) AS min_k, max(k) AS max_k
              |FROM $t
@@ -982,8 +977,8 @@ object IngestQueries {
     val t = catTable(s, d, "ev289")
     s.sql(s"""CREATE TABLE $t (k BIGINT, cents BIGINT)
              |TBLPROPERTIES ('delete.mode'='merge-on-read')""".stripMargin)
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 0")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 1")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 0")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 1")
     s.sql(s"UPDATE $t SET cents = cents * 3 WHERE k % 5 = 0")
     s.sql(s"DELETE FROM $t WHERE cents >= 25000")
     // group -> (n, sum): the materialized rollup, merged from deltas only
@@ -1030,9 +1025,9 @@ object IngestQueries {
     val t = catTable(s, d, "ev290")
     val t2 = catTable(s, d, "ev290b")
     s.sql(s"""CREATE TABLE $t TBLPROPERTIES ('delete.mode'='merge-on-read')
-             |AS ${catEventsSql(d)}""".stripMargin)
+             |AS ${catEventsSql(s, d)}""".stripMargin)
     s.sql(s"DELETE FROM $t WHERE cents >= 20000 AND cents < 20010")
-    s.sql(s"CREATE TABLE $t2 AS ${catEventsSql(d)}")
+    s.sql(s"CREATE TABLE $t2 AS ${catEventsSql(s, d)}")
     s.sql(s"""SELECT
              |  (SELECT count(*) FROM $t) AS n_after_mor_delete,
              |  (SELECT count(*) FROM $t2) AS n,
@@ -1056,7 +1051,7 @@ object IngestQueries {
     val t = catTable(s, d, "ev291")
     s.sql(s"""CREATE TABLE $t PARTITIONED BY (g) AS
              |SELECT k % 8 AS g, k, cents
-             |FROM (${catEventsSql(d)}) src""".stripMargin)
+             |FROM (${catEventsSql(s, d)}) src""".stripMargin)
     s.sql(s"""SELECT g, count(*) AS n, count(cents) AS n_cents,
              |  min(k) AS min_k, max(k) AS max_k,
              |  sum(k) AS sum_k, sum(cents) AS cents
@@ -1083,7 +1078,7 @@ object IngestQueries {
     (0 until 8).foreach { i =>
       s.sql(s"""INSERT INTO $t
                |SELECT k, (k * 2654435761L) % 1048576 AS y, cents
-               |FROM (${catEventsSql(d)}) src WHERE k % 8 = $i""".stripMargin)
+               |FROM (${catEventsSql(s, d)}) src WHERE k % 8 = $i""".stripMargin)
     }
     val dir = catDir(s, stem)
     val m = graft.sources.GraftTableCatalog.readManifest(dir,
@@ -1125,7 +1120,7 @@ object IngestQueries {
              |TBLPROPERTIES ('write.distribution'='hash')""".stripMargin)
     (0 until 4).foreach { i =>
       s.sql(s"""INSERT INTO $t SELECT k % 4 AS g, k, cents
-               |FROM (${catEventsSql(d)}) src
+               |FROM (${catEventsSql(s, d)}) src
                |WHERE k % 4 = $i""".stripMargin)
     }
     s.sql(s"DELETE FROM $t WHERE g = 3") // aligned: metadata-only drop
@@ -1154,7 +1149,7 @@ object IngestQueries {
     (0 until 8).foreach { i =>
       s.sql(s"""INSERT INTO $t
                |SELECT k, (k * 2654435761L) % 1048576 AS y, cents
-               |FROM (${catEventsSql(d)}) src WHERE k % 8 = $i""".stripMargin)
+               |FROM (${catEventsSql(s, d)}) src WHERE k % 8 = $i""".stripMargin)
     }
     val dir = catDir(s, stem)
     val m = graft.sources.GraftTableCatalog.readManifest(dir,
@@ -1195,8 +1190,8 @@ object IngestQueries {
     val t = catTable(s, d, "ev298")
     val stem = s"ev298_${ScaleQueries.sfTag(d)}"
     s.sql(s"""CREATE TABLE $t (k BIGINT, cents BIGINT)
-             |TBLPROPERTIES ('update.mode'='merge-on-read')""".stripMargin)
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)}")
+             |TBLPROPERTIES ('delete.mode'='merge-on-read')""".stripMargin)
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)}")
     // non-pushable predicate -> MOR position-delete files the sweep
     // must recognize as referenced
     s.sql(s"DELETE FROM $t WHERE k % 10 = 3")
@@ -1230,9 +1225,9 @@ object IngestQueries {
     val t = catTable(s, d, "ev297")
     val view = s"ev297_src_${ScaleQueries.sfTag(d)}"
     s.sql(s"CREATE TABLE $t (k BIGINT, cents BIGINT)")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 2 = 0")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 2 = 0")
     s.sql(s"""SELECT k, cents * 2 AS cents, k % 7 AS flag
-             |FROM (${catEventsSql(d)}) src
+             |FROM (${catEventsSql(s, d)}) src
              |WHERE k % 4 IN (0, 1)""".stripMargin)
       .createOrReplaceTempView(view)
     s.sql(s"""MERGE WITH SCHEMA EVOLUTION INTO $t USING $view
@@ -1260,12 +1255,12 @@ object IngestQueries {
     val t = catTable(s, d, "ev296")
     val stem = s"ev296_${ScaleQueries.sfTag(d)}"
     s.sql(s"""CREATE TABLE $t (g BIGINT, k BIGINT, cents BIGINT)
-             |TBLPROPERTIES ('update.mode'='merge-on-read')""".stripMargin)
+             |TBLPROPERTIES ('delete.mode'='merge-on-read')""".stripMargin)
     s.sql(s"""INSERT INTO $t SELECT k % 5 AS g, k, cents
-             |FROM (${catEventsSql(d)}) src WHERE k % 3 = 0""".stripMargin)
+             |FROM (${catEventsSql(s, d)}) src WHERE k % 3 = 0""".stripMargin)
     s.sql(s"CALL graft_cat.sys.set_partition_spec('db', '$stem', 'g')")
     s.sql(s"""INSERT INTO $t SELECT k % 5 AS g, k, cents
-             |FROM (${catEventsSql(d)}) src WHERE k % 3 = 1""".stripMargin)
+             |FROM (${catEventsSql(s, d)}) src WHERE k % 3 = 1""".stripMargin)
     // non-pushable predicate -> the row-level MERGE-ON-READ path: every
     // touched file takes a position-delete file, nothing rewrites
     s.sql(s"DELETE FROM $t WHERE k % 10 = 3")
@@ -1292,7 +1287,7 @@ object IngestQueries {
              |TBLPROPERTIES ('write.bloom.columns'='h')""".stripMargin)
     s.sql(s"""INSERT INTO $t
              |SELECT (k * 1000003L) % 900000011L AS h, k, cents
-             |FROM (${catEventsSql(d)}) src""".stripMargin)
+             |FROM (${catEventsSql(s, d)}) src""".stripMargin)
     s.sql(s"""SELECT h, k, cents FROM $t
              |WHERE h IN ((101 * 1000003L) % 900000011L,
              |            (1777 * 1000003L) % 900000011L,
@@ -1312,12 +1307,12 @@ object IngestQueries {
   val q294CatalogRefTravel: Q = (s, d) => {
     val t = catTable(s, d, "ev294")
     val stem = s"ev294_${ScaleQueries.sfTag(d)}"
-    s.sql(s"CREATE TABLE $t AS ${catEventsSql(d)} AND event_id % 3 = 0")
+    s.sql(s"CREATE TABLE $t AS ${catEventsSql(s, d)} AND event_id % 3 = 0")
     val v = graft.sources.GraftTableCatalog.readLatest(catDir(s, stem))
     s.sql(s"CALL graft_cat.sys.tag('db', '$stem', 'base', $v)")
-    s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 3 = 1")
+    s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 3 = 1")
     s.sql(s"CALL graft_cat.sys.branch('db', '$stem', 'audit')")
-    s.sql(s"INSERT INTO $t.branch_audit ${catEventsSql(d)} AND event_id % 3 = 2")
+    s.sql(s"INSERT INTO $t.branch_audit ${catEventsSql(s, d)} AND event_id % 3 = 2")
     s.sql(s"""SELECT 'tag' AS ref, count(*) AS n, sum(cents) AS cents
              |FROM $t VERSION AS OF 'base'
              |UNION ALL
@@ -1343,7 +1338,7 @@ object IngestQueries {
     val t = catTable(s, d, "ev293")
     s.sql(s"""CREATE TABLE $t PARTITIONED BY (g) AS
              |SELECT k % 6 AS g, k, cents
-             |FROM (${catEventsSql(d)}) src""".stripMargin)
+             |FROM (${catEventsSql(s, d)}) src""".stripMargin)
     s.sql(s"""SELECT count(*) AS n, min(k) AS min_k, max(k) AS max_k,
              |  sum(cents) AS cents, avg(cents) AS avg_cents
              |FROM $t WHERE g = 4""".stripMargin)
@@ -1369,7 +1364,7 @@ object IngestQueries {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (0 until 4).map { i =>
       new Thread(() =>
-        try { s.sql(s"INSERT INTO $t ${catEventsSql(d)} AND event_id % 4 = $i"); () }
+        try { s.sql(s"INSERT INTO $t ${catEventsSql(s, d)} AND event_id % 4 = $i"); () }
         catch { case e: Throwable => errs.add(e); () })
     }
     threads.foreach(_.start()); threads.foreach(_.join())
@@ -1391,7 +1386,7 @@ object IngestQueries {
     // layout-adaptive rebalance (no-op at many-row-group inputs); the SQL
     // surface still resolves graft_fns.fns.hash60 through the catalog
     graft.Tables.spreadForCompute(
-        s.read.parquet(s"$d/events.parquet")
+        graft.Tables.load(s, d, "events")
           .select(org.apache.spark.sql.functions.col("event_id")),
         org.apache.spark.sql.functions.col("event_id"))
       .createOrReplaceTempView("graft_q263_events")

@@ -1989,10 +1989,10 @@ object OlapQueries {
       hll_sketch_agg(col("user_id")).as("users_hll"),
       kll_sketch_agg_double(col("value")).as("value_kll"),
       count(lit(1)).as("n_rows"))
-    val dir = graft.operators.Scale.writeOnce(daily,
+    graft.operators.Scale.writeOnce(daily,
       s"graft_sketch_daily_${ScaleQueries.sfTag(d)}",
       graft.operators.Scale.dirFingerprint(s"$d/events.parquet"))
-    s.read.parquet(dir)
+      .read(s)
   }
 
   /** q238: PROFILE HISTORY without rescans — q231's sketch column profile
@@ -2086,12 +2086,12 @@ object OlapQueries {
       max(col("v")).as("max_v"),
       hll_sketch_agg(col("vs")).as("ndv_hll"),
       kll_sketch_agg_double(col("v")).as("value_kll"))
-    val dir = graft.operators.Scale.writeOnce(daily,
+    graft.operators.Scale.writeOnce(daily,
       s"graft_profile_daily_${ScaleQueries.sfTag(d)}",
       // ndv/v2: NDV state switched from string-of-double to string-of-
       // original — a stale store must not satisfy the spec
       s"ndv/v2|${graft.operators.Scale.dirFingerprint(s"$d/events.parquet")}")
-    s.read.parquet(dir)
+      .read(s)
   }
 
   /** q95: the analytic window-function surface in one gated query — rank,

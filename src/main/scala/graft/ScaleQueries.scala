@@ -118,7 +118,7 @@ object ScaleQueries {
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
   }
 
-  private[graft] def mergeBaseDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+  private[graft] def mergeBaseDir(s: org.apache.spark.sql.SparkSession, d: String): Scale.Layout =
     Scale.writePartitioned(
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"), col("text"), col("lang")),
@@ -126,10 +126,10 @@ object ScaleQueries {
       Scale.dirFingerprint(s"$d/documents.parquet"))
 
   val q72MergeUpsert: Q = (s, d) => {
-    val dir = mergeBaseDir(s, d)
-    Merge.upsertPartitioned(s, dir, "lang", "doc_id",
+    val base = mergeBaseDir(s, d)
+    Merge.upsertPartitioned(s, base, "lang", "doc_id",
       mergeBatch(Tables.documents(s, d)))
-    s.read.parquet(dir)
+    base.read(s)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
   }
 
@@ -224,10 +224,10 @@ object ScaleQueries {
     * not change results, only pruning. */
   val q51PartitionPruning: Q = (s, d) => {
     val tag = sfTag(d)
-    val dir = Scale.writePartitioned(
+    val lay = Scale.writePartitioned(
       Tables.documents(s, d).select(col("doc_id"), col("source"), col("n_chars"), col("lang")),
       s"graft_docs_part_$tag", "lang", Scale.dirFingerprint(s"$d/documents.parquet"))
-    s.read.parquet(dir)
+    lay.read(s)
       .filter(col("lang").isin("en", "de"))
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
   }
@@ -249,7 +249,7 @@ object ScaleQueries {
     * row per lang) and a 5-row merge join — the audit never moves data,
     * only signatures. */
   val q126LayoutAudit: Q = (s, d) => {
-    val dir = Scale.writePartitioned(
+    val layout = Scale.writePartitioned(
       Tables.documents(s, d).select(col("doc_id"), col("source"), col("n_chars"), col("lang")),
       s"graft_docs_part_${sfTag(d)}", "lang", Scale.dirFingerprint(s"$d/documents.parquet"))
     def sig(df: org.apache.spark.sql.DataFrame) = df
@@ -260,7 +260,7 @@ object ScaleQueries {
     val src = sig(Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("n_chars"), col("lang")))
       .withColumnsRenamed(Map("rows" -> "src_rows", "sig" -> "src_sig"))
-    val lay = sig(s.read.parquet(dir))
+    val lay = sig(layout.read(s))
       .withColumnsRenamed(Map("rows" -> "layout_rows", "sig" -> "layout_sig"))
     src.join(lay, Seq("lang"), "full_outer")
       .select(col("lang"), col("src_rows"), col("layout_rows"),
@@ -281,7 +281,7 @@ object ScaleQueries {
     * oracle is the source minus the target predicate — the delete
     * machinery must be invisible to surviving rows. */
   val q127ForgetDelete: Q = (s, d) => {
-    val dir = Scale.writePartitioned(
+    val lay = Scale.writePartitioned(
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"), col("lang")),
       s"graft_docs_del_${sfTag(d)}", "lang",
@@ -289,8 +289,8 @@ object ScaleQueries {
     val targets = Tables.documents(s, d)
       .filter(col("lang") === "de" && pmod(col("doc_id"), lit(5)) === 2)
       .select(col("doc_id"), col("lang"))
-    Merge.deletePartitioned(s, dir, "lang", "doc_id", targets)
-    s.read.parquet(dir)
+    Merge.deletePartitioned(s, lay, "lang", "doc_id", targets)
+    lay.read(s)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
   }
 
@@ -319,10 +319,10 @@ object ScaleQueries {
   private[graft] val ZM_FILES = 8
 
   /** Build (write-once) the range layout + its zone-map sidecar; return
-    * both dirs. The sidecar is one row per file: (f, vlo, vhi, n_rows). */
+    * both. The sidecar is one row per file: (f, vlo, vhi, n_rows). */
   private[graft] def zoneMapLayout(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, String) = {
-    val dir = Scale.writeOnce(
+      d: String): (Scale.Layout, Scale.Layout) = {
+    val lay = Scale.writeOnce(
       Tables.events(s, d).select(col("event_id"), col("value"))
         .filter(col("value").isNotNull)
         .repartitionByRange(ZM_FILES, col("value")),
@@ -333,15 +333,15 @@ object ScaleQueries {
     // read "intact" while absolute paths pointed at the old root. Names
     // resolve against the layout dir at consult time — relocation-proof.
     val idx = Scale.writeOnce(
-      s.read.parquet(dir)
+      lay.read(s)
         .groupBy(fileBasename.as("f"))
         .agg(min(col("value")).as("vlo"), max(col("value")).as("vhi"),
           count(lit(1)).as("n_rows")),
       // the "names/v2" tag versions the sidecar's CONTENT discipline
       // (file names, not absolute paths) — schema alone can't distinguish
       // them, and a stale absolute-path sidecar must not satisfy the spec
-      s"graft_events_zmidx_${sfTag(d)}", s"names/v2|${Scale.dirFingerprint(dir)}")
-    (dir, idx)
+      s"graft_events_zmidx_${sfTag(d)}", s"names/v2|${Scale.dirFingerprint(lay.dir)}")
+    (lay, idx)
   }
 
   /** The file NAME of the scan's current input — what a portable sidecar
@@ -350,10 +350,9 @@ object ScaleQueries {
     regexp_extract(input_file_name(), "[^/]+$", 0)
 
   val q128ZoneMap: Q = (s, d) => {
-    val (dir, idx) = zoneMapLayout(s, d)
+    val (lay, idx) = zoneMapLayout(s, d)
     val hit = zoneMapHits(s, idx, ZM_LO, ZM_HI)
-    (if (hit.isEmpty) s.read.parquet(dir).limit(0)
-     else s.read.parquet(hit.map(n => s"$dir/$n"): _*))
+    (if (hit.isEmpty) lay.read(s).limit(0) else lay.read(s, hit: _*))
       .filter(col("value") >= ZM_LO && col("value") <= ZM_HI)
       .select(col("event_id"), col("value"))
   }
@@ -361,15 +360,15 @@ object ScaleQueries {
   /** The sidecar read the consult is allowed — exposed as a DataFrame so
     * MetricsSpec can prove the consult's only scan is the sidecar. */
   private[graft] def zoneMapConsult(s: org.apache.spark.sql.SparkSession,
-      idx: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(idx).select(col("f"), col("vlo"), col("vhi"))
+      idx: Scale.Layout): org.apache.spark.sql.DataFrame =
+    idx.read(s).select(col("f"), col("vlo"), col("vhi"))
 
   /** The zone-map consultation: file names whose [vlo, vhi] interval
     * intersects [lo, hi], FROM THE SIDECAR ONLY — the layout is never
     * scanned here (MetricsSpec pins that). Driver-side collect ∝ file
     * count; callers resolve names against the layout dir. */
   private[graft] def zoneMapHits(s: org.apache.spark.sql.SparkSession,
-      idx: String, lo: Double, hi: Double): Seq[String] =
+      idx: Scale.Layout, lo: Double, hi: Double): Seq[String] =
     zoneMapConsult(s, idx)
       .collect()
       .filter(r => r.getDouble(1) <= hi && r.getDouble(2) >= lo)
@@ -426,10 +425,10 @@ object ScaleQueries {
     }
   }
 
-  /** Build (write-once) the layout + its bloom sidecar; return both dirs. */
+  /** Build (write-once) the layout + its bloom sidecar; return both. */
   private[graft] def bloomLayout(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, String) = {
-    val dir = Scale.writeOnce(
+      d: String): (Scale.Layout, Scale.Layout) = {
+    val lay = Scale.writeOnce(
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .repartitionByRange(BF_FILES, col("n_chars"), col("doc_id")),
@@ -437,7 +436,7 @@ object ScaleQueries {
       Scale.dirFingerprint(s"$d/documents.parquet"))
     val pos = bloomPositions(col("doc_id"))
     val idx = Scale.writeOnce(
-      s.read.parquet(dir)
+      lay.read(s)
         // file NAMES, not absolute paths — same relocation-proofing as the
         // q128 zone-map sidecar (the fingerprint can't see a moved root)
         .select(fileBasename.as("f"), col("doc_id"))
@@ -447,17 +446,17 @@ object ScaleQueries {
         .groupBy(col("f"), col("word")).agg(expr("bit_or(m)").as("mask")),
       // names/v2: see zoneMapLayout — a stale absolute-path sidecar must
       // not satisfy the spec after the name-keyed consult change
-      s"graft_docs_blidx_${sfTag(d)}", s"names/v2|${Scale.dirFingerprint(dir)}")
-    (dir, idx)
+      s"graft_docs_blidx_${sfTag(d)}", s"names/v2|${Scale.dirFingerprint(lay.dir)}")
+    (lay, idx)
   }
 
   /** Consult the sidecar: file NAMES where EVERY bit of at least one probe
     * key is set (callers resolve against the layout dir). Exposed so
     * OperationalSpec can assert real skipping. */
   private[graft] def bloomCandidates(s: org.apache.spark.sql.SparkSession,
-      idx: String, probes: Seq[Long]): Seq[String] = {
+      idx: Scale.Layout, probes: Seq[Long]): Seq[String] = {
     val masks: Map[String, Map[Long, Long]] =
-      s.read.parquet(idx).collect()
+      idx.read(s).collect()
         .groupBy(_.getString(0))
         .map { case (f, rs) =>
           f -> rs.map(r => r.getLong(1) -> r.getLong(2)).toMap }
@@ -469,10 +468,9 @@ object ScaleQueries {
   }
 
   val q169BloomSkipping: Q = (s, d) => {
-    val (dir, idx) = bloomLayout(s, d)
+    val (lay, idx) = bloomLayout(s, d)
     val hit = bloomCandidates(s, idx, BF_PROBES)
-    (if (hit.isEmpty) s.read.parquet(dir).limit(0)
-     else s.read.parquet(hit.map(n => s"$dir/$n"): _*))
+    (if (hit.isEmpty) lay.read(s).limit(0) else lay.read(s, hit: _*))
       .filter(col("doc_id").isin(BF_PROBES: _*))
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
   }
@@ -482,11 +480,11 @@ object ScaleQueries {
     * compacted copy back. Identity semantics: the oracle reads the
     * original flat table — layout maintenance must never change data. */
   val q55Compaction: Q = (s, d) => {
-    val dir = Scale.compact(
+    Scale.compact(
       Tables.documents(s, d).select(col("doc_id"), col("lang"), col("source"), col("n_chars")),
       s"graft_docs_compact_${sfTag(d)}", 128L * 1024,
       Scale.dirFingerprint(s"$d/documents.parquet"))
-    s.read.parquet(dir).select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+      .read(s).select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
   }
 
   /** q57: Z-order clustered layout — events rewritten once, globally
@@ -504,7 +502,7 @@ object ScaleQueries {
   val q57ZorderLayout: Q = (s, d) => {
     val z = Scale.zOrder2(col("user_id"),
       floor(col("value")).cast(org.apache.spark.sql.types.LongType), Z_BITS)
-    val dir = Scale.writeOnce(
+    val lay = Scale.writeOnce(
       Tables.events(s, d).select(col("event_id"), col("user_id"), col("value"))
         .withColumn("z", z)
         .repartitionByRange(8, col("z"))
@@ -514,7 +512,7 @@ object ScaleQueries {
       // layout: an arithmetic/bits change rebuilds instead of serving
       // stale z values.
       Scale.dirFingerprint(s"$d/events.parquet") + s"|z=${z.toString.hashCode}")
-    s.read.parquet(dir)
+    lay.read(s)
       .filter(col("user_id").between(10, 40) && col("value").between(5.0, 10.0))
       .select(col("event_id"), col("user_id"), col("value"), col("z"))
   }
@@ -532,7 +530,7 @@ object ScaleQueries {
   val q205HilbertLayout: Q = (s, d) => {
     val h = Scale.hilbert2(col("user_id"),
       floor(col("value")).cast(org.apache.spark.sql.types.LongType), Z_BITS)
-    val dir = Scale.writeOnce(
+    val lay = Scale.writeOnce(
       Tables.events(s, d).select(col("event_id"), col("user_id"), col("value"))
         .withColumn("h", h)
         .repartitionByRange(8, col("h"))
@@ -541,7 +539,7 @@ object ScaleQueries {
       // the fingerprint carries an explicit algorithm version, not the
       // Column's identity: only a change of the h VALUES may rebuild
       Scale.dirFingerprint(s"$d/events.parquet") + s"|h=hilbert2/v2/b=$Z_BITS")
-    s.read.parquet(dir)
+    lay.read(s)
       .filter(col("user_id").between(10, 40) && col("value").between(5.0, 10.0))
       .select(col("event_id"), col("user_id"), col("value"), col("h"))
   }
@@ -569,15 +567,14 @@ object ScaleQueries {
     * thousand rows serving every dashboard grain with zero corpus
     * re-scans. */
   val q173GrainCascade: Q = (s, d) => {
-    val dailyDir = Scale.writeOnce(
+    val daily = Scale.writeOnce(
       Tables.events(s, d).filter(col("value").isNotNull)
         .groupBy(col("event_type"),
           date_trunc("day", col("ts")).as("period"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(DecimalType(18, 6))).as("s")),
       s"graft_daily_state_${sfTag(d)}",
-      Scale.dirFingerprint(s"$d/events.parquet"))
-    val daily = s.read.parquet(dailyDir)
+      Scale.dirFingerprint(s"$d/events.parquet")).read(s)
     def coarser(grain: String) = daily
       .groupBy(col("event_type"),
         date_trunc(grain, col("period")).as("period"))
@@ -621,14 +618,14 @@ object ScaleQueries {
           org.apache.spark.sql.types.LongType)).as("n_chars"))
 
   val q103IncrementalAgg: Q = (s, d) => {
-    val stateDir = Scale.writeOnce(
+    val state = Scale.writeOnce(
       langStats(Tables.documents(s, d).filter(col("doc_id") >= DedupQueries.BATCH_MAX_ID)),
       s"graft_lang_state_${sfTag(d)}",
       Scale.dirFingerprint(s"$d/documents.parquet") +
         s"|split=${DedupQueries.BATCH_MAX_ID}")
     val delta = langStats(
       Tables.documents(s, d).filter(col("doc_id") < DedupQueries.BATCH_MAX_ID))
-    s.read.parquet(stateDir).unionByName(delta)
+    state.read(s).unionByName(delta)
       .groupBy(col("lang")).agg(
         sum(col("n_docs")).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"),
@@ -702,7 +699,7 @@ object ScaleQueries {
         .agg(count(lit(1)).as("n"), sum(col("rev")).as("r"))
     val oOld = o.filter(col("o_arm") =!= 0); val oNew = o.filter(col("o_arm") === 0)
     val lOld = l.filter(col("l_arm") =!= 0); val lNew = l.filter(col("l_arm") === 0)
-    val stateDir = Scale.writeOnce(
+    val state = Scale.writeOnce(
       view(oOld.join(lOld, col("o_orderkey") === col("l_orderkey"))),
       s"graft_ivm_state_${sfTag(d)}",
       Scale.dirFingerprint(s"$d/orders.parquet", s"$d/lineitem.parquet")
@@ -713,7 +710,7 @@ object ScaleQueries {
           col("o_orderkey") === col("l_orderkey")))
         .unionByName(broadcast(oNew).join(lNew,
           col("o_orderkey") === col("l_orderkey"))))
-    s.read.parquet(stateDir).withColumn("is_delta", lit(false))
+    state.read(s).withColumn("is_delta", lit(false))
       .unionByName(delta.withColumn("is_delta", lit(true)))
       .groupBy(col("o_orderpriority"), col("l_returnflag"))
       .agg(sum(col("n")).as("n_items"),
@@ -732,7 +729,7 @@ object ScaleQueries {
     * deliberately failing audit must refuse to move the pointer and
     * leave the previous version current. */
   val q115WapPublish: Q = (s, d) => {
-    val dir = Scale.writeAuditPublish(
+    Scale.writeAuditPublish(
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars")),
       s"graft_docs_wap_${sfTag(d)}",
@@ -743,7 +740,7 @@ object ScaleQueries {
           df.select(col("doc_id")).distinct().count() == df.count()),
         "pk_not_null" -> (df =>
           df.filter(col("doc_id").isNull).count() == 0)))
-    s.read.parquet(dir)
+      .read(s)
   }
 
   /** q239: STATS-DRIVEN BROADCAST DECISION — the cost-based-optimizer
@@ -1029,13 +1026,13 @@ object ScaleQueries {
   private[graft] def q244Inputs(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val fp = Scale.dirFingerprint(s"$d/lineitem.parquet")
-    val basePath = Scale.writeOnce(q244SkewBase(s, d),
+    val base = Scale.writeOnce(q244SkewBase(s, d),
       s"graft_skew_base_${sfTag(d)}", fp)
-    val dimPath = Scale.writeOnce(
-      s.read.parquet(basePath).groupBy(col("k"))
+    val dim = Scale.writeOnce(
+      base.read(s).groupBy(col("k"))
         .agg(count(lit(1)).as("key_rows")),
       s"graft_skew_dim_${sfTag(d)}", fp)
-    (s.read.parquet(basePath).repartition(64), s.read.parquet(dimPath))
+    (base.read(s).repartition(64), dim.read(s))
   }
 
   private[graft] def q244Join(base: org.apache.spark.sql.DataFrame,
@@ -1075,11 +1072,11 @@ object ScaleQueries {
         sum(col("n_chars")).as("sum_chars"),
         min(col("n_chars")).as("min_chars"),
         max(col("n_chars")).as("max_chars"))
-    val path = Scale.writeOnce(mv, s"graft_docs_mv_${sfTag(d)}",
+    val lay = Scale.writeOnce(mv, s"graft_docs_mv_${sfTag(d)}",
       Scale.dirFingerprint(s"$d/documents.parquet"))
-    val rel = s.read.parquet(path).queryExecution.analyzed.collectFirst {
+    val rel = lay.read(s).queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
-    }.getOrElse(sys.error(s"MV at $path did not analyze to a relation"))
+    }.getOrElse(sys.error(s"MV at ${lay.dir} did not analyze to a relation"))
     MvDef(
       source = ScanSource(java.nio.file.Paths.get(d, "documents.parquet")
         .toAbsolutePath.normalize.toString),
@@ -1162,12 +1159,12 @@ object ScaleQueries {
       .agg(count(lit(1)).as("cnt_rows"),
         min(col("o_totalprice")).as("min_price"),
         max(col("o_totalprice")).as("max_price"))
-    val path = Scale.writeOnce(mv, s"graft_ord_cust_mv_${sfTag(d)}",
+    val lay = Scale.writeOnce(mv, s"graft_ord_cust_mv_${sfTag(d)}",
       Scale.dirFingerprint(s"$d/orders.parquet") + "|" +
         Scale.dirFingerprint(s"$d/customer.parquet"))
-    val rel = s.read.parquet(path).queryExecution.analyzed.collectFirst {
+    val rel = lay.read(s).queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
-    }.getOrElse(sys.error(s"MV at $path did not analyze to a relation"))
+    }.getOrElse(sys.error(s"MV at ${lay.dir} did not analyze to a relation"))
     def abs(t: String) = java.nio.file.Paths.get(d, t)
       .toAbsolutePath.normalize.toString
     MvDef(

@@ -61,12 +61,12 @@ object SimilarityQueries {
         // CELLS/grid change must rebuild, not reuse stale cell assignments.
         val centsSig = s"${cents.length}x${cents.headOption.fold(0)(_.length)}:" +
           cents.flatten.mkString(",").hashCode
-        val dir = graft.operators.Scale.writePartitioned(
+        graft.operators.Scale.writePartitioned(
           assigned.select(col("vec_id"), col("embedding"), col("cell")),
           s"graft_emb_ivf_${ScaleQueries.sfTag(d)}", "cell",
           graft.operators.Scale.dirFingerprint(s"$d/embeddings.parquet") +
             s"|cents=$centsSig")
-        s.read.parquet(dir)
+          .read(s)
       })
 
   /** The shared bounded-shuffle formulation behind q23 (see its scaladoc). */

@@ -1,8 +1,14 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
+
+import graft.schemas.Schemas
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -10,14 +16,66 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * over partitioned directories; the API is path-based so the same code runs
   * on a 1000-executor cluster. Filters/projections applied by callers are
   * pushed into the parquet scan by Catalyst (PushedFilters / ReadSchema).
+  *
+  * Every load reads with the table's declared schema ([[Schemas.tables]]),
+  * so building a query runs no schema-inference job. `events` is the one
+  * table whose layout varies: its `ts` column's type comes from the footer
+  * of the table's first data file, read on the driver (see [[load]]).
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `name` under `dir`, read with its declared schema. For `events`, the
+    * declared `ts` type is replaced by the one the data carries: the
+    * testdata ships TIMESTAMP(MICROS) without a zone (TIMESTAMP_NTZ), an
+    * output directory written by Spark from epoch nanos carries plain
+    * INT64 (LongType), and the NANOS-annotated layout reads as LongType
+    * under the session's `nanosAsLong`. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val declared = Schemas.tables(name)
+    val schema =
+      if (name != "events") declared
+      else {
+        ensureNanosConf(spark)
+        StructType(declared.map(f =>
+          if (f.name == "ts") f.copy(dataType = footerType(spark, path, "ts")) else f))
+      }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** `name` registered as the session temp view `graft_<name>_<scale tag>`
+    * over its declared-schema [[load]]; returns the view name. SQL text
+    * reads a table through it, where a `parquet.`…`` path scan would
+    * infer the schema again on every analysis. */
+  def view(spark: SparkSession, dir: String, name: String): String = {
+    val v = s"graft_${name}_${ScaleQueries.sfTag(dir)}"
+    load(spark, dir, name).createOrReplaceTempView(v)
+    v
+  }
+
+  /** The Spark type the session would infer for `column` of the parquet
+    * table at `path` (a file, or a directory whose first data file in name
+    * order is read, skipping `_`/`.` names), from one footer read on the
+    * driver: no Spark job, and the session's conversion settings
+    * (`nanosAsLong`, NTZ inference) apply as they would to inference. */
+  private[graft] def footerType(spark: SparkSession, path: String, column: String): DataType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file =
+      if (!fs.getFileStatus(root).isDirectory) root
+      else fs.listStatus(root).map(_.getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .sortBy(_.getName).headOption
+        .getOrElse(throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(footer.getFileMetaData.getSchema)(column).dataType
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -76,18 +134,17 @@ object Tables {
     * whatever physical type the parquet carries. The driver's generator has
     * shipped two layouts across rounds:
     *  - TIMESTAMP(NANOS): Spark's reader rejects it outright, so the session
-    *    conf (set in [[GraftSession]], re-asserted here) reads the raw int64
+    *    conf (set in [[GraftSession]], re-asserted by [[load]]) reads the raw int64
     *    nanos and we floor-divide to micros ([[Epoch.floorDiv]] — matches
     *    DuckDB's ns→timestamp cast for pre-1970 instants too);
     *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark infers TIMESTAMP_NTZ;
     *    under the session's pinned UTC zone the NTZ→TZ cast is wall-clock and
     *    instant preserving, and DuckDB reads the same column as its naive
     *    TIMESTAMP — both sides see identical microsecond values.
-    * Branching on the scanned dtype (not an env flag) keeps every query
-    * correct against either generation of testdata.
+    * Branching on the footer-resolved dtype (not an env flag) keeps every
+    * query correct against either generation of testdata.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    ensureNanosConf(spark)
     val raw = load(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType =>
@@ -105,7 +162,6 @@ object Tables {
     * Long.MaxValue; the generator's instants have no sub-microsecond part to
     * lose). */
   def eventsRawNanos(spark: SparkSession, dir: String): DataFrame = {
-    ensureNanosConf(spark)
     val raw = load(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType => raw

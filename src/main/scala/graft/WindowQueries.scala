@@ -838,15 +838,14 @@ object WindowQueries {
       .head.getLong(0)
     val cutoffUs = (maxDay - 6) * US_PER_DAY_217
     val gapUs = SESS_GAP_MIN * 60000000L
-    val stateDir = graft.operators.Scale.writeOnce(
+    val state = graft.operators.Scale.writeOnce(
       sessionizeBatch(ev.filter(expr("unix_micros(ts)") < cutoffUs),
         SESS_GAP_MIN)
         .select(col("user_id"), col("session_start"), col("session_end"),
           col("n_events")),
       s"graft_sessions_state_${ScaleQueries.sfTag(d)}",
       graft.operators.Scale.dirFingerprint(s"$d/events.parquet") +
-        s"|cut=$cutoffUs|gap=$SESS_GAP_MIN")
-    val state = s.read.parquet(stateDir)
+        s"|cut=$cutoffUs|gap=$SESS_GAP_MIN").read(s)
     val closed = state.filter(
       expr("unix_micros(session_end)") < cutoffUs - gapUs)
     val openRows = state.filter(

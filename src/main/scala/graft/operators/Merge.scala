@@ -51,15 +51,15 @@ import org.apache.spark.sql.functions._
   */
 object Merge {
 
-  /** Upsert `batch` into the partitioned layout at `dir` by `key`,
-    * rewriting only the partitions present in the batch. Columns are
-    * aligned by name against the batch's column order. */
-  def upsertPartitioned(spark: SparkSession, dir: String, partKey: String,
+  /** Upsert `batch` into the partitioned `layout` by `key`, rewriting
+    * only the partitions present in the batch. Columns are aligned by name
+    * against the batch's column order. */
+  def upsertPartitioned(spark: SparkSession, layout: Scale.Layout, partKey: String,
                         key: String, batch: DataFrame): Unit = {
     val affected = batch.select(col(partKey)).distinct().collect().map(_.get(0)).toSeq
     if (affected.isEmpty) return
-    replacePartitions(dir, partKey, affected,
-      mergedView(spark, dir, partKey, key, batch, affected))
+    replacePartitions(layout.dir, partKey, affected,
+      mergedView(spark, layout, partKey, key, batch, affected))
   }
 
   /** Targeted DELETE from a partitioned layout — the right-to-be-forgotten /
@@ -79,9 +79,9 @@ object Merge {
     * union — pruned scan of affected partitions, broadcast anti join,
     * staged write, directory swap. O(affected partitions), never a global
     * rewrite. */
-  def deletePartitioned(spark: SparkSession, dir: String, partKey: String,
+  def deletePartitioned(spark: SparkSession, layout: Scale.Layout, partKey: String,
                         key: String, keys: DataFrame): Unit = {
-    val base = spark.read.parquet(dir)
+    val base = layout.read(spark)
     // keys carrying the partition column prune the probe's scan at planning
     // time; the containment semi join still runs either way — it is what
     // makes a re-delete of absent keys a filesystem no-op
@@ -98,7 +98,7 @@ object Merge {
     val remaining = base.filter(col(partKey).isin(affected: _*))
       .select(cols.map(col): _*)
       .join(broadcast(keys.select(col(key))), Seq(key), "left_anti")
-    replacePartitions(dir, partKey, affected, remaining, dropEmptied = true)
+    replacePartitions(layout.dir, partKey, affected, remaining, dropEmptied = true)
   }
 
   /** Replace the named partition directories of `dir` with `data`'s content
@@ -137,10 +137,10 @@ object Merge {
     * partitions are invisible to the job, not merely filtered), anti-joined
     * against the BROADCAST batch keys, union the batch. The base side never
     * shuffles and never broadcasts. */
-  def mergedView(spark: SparkSession, dir: String, partKey: String,
+  def mergedView(spark: SparkSession, layout: Scale.Layout, partKey: String,
                  key: String, batch: DataFrame, affected: Seq[Any]): DataFrame = {
     val cols = batch.columns.toSeq
-    val base = spark.read.parquet(dir)
+    val base = layout.read(spark)
       .filter(col(partKey).isin(affected: _*))
       .select(cols.map(col): _*)
     base.join(broadcast(batch.select(col(key))), Seq(key), "left_anti")

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Scale patterns that only matter past a single node: skew-salted
   * aggregation and bucketed (co-located) joins.
@@ -13,6 +14,18 @@ import org.apache.spark.sql.functions._
   * were `all`-replicated) but a 100 TB fact-to-fact join does.
   */
 object Scale {
+
+  /** A directory the engine wrote, with the schema of the frame written
+    * there (partition columns last, the order a read returns them) and its
+    * file format. Every read-back goes through [[read]], so it runs no
+    * schema-inference job: the schema is the writer's, not a footer scan's. */
+  final case class Layout(dir: String, schema: StructType, format: String = "parquet") {
+    /** The whole layout, or only the named files in it, read with its
+      * schema. */
+    def read(spark: SparkSession, files: String*): DataFrame =
+      spark.read.schema(schema).format(format)
+        .load((if (files.isEmpty) Seq(dir) else files.map(f => s"$dir/$f")): _*)
+  }
 
   /** Two-stage salted aggregation for skewed group keys.
     *
@@ -178,11 +191,11 @@ object Scale {
     * so a reader's partition-key predicate prunes whole directories at
     * planning time (PartitionFilters) — the Spark analog of the date/tenant
     * partition layout every 100 TB corpus uses to avoid full scans. Returns
-    * the directory to read back. Same spec-file gating: schema, key, or
+    * the [[Layout]] to read back. Same spec-file gating: schema, key, or
     * data-fingerprint drift forces a rebuild, a fresh session over intact
     * files skips it. */
   def writePartitioned(df: DataFrame, table: String, partKey: String,
-      dataFingerprint: String = ""): String = {
+      dataFingerprint: String = ""): Layout = {
     val spark = df.sparkSession
     val loc = java.nio.file.Paths.get(
       new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
@@ -196,7 +209,8 @@ object Scale {
       df.write.partitionBy(partKey).mode("overwrite").parquet(loc.toString)
       java.nio.file.Files.write(specFile, spec.getBytes("UTF-8"))
     }
-    loc.toString
+    val (parts, data) = df.schema.partition(_.name == partKey)
+    Layout(loc.toString, StructType(data ++ parts))
   }
 
   /** Small-files compaction (write-once): rewrite a table into
@@ -211,9 +225,9 @@ object Scale {
     * (task-per-file scheduling, footer overhead) than through right-sized
     * ones; conversely one giant file caps scan parallelism.
     * `repartition(n)` (round-robin) balances output sizes; the write is
-    * gated through [[writeOnce]]. Returns the dir. */
+    * gated through [[writeOnce]]. Returns the [[Layout]]. */
   def compact(df: DataFrame, table: String, targetBytes: Long,
-      dataFingerprint: String = ""): String = {
+      dataFingerprint: String = ""): Layout = {
     val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     // Clamp before toInt: a stats fallback (defaultSizeInBytes can be
     // Long.MaxValue) must degrade to "many partitions", never wrap through
@@ -232,9 +246,9 @@ object Scale {
     * layout knobs to the spec). A non-parquet format joins the spec
     * string (a format flip must rebuild, not serve the old bytes);
     * parquet keeps the legacy spec form so existing layouts stay intact.
-    * Returns the dir. */
+    * Returns the [[Layout]]. */
   def writeOnce(df: DataFrame, table: String, dataFingerprint: String,
-      format: String = "parquet"): String = {
+      format: String = "parquet"): Layout = {
     val spark = df.sparkSession
     val loc = java.nio.file.Paths.get(
       new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
@@ -249,7 +263,7 @@ object Scale {
       df.write.mode("overwrite").format(format).save(loc.toString)
       java.nio.file.Files.write(specFile, spec.getBytes("UTF-8"))
     }
-    loc.toString
+    Layout(loc.toString, df.schema, format)
   }
 
   /** A WAP publish refused: every failed audit by name. The job fails
@@ -273,9 +287,9 @@ object Scale {
     * Version identity is the write-once spec (schema + caller
     * fingerprint): an unchanged spec re-publish is a no-op reuse, the
     * bench-purge discipline applies unchanged. Returns the CURRENT
-    * version's data directory. */
+    * version's [[Layout]]. */
   def writeAuditPublish(df: DataFrame, table: String, dataFingerprint: String,
-      audits: Seq[(String, DataFrame => Boolean)]): String = {
+      audits: Seq[(String, DataFrame => Boolean)]): Layout = {
     val spark = df.sparkSession
     val root = java.nio.file.Paths.get(
       new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
@@ -298,7 +312,7 @@ object Scale {
       deleteRecursively(staging)
       deleteRecursively(verDir)
       df.write.mode("overwrite").parquet(staging.toString)
-      val staged = spark.read.parquet(staging.toString)
+      val staged = Layout(staging.toString, df.schema).read(spark)
       val failed = audits.collect { case (name, check) if !check(staged) => name }
       if (failed.nonEmpty) {
         deleteRecursively(staging) // no unpublished corpse to confuse anyone
@@ -317,7 +331,7 @@ object Scale {
         if (n.startsWith("v_") && n != ver) deleteRecursively(p)
       }
     }
-    verDir.toString
+    Layout(verDir.toString, df.schema)
   }
 
   /** Versioned publish with RETENTION — [[writeAuditPublish]]'s single
@@ -335,7 +349,12 @@ object Scale {
     * history every run and the log neither grows nor reorders. A NEW
     * version appends, then directories that fell off the retained tail are
     * reclaimed. Publishing never touches retained older versions' files
-    * (OperationalSpec pins byte-identity across a publish). */
+    * (OperationalSpec pins byte-identity across a publish).
+    *
+    * Each version directory carries its frame's schema as JSON in
+    * `_graft_schema`, so [[readVersionAgo]] reads any retained version with
+    * the schema it was written with; the `schema-file` tag in the spec
+    * keeps versions written without that file from counting as intact. */
   def publishRetained(df: DataFrame, table: String, dataFingerprint: String,
       keep: Int): String = {
     require(keep >= 1, s"publishRetained keep must be >= 1 (got $keep)")
@@ -343,7 +362,7 @@ object Scale {
     val root = java.nio.file.Paths.get(
       new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
     java.nio.file.Files.createDirectories(root)
-    val spec = s"${df.schema.toDDL}|$dataFingerprint"
+    val spec = s"${df.schema.toDDL}|schema-file|$dataFingerprint"
     val ver = {
       val md = java.security.MessageDigest.getInstance("MD5")
       "v_" + md.digest(spec.getBytes("UTF-8"))
@@ -358,6 +377,7 @@ object Scale {
       deleteRecursively(staging)
       deleteRecursively(verDir)
       df.write.mode("overwrite").parquet(staging.toString)
+      java.nio.file.Files.write(staging.resolve(SchemaFile), df.schema.json.getBytes("UTF-8"))
       java.nio.file.Files.move(staging, verDir,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       val log1 = (log0.filterNot(_ == ver) :+ ver).takeRight(keep)
@@ -374,6 +394,8 @@ object Scale {
     root.toString
   }
 
+  private val SchemaFile = "_graft_schema"
+
   private def readLog(root: java.nio.file.Path): Seq[String] = {
     val logFile = root.resolve("_graft_log")
     if (java.nio.file.Files.exists(logFile))
@@ -384,15 +406,18 @@ object Scale {
 
   /** Time-travel read: the version `ago` steps back from the newest
     * retained one (0 = current). Throws if retention has already pruned
-    * that far back — time travel is bounded by `keep`, by design. */
-  def readVersionAgo(spark: org.apache.spark.sql.SparkSession, table: String,
-      ago: Int): DataFrame = {
+    * that far back — time travel is bounded by `keep`, by design. The
+    * version is read with the schema stored beside its files. */
+  def readVersionAgo(spark: SparkSession, table: String, ago: Int): DataFrame = {
     val root = java.nio.file.Paths.get(
       new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
     val log = readLog(root)
     require(ago >= 0 && ago < log.size,
       s"version $ago steps back is not retained (log has ${log.size} versions)")
-    spark.read.parquet(root.resolve(log(log.size - 1 - ago)).toString)
+    val verDir = root.resolve(log(log.size - 1 - ago))
+    val schema = DataType.fromJson(new String(
+      java.nio.file.Files.readAllBytes(verDir.resolve(SchemaFile)), "UTF-8"))
+    Layout(verDir.toString, schema.asInstanceOf[StructType]).read(spark)
   }
 
   /** Z-order (Morton) interleave of two non-negative int columns, `bits`

@@ -660,7 +660,8 @@ object GraftTableCatalog {
     * (_file, _pos) is the ROW ID the delta-based (merge-on-read)
     * row-level operations address deletes by. */
   val PosMetaCol = "_pos"
-  /** Table property: how UPDATE / MERGE / fallback DELETE execute.
+  /** Table property: how UPDATE and MERGE execute (a row-level DELETE
+    * follows [[DeleteModeProp]] instead).
     * 'copy-on-write' (default) rewrites whole matched files via the
     * group-based plan; 'merge-on-read' uses Spark's delta-based plan
     * ([[org.apache.spark.sql.connector.write.SupportsDelta]]): matched
@@ -892,7 +893,9 @@ object GraftTableCatalog {
   /** Table property: how `DELETE FROM` treats boundary files.
     * 'copy-on-write' (default) rewrites them; 'merge-on-read' commits a
     * position delete file readers anti-merge — the Iceberg v2 read path,
-    * so a 10-row delete never rewrites a 1 GB file. */
+    * so a 10-row delete never rewrites a 1 GB file. It governs both DELETE
+    * paths: the metadata delete ([[deleteWhere]]) and the row-level one a
+    * predicate that is not a data-source `Filter` takes. */
   val DeleteModeProp = "delete.mode"
   /** The identifier suffix addressing a writable branch:
     * `db.t.branch_<name>` (the Iceberg Spark identifier shape). */
@@ -3070,7 +3073,10 @@ private class CatalogTable(dir: File, tableName: String,
       override def comment(): String = "row position within its data file"
     })
 
-  /** UPDATE / MERGE / (non-metadata) DELETE — GROUP-BASED copy-on-write:
+  /** UPDATE / MERGE / (non-metadata) DELETE. The command picks the mode
+    * property: DELETE reads [[DeleteModeProp]], UPDATE and MERGE read
+    * [[UpdateModeProp]]; 'merge-on-read' plans the delta-based operation
+    * below, and the default is GROUP-BASED copy-on-write:
     * Spark narrows the scan to the files that contain matching rows via
     * a `_file IN <subquery>` runtime filter, reads those files WHOLE
     * (the per-branch conditions carry row semantics), and the write's
@@ -3082,7 +3088,11 @@ private class CatalogTable(dir: File, tableName: String,
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(pinned.isEmpty, s"$tableName is a time-travel snapshot: read-only")
-    if (readProps(dir).get(UpdateModeProp).contains("merge-on-read"))
+    val modeProp = info.command() match {
+      case org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE => DeleteModeProp
+      case _ => UpdateModeProp
+    }
+    if (readProps(dir).get(modeProp).contains("merge-on-read"))
       () => new CatalogDeltaOperation(dir, schema(), info.command(), branch)
     else
       () => new CatalogRowLevelOperation(dir, schema(), info.command(), branch)

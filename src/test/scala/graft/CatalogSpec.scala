@@ -751,6 +751,36 @@ class CatalogSpec extends SparkSpec {
       rows("SELECT k, v FROM graft_cat.db.cowtwin ORDER BY k")
   }
 
+  test("delete.mode governs a row-level DELETE: a predicate that is no data-source Filter writes position deletes and rewrites no data file; update.mode alone does not") {
+    def headFiles(rel: String) = {
+      val dir = catFile(rel)
+      GraftTableCatalog.readManifest(dir, GraftTableCatalog.readLatest(dir)).files
+    }
+    // `k % 9999 = 17` cannot be handed over as a Filter, so Spark plans the
+    // row-level operation; only delete.mode is set
+    val mor = freshTable("delmode", "k BIGINT, v BIGINT",
+      "TBLPROPERTIES ('delete.mode'='merge-on-read')")
+    sql(s"INSERT INTO $mor SELECT id, id * 7 FROM range(0, 50000, 1, 2)")
+    val before = headFiles("db/delmode")
+    sql(s"DELETE FROM $mor WHERE k % 9999 = 17")
+    val after = headFiles("db/delmode")
+    after.map(_.name).sorted shouldBe before.map(_.name).sorted
+    after.flatMap(_.deletes).map(_.rows).sum shouldBe 5L
+    rows(s"SELECT count(*), sum(k) FROM $mor") shouldBe
+      Seq(Seq(49995L, (0L until 50000L).filter(_ % 9999 != 17).sum))
+    // update.mode governs UPDATE and MERGE only: the same DELETE on a
+    // table that sets just update.mode rewrites its files copy-on-write
+    val upd = freshTable("updmode", "k BIGINT, v BIGINT",
+      "TBLPROPERTIES ('update.mode'='merge-on-read')")
+    sql(s"INSERT INTO $upd SELECT id, id * 7 FROM range(0, 50000, 1, 2)")
+    val updBefore = headFiles("db/updmode").map(_.name).toSet
+    sql(s"DELETE FROM $upd WHERE k % 9999 = 17")
+    val updAfter = headFiles("db/updmode")
+    updAfter.flatMap(_.deletes) shouldBe empty
+    (updAfter.map(_.name).toSet -- updBefore) should not be empty
+    rows(s"SELECT count(*) FROM $upd") shouldBe Seq(Seq(49995L))
+  }
+
   test("atomic CTAS: a poisoned CTAS write publishes NO table and leaves no staging debris; REPLACE TABLE AS SELECT swaps whole") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
     sql("DROP TABLE IF EXISTS graft_cat.db.actas")
@@ -1036,7 +1066,8 @@ class CatalogSpec extends SparkSpec {
     sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
     sql("DROP TABLE IF EXISTS graft_cat.db.mu")
     sql("""CREATE TABLE graft_cat.db.mu (k BIGINT, v BIGINT)
-          |TBLPROPERTIES ('update.mode'='merge-on-read')""".stripMargin)
+          |TBLPROPERTIES ('update.mode'='merge-on-read',
+          |               'delete.mode'='merge-on-read')""".stripMargin)
     sql("INSERT INTO graft_cat.db.mu SELECT id, id FROM range(0, 100000, 1, 4)")
     val dir = catFile("db/mu")
     val before = GraftTableCatalog
@@ -1148,7 +1179,7 @@ class CatalogSpec extends SparkSpec {
 
   test("columnar read path: catalog scans report ColumnarBatch reads, and every mutation surface answers like an independent reference") {
     val t = freshTable("colnar", "k BIGINT, x DOUBLE, s STRING",
-      "TBLPROPERTIES ('update.mode'='merge-on-read')")
+      "TBLPROPERTIES ('update.mode'='merge-on-read', 'delete.mode'='merge-on-read')")
     sql(s"INSERT INTO $t SELECT id, id * 0.5, concat('s', id) " +
       "FROM range(0, 50000, 1, 4)")
     sql(s"INSERT INTO $t VALUES (50000, NULL, NULL)")
@@ -2420,7 +2451,7 @@ class CatalogSpec extends SparkSpec {
     sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
     sql("DROP TABLE IF EXISTS graft_cat.db.orph")
     sql("CREATE TABLE graft_cat.db.orph (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('update.mode'='merge-on-read')")
+      "TBLPROPERTIES ('update.mode'='merge-on-read', 'delete.mode'='merge-on-read')")
     val t = "graft_cat.db.orph"
     sql(s"INSERT INTO $t SELECT id, id * 10 FROM range(0, 100, 1, 4)")
     // a MOR delete adds position-delete files the sweep must also pin

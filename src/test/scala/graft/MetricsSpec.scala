@@ -56,11 +56,11 @@ class MetricsSpec extends SparkSpec {
     // sidecar; this pins "metadata ∝ files, not rows" as an executed-plan
     // fact, not a docstring claim. (Negative pin paired with a positive
     // scan assertion per the Metrics scaladoc.)
-    val (dir, idx) = ScaleQueries.zoneMapLayout(spark, sf)
+    val (lay, idx) = ScaleQueries.zoneMapLayout(spark, sf)
     // one sidecar row per ACTUAL layout file — derived, not the ZM_FILES
     // constant: an empty range partition at a tiny/skewed scale would drop
     // a file, and that must not fail the sidecar-only-consult pin
-    val layoutFiles = spark.read.parquet(dir)
+    val layoutFiles = lay.read(spark)
       .select(org.apache.spark.sql.functions.input_file_name())
       .distinct().count()
     val scans = Metrics.scannedRows(ScaleQueries.zoneMapConsult(spark, idx))
@@ -192,5 +192,36 @@ class MetricsSpec extends SparkSpec {
       }.toList
       finally files.close()
     knobs shouldBe Nil
+  }
+
+  test("declared schemas: src/main has no schema-less parquet read outside the allow-list") {
+    // A parquet read without `.schema(` runs a footer-reading Spark job at
+    // analysis, and a SQL `parquet.`…`` scan infers again on every
+    // analysis. Reads name their schema instead: Tables.load's declared
+    // ones, a write-once Layout's, or a temp view over either.
+    import scala.jdk.CollectionConverters._
+    // `read` followed by a call chain ending in `.parquet(`
+    val read = """\bread((?:\s*\.\s*\w+\((?:[^()]|\([^()]*\))*\))*)\s*\.\s*parquet\(""".r
+    val sqlPath = """parquet\.`""".r
+    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val allowed = Set(
+      // q56: merging the schemas of evolving batches is the query's point
+      "IngestQueries.scala" -> """read.option("mergeSchema","true").parquet(""",
+      // the inferring overload perfbench's layer decomposition calls
+      "TableSink.scala" -> "read.parquet(")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val sites = try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val text = comments.replaceAllIn(
+          new String(java.nio.file.Files.readAllBytes(f), "UTF-8"), " ")
+        val file = f.getFileName.toString
+        read.findAllMatchIn(text).filterNot(_.group(1).contains("schema("))
+          .map(m => file -> m.matched.replaceAll("\\s+", "")) ++
+          sqlPath.findAllMatchIn(text).map(_ => file -> "parquet.`")
+      }.toList
+      finally files.close()
+    sites.filterNot(allowed) shouldBe Nil
+    // every allow-list entry is still a live site, so the list cannot rot
+    sites.toSet shouldBe allowed
   }
 }

@@ -237,7 +237,7 @@ class OperationalSpec extends SparkSpec {
     ScaleQueries.purgeLayouts(spark, sf, Seq("graft_docs_del"))
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("source"), col("n_chars"), col("lang"))
-    val dir = Scale.writePartitioned(docs,
+    val lay = Scale.writePartitioned(docs,
       s"graft_docs_del_${ScaleQueries.sfTag(sf)}", "lang",
       Scale.dirFingerprint(s"$sf/documents.parquet"))
     val targets = Tables.documents(spark, sf)
@@ -248,27 +248,27 @@ class OperationalSpec extends SparkSpec {
     val total = docs.count()
 
     // delete 1: only lang=de rewrites
-    val before = Merge.partitionFileInventory(dir, "lang", Set("de"))
-    Merge.deletePartitioned(spark, dir, "lang", "doc_id", targets)
-    Merge.partitionFileInventory(dir, "lang", Set("de")) shouldBe before
-    val after = spark.read.parquet(dir)
+    val before = Merge.partitionFileInventory(lay.dir, "lang", Set("de"))
+    Merge.deletePartitioned(spark, lay, "lang", "doc_id", targets)
+    Merge.partitionFileInventory(lay.dir, "lang", Set("de")) shouldBe before
+    val after = lay.read(spark)
     after.count() shouldBe total - nTargets
     after.join(targets.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .count() shouldBe 0L
 
     // delete 2 (same targets, now absent): a true filesystem no-op —
     // EVERY file, including lang=de's, keeps its bytes and mtimes
-    val allBefore = Merge.partitionFileInventory(dir, "lang", Set.empty)
-    Merge.deletePartitioned(spark, dir, "lang", "doc_id", targets)
-    Merge.partitionFileInventory(dir, "lang", Set.empty) shouldBe allBefore
+    val allBefore = Merge.partitionFileInventory(lay.dir, "lang", Set.empty)
+    Merge.deletePartitioned(spark, lay, "lang", "doc_id", targets)
+    Merge.partitionFileInventory(lay.dir, "lang", Set.empty) shouldBe allBefore
 
     // delete 3: removing every zh row drops the partition directory
-    Merge.deletePartitioned(spark, dir, "lang", "doc_id",
+    Merge.deletePartitioned(spark, lay, "lang", "doc_id",
       Tables.documents(spark, sf).filter(col("lang") === "zh")
         .select(col("doc_id"), col("lang")))
     java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir).resolve("lang=zh")) shouldBe false
-    spark.read.parquet(dir).filter(col("lang") === "zh").count() shouldBe 0L
+      java.nio.file.Paths.get(lay.dir).resolve("lang=zh")) shouldBe false
+    lay.read(spark).filter(col("lang") === "zh").count() shouldBe 0L
     // leave a clean layout for the catalog query (write-once spec is
     // still intact, so purge forces the next run to rebuild)
     ScaleQueries.purgeLayouts(spark, sf, Seq("graft_docs_del"))
@@ -277,18 +277,18 @@ class OperationalSpec extends SparkSpec {
   test("q128: the zone map actually skips — hit files are a strict subset covering a narrow interval") {
     import org.apache.spark.sql.functions._
     ScaleQueries.purgeLayouts(spark, sf, Seq("graft_events_zm", "graft_events_zmidx"))
-    val (dir, idx) = ScaleQueries.zoneMapLayout(spark, sf) // builds layout + sidecar
-    val totalFiles = spark.read.parquet(dir)
+    val (lay, idx) = ScaleQueries.zoneMapLayout(spark, sf) // builds layout + sidecar
+    val totalFiles = lay.read(spark)
       .select(input_file_name()).distinct().count()
     totalFiles shouldBe 8 // the range layout really produced 8 value-sorted files
     // the persisted sidecar is metadata-sized: exactly one row per file
-    spark.read.parquet(idx).count() shouldBe totalFiles
+    idx.read(spark).count() shouldBe totalFiles
     val hits = ScaleQueries.zoneMapHits(spark, idx, lo = 40.0, hi = 45.0)
     hits.nonEmpty shouldBe true
     hits.length.toLong should be < totalFiles // skipping skipped something
     // every hit NAME is a real layout file (the sidecar stores relocation-
     // proof basenames and indexes the layout it is fingerprint-chained to)
-    val layoutNames = spark.read.parquet(dir)
+    val layoutNames = lay.read(spark)
       .select(input_file_name()).distinct().collect()
       .map(_.getString(0).replaceAll(".*/", "")).toSet
     hits.toSet.subsetOf(layoutNames) shouldBe true
@@ -307,11 +307,11 @@ class OperationalSpec extends SparkSpec {
         }
         dst.toString
       }
-      val movedDir = copyDir(dir, "layout")
-      val movedIdx = copyDir(idx, "idx")
-      val movedHits = ScaleQueries.zoneMapHits(spark, movedIdx, lo = 40.0, hi = 45.0)
+      val movedDir = copyDir(lay.dir, "layout")
+      val movedIdx = copyDir(idx.dir, "idx")
+      val movedHits = ScaleQueries.zoneMapHits(spark, idx.copy(dir = movedIdx), lo = 40.0, hi = 45.0)
       movedHits.toSet shouldBe hits.toSet
-      val origRows = spark.read.parquet(hits.map(n => s"$dir/$n"): _*)
+      val origRows = spark.read.parquet(hits.map(n => s"${lay.dir}/$n"): _*)
         .filter(col("value") >= 40.0 && col("value") <= 45.0).count()
       spark.read.parquet(movedHits.map(n => s"$movedDir/$n"): _*)
         .filter(col("value") >= 40.0 && col("value") <= 45.0)
@@ -344,7 +344,7 @@ class OperationalSpec extends SparkSpec {
       val files3 = inventory()
       files3.map(_._1).toSet should not be files1.map(_._1).toSet
       all(files3.map(_._1)) should include(".orc")
-      spark.read.orc(d3).count() shouldBe df.count()
+      spark.read.orc(d3.dir).count() shouldBe df.count()
       // and the ORC spec is itself reuse-stable
       Scale.writeOnce(df, t, "fp1", format = "orc") shouldBe d3
       inventory() shouldBe files3
@@ -868,8 +868,8 @@ class OperationalSpec extends SparkSpec {
   test("q169: bloom skipping opens a strict subset of files; an absent key opens none; results equal the flat filter") {
     import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.01" // 16-file layout: skipping is visible
-    val (dir, idx) = ScaleQueries.bloomLayout(spark, d)
-    val total = spark.read.parquet(dir)
+    val (lay, idx) = ScaleQueries.bloomLayout(spark, d)
+    val total = lay.read(spark)
       .select(input_file_name()).distinct().count()
     // a single present key must touch its own file but skip most others
     // (16 files × 4096-bit filters at ≤ ~315 keys/file: FP rate « 50%)

@@ -605,12 +605,12 @@ class PlanSpec extends SparkSpec {
     def partFiles(dir: String) =
       new java.io.File(dir).listFiles.count(f => f.getName.startsWith("part-"))
     // huge target -> a single output file
-    partFiles(Scale.compact(df, "graft_compact_probe_big", 1L << 30)) shouldBe 1
+    partFiles(Scale.compact(df, "graft_compact_probe_big", 1L << 30).dir) shouldBe 1
     // tiny target -> stats force a multi-file layout
-    partFiles(Scale.compact(df, "graft_compact_probe_small", 64L * 1024)) should be > 1
+    partFiles(Scale.compact(df, "graft_compact_probe_small", 64L * 1024).dir) should be > 1
     // write-once: same spec skips the rewrite (same file set)
     val again = Scale.compact(df, "graft_compact_probe_small", 64L * 1024)
-    partFiles(again) should be > 1
+    partFiles(again.dir) should be > 1
     Seq("graft_compact_probe_big", "graft_compact_probe_small").foreach(t =>
       Scale.deleteRecursively(java.nio.file.Paths.get(
         new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, t)))
@@ -1642,9 +1642,9 @@ class PlanSpec extends SparkSpec {
     val mv = Tables.lineitem(spark, sf)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("cnt_rows"), sum(col("l_quantity")).as("sum_qty"))
-    val path = graft.operators.Scale.writeOnce(mv, "graft_li_mv_guard",
+    val lay = graft.operators.Scale.writeOnce(mv, "graft_li_mv_guard",
       graft.operators.Scale.dirFingerprint(s"$sf/lineitem.parquet"))
-    val rel = spark.read.parquet(path).queryExecution.analyzed.collectFirst {
+    val rel = lay.read(spark).queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
     }.get
     val mvd = MvDef(
