@@ -53,8 +53,10 @@ object GraphQueries {
     * for small dims, KEY (co-partition) for big ones.
     *
     * The switch compares an upper bound on the node count — the
-    * customer + supplier dimension sizes, two parquet-footer reads
-    * performed PER CALL (deliberately unmemoized: a rewritten scale dir
+    * customer + supplier dimension sizes, read from their parquet footers
+    * ([[graft.sources.Footers]]: driver-side, no Spark job, and a
+    * recursive walk, so a partitioned layout counts the files its scan
+    * reads) PER CALL (deliberately unmemoized: a rewritten scale dir
     * must never be served a stale count; if per-call listing cost ever
     * matters at very large file counts, memoize keyed by (path, mtime))
     * — against [[BroadcastNodeLimit]]. Both paths produce bit-identical
@@ -63,38 +65,12 @@ object GraphQueries {
     * moves. */
   private[graft] def graphKeyed(s: org.apache.spark.sql.SparkSession,
                                 d: String): Boolean =
-    footerRowCount(s, s"$d/customer.parquet") +
-      footerRowCount(s, s"$d/supplier.parquet") > BroadcastNodeLimit
+    graft.sources.Footers.rowCount(s, s"$d/customer.parquet") +
+      graft.sources.Footers.rowCount(s, s"$d/supplier.parquet") > BroadcastNodeLimit
 
   /** 10M nodes ≈ 160 MB of (node,rank) rows: safely inside executor
     * memory as a broadcast, and far past every test scale. */
   private val BroadcastNodeLimit = 10000000L
-
-  /** Row count straight from parquet footer metadata — a driver-side
-    * metadata read, NOT a Spark job, so the size probe charges
-    * nothing to the first benchmarked execution and can never serve a
-    * stale memo after the files under a scale dir are rewritten. */
-  private def footerRowCount(s: org.apache.spark.sql.SparkSession,
-                             path: String): Long = {
-    val conf = s.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    // RECURSIVE walk: a partitioned/nested layout (which Tables.load reads
-    // transparently) must count the same files the scan would read — a
-    // single-level listing would see only subdirectories, sum to 0, and
-    // silently pick broadcast mode for an over-threshold graph.
-    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val n = st.getPath.getName
-      if (n.startsWith("_") || n.startsWith(".")) Seq.empty
-      else if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
-      else Seq(st)
-    }
-    walk(fs.getFileStatus(p)).map { st =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
 
   /** Scope `canChangeCachedPlanOutputPartitioning = false` to the keyed
     * graph loops — the ONLY plans that rely on a persisted edge list

@@ -304,11 +304,15 @@ object ScaleQueries {
     * rebuild → new file names/mtimes → new fingerprint → sidecar
     * rebuilds). A selective BETWEEN predicate consults the SIDECAR first —
     * only files whose interval intersects the predicate are handed to the
-    * scan; the rest are never opened. The one full pass over the layout
-    * happens at sidecar BUILD time (write-once, amortized over every
-    * query); each query-time consult reads only sidecar rows, bounded by
-    * FILE COUNT (that is what makes external indexes work: metadata ∝
-    * files, not rows — now true of the query path, not just the lookup).
+    * scan; the rest are never opened. The sidecar is BUILT from the
+    * layout's parquet footers ([[graft.sources.Footers]]: one driver-side
+    * metadata read per file, no layout scan and no Spark job besides the
+    * sidecar's one-file write), and each query-time consult reads only
+    * sidecar rows: both are bounded by FILE COUNT (that is what makes
+    * external indexes work: metadata ∝ files, not rows). A file whose
+    * footer has no min/max for `value` (parquet-java writes none for a
+    * double column holding a NaN) is indexed as (−∞, +∞), so it is always
+    * a hit; a zero-row file gets no sidecar row.
     * OperationalSpec asserts real skipping (hit files < total files) and
     * relocation-proof name resolution; MetricsSpec pins that the
     * consult's ONLY scan is the sidecar (8 rows, never the layout); the
@@ -332,16 +336,29 @@ object ScaleQueries {
     // a moved/re-rooted warehouse (mv, rsync -a, CI cache restore) would
     // read "intact" while absolute paths pointed at the old root. Names
     // resolve against the layout dir at consult time — relocation-proof.
-    val idx = Scale.writeOnce(
-      lay.read(s)
-        .groupBy(fileBasename.as("f"))
-        .agg(min(col("value")).as("vlo"), max(col("value")).as("vhi"),
-          count(lit(1)).as("n_rows")),
-      // the "names/v2" tag versions the sidecar's CONTENT discipline
-      // (file names, not absolute paths) — schema alone can't distinguish
-      // them, and a stale absolute-path sidecar must not satisfy the spec
-      s"graft_events_zmidx_${sfTag(d)}", s"names/v2|${Scale.dirFingerprint(lay.dir)}")
+    val idx = Scale.writeOnce(zoneMapIndex(s, lay),
+      // the tag versions the sidecar's CONTENT discipline (file names;
+      // footer-built, a file without min/max indexed as (−∞, +∞)), which
+      // schema alone can't distinguish: a sidecar built under an older
+      // discipline must not satisfy the spec
+      s"graft_events_zmidx_${sfTag(d)}", s"names/v3|${Scale.dirFingerprint(lay.dir)}")
     (lay, idx)
+  }
+
+  /** The zone-map sidecar rows of `lay`, one per non-empty file, from the
+    * files' footers, as a one-partition local frame. */
+  private[graft] def zoneMapIndex(s: org.apache.spark.sql.SparkSession,
+      lay: Scale.Layout): org.apache.spark.sql.DataFrame = {
+    val rows = graft.sources.Footers.columnRanges(s, lay.dir, "value")
+      .filter(_.rows > 0)
+      .map { r =>
+        val (lo, hi) = r.bounds.getOrElse((Double.NegativeInfinity, Double.PositiveInfinity))
+        org.apache.spark.sql.Row(r.file, lo, hi, r.rows)
+      }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("f", StringType), StructField("vlo", DoubleType),
+      StructField("vhi", DoubleType), StructField("n_rows", LongType))))
+      .coalesce(1)
   }
 
   /** The file NAME of the scan's current input — what a portable sidecar

@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
@@ -57,25 +54,13 @@ object Tables {
   }
 
   /** The Spark type the session would infer for `column` of the parquet
-    * table at `path` (a file, or a directory whose first data file in name
-    * order is read, skipping `_`/`.` names), from one footer read on the
-    * driver: no Spark job, and the session's conversion settings
-    * (`nanosAsLong`, NTZ inference) apply as they would to inference. */
-  private[graft] def footerType(spark: SparkSession, path: String, column: String): DataType = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val file =
-      if (!fs.getFileStatus(root).isDirectory) root
-      else fs.listStatus(root).map(_.getPath)
-        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-        .sortBy(_.getName).headOption
-        .getOrElse(throw new IllegalArgumentException(s"no parquet data file under $path"))
-    val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromPath(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    * table at `path`, from the footer schema of its first data file
+    * ([[graft.sources.Footers.schema]]: no Spark job). The session's
+    * conversion settings (`nanosAsLong`, NTZ inference) apply as they
+    * would to inference. */
+  private[graft] def footerType(spark: SparkSession, path: String, column: String): DataType =
     new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-      .convert(footer.getFileMetaData.getSchema)(column).dataType
-  }
+      .convert(graft.sources.Footers.schema(spark, path))(column).dataType
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
 import graft.{Epoch, GraftSession}
 import graft.schemas.Schemas
 import graft.sinks.{ParquetSink, TableSink}
-import graft.sources.{Fixtures, JsonSource}
+import graft.sources.{Fixtures, Footers, JsonSource}
 
 /** The end-to-end star build (reference entry point E1, `etl.py:55-109`):
   * drop → create → stage → insert ×5 (in `sql_queries.py:197` order:
@@ -31,9 +31,10 @@ import graft.sources.{Fixtures, JsonSource}
   * The whole pipeline is 5 independent lazy plans over 2 materialized
   * staging tables. Every read-back carries its schema (the frame just
   * written, or [[Schemas.star]]), so no read pays an inference job. A cold
-  * build schedules 14 Spark jobs: one per staging write, two per insert (the
-  * DISTINCT's shuffle-map stage or songplay's broadcast, then the write),
-  * and two for the validation count (its one exchange, then the result).
+  * build schedules 12 Spark jobs: one per staging write and two per insert
+  * (the DISTINCT's shuffle-map stage or songplay's broadcast, then the
+  * write). The validation counts come from the star files' parquet
+  * footers ([[Footers]]), so they schedule none.
   */
 object Etl {
 
@@ -146,8 +147,8 @@ object Etl {
     * parquet is still intact — the cache is only trusted when every table's
     * `_SUCCESS` marker is present on disk, so an externally-deleted star dir
     * (or a fresh session over a wiped workdir) triggers a rebuild. Returns
-    * read-back row counts of the materialized tables (the reference's
-    * validation queries, test_etl.ipynb cells 8–21). */
+    * the row counts of the materialized tables from their parquet footers
+    * (the reference's validation queries, test_etl.ipynb cells 8–21). */
   private val ran = new ConcurrentHashMap[String, Map[String, Long]]()
 
   /** Await concurrently-submitted Spark write jobs; a failed job's
@@ -251,17 +252,10 @@ object Etl {
     // staging parquet goes away with the temp views, like the reference's
     // post-ETL staging drop.
     staging.foreach { t => spark.catalog.dropTempView(t); sink.drop(t) }
-    // The reference's five count(*) validation queries, as ONE aggregate
-    // over the union of the five declared-schema reads: one exchange, so
-    // two jobs (the shuffle-map stage, then the result). Per-table counts
-    // still come from the materialized files. A grouped count over an empty
-    // table yields NO row — restore the 0 explicitly so an empty table
-    // reports 0 instead of vanishing from the map.
-    val counted = tables
-      .map(t => sink.read(spark, t, Schemas.star(t)).select(lit(t).as("t")))
-      .reduce(_ union _)
-      .groupBy("t").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    tables.map(t => t -> counted.getOrElse(t, 0L)).toMap
+    // The reference's five count(*) validation queries, answered from the
+    // parquet footers of the files just materialized, the way Redshift
+    // answers count(*) from block metadata: a driver-side read, no Spark
+    // job. An empty table's files carry 0 rows, so it reports 0.
+    tables.map(t => t -> Footers.rowCount(spark, sink.path(t))).toMap
   }
 }

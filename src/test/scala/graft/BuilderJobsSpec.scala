@@ -52,7 +52,7 @@ class BuilderJobsSpec extends SparkSpec {
 
   // (query, builder jobs at sf0.001 on the local[4] test session)
   private val budgets = Seq(
-    "q128_zone_map" -> 6,
+    "q128_zone_map" -> 5,
     "q273_catalog_merge" -> 7,
     "q267_catalog_lifecycle" -> 2,
     "q262_ledger_round_trip" -> 1,

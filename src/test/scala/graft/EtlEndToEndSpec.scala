@@ -15,7 +15,8 @@ import graft.sinks.ParquetSink
   * reference's derived invariants (BASELINE.md): |time| = |distinct ts|,
   * |songplay| ≥ |events| (left outer + fanout), users excludes anonymous,
   * and the sortkey presort leaves each parquet file internally ordered.
-  * Also pins the build's declared read schemas and its Spark job budget. */
+  * Also pins the build's declared read schemas, its Spark job budget and
+  * its footer-served validation counts. */
 class EtlEndToEndSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -72,7 +73,7 @@ class EtlEndToEndSpec extends SparkSpec {
     }
   }
 
-  test("job budget: a cold star build schedules 14 jobs, the same on every build") {
+  test("job budget: a cold star build schedules 12 jobs, the same on every build") {
     Etl.run(spark, sf) // fixtures landed; the measured builds start from them
     val sc = spark.sparkContext
     val jobs = new AtomicInteger
@@ -90,8 +91,27 @@ class EtlEndToEndSpec extends SparkSpec {
     sc.addSparkListener(listener)
     val perBuild = try Seq(coldBuild(), coldBuild()) finally sc.removeSparkListener(listener)
     // 2 staging writes + 2 per insert (shuffle map or broadcast, then the
-    // write) + 2 for the one-exchange validation count
-    perBuild shouldBe Seq(14, 14)
+    // write); the validation counts come from footers and run no job
+    perBuild shouldBe Seq(12, 12)
+  }
+
+  test("validation counts: each star table's footer count equals its declared-schema scan count; an empty table counts 0") {
+    val counts = Etl.run(spark, sf)
+    val star = new ParquetSink(Etl.starRoot(sf))
+    Etl.tables.foreach { t =>
+      withClue(s"$t: ") {
+        counts(t) shouldBe spark.read.schema(Schemas.star(t)).parquet(star.path(t)).count()
+      }
+    }
+    // an empty insert still lands a file (schema only, zero rows)
+    val root = java.nio.file.Files.createTempDirectory("etl-empty")
+    try {
+      val empty = new ParquetSink(root.toString)
+      empty.write(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.users), "users")
+      graft.sources.Footers.rowCount(spark, empty.path("users")) shouldBe 0L
+      spark.read.schema(Schemas.users).parquet(empty.path("users")).count() shouldBe 0L
+    } finally graft.operators.Scale.deleteRecursively(root)
   }
 
   test("sortkey presort: each songplay file is internally ordered by start_time") {

@@ -194,6 +194,24 @@ class MetricsSpec extends SparkSpec {
     knobs shouldBe Nil
   }
 
+  test("one footer reader: src/main opens parquet footers only in sources.Footers") {
+    // Row counts, zone maps and footer schemas come from one driver-side
+    // reader, so a second footer read outside it fails here.
+    import scala.jdk.CollectionConverters._
+    val open = """ParquetFileReader\s*\.\s*open\(|readFooter\(""".r
+    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val sites = try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .filterNot(_.endsWith(java.nio.file.Paths.get("graft", "sources", "Footers.scala")))
+      .flatMap { f =>
+        val text = comments.replaceAllIn(
+          new String(java.nio.file.Files.readAllBytes(f), "UTF-8"), " ")
+        open.findAllMatchIn(text).map(m => f.getFileName.toString -> m.matched)
+      }.toList
+      finally files.close()
+    sites shouldBe Nil
+  }
+
   test("declared schemas: src/main has no schema-less parquet read outside the allow-list") {
     // A parquet read without `.schema(` runs a footer-reading Spark job at
     // analysis, and a SQL `parquet.`…`` scan infers again on every

@@ -319,6 +319,78 @@ class OperationalSpec extends SparkSpec {
     } finally graft.operators.Scale.deleteRecursively(root)
   }
 
+  /** The zone map by a full layout scan: one (f, vlo, vhi, n_rows) row
+    * per file from a grouped aggregate. The reference the footer-built
+    * sidecar is checked against. */
+  private def scannedZoneMap(lay: graft.operators.Scale.Layout) = {
+    import org.apache.spark.sql.functions._
+    lay.read(spark)
+      .groupBy(ScaleQueries.fileBasename.as("f"))
+      .agg(min(col("value")).as("vlo"), max(col("value")).as("vhi"),
+        count(lit(1)).as("n_rows"))
+  }
+
+  for (scale <- Seq("sf0.001", "sf0.01"))
+    test(s"q128 at $scale: the footer-built sidecar equals the scanned zone map row for row") {
+      val (lay, idx) = ScaleQueries.zoneMapLayout(spark, s"/root/testdata/$scale")
+      val footer = idx.read(spark).orderBy("f").collect().toSeq
+      footer should have size ScaleQueries.ZM_FILES.toLong
+      footer shouldBe scannedZoneMap(lay).orderBy("f").collect().toSeq
+    }
+
+  test("q128: a file whose values include a NaN is always a hit, a zero-row file is not indexed; the scanned zone map skipped the NaN file") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.Scale
+    val root = java.nio.file.Files.createTempDirectory("graft-zm-nan")
+    try {
+      // three single-file appends: {41.0, NaN}, {100.0} and no rows
+      val dir = root.resolve("layout").toString
+      import spark.implicits._
+      Seq((1L, 41.0), (2L, Double.NaN)).toDF("event_id", "value")
+        .coalesce(1).write.parquet(dir)
+      Seq((3L, 100.0)).toDF("event_id", "value")
+        .coalesce(1).write.mode("append").parquet(dir)
+      Seq.empty[(Long, Double)].toDF("event_id", "value")
+        .write.mode("append").parquet(dir)
+      graft.sources.Footers.rowCounts(spark, dir).map(_._2).sorted shouldBe Seq(0L, 1L, 2L)
+      val lay = Scale.Layout(dir, spark.read.parquet(dir).schema)
+      val nanFile = lay.read(spark).filter(col("value").isNaN)
+        .select(ScaleQueries.fileBasename).head().getString(0)
+      val idxDir = root.resolve("idx").toString
+      ScaleQueries.zoneMapIndex(spark, lay).write.parquet(idxDir)
+      val idx = Scale.Layout(idxDir, spark.read.parquet(idxDir).schema)
+      idx.read(spark).count() shouldBe 2L
+      val hits = ScaleQueries.zoneMapHits(spark, idx, lo = 40.0, hi = 45.0)
+      hits shouldBe Seq(nanFile)
+      lay.read(spark, hits: _*).filter(col("value").between(40.0, 45.0))
+        .select("event_id").as[Long].collect() shouldBe Array(1L)
+      // the scanned formulation: Spark's max orders NaN above every
+      // number, so the file's vhi is NaN, `vhi >= lo` is false, and the
+      // file holding the in-range 41.0 is skipped
+      val scanned = scannedZoneMap(lay).collect()
+        .filter(r => r.getDouble(1) <= 45.0 && r.getDouble(2) >= 40.0)
+        .map(_.getString(0))
+      scanned shouldBe empty
+    } finally Scale.deleteRecursively(root)
+  }
+
+  test("footer row counts walk a partitioned layout: they equal the scan's count") {
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft-footer-part")
+    try {
+      val dir = root.resolve("t").toString
+      spark.range(0, 1000, 1, 3).withColumn("k", col("id") % 4)
+        .write.partitionBy("k").parquet(dir)
+      graft.sources.Footers.rowCount(spark, dir) shouldBe 1000L
+      // files are named relative to the root, so equal part-file names in
+      // two partition directories stay apart
+      val names = graft.sources.Footers.rowCounts(spark, dir).map(_._1)
+      names.size should be >= 4
+      names.distinct shouldBe names
+      all(names) should startWith("k=")
+    } finally graft.operators.Scale.deleteRecursively(root)
+  }
+
   test("writeOnce: spec-gated reuse byte-for-byte, and a format flip rebuilds instead of serving the old bytes") {
     import org.apache.spark.sql.functions.col // not functions._: `not` would shadow the matcher
     import graft.operators.Scale
