@@ -362,26 +362,26 @@ object IngestQueries {
       }
     }
 
-  /** q262: write-then-read through the TRANSACTIONAL DSv2 sink
-    * (`graft-ledger`, [[graft.sources.LedgerSink]]) — the write-side
-    * complement to the series connector's read surface. Events' exact
-    * integer cents flow through the sink's task-file + driver-manifest
-    * commit protocol (per-task files named by attempt, published
-    * all-at-once by atomic manifest rename; LedgerSinkSpec pins that a
-    * job with a poisoned task publishes NOTHING and the previous commit
-    * stays visible), then read back BY MANIFEST and aggregated. The
-    * oracle computes the same aggregate straight from the source table:
-    * the hash gate proves the commit protocol is invisible to results —
-    * q55's rule applied to a sink the engine owns. Overwrite mode keeps
-    * the query idempotent run-to-run. */
+  /** q262: write-then-read through the DataFrameWriterV2 surface of
+    * the transactional table catalog (`graft_cat`,
+    * [[graft.sources.GraftTableCatalog]]) — `writeTo(t).create()`, the
+    * one query on that path; q267 and the others write through SQL.
+    * Events' exact integer cents flow through the catalog's task-file +
+    * driver-manifest commit (per-task files named by attempt, published
+    * all-at-once as a new table version; CatalogSpec pins that a job
+    * with a poisoned task publishes NOTHING), then read back by manifest
+    * and aggregated. The oracle computes the same aggregate straight
+    * from the source table: the hash gate proves the commit protocol is
+    * invisible to results — q55's rule applied to a sink the engine
+    * owns. `catTable` drops the table first, so the query is idempotent
+    * run-to-run. */
   val q262LedgerRoundTrip: Q = (s, d) => {
-    val dir = s"work/ledger_${ScaleQueries.sfTag(d)}"
+    val t = catTable(s, d, "ledger262")
     Tables.events(s, d).filter(col("value").isNotNull)
       .select(col("event_id").as("k"),
         (col("value").cast("decimal(18,2)") * 100).cast("long").as("v"))
-      .write.format("graft-ledger").option("path", dir)
-      .mode("overwrite").save()
-    s.read.format("graft-ledger").option("path", dir).load()
+      .writeTo(t).create()
+    s.table(t)
       .groupBy((col("k") % 10L).as("g"))
       .agg(count(lit(1)).as("n"), sum(col("v")).as("cents"),
         min(col("v")).as("min_cents"), max(col("v")).as("max_cents"))
@@ -800,11 +800,10 @@ object IngestQueries {
     * hidden staging directory via [[org.apache.spark.sql.connector
     * .catalog.StagingTableCatalog]] and swaps in whole; every CTAS in
     * this suite now rides the same staged path, so a poisoned CTAS
-    * write leaves NO table behind (CatalogSpec pins it, mirroring the
-    * ledger sink's poisoned-job test). RTAS here replaces the even-slice
-    * table with the full derivation — readers see old or new, never a
-    * half-written table. Oracle: DuckDB aggregates the replacement
-    * definition directly. */
+    * write leaves NO table behind (CatalogSpec pins it). RTAS here
+    * replaces the even-slice table with the full derivation — readers
+    * see old or new, never a half-written table. Oracle: DuckDB
+    * aggregates the replacement definition directly. */
   val q282CatalogRtas: Q = (s, d) => {
     val t = catTable(s, d, "ev282")
     s.sql(s"CREATE TABLE $t AS ${catEventsSql(s, d)} AND event_id % 2 = 0")
@@ -1902,7 +1901,7 @@ object IngestQueries {
         |FROM events
         |GROUP BY 1""".stripMargin,
     // The round trip must be invisible: DuckDB aggregates the SOURCE
-    // table; the engine aggregates what came back out of the ledger.
+    // table; the engine aggregates what came back out of the catalog.
     "q262_ledger_round_trip" ->
       """SELECT k % 10 AS g, count(*) AS n,
         |  CAST(sum(v) AS BIGINT) AS cents,

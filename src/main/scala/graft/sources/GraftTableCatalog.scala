@@ -87,7 +87,7 @@ class GraftTableCatalog extends CatalogPlugin with TableCatalog
       options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
     root = new File(Option(options.get("root"))
-      .getOrElse("work/graft_cat"))
+      .getOrElse(s"${graft.GraftSession.WorkRoot}/graft_cat"))
     root.mkdirs()
   }
   override def name(): String = catalogName
@@ -348,8 +348,9 @@ class GraftTableCatalog extends CatalogPlugin with TableCatalog
   /** The staged table builds in a hidden `.stg-*` directory; nothing is
     * visible (not listed, not loadable) until `commitStagedChanges`
     * publishes it by ONE directory rename. A poisoned CTAS write aborts
-    * the stage and leaves NO table — the LedgerSink rule applied to
-    * table creation itself (CatalogSpec pins it). */
+    * the stage and leaves NO table: nothing is visible until one atomic
+    * rename publishes all of it, for table creation too (CatalogSpec
+    * pins it). */
   override def stageCreate(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: java.util.Map[String, String])
       : StagedTable = {
@@ -1043,7 +1044,8 @@ object GraftTableCatalog {
     * by EVERY commit (including overwrites: a replayed epoch must stay a
     * no-op even after the table's content was replaced) — file list and
     * epoch set live in one immutable manifest so they can never
-    * disagree, the LedgerSink rule on the versioned chain. Markers are
+    * disagree (separate files could be one rename apart after a crash
+    * between renames). Markers are
     * NAMESPACED BY QUERY (`<queryId>:<epochId>`, the stable checkpoint
     * query id Spark keys micro-batch idempotence on) so replay detection
     * is per-stream: a FRESH stream (new checkpoint, epoch ids restart at
@@ -2025,10 +2027,10 @@ object GraftTableCatalog {
       head.eqDeletes == base.eqDeletes
   }
 
-  /** The storage codec: null bitmap, then LONG/DOUBLE raw and STRING
-    * length-prefixed, decoded with the column count the FILE was written
-    * under (schema evolution maps by field id). Deliberately trivial —
-    * the catalog is the demonstration, not the encoding. */
+  /** The storage types and their one-letter manifest codes. A data
+    * file's bytes are encoded by [[CatalogFileWriter]] alone and decoded
+    * by [[CatalogColumnarReader]] alone, with the types the FILE was
+    * written under (schema evolution maps by field id). */
   object Codec {
     def supported(t: DataType): Boolean =
       t == LongType || t == DoubleType || t == StringType
@@ -2044,49 +2046,6 @@ object GraftTableCatalog {
       case 'D' => DoubleType
       case 'S' => StringType
       case other => sys.error(s"unknown type code $other")
-    }
-
-    def write(out: DataOutputStream, types: Array[DataType],
-        get: Int => Any): Unit = {
-      var bits = 0L
-      types.indices.foreach(i => if (get(i) == null) bits |= (1L << i))
-      out.writeLong(bits)
-      types.indices.foreach { i =>
-        val v = get(i)
-        if (v != null) types(i) match {
-          case LongType => out.writeLong(v.asInstanceOf[Long])
-          case DoubleType => out.writeDouble(v.asInstanceOf[Double])
-          case StringType =>
-            // a UTF8String's bytes ARE the encoding — no String detour
-            val b = v match {
-              case u: UTF8String => u.getBytes
-              case s => s.toString.getBytes(StandardCharsets.UTF_8)
-            }
-            out.writeInt(b.length); out.write(b)
-          case t => sys.error(s"unsupported $t")
-        }
-      }
-    }
-
-    /** Reads one row's `fileCols` values (boxed; strings as java
-      * String) off a (memory-mapped) buffer — the driver-side
-      * rewrite/compact decode; big-endian matches the writer. The caller
-      * projects by field id. */
-    def read(buf: java.nio.ByteBuffer, types: Array[DataType],
-        fileCols: Int): Array[Any] = {
-      val bits = buf.getLong()
-      val out = new Array[Any](fileCols)
-      (0 until fileCols).foreach { i =>
-        if ((bits & (1L << i)) == 0) out(i) = types(i) match {
-          case LongType => buf.getLong()
-          case DoubleType => buf.getDouble()
-          case StringType =>
-            val b = new Array[Byte](buf.getInt()); buf.get(b)
-            new String(b, StandardCharsets.UTF_8)
-          case t => sys.error(s"unsupported $t")
-        }
-      }
-      out
     }
   }
 
@@ -2781,142 +2740,58 @@ object GraftTableCatalog {
     DeleteFile(name, positions.length.toLong)
   }
 
-  /** Write CURRENT-schema-aligned boxed rows as one v2 data file (the
-    * driver-side rewrite path: DELETE's copy-on-write boundary and
-    * sys.compact). Stats key by field id; null presence is tracked so
-    * the rewrite keeps full pruning power. */
+  /** Write CURRENT-schema-aligned boxed rows (strings as java String)
+    * as one data file through [[CatalogFileWriter]] — the driver-side
+    * rewrite path: DELETE's copy-on-write boundary, sys.compact and
+    * rewrite_sorted. The table's bloom sidecars are rebuilt, so
+    * point-lookup pruning survives table maintenance. */
   private[sources] def writeLocalFile(dir: File, prefix: String,
       schema: StructType, mp: ColMapping, partition: Seq[String],
       rows: Iterable[Array[Any]], seq: Long = 0L, specId: Int = 0): Entry = {
-    val types = schema.fields.map(_.dataType)
-    val name = s"$prefix-${java.util.UUID.randomUUID().toString.take(12)}.bin"
-    val f = new File(new File(dir, "data"), name)
-    val out = new DataOutputStream(new java.io.BufferedOutputStream(
-      new FileOutputStream(f)))
-    val stats = collection.mutable.Map[String, (Long, Long)]()
-    val sums = collection.mutable.Map[String, Long]()
-    val sumBad = collection.mutable.Set[String]()
-    val hasNull = new Array[Boolean](types.length)
-    val ndvs = types.map {
-      case LongType | StringType => new NdvSketch
-      case _ => null
-    }
-    // maintenance rewrites (compaction, boundary deletes) REBUILD the
-    // bloom sidecars the original files carried, so point-lookup
-    // pruning survives table maintenance
-    val bloomPos: Array[Int] =
-      if (bloomEncOf(dir, schema).isEmpty) Array.empty
-      else bloomEncOf(dir, schema).split(",").map(_.toInt)
-    val blooms = Array.fill(bloomPos.length)(new Array[Long](BloomWords))
-    var n = 0L
-    try rows.foreach { full =>
-      Codec.write(out, types, full.apply)
-      var bi = 0
-      while (bi < bloomPos.length) {
-        val pv = full(bloomPos(bi))
-        if (pv != null) {
-          val h = pv match {
-            case l: java.lang.Long => bloomMixLong(l)
-            case st: String =>
-              val b = st.getBytes(StandardCharsets.UTF_8)
-              bloomMixBytes(b, b.length)
-            case u: UTF8String => bloomMixBytes(u.getBytes, u.numBytes())
-            case other => sys.error(s"unbloomable value $other")
-          }
-          bloomSet(blooms(bi), h)
-        }
-        bi += 1
-      }
-      var i = 0
-      while (i < types.length) {
-        if (full(i) == null) hasNull(i) = true
-        else if (types(i) == LongType) {
-          val v = full(i).asInstanceOf[Long]
-          val key = s"#${mp.ids(i)}"
-          val (lo, hi) = stats.getOrElse(key, (v, v))
-          stats(key) = (math.min(lo, v), math.max(hi, v))
-          if (!sumBad(key)) {
-            val s0 = sums.getOrElse(key, 0L)
-            val s1 = s0 + v
-            if (((s0 ^ s1) & (v ^ s1)) < 0) { sumBad += key; sums -= key }
-            else sums(key) = s1
-          }
-          ndvs(i).add(bloomMixLong(v))
-        } else if (types(i) == StringType) {
-          val b = full(i) match {
-            case u: UTF8String => u.getBytes
-            case st => st.toString.getBytes(StandardCharsets.UTF_8)
-          }
-          ndvs(i).add(bloomMixBytes(b, b.length))
-        }
-        i += 1
-      }
-      n += 1
-    } finally out.close()
-    val nullFree = types.indices.collect {
-      case i if !hasNull(i) => s"#${mp.ids(i)}"
-    }.toSet
-    if (bloomPos.nonEmpty && n > 0)
-      writeBloomSidecar(new File(new File(dir, "data"), name + ".bloom"),
-        bloomPos.toSeq.zipWithIndex.map { case (pos, bi) =>
-          (mp.ids(pos), bloomSized(blooms(bi), n))
-        })
-    val ndvMap = types.indices.collect {
-      case i if ndvs(i) != null && n > 0 =>
-        s"#${mp.ids(i)}" -> ndvs(i).estimate(n) // nulls never hash in
-    }.toMap
-    Entry(name, n, f.length(), types.length, stats.toMap, Some(nullFree),
-      mp.ids, schema.fields.map(fd => Codec.typeCode(fd.dataType)).mkString,
-      partition, Seq.empty, seq, specId, sums.toMap,
-      if (n > 0) bloomPos.toSeq.map(mp.ids(_)) else Seq.empty, ndvMap)
+    val bloomEnc = bloomEncOf(dir, schema)
+    val w = new CatalogFileWriter(new File(dir, "data"),
+      s"$prefix-${java.util.UUID.randomUUID().toString.take(12)}",
+      partition, schema.fields.map(_.dataType), mp.ids.toArray,
+      if (bloomEnc.isEmpty) Array.empty else bloomEnc.split(",").map(_.toInt))
+    try {
+      rows.foreach(r => w.writeRow(new GenericInternalRow(r.map {
+        case v: String => UTF8String.fromString(v)
+        case v => v
+      })))
+      w.finish(seq, specId)
+    } finally w.closeOut()
   }
 
-  /** Decode one whole file (skipping already-deleted positions), each
-    * row ALIGNED to the current schema by field id. Returns (rawPos,
-    * alignedRow) pairs — the boundary-delete and compact machinery. */
+  /** Decode one whole file through [[CatalogColumnarReader]] (position
+    * and equality deletes applied), each row ALIGNED to the current
+    * schema by field id, strings as java String. Returns (rawPos,
+    * alignedRow) pairs — the boundary-delete and compact machinery. The
+    * reader is built directly, not through the scan's factory, so
+    * driver-side maintenance never counts as a scan in `filesOpened`. */
   private[graft] def readAligned(dir: File, e: Entry, schema: StructType,
       mp: ColMapping,
       eqCtx: Option[(Int, Seq[EqDelete])] = None)
       : IndexedSeq[(Long, Array[Any])] = {
-    val types = fileTypes(e, schema).map(DataType.fromJson)
-    val fids = e.idsOrLegacy.toArray
-    // file position of each current column (or -1), precomputed once
-    val proj = mp.ids.map(id => fids.indexOf(id)).toArray
-    val skip = loadDeletePositions(e.deletes.map(d =>
-      new File(new File(dir, "data"), d.name).getPath).toArray)
-    // equality deletes apply only to files OLDER than the key file
-    val eqFilter: Option[(Int, EqKeys.Lookup)] = eqCtx.flatMap {
-      case (keyIdx, dels) =>
-        val live = dels.filter(_.seq > e.seq)
-        if (live.isEmpty) None
-        else Some((keyIdx, EqKeys.lookup(live.map(d =>
-          new File(new File(dir, "data"), d.name).getPath).toArray,
-          schema.fields(keyIdx).dataType == StringType, e.seq)))
-    }
-    var si = 0
-    val in = { // memory-mapped, same as the columnar reader
-      val ch = java.nio.channels.FileChannel.open(
-        new File(new File(dir, "data"), e.name).toPath)
-      try ch.map(java.nio.channels.FileChannel.MapMode.READ_ONLY,
-        0, ch.size())
-      finally ch.close()
-    }
-    (0L until e.rows).flatMap { pos =>
-      val raw = Codec.read(in, types, types.length)
-      if (si < skip.length && skip(si) == pos) { si += 1; None }
-      else {
-        val aligned = new Array[Any](proj.length)
-        var i = 0
-        while (i < proj.length) {
-          if (proj(i) >= 0 && proj(i) < raw.length) aligned(i) = raw(proj(i))
-          i += 1
+    val types = schema.fields.map(_.dataType)
+    val reader = new CatalogColumnarReader(filePartition(dir, schema, mp,
+      schema.add(PosMetaCol, LongType), e, eqCtx = eqCtx))
+    val out = IndexedSeq.newBuilder[(Long, Array[Any])]
+    try while (reader.next()) {
+      val batch = reader.get()
+      val pos = batch.column(types.length)
+      (0 until batch.numRows()).foreach { r =>
+        out += pos.getLong(r) -> Array.tabulate[Any](types.length) { i =>
+          val v = batch.column(i)
+          if (v.isNullAt(r)) null
+          else types(i) match {
+            case LongType => v.getLong(r)
+            case DoubleType => v.getDouble(r)
+            case _ => v.getUTF8String(r).toString
+          }
         }
-        val eqDead = eqFilter.exists { case (keyIdx, set) =>
-          aligned(keyIdx) != null && set.contains(aligned(keyIdx))
-        }
-        if (eqDead) None else Some((pos, aligned))
       }
-    } // the mapping frees with GC
+    } finally reader.close()
+    out.result()
   }
 
   /** Derive the CHANGE DATA FEED splits for versions (fromV, toV]: diff
@@ -4001,9 +3876,10 @@ private case class CatalogFilePartition(path: String, fileName: String,
 }
 
 /** The one read path ([[PartitionReaderFactory.supportColumnarReads]]):
-  * decodes the codec stream straight into `OnHeapColumnVector`s — no
-  * per-row `GenericInternalRow`, no boxed values, and strings land as raw
-  * UTF-8 bytes. Constant columns (`_file`, null-pads for columns a file
+  * [[CatalogColumnarReader]], the one decoder of [[CatalogFileWriter]]'s
+  * files, decodes straight into `OnHeapColumnVector`s — no per-row
+  * `GenericInternalRow`, no boxed values, and strings land as raw UTF-8
+  * bytes. Constant columns (`_file`, null-pads for columns a file
   * predates, CDF stamps) ride `ConstantColumnVector`s. A row is skipped
   * when a position delete names it, when a newer upsert key file holds
   * its key, or (CDF positions-only mode) when it is not a listed
@@ -4033,8 +3909,8 @@ private class CatalogColumnarReader(fp: CatalogFilePartition)
   private val types: Array[DataType] = fp.typeJson.map(DataType.fromJson)
   private val outTypes: Array[DataType] =
     fp.outTypeJson.map(DataType.fromJson)
-  // memory-mapped decode: the codec writes java.io.DataOutput big-endian,
-  // which is ByteBuffer's default order — values read straight off the
+  // memory-mapped decode: CatalogFileWriter writes big-endian, which is
+  // ByteBuffer's default order — values read straight off the
   // page cache with no stream indirection (a DataInputStream pays
   // method-call + bounds overhead per VALUE; at 4096-row batches that
   // overhead, not boxing, dominated the first columnar cut)
@@ -4218,7 +4094,7 @@ private class CatalogColumnarReader(fp: CatalogFilePartition)
   * under `.stg-*`, published by ONE directory rename in
   * `commitStagedChanges` — readers see no table, then the whole table;
   * a failed CTAS write aborts the stage and the namespace is untouched
-  * (CatalogSpec pins the poisoned-job case, mirroring LedgerSinkSpec). */
+  * (CatalogSpec pins the poisoned-job case). */
 private class GraftStagedTable(tmp: File, finalDir: File,
     tableName: String, replace: Boolean)
     extends StagedTable with SupportsWrite {
@@ -4332,8 +4208,7 @@ private class CatalogWriteBuilder(dir: File, schema: StructType,
   * versioned commit (`stream-epoch`), and the manifest's epoch set makes
   * a post-crash replayed micro-batch a NO-OP: exactly-once-effective at
   * the catalog level, with time travel straight through the stream's
-  * history (every epoch is a version). The LedgerStreamingWrite
-  * discipline on the versioned chain. */
+  * history (every epoch is a version). */
 private[graft] class CatalogStreamingWrite(dir: File, schema: StructType,
     branch: Option[String] = None, queryId: String = "")
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
@@ -4423,7 +4298,7 @@ private[graft] case class CatalogCommit(entries: Seq[GraftTableCatalog.Entry],
     eqKeys: Option[(String, Long)] = None)
   extends WriterCommitMessage
 
-/** The ledger's commit discipline on the versioned chain: per-task files
+/** The batch commit protocol on the versioned chain: per-task files
   * named by (jobUid, partition, task) so attempts and applications never
   * collide; nothing visible until the driver publishes manifest N+1. An
   * overwrite REFERENCES only the new files — it deletes nothing, so
@@ -4536,170 +4411,37 @@ private case class CatalogWriterFactory(dirPath: String, jobUid: String,
       private val types = schema.fields.map(_.dataType)
       private val ids: Array[Int] =
         if (idsCsv.isEmpty) Array.empty else idsCsv.split(",").map(_.toInt)
-      private val typeCodes =
-        schema.fields.map(f => Codec.typeCode(f.dataType)).mkString
       private val spec: Array[(String, Int, Int)] =
         if (specEnc.isEmpty) Array.empty
         else specEnc.split(";").map { s =>
           val p = s.split(":"); (p(0), p(1).toInt, p(2).toInt)
         }
       private val stem = s"part-$jobUid-p$partitionId-t$taskId"
+      private val dataDir = new File(dirPath, "data")
 
       // schema positions carrying a per-file bloom sidecar
       private val bloomPos: Array[Int] =
         if (bloomEnc.isEmpty) Array.empty
         else bloomEnc.split(",").map(_.toInt)
-      // 0=LONG 1=DOUBLE 2=STRING — an int switch beats a DataType match
-      // in the per-value hot loop
-      private val tcodes: Array[Int] = types.map {
-        case LongType => 0
-        case DoubleType => 1
-        case StringType => 2
-        case t => sys.error(s"unsupported $t")
-      }
+      private def newSink(tuple: Seq[String], suffix: String) =
+        new CatalogFileWriter(dataDir, s"$stem$suffix", tuple, types, ids,
+          bloomPos)
 
-      /** The VECTORIZED-write sink: encodes straight from `InternalRow`
-        * accessors into a growable big-endian byte scratch (flushed in
-        * 64 KiB chunks), with per-column stats in PRIMITIVE arrays — no
-        * boxed values, no DataOutputStream, no per-row string-keyed map
-        * updates. Byte layout is identical to [[Codec.write]] (the
-        * mmap'd columnar reader decodes both). */
-      private class Sink(val tuple: Seq[String], suffix: String) {
-        val name = s"$stem$suffix.bin"
-        val file = new File(new File(dirPath, "data"), name)
-        private val ch = new FileOutputStream(file)
-        private var buf = new Array[Byte](1 << 16)
-        private var pos = 0
-        private var closed = false
-        var rows = 0L
-        val hasNull = new Array[Boolean](types.length)
-        private val hasVal = new Array[Boolean](types.length)
-        private val lo = new Array[Long](types.length)
-        private val hi = new Array[Long](types.length)
-        // exact per-column sums over non-null LONG values; a column that
-        // overflows Long drops out (SUM pushdown then declines)
-        private val sum = new Array[Long](types.length)
-        private val sumBad = new Array[Boolean](types.length)
-        val blooms: Array[Array[Long]] =
-          Array.fill(bloomPos.length)(new Array[Long](BloomWords))
-        // per-column distinct sketches (LONG + STRING), 2 KiB each —
-        // one mix + one OR per non-null value on the hot path
-        val ndvs: Array[NdvSketch] = Array.tabulate(types.length)(i =>
-          if (tcodes(i) == 0 || tcodes(i) == 2) new NdvSketch else null)
-        // the string hash computed while the bytes sit in the scratch —
-        // the bloom loop reuses it instead of re-materializing the
-        // UTF8String's bytes (allocation-free hot path)
-        private val strHash = new Array[Long](types.length)
-
-        private def flushBuf(): Unit =
-          if (pos > 0) { ch.write(buf, 0, pos); pos = 0 }
-        private def ensure(n: Int): Unit =
-          if (pos + n > buf.length) {
-            flushBuf()
-            if (n > buf.length)
-              buf = new Array[Byte](Integer.highestOneBit(n) << 1)
-          }
-        private def putLong(v: Long): Unit = {
-          ensure(8); val p = pos
-          buf(p) = (v >>> 56).toByte; buf(p + 1) = (v >>> 48).toByte
-          buf(p + 2) = (v >>> 40).toByte; buf(p + 3) = (v >>> 32).toByte
-          buf(p + 4) = (v >>> 24).toByte; buf(p + 5) = (v >>> 16).toByte
-          buf(p + 6) = (v >>> 8).toByte; buf(p + 7) = v.toByte
-          pos = p + 8
-        }
-
-        def writeRow(row: InternalRow): Unit = {
-          val n = tcodes.length
-          var bits = 0L
-          var i = 0
-          while (i < n) {
-            if (row.isNullAt(i)) { bits |= (1L << i); hasNull(i) = true }
-            i += 1
-          }
-          putLong(bits)
-          i = 0
-          while (i < n) {
-            if ((bits & (1L << i)) == 0) (tcodes(i): @annotation.switch) match {
-              case 0 =>
-                val v = row.getLong(i)
-                putLong(v)
-                if (hasVal(i)) {
-                  if (v < lo(i)) lo(i) = v
-                  if (v > hi(i)) hi(i) = v
-                } else { hasVal(i) = true; lo(i) = v; hi(i) = v }
-                if (!sumBad(i)) {
-                  val s0 = sum(i); val s1 = s0 + v
-                  if (((s0 ^ s1) & (v ^ s1)) < 0) sumBad(i) = true
-                  else sum(i) = s1
-                }
-                ndvs(i).add(bloomMixLong(v))
-              case 1 => // doubleToLongBits (not Raw): canonical NaN, the
-                // exact bytes DataOutputStream.writeDouble produced
-                putLong(java.lang.Double.doubleToLongBits(row.getDouble(i)))
-              case 2 =>
-                // a UTF8String's bytes ARE the encoding — copied once,
-                // straight into the scratch, no String/byte[] detour
-                val u = row.getUTF8String(i)
-                val len = u.numBytes()
-                ensure(4 + len)
-                val p = pos
-                buf(p) = (len >>> 24).toByte; buf(p + 1) = (len >>> 16).toByte
-                buf(p + 2) = (len >>> 8).toByte; buf(p + 3) = len.toByte
-                u.writeToMemory(buf,
-                  org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + p + 4)
-                pos = p + 4 + len
-                val h = bloomMixBytes(buf, len, p + 4)
-                ndvs(i).add(h)
-                strHash(i) = h
-            }
-            i += 1
-          }
-          var bi = 0
-          while (bi < bloomPos.length) {
-            val p = bloomPos(bi)
-            if ((bits & (1L << p)) == 0) {
-              val h = if (tcodes(p) == 0) bloomMixLong(row.getLong(p))
-                else strHash(p)
-              bloomSet(blooms(bi), h)
-            }
-            bi += 1
-          }
-          rows += 1
-        }
-
-        def statsMap: Map[String, (Long, Long)] =
-          types.indices.collect {
-            case i if tcodes(i) == 0 && hasVal(i) =>
-              s"#${ids(i)}" -> (lo(i), hi(i))
-          }.toMap
-        def sumsMap: Map[String, Long] =
-          types.indices.collect {
-            case i if tcodes(i) == 0 && hasVal(i) && !sumBad(i) =>
-              s"#${ids(i)}" -> sum(i)
-          }.toMap
-        def ndvMap: Map[String, Long] =
-          types.indices.collect {
-            case i if ndvs(i) != null && rows > 0 =>
-              s"#${ids(i)}" -> ndvs(i).estimate(rows)
-          }.toMap
-        def closeOut(): Unit =
-          if (!closed) { closed = true; flushBuf(); ch.close() }
-      }
       private val sinks =
-        collection.mutable.LinkedHashMap[Seq[String], Sink]()
+        collection.mutable.LinkedHashMap[Seq[String], CatalogFileWriter]()
       private var nextSuffix = 0
 
       // unpartitioned writes skip the per-row tuple + map lookup; for
       // partitioned writes the last sink is cached (clustered input —
       // the hash-distribution write path — then hits the map ~once per
       // partition change, not once per row)
-      private var soleSink: Sink = null
+      private var soleSink: CatalogFileWriter = null
       private var lastTuple: Seq[String] = null
-      private var lastSink: Sink = null
-      private def sinkFor(row: InternalRow): Sink =
+      private var lastSink: CatalogFileWriter = null
+      private def sinkFor(row: InternalRow): CatalogFileWriter =
         if (spec.isEmpty) {
           if (soleSink == null) {
-            soleSink = new Sink(Seq.empty, "")
+            soleSink = newSink(Seq.empty, "")
             sinks.put(Seq.empty, soleSink)
           }
           soleSink
@@ -4716,7 +4458,7 @@ private case class CatalogWriterFactory(dirPath: String, jobUid: String,
           if (tuple == lastTuple) lastSink
           else {
             val sk = sinks.getOrElseUpdate(tuple, {
-              val s = new Sink(tuple, s"-k$nextSuffix")
+              val s = newSink(tuple, s"-k$nextSuffix")
               nextSuffix += 1
               s
             })
@@ -4741,31 +4483,14 @@ private case class CatalogWriterFactory(dirPath: String, jobUid: String,
         sinkFor(row).writeRow(row)
       }
       override def commit(): WriterCommitMessage = {
-        val entries = sinks.values.toSeq.map { sk =>
-          sk.closeOut()
-          val nullFree = types.indices.collect {
-            case i if !sk.hasNull(i) => s"#${ids(i)}"
-          }.toSet
-          if (bloomPos.nonEmpty && sk.rows > 0)
-            writeBloomSidecar(
-              new File(new File(dirPath, "data"), sk.name + ".bloom"),
-              bloomPos.toSeq.zipWithIndex.map { case (p, bi) =>
-                (ids(p), bloomSized(sk.blooms(bi), sk.rows))
-              })
-          Entry(sk.name, sk.rows, sk.file.length(), types.length,
-            sk.statsMap, Some(nullFree), ids.toSeq, typeCodes,
-            sk.tuple, Seq.empty, 0L, specId, sk.sumsMap,
-            if (sk.rows > 0) bloomPos.toSeq.map(ids(_)) else Seq.empty,
-            sk.ndvMap)
-        }
+        val entries = sinks.values.toSeq.map(_.finish(0L, specId))
         val eqKeys = upsert.filter(_ => !upsertKeys.isEmpty)
           .map { case (_, isStr) =>
             import scala.jdk.CollectionConverters._
             val name = s"eq-$stem.keys"
             // SORTED run (EqKeys layout): readers binary-search it
             // memory-mapped instead of materializing a heap set
-            val n = EqKeys.write(
-              new File(new File(dirPath, "data"), name),
+            val n = EqKeys.write(new File(dataDir, name),
               upsertKeys.asScala, isStr)
             (name, n)
           }
@@ -4774,12 +4499,173 @@ private case class CatalogWriterFactory(dirPath: String, jobUid: String,
       override def abort(): Unit = {
         sinks.values.foreach { sk =>
           sk.closeOut()
-          deleteDataAndSidecar(sk.file.getParentFile, sk.name)
+          deleteDataAndSidecar(dataDir, sk.name)
         }
         ()
       }
       override def close(): Unit = sinks.values.foreach(_.closeOut())
     }
+}
+
+/** The one data-file encoder, used by the task writers
+  * ([[CatalogWriterFactory]]) and the driver-side rewrites
+  * ([[GraftTableCatalog.writeLocalFile]]) alike. Each row is a null
+  * bitmap long, then every non-null value: LONG and DOUBLE as 8
+  * big-endian bytes, STRING as an int length and its UTF-8 bytes;
+  * [[CatalogColumnarReader]] is the one decoder. Rows encode straight
+  * from `InternalRow` accessors into a growable byte scratch (flushed in
+  * 64 KiB chunks), with per-column stats in PRIMITIVE arrays — no boxed
+  * values, no DataOutputStream, no per-row string-keyed map updates. */
+private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
+    tuple: Seq[String], types: Array[DataType], ids: Array[Int],
+    bloomPos: Array[Int]) {
+  import GraftTableCatalog._
+  val name = s"$stem.bin"
+  private val file = new File(dataDir, name)
+  // 0=LONG 1=DOUBLE 2=STRING — an int switch beats a DataType match
+  // in the per-value hot loop
+  private val tcodes: Array[Int] = types.map {
+    case LongType => 0
+    case DoubleType => 1
+    case StringType => 2
+    case t => sys.error(s"unsupported $t")
+  }
+  private val ch = new FileOutputStream(file)
+  private var buf = new Array[Byte](1 << 16)
+  private var pos = 0
+  private var closed = false
+  private var rows = 0L
+  private val hasNull = new Array[Boolean](types.length)
+  private val hasVal = new Array[Boolean](types.length)
+  private val lo = new Array[Long](types.length)
+  private val hi = new Array[Long](types.length)
+  // exact per-column sums over non-null LONG values; a column that
+  // overflows Long drops out (SUM pushdown then declines)
+  private val sum = new Array[Long](types.length)
+  private val sumBad = new Array[Boolean](types.length)
+  private val blooms: Array[Array[Long]] =
+    Array.fill(bloomPos.length)(new Array[Long](BloomWords))
+  // per-column distinct sketches (LONG + STRING), 2 KiB each —
+  // one mix + one OR per non-null value on the hot path
+  private val ndvs: Array[NdvSketch] = Array.tabulate(types.length)(i =>
+    if (tcodes(i) == 0 || tcodes(i) == 2) new NdvSketch else null)
+  // the string hash computed while the bytes sit in the scratch —
+  // the bloom loop reuses it instead of re-materializing the
+  // UTF8String's bytes (allocation-free hot path)
+  private val strHash = new Array[Long](types.length)
+
+  private def flushBuf(): Unit =
+    if (pos > 0) { ch.write(buf, 0, pos); pos = 0 }
+  private def ensure(n: Int): Unit =
+    if (pos + n > buf.length) {
+      flushBuf()
+      if (n > buf.length)
+        buf = new Array[Byte](Integer.highestOneBit(n) << 1)
+    }
+  private def putLong(v: Long): Unit = {
+    ensure(8); val p = pos
+    buf(p) = (v >>> 56).toByte; buf(p + 1) = (v >>> 48).toByte
+    buf(p + 2) = (v >>> 40).toByte; buf(p + 3) = (v >>> 32).toByte
+    buf(p + 4) = (v >>> 24).toByte; buf(p + 5) = (v >>> 16).toByte
+    buf(p + 6) = (v >>> 8).toByte; buf(p + 7) = v.toByte
+    pos = p + 8
+  }
+
+  def writeRow(row: InternalRow): Unit = {
+    val n = tcodes.length
+    var bits = 0L
+    var i = 0
+    while (i < n) {
+      if (row.isNullAt(i)) { bits |= (1L << i); hasNull(i) = true }
+      i += 1
+    }
+    putLong(bits)
+    i = 0
+    while (i < n) {
+      if ((bits & (1L << i)) == 0) (tcodes(i): @annotation.switch) match {
+        case 0 =>
+          val v = row.getLong(i)
+          putLong(v)
+          if (hasVal(i)) {
+            if (v < lo(i)) lo(i) = v
+            if (v > hi(i)) hi(i) = v
+          } else { hasVal(i) = true; lo(i) = v; hi(i) = v }
+          if (!sumBad(i)) {
+            val s0 = sum(i); val s1 = s0 + v
+            if (((s0 ^ s1) & (v ^ s1)) < 0) sumBad(i) = true
+            else sum(i) = s1
+          }
+          ndvs(i).add(bloomMixLong(v))
+        case 1 => // doubleToLongBits (not Raw): canonical NaN, the
+          // exact bytes DataOutputStream.writeDouble produced
+          putLong(java.lang.Double.doubleToLongBits(row.getDouble(i)))
+        case 2 =>
+          // a UTF8String's bytes ARE the encoding — copied once,
+          // straight into the scratch, no String/byte[] detour
+          val u = row.getUTF8String(i)
+          val len = u.numBytes()
+          ensure(4 + len)
+          val p = pos
+          buf(p) = (len >>> 24).toByte; buf(p + 1) = (len >>> 16).toByte
+          buf(p + 2) = (len >>> 8).toByte; buf(p + 3) = len.toByte
+          u.writeToMemory(buf,
+            org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + p + 4)
+          pos = p + 4 + len
+          val h = bloomMixBytes(buf, len, p + 4)
+          ndvs(i).add(h)
+          strHash(i) = h
+      }
+      i += 1
+    }
+    var bi = 0
+    while (bi < bloomPos.length) {
+      val p = bloomPos(bi)
+      if ((bits & (1L << p)) == 0) {
+        val h = if (tcodes(p) == 0) bloomMixLong(row.getLong(p))
+          else strHash(p)
+        bloomSet(blooms(bi), h)
+      }
+      bi += 1
+    }
+    rows += 1
+  }
+
+  private def statsMap: Map[String, (Long, Long)] =
+    types.indices.collect {
+      case i if tcodes(i) == 0 && hasVal(i) =>
+        s"#${ids(i)}" -> (lo(i), hi(i))
+    }.toMap
+  private def sumsMap: Map[String, Long] =
+    types.indices.collect {
+      case i if tcodes(i) == 0 && hasVal(i) && !sumBad(i) =>
+        s"#${ids(i)}" -> sum(i)
+    }.toMap
+  private def ndvMap: Map[String, Long] =
+    types.indices.collect {
+      case i if ndvs(i) != null && rows > 0 =>
+        s"#${ids(i)}" -> ndvs(i).estimate(rows)
+    }.toMap
+  def closeOut(): Unit =
+    if (!closed) { closed = true; flushBuf(); ch.close() }
+
+  /** Close the file, write its bloom sidecar, and describe it as a
+    * manifest entry: stats key by field id, and null presence is kept so
+    * pruning and metadata DELETE keep their proofs. */
+  def finish(seq: Long, specId: Int): Entry = {
+    closeOut()
+    val nullFree = types.indices.collect {
+      case i if !hasNull(i) => s"#${ids(i)}"
+    }.toSet
+    if (bloomPos.nonEmpty && rows > 0)
+      writeBloomSidecar(new File(dataDir, name + ".bloom"),
+        bloomPos.toSeq.zipWithIndex.map { case (p, bi) =>
+          (ids(p), bloomSized(blooms(bi), rows))
+        })
+    Entry(name, rows, file.length(), types.length, statsMap,
+      Some(nullFree), ids.toSeq, types.map(Codec.typeCode).mkString,
+      tuple, Seq.empty, seq, specId, sumsMap,
+      if (rows > 0) bloomPos.toSeq.map(ids(_)) else Seq.empty, ndvMap)
+  }
 }
 
 /** The group-based row-level operation (UPDATE / MERGE / DELETE

@@ -24,6 +24,43 @@ class CatalogSpec extends SparkSpec {
   private def catFile(rel: String): File =
     new File(spark.conf.get("spark.sql.catalog.graft_cat.root"), rel)
 
+  /** An independent decoder of one data file, skipping the positions its
+    * delete files name: (file, position, value of field `id`) for every
+    * row left. Each row is a null-bitmap long, then each non-null value:
+    * LONG and DOUBLE as 8 big-endian bytes, STRING as an int length and
+    * UTF-8 bytes. The catalog itself decodes only through its columnar
+    * reader, so this pins that reader and the writers against a second
+    * reading of the bytes. */
+  private def referenceDecode(dir: File, e: GraftTableCatalog.Entry,
+      id: Int): Seq[(String, Long, Any)] = {
+    val data = new File(dir, "data")
+    e.typeCodes.length shouldBe e.cols
+    val deleted = e.deletes.flatMap { d =>
+      val b = java.nio.ByteBuffer.wrap(
+        java.nio.file.Files.readAllBytes(new File(data, d.name).toPath))
+      Seq.fill(b.remaining / 8)(b.getLong())
+    }.toSet
+    val at = e.fieldIds.indexOf(id)
+    val buf = java.nio.ByteBuffer.wrap(
+      java.nio.file.Files.readAllBytes(new File(data, e.name).toPath))
+    val out = (0L until e.rows).flatMap { pos =>
+      val bits = buf.getLong()
+      val row = e.typeCodes.indices.map { i =>
+        if ((bits & (1L << i)) != 0) null
+        else e.typeCodes(i) match {
+          case 'L' => buf.getLong()
+          case 'D' => buf.getDouble()
+          case 'S' =>
+            val b = new Array[Byte](buf.getInt()); buf.get(b)
+            new String(b, java.nio.charset.StandardCharsets.UTF_8)
+        }
+      }
+      if (deleted(pos)) None else Some((e.name, pos, row(at)))
+    }
+    buf.remaining shouldBe 0 // every byte of the file was one of its rows
+    out
+  }
+
   private def freshTable(name: String, ddlCols: String,
                          props: String = ""): String = {
     sql(s"CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
@@ -218,10 +255,18 @@ class CatalogSpec extends SparkSpec {
         .writeTo("graft_cat.db.atomic").append()
     }
     rows(s"SELECT * FROM $t") shouldBe before
-    // two writers committing over the same base version: the second
-    // manifest create must throw (fail-if-exists), never overwrite
+    // the declared table schema: Spark's analyzer rejects a frame whose
+    // v is a STRING before any task runs, and the head does not move
     val dir = catFile("db/atomic")
     val latest = GraftTableCatalog.readLatest(dir)
+    val wrong = spark.range(0, 5).select(col("id").as("k"),
+      col("id").cast("string").as("v"))
+    intercept[Exception](wrong.writeTo(t).append())
+      .getMessage should include("INCOMPATIBLE_DATA_FOR_TABLE")
+    GraftTableCatalog.readLatest(dir) shouldBe latest
+    rows(s"SELECT * FROM $t") shouldBe before
+    // two writers committing over the same base version: the second
+    // manifest create must throw (fail-if-exists), never overwrite
     GraftTableCatalog.commitVersion(dir, latest, "append", Seq.empty)
     intercept[Exception] {
       GraftTableCatalog.commitVersion(dir, latest, "append", Seq.empty)
@@ -1205,21 +1250,27 @@ class CatalogSpec extends SparkSpec {
         .collect().toSeq.map(_.toSeq)
     rows(s"SELECT k, x, s, pad FROM $t WHERE k >= 49995 ORDER BY k") shouldBe
       ref.where("k >= 49995").orderBy("k").collect().toSeq.map(_.toSeq)
-    // metadata columns against the head manifest's files decoded directly
+    // metadata columns against the head manifest's files decoded by the
+    // independent reference: first the task-written files with their
+    // MOR position deletes, then the driver-written file sys.compact
+    // packs them into
     val dir = catFile("db/colnar")
     val schema = GraftTableCatalog.readSchema(dir)
-    val mp = GraftTableCatalog.readMapping(dir, schema)
-    val head = GraftTableCatalog.readManifest(dir,
-      GraftTableCatalog.readLatest(dir))
-    head.files.exists(_.deletes.nonEmpty) shouldBe true
-    val decoded = head.files.flatMap { e =>
-      GraftTableCatalog.readAligned(dir, e, schema, mp).map { case (pos, row) =>
-        (e.name, pos, row(0).asInstanceOf[Long]) }
+    val kId = GraftTableCatalog.readMapping(dir, schema).ids(schema.fieldIndex("k"))
+    def head() = GraftTableCatalog.readManifest(dir,
+      GraftTableCatalog.readLatest(dir)).files
+    def metaMatchesReference(): Unit = {
+      val decoded = head().flatMap(referenceDecode(dir, _, kId))
+      decoded.length shouldBe 50001 - 5 + 1
+      sql(s"SELECT _file, _pos, k FROM $t").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet shouldBe
+        decoded.toSet
     }
-    decoded.length shouldBe 50001 - 5 + 1
-    sql(s"SELECT _file, _pos, k FROM $t").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet shouldBe
-      decoded.toSet
+    head().exists(_.deletes.nonEmpty) shouldBe true
+    metaMatchesReference()
+    sql(s"CALL graft_cat.sys.compact('db', 'colnar', ${64L * 1024 * 1024})")
+    head().map(_.name) should matchPattern { case Seq(n: String) if n.startsWith("cp-") => }
+    metaMatchesReference()
     // MOR + upsert twin: position deletes and equality deletes both apply
     sql("DROP TABLE IF EXISTS graft_cat.db.colnar_ups")
     sql("""CREATE TABLE graft_cat.db.colnar_ups (k BIGINT, v STRING)

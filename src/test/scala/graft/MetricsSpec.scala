@@ -212,6 +212,50 @@ class MetricsSpec extends SparkSpec {
     sites shouldBe Nil
   }
 
+  /** (file name, line, match) for every `pattern` match in the `.scala`
+    * files under `root`, comments stripped (their newlines kept, so a
+    * site reports its own line). */
+  private def codeSites(root: String, pattern: scala.util.matching.Regex)
+      : List[(String, Int, String)] = {
+    import scala.jdk.CollectionConverters._
+    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .toList.sortBy(_.toString).flatMap { f =>
+        val text = comments.replaceAllIn(
+          new String(java.nio.file.Files.readAllBytes(f), "UTF-8"),
+          m => m.matched.filter(_ == '\n'))
+        pattern.findAllMatchIn(text).map(m => (f.getFileName.toString,
+          text.substring(0, m.start).count(_ == '\n') + 1, m.matched))
+      }
+    finally files.close()
+  }
+
+  test("one table format: src/main/scala/graft/sources mints data-file names in one writer and registers only graft-series") {
+    // graft_cat is the one transactional table format and
+    // CatalogFileWriter its one data-file encoder, so a second sink or a
+    // second writer minting `.bin` files fails here.
+    val bins = codeSites("src/main/scala/graft/sources", """\.bin"""".r)
+      .map { case (f, line, _) => s"$f:$line" }
+    val registered = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/resources/META-INF/services/" +
+        "org.apache.spark.sql.sources.DataSourceRegister")), "UTF-8")
+      .split("\n").map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
+    withClue(s".bin sites: ${bins.mkString(", ")}; registered: ${registered.mkString(", ")}: ") {
+      (bins.length, registered) shouldBe ((1, Seq("graft.sources.SeriesSource")))
+    }
+  }
+
+  test("one work root: src/main names no cwd-relative work/ path besides Bench's documented output default") {
+    // Engine state lives under the configured work root
+    // (GraftSession.WorkRoot); a path relative to the process cwd would
+    // land wherever the JVM was launched. SPARK_GRAFT_BENCH_OUT's default
+    // is the one documented exception.
+    codeSites("src/main/scala", """s?"work/[^"]*"""".r)
+      .map { case (f, _, m) => (f, m) } shouldBe
+      Seq("Bench.scala" -> "\"work/bench_last.json\"")
+  }
+
   test("declared schemas: src/main has no schema-less parquet read outside the allow-list") {
     // A parquet read without `.schema(` runs a footer-reading Spark job at
     // analysis, and a SQL `parquet.`…`` scan infers again on every
