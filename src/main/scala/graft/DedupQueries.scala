@@ -230,18 +230,20 @@ object DedupQueries {
   }
 
   /** q78: the daily operational loop, closed end-to-end — the piece that
-    * ties q72 and q73 together: (day 0) the corpus base and a
-    * LANG-PARTITIONED fingerprint layout (shingle sets + band keys) are
-    * materialized; (day 1) a merge batch upserts into the corpus
-    * ([[graft.operators.Merge.upsertPartitioned]], only lang=en rewritten)
-    * and the fingerprint layouts REFRESH ONLY THAT PARTITION
-    * ([[graft.operators.Merge.replacePartitions]] — recompute en, swap it
-    * in; de/es/fr/zh fingerprint files stay byte-identical,
-    * OperationalSpec); (day 2) the next batch probes the refreshed
-    * fingerprints with the q73 operator. At 100 TB this is the whole point
-    * of partitioned fingerprints: corpus maintenance costs O(affected
-    * partitions) for the data AND for the derived index — nothing
-    * re-fingerprints the other 99%.
+    * ties q72 and q73 together: (day 0) the corpus base (q72's `graft_cat`
+    * table, [[ScaleQueries.corpusTable]]) and a LANG-PARTITIONED
+    * fingerprint layout (shingle sets + band keys) are materialized; (day
+    * 1) a merge batch upserts into the corpus ([[ScaleQueries.mergeCorpus]],
+    * only lang=en rewritten) and the fingerprint layouts REFRESH ONLY THAT
+    * PARTITION — recompute en and write it with Spark's dynamic partition
+    * overwrite (`partitionOverwriteMode=dynamic` as a per-write option), so
+    * de/es/fr/zh fingerprint files stay byte-identical (OperationalSpec);
+    * (day 2) the next batch probes the refreshed fingerprints with the q73
+    * operator. The fingerprint layouts hold `array<bigint>` shingle sets,
+    * which `graft_cat` does not store, so they stay write-once parquet
+    * layouts. At 100 TB this is the whole point of partitioned
+    * fingerprints: corpus maintenance costs O(affected partitions) for the
+    * data AND for the derived index — nothing re-fingerprints the other 99%.
     *
     * The oracle replays the merge relationally (q72's CTEs) and computes
     * all-pairs exact Jaccard of the day-2 batch against the MERGED corpus
@@ -250,9 +252,9 @@ object DedupQueries {
     * show up as matches, which only happens if the refresh really folded
     * the merge into the fingerprints. */
   val q78IncrementalRefresh: Q = (s, d) => {
-    import graft.operators.{Merge, Scale}
+    import graft.operators.Scale
     val tag = ScaleQueries.sfTag(d)
-    val base = ScaleQueries.mergeBaseDir(s, d)
+    val base = ScaleQueries.corpusTable(s, d, "corpus_base", ScaleQueries.CorpusCols)
     val srcFp = Scale.dirFingerprint(s"$d/documents.parquet") +
       s"|k=$INC_K|b=32|r=4|split=$BATCH_MAX_ID"
     def shOf(df: org.apache.spark.sql.DataFrame) =
@@ -263,22 +265,23 @@ object DedupQueries {
         // the write, not the shingling)
         df.filter(col("doc_id") >= BATCH_MAX_ID).repartition(col("doc_id")),
         INC_K, keep = Seq("lang"))
-    // day 0: fingerprint layouts over whatever the base currently holds
-    // (pre-merge on a cold run; the refresh below makes the final state
+    // replace the partitions `df` holds, leave every other one untouched
+    def refresh(lay: Scale.Layout, df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("lang").parquet(lay.dir)
+    // day 0: fingerprint layouts over the pre-merge base (write-once: a
+    // warm run reuses them; the refresh below makes the final state
     // identical either way — the merge only ever changes en)
     val fpSh = Scale.writePartitioned(
-      shOf(base.read(s)), s"graft_corpus_fp_$tag", "lang", srcFp)
+      shOf(s.table(base)), s"graft_corpus_fp_$tag", "lang", srcFp)
     val fpBands = Scale.writePartitioned(
       Dedup.bandKeys(fpSh.read(s), bands = 32, rows = 4, keep = Seq("lang")),
       s"graft_corpus_fpb_$tag", "lang", srcFp)
     // day 1: merge arrives; fingerprints refresh ONLY the affected partition
-    Merge.upsertPartitioned(s, base, "lang", "doc_id",
-      ScaleQueries.mergeBatch(Tables.documents(s, d)))
-    Merge.replacePartitions(fpSh.dir, "lang", Seq("en"),
-      shOf(base.read(s).filter(col("lang") === "en")))
-    Merge.replacePartitions(fpBands.dir, "lang", Seq("en"),
-      Dedup.bandKeys(fpSh.read(s).filter(col("lang") === "en"),
-        bands = 32, rows = 4, keep = Seq("lang")))
+    ScaleQueries.mergeCorpus(s, d, base, ScaleQueries.CorpusCols)
+    refresh(fpSh, shOf(s.table(base).filter(col("lang") === "en")))
+    refresh(fpBands, Dedup.bandKeys(fpSh.read(s).filter(col("lang") === "en"),
+      bands = 32, rows = 4, keep = Seq("lang")))
     // day 2: the next batch probes the refreshed fingerprints (q73's operator)
     Dedup.incrementalNearDupPairs(
       fpBands.read(s), fpSh.read(s),

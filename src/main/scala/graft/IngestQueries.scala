@@ -452,7 +452,7 @@ object IngestQueries {
        |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
        |FROM ${graft.Tables.view(s, d, "events")} WHERE value IS NOT NULL""".stripMargin
 
-  private def catTable(s: org.apache.spark.sql.SparkSession, d: String,
+  private[graft] def catTable(s: org.apache.spark.sql.SparkSession, d: String,
       stem: String): String = {
     val t = s"graft_cat.db.${stem}_${ScaleQueries.sfTag(d)}"
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
@@ -463,7 +463,7 @@ object IngestQueries {
   /** `<graft_cat root>/db/<stem>`: a catalog table's directory, resolved
     * from the session's catalog root, so a manifest read sees what the
     * catalog wrote wherever the process was launched from. */
-  private def catDir(s: org.apache.spark.sql.SparkSession,
+  private[graft] def catDir(s: org.apache.spark.sql.SparkSession,
       stem: String): java.io.File =
     new java.io.File(s.conf.get("spark.sql.catalog.graft_cat.root"), s"db/$stem")
 

@@ -209,7 +209,7 @@ object Queries {
     * constraint with exact violation counts and an integer-arithmetic
     * verdict (the 5% budget is `violations·20 ≤ total`, never a float
     * ratio). This is the audit LIST a promotion gate consumes — feed these
-    * predicates to q115's writeAuditPublish and bad data cannot publish.
+    * predicates to q115's auditPublish and bad data cannot publish.
     *
     * Scale shape: every constraint is a scan-shaped aggregate that
     * collapses map-side; the RI check joins fact→dim on the key (broadcast

@@ -728,7 +728,6 @@ object RetrievalQueries {
   private val NEG_K = 1000L
 
   val q187NegativeSampling: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     def isqrt(x: Column) = floor(sqrt(x.cast(DoubleType))).cast(LongType)
     val wt = Tables.documents(s, d)
       .select(explode(split(trim(col("text")), "\\s+")).as("word"))

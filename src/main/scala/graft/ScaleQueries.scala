@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{Merge, Scale}
+import graft.operators.Scale
 
 /** Scale-pattern queries: q28 salted aggregation over the (5-value, i.e.
   * maximally skewed) event_type key; q29 bucketed co-located fact join.
@@ -93,16 +93,19 @@ object ScaleQueries {
   /** q72: MERGE-style corpus upsert — the incremental form of the
     * reference's drop-and-rebuild refresh (`etl.py:22-29`; the users dim's
     * full `INSERT … SELECT DISTINCT` reload, `sql_queries.py:155-159`, is
-    * the SCD1 shape this replaces). The documents corpus lives as a
-    * lang-partitioned write-once layout; a deterministic daily batch
-    * (updates: en docs with doc_id % 7 = 3 get re-crawled text; inserts:
-    * en docs with doc_id % 11 = 5 spawn new ids) merges in via
-    * [[Merge.upsertPartitioned]] — update-on-match by doc_id,
-    * insert-on-miss, ONLY the lang=en partition rewritten; de/es/fr/zh
-    * files stay byte-identical (OperationalSpec). The merge is idempotent
-    * (the batch is a pure function of the SOURCE table), so re-running it
-    * over an already-merged base reproduces the same corpus — which is
-    * also what the oracle replays relationally. */
+    * the SCD1 shape this replaces). The documents corpus is CTASed into the
+    * `graft_cat` table `db.corpus_base_<sf>` `PARTITIONED BY (lang)`
+    * ([[corpusTable]]); a deterministic daily batch (updates: en docs with
+    * doc_id % 7 = 3 get re-crawled text; inserts: en docs with
+    * doc_id % 11 = 5 spawn new ids) lands by one `MERGE INTO`
+    * ([[mergeCorpus]]) — update-on-match, insert-on-miss, one new table
+    * version. `lang` joins the `ON` clause because an update never moves a
+    * key across partitions (SCD1 on non-partition attributes), so the
+    * runtime filter on `lang` leaves only the en files in the merge's scan:
+    * the de/es/fr/zh data files stay referenced by name, unrewritten
+    * (OperationalSpec), and PlanSpec pins the files the merge opens below
+    * the table's file count. The batch is a pure function of the SOURCE
+    * table, which is also what the oracle replays relationally. */
   private[graft] def mergeBatch(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val en = docs.filter(col("lang") === "en")
     val upd = en.filter(pmod(col("doc_id"), lit(7)) === 3)
@@ -118,50 +121,72 @@ object ScaleQueries {
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
   }
 
-  private[graft] def mergeBaseDir(s: org.apache.spark.sql.SparkSession, d: String): Scale.Layout =
-    Scale.writePartitioned(
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("text"), col("lang")),
-      s"graft_corpus_base_${sfTag(d)}", "lang",
-      Scale.dirFingerprint(s"$d/documents.parquet"))
+  /** The corpus columns q72 and q78 keep in `graft_cat`. */
+  private[graft] val CorpusCols = Seq("doc_id", "source", "n_chars", "text", "lang")
+
+  /** A fresh `graft_cat` copy of the documents corpus, `PARTITIONED BY
+    * (lang)`: drop, then CTAS of `cols` (which must include `lang`), so
+    * every run starts from the raw corpus the way the q27x catalog
+    * queries do. Returns the table name. */
+  private[graft] def corpusTable(s: org.apache.spark.sql.SparkSession, d: String,
+      stem: String, cols: Seq[String]): String = {
+    val t = IngestQueries.catTable(s, d, stem)
+    s.sql(s"""CREATE TABLE $t PARTITIONED BY (lang) AS
+             |SELECT ${cols.mkString(", ")}
+             |FROM ${Tables.view(s, d, "documents")}""".stripMargin)
+    t
+  }
+
+  /** Apply [[mergeBatch]], projected to `cols`, to the corpus table `t`
+    * as one `MERGE INTO` keyed on (doc_id, lang). */
+  private[graft] def mergeCorpus(s: org.apache.spark.sql.SparkSession, d: String,
+      t: String, cols: Seq[String]): Unit = {
+    val b = s"graft_merge_batch_${sfTag(d)}"
+    mergeBatch(Tables.documents(s, d)).select(cols.map(col): _*)
+      .createOrReplaceTempView(b)
+    s.sql(s"""MERGE INTO $t t USING $b b
+             |ON t.doc_id = b.doc_id AND t.lang = b.lang
+             |WHEN MATCHED THEN UPDATE SET *
+             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+  }
 
   val q72MergeUpsert: Q = (s, d) => {
-    val base = mergeBaseDir(s, d)
-    Merge.upsertPartitioned(s, base, "lang", "doc_id",
-      mergeBatch(Tables.documents(s, d)))
-    base.read(s)
+    val t = corpusTable(s, d, "corpus_base", CorpusCols)
+    mergeCorpus(s, d, t, CorpusCols)
+    s.table(t)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
   }
 
-  /** q120: snapshot time travel — [[graft.operators.Scale.publishRetained]]
-    * publishes the documents corpus twice (v1 = the raw snapshot, v2 = the
-    * q72 merge applied relationally), retention keep=2, then reads BOTH
-    * versions back FROM THEIR RETAINED DIRECTORIES (0 and 1 steps back in
-    * the version log — never recomputed) and emits the per-lang profile of
-    * each. This is the operational loop q115's single pointer cannot do:
-    * yesterday's corpus stays queryable next to today's (as-of debugging,
-    * incident rollback, version diffs), bounded by retention. The oracle
-    * recomputes both snapshots relationally — the disk round-trip and log
-    * mechanics must be invisible to results. OperationalSpec pins what the
-    * gate cannot see: a publish leaves the retained older version's files
-    * byte-identical, and a third publish prunes past keep. */
+  /** q120: snapshot time travel through `graft_cat`: the documents corpus
+    * is CTASed as v1 (the raw snapshot) and [[mergeCorpus]] commits q72's
+    * batch as v2; both versions are TAGGED (`raw`, `merged`),
+    * `sys.expire_versions` keeps the last 2, and the query reads BOTH back
+    * with `VERSION AS OF '<tag>'` (0 and 1 versions ago — never
+    * recomputed), emitting the per-lang profile of each. Yesterday's
+    * corpus stays queryable next to today's (as-of debugging, incident
+    * rollback, version diffs), bounded by retention, and a tag outlives
+    * retention. The oracle recomputes both snapshots relationally — the
+    * version mechanics must be invisible to results. OperationalSpec pins
+    * that an expiry down to one version keeps both tags readable. */
   val q120TimeTravel: Q = (s, d) => {
-    val table = s"graft_docs_tt_${sfTag(d)}"
-    val fp = Scale.dirFingerprint(s"$d/documents.parquet")
-    val cols = Seq(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    val base = Tables.documents(s, d).select(cols: _*)
-    val batch = mergeBatch(Tables.documents(s, d)).select(cols: _*)
-    val merged = base.join(batch.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .unionByName(batch)
-    Scale.publishRetained(base, table, s"v1|$fp", keep = 2)
-    Scale.publishRetained(merged, table, s"v2|$fp", keep = 2)
-    def profile(ago: Int) = Scale.readVersionAgo(s, table, ago)
-      .groupBy(col("lang")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("total_chars"))
-      .select(lit(ago).as("versions_ago"), col("lang"),
-        col("n_docs"), col("total_chars"))
-    profile(0).unionByName(profile(1))
+    val cols = Seq("doc_id", "lang", "source", "n_chars")
+    val t = corpusTable(s, d, "docs_tt", cols)
+    val stem = t.split('.').last
+    val dir = IngestQueries.catDir(s, stem)
+    def tag(name: String): Unit = s.sql(s"CALL graft_cat.sys.tag('db', " +
+      s"'$stem', '$name', ${graft.sources.GraftTableCatalog.readLatest(dir)})")
+    tag("raw")
+    mergeCorpus(s, d, t, cols)
+    tag("merged")
+    s.sql(s"CALL graft_cat.sys.expire_versions('db', '$stem', 2)")
+    def profile(ago: Int, name: String) =
+      s.sql(s"SELECT * FROM $t VERSION AS OF '$name'")
+        .groupBy(col("lang")).agg(
+          count(lit(1)).as("n_docs"),
+          sum(col("n_chars")).as("total_chars"))
+        .select(lit(ago).as("versions_ago"), col("lang"),
+          col("n_docs"), col("total_chars"))
+    profile(0, "merged").unionByName(profile(1, "raw"))
   }
 
   /** The write-once layout tables OWNED by each catalog query (base names;
@@ -174,7 +199,6 @@ object ScaleQueries {
     "q29_bucketed_join"     -> Seq("graft_lineitem_b", "graft_orders_b"),
     "q51_partition_pruning" -> Seq("graft_docs_part"),
     "q126_layout_audit"     -> Seq("graft_docs_part"),
-    "q127_forget_delete"    -> Seq("graft_docs_del"),
     "q128_zone_map"         -> Seq("graft_events_zm", "graft_events_zmidx"),
     "q169_bloom_skipping"   -> Seq("graft_docs_bl", "graft_docs_blidx"),
     "q132_checkpoint_resume" -> Seq("graft_kmeans_ckpt"),
@@ -187,15 +211,11 @@ object ScaleQueries {
     "q57_zorder_layout"     -> Seq("graft_events_z"),
     "q205_hilbert_layout"   -> Seq("graft_events_h"),
     "q217_incremental_sessions" -> Seq("graft_sessions_state"),
-    "q72_merge_upsert"      -> Seq("graft_corpus_base"),
     "q73_incremental_dedup" -> Seq("graft_corpus_sh", "graft_corpus_bands"),
-    "q78_incremental_refresh" ->
-      Seq("graft_corpus_base", "graft_corpus_fp", "graft_corpus_fpb"),
+    "q78_incremental_refresh" -> Seq("graft_corpus_fp", "graft_corpus_fpb"),
     "q103_incremental_agg"  -> Seq("graft_lang_state"),
     "q153_ivm_join"         -> Seq("graft_ivm_state"),
-    "q173_grain_cascade"    -> Seq("graft_daily_state"),
-    "q115_wap_publish"      -> Seq("graft_docs_wap"),
-    "q120_time_travel"      -> Seq("graft_docs_tt"))
+    "q173_grain_cascade"    -> Seq("graft_daily_state"))
 
   /** Drop the given sf-tagged write-once layouts (catalog entries + files)
     * so the next run measures the build, not a warm reuse. */
@@ -270,28 +290,19 @@ object ScaleQueries {
   }
 
   /** q127: targeted forget-delete — the GDPR/right-to-be-forgotten (and
-    * takedown/retention-purge) capability: [[graft.operators.Merge
-    * .deletePartitioned]] removes a deterministic target set (de docs with
-    * doc_id ≡ 2 mod 5) from its OWN lang-partitioned corpus copy and the
-    * query returns the post-delete corpus. Targets carry their partition
-    * value, so the locate phase prunes at planning time; only lang=de
-    * rewrites; a re-run finds no targets and touches NOTHING (strongest
-    * idempotence — OperationalSpec pins untouched-partition byte-identity,
-    * the no-op re-delete, and the drop of a fully-emptied partition). The
-    * oracle is the source minus the target predicate — the delete
-    * machinery must be invisible to surviving rows. */
+    * takedown/retention-purge) capability: a `DELETE FROM` over the
+    * corpus's own lang-partitioned `graft_cat` copy ([[corpusTable]])
+    * removes a deterministic target set (de docs with doc_id ≡ 2 mod 5)
+    * and the query returns the post-delete corpus. The `lang = 'de'`
+    * conjunct prunes the rewrite to de's files; a re-run finds no targets
+    * and writes no data file; a delete covering a whole partition is
+    * metadata-only (OperationalSpec pins all three). The oracle is the
+    * source minus the target predicate — the delete machinery must be
+    * invisible to surviving rows. */
   val q127ForgetDelete: Q = (s, d) => {
-    val lay = Scale.writePartitioned(
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("lang")),
-      s"graft_docs_del_${sfTag(d)}", "lang",
-      Scale.dirFingerprint(s"$d/documents.parquet"))
-    val targets = Tables.documents(s, d)
-      .filter(col("lang") === "de" && pmod(col("doc_id"), lit(5)) === 2)
-      .select(col("doc_id"), col("lang"))
-    Merge.deletePartitioned(s, lay, "lang", "doc_id", targets)
-    lay.read(s)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+    val t = corpusTable(s, d, "docs_del", Seq("doc_id", "source", "n_chars", "lang"))
+    s.sql(s"DELETE FROM $t WHERE lang = 'de' AND pmod(doc_id, 5) = 2")
+    s.table(t).select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
   }
 
   /** q128: zone-map data skipping — the EXPLICIT file-level form of the
@@ -737,27 +748,55 @@ object ScaleQueries {
           lit(0.0)).as("delta_revenue"))
   }
 
+  /** A WAP publish refused: every failed audit by name, in audit order.
+    * The job fails loudly and main keeps its previous version. */
+  final case class AuditFailure(table: String, failed: Seq[String])
+    extends RuntimeException(
+      s"WAP audit failed for $table: ${failed.mkString(", ")}")
+
+  /** Write-audit-publish through a `graft_cat` branch: `sys.branch` forks
+    * `audit` at main's head, `df` is INSERTed into `t.branch_audit`, and
+    * the audits run against the branch — the staged files readers would
+    * see, not a re-plan of `df`. A full pass publishes the branch as one
+    * main version (`sys.fast_forward`); any failure drops the branch
+    * (reclaiming its files) and throws [[AuditFailure]], so main never
+    * sees the candidate. The branch is dropped either way. */
+  private[graft] def auditPublish(s: org.apache.spark.sql.SparkSession, t: String,
+      df: org.apache.spark.sql.DataFrame,
+      audits: Seq[(String, org.apache.spark.sql.DataFrame => Boolean)]): Unit = {
+    val stem = t.split('.').last
+    val v = s"graft_wap_$stem"
+    s.sql(s"CALL graft_cat.sys.branch('db', '$stem', 'audit')")
+    df.createOrReplaceTempView(v)
+    s.sql(s"INSERT INTO $t.branch_audit SELECT * FROM $v")
+    val staged = s.table(s"$t.branch_audit")
+    val failed = audits.collect { case (name, check) if !check(staged) => name }
+    if (failed.isEmpty)
+      s.sql(s"CALL graft_cat.sys.fast_forward('db', '$stem', 'audit')")
+    s.sql(s"CALL graft_cat.sys.drop_branch('db', '$stem', 'audit')")
+    if (failed.nonEmpty) throw AuditFailure(t, failed)
+  }
+
   /** q115: write-audit-publish promotion of the documents snapshot —
-    * [[graft.operators.Scale.writeAuditPublish]] with the three audits a
-    * fact publish always carries (non-empty, primary key unique, primary
-    * key non-null), read back through the published pointer. The oracle
-    * is the identity (q55's rule: promotion machinery must be invisible
-    * to results); what makes the operator REAL is OperationalSpec — a
-    * deliberately failing audit must refuse to move the pointer and
-    * leave the previous version current. */
+    * [[auditPublish]] into a fresh `graft_cat` table with the three audits
+    * a fact publish always carries (non-empty, primary key unique, primary
+    * key non-null), read back from main. The oracle is the identity (q55's
+    * rule: promotion machinery must be invisible to results); what makes
+    * the protocol REAL is OperationalSpec — a deliberately failing audit
+    * must leave main's version and rows unchanged and no branch behind. */
   val q115WapPublish: Q = (s, d) => {
-    Scale.writeAuditPublish(
+    val t = IngestQueries.catTable(s, d, "docs_wap")
+    s.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)")
+    auditPublish(s, t,
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars")),
-      s"graft_docs_wap_${sfTag(d)}",
-      Scale.dirFingerprint(s"$d/documents.parquet"),
       Seq(
         "non_empty" -> (df => df.count() > 0),
         "pk_unique" -> (df =>
           df.select(col("doc_id")).distinct().count() == df.count()),
         "pk_not_null" -> (df =>
           df.filter(col("doc_id").isNull).count() == 0)))
-      .read(s)
+    s.table(t)
   }
 
   /** q239: STATS-DRIVEN BROADCAST DECISION — the cost-based-optimizer

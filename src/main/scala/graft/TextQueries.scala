@@ -407,7 +407,6 @@ object TextQueries {
   private val COVERAGE_PCTS = Seq(90, 95, 99)
 
   val q114VocabCoverage: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, d)
     // The two-stage scan only engages on cluster-scale inputs (wideScan);
     // then the vocabulary feeds three consumers (total, the scan's local

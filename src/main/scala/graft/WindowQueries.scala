@@ -168,7 +168,6 @@ object WindowQueries {
   val q61GapFill: Q = (s, d) => gapFill(Tables.events(s, d))
 
   private[graft] def gapFill(events: org.apache.spark.sql.DataFrame) = {
-    val s = events.sparkSession
     val counts = events
       .select(date_trunc("hour", col("ts")).as("h"), col("event_type"))
       .groupBy(col("h"), col("event_type")).agg(count(lit(1)).as("cnt"))

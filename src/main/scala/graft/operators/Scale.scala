@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Scale patterns that only matter past a single node: skew-salted
   * aggregation and bucketed (co-located) joins.
@@ -15,10 +15,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object Scale {
 
-  /** A directory the engine wrote, with the schema of the frame written
-    * there (partition columns last, the order a read returns them) and its
-    * file format. Every read-back goes through [[read]], so it runs no
-    * schema-inference job: the schema is the writer's, not a footer scan's. */
+  /** A write-once directory the engine wrote (versioned tables live in
+    * `graft_cat`), with the schema of the frame written there (partition
+    * columns last, the order a read returns them) and its file format.
+    * Every read-back goes through [[read]], so it runs no schema-inference
+    * job: the schema is the writer's, not a footer scan's. */
   final case class Layout(dir: String, schema: StructType, format: String = "parquet") {
     /** The whole layout, or only the named files in it, read with its
       * schema. */
@@ -264,160 +265,6 @@ object Scale {
       java.nio.file.Files.write(specFile, spec.getBytes("UTF-8"))
     }
     Layout(loc.toString, df.schema, format)
-  }
-
-  /** A WAP publish refused: every failed audit by name. The job fails
-    * loudly and the PREVIOUS published version stays current. */
-  final case class AuditFailure(table: String, failed: Seq[String])
-    extends RuntimeException(
-      s"WAP audit failed for $table: ${failed.mkString(", ")}")
-
-  /** Write-Audit-Publish: the lakehouse promotion protocol. The candidate
-    * materializes into an UNPUBLISHED version directory, the audits run
-    * against the STAGED BYTES (what readers would actually see — auditing
-    * the input DataFrame would re-plan and could pass while the files are
-    * wrong), and only a full pass moves the `_graft_current` pointer —
-    * via temp-file + ATOMIC_MOVE, so a concurrent reader resolves
-    * old-version-or-new-version, never a partial write (the snapshot-
-    * pointer mechanics behind Iceberg/Delta commits, reduced to one
-    * pointer file). A failed audit throws [[AuditFailure]], deletes the
-    * candidate, and leaves the previous version published — bad data can
-    * not become visible, which is the entire point.
-    *
-    * Version identity is the write-once spec (schema + caller
-    * fingerprint): an unchanged spec re-publish is a no-op reuse, the
-    * bench-purge discipline applies unchanged. Returns the CURRENT
-    * version's [[Layout]]. */
-  def writeAuditPublish(df: DataFrame, table: String, dataFingerprint: String,
-      audits: Seq[(String, DataFrame => Boolean)]): Layout = {
-    val spark = df.sparkSession
-    val root = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
-    val spec = s"${df.schema.toDDL}|$dataFingerprint"
-    val ver = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      "v_" + md.digest(spec.getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.take(12)
-    }
-    val pointer = root.resolve("_graft_current")
-    val verDir = root.resolve(ver)
-    val current =
-      if (java.nio.file.Files.exists(pointer))
-        new String(java.nio.file.Files.readAllBytes(pointer), "UTF-8")
-      else ""
-    val intact = current == ver &&
-      java.nio.file.Files.exists(verDir.resolve("_SUCCESS"))
-    if (!intact) {
-      val staging = root.resolve(s"${ver}__staging")
-      deleteRecursively(staging)
-      deleteRecursively(verDir)
-      df.write.mode("overwrite").parquet(staging.toString)
-      val staged = Layout(staging.toString, df.schema).read(spark)
-      val failed = audits.collect { case (name, check) if !check(staged) => name }
-      if (failed.nonEmpty) {
-        deleteRecursively(staging) // no unpublished corpse to confuse anyone
-        throw AuditFailure(table, failed)
-      }
-      java.nio.file.Files.move(staging, verDir,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      val tmp = root.resolve("_graft_current__tmp")
-      java.nio.file.Files.write(tmp, ver.getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, pointer,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // previous versions are now unreachable — reclaim them
-      java.nio.file.Files.list(root).forEach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("v_") && n != ver) deleteRecursively(p)
-      }
-    }
-    Layout(verDir.toString, df.schema)
-  }
-
-  /** Versioned publish with RETENTION — [[writeAuditPublish]]'s single
-    * pointer generalized to an ordered version LOG (`_graft_log`, oldest →
-    * newest, rewritten by temp-file + ATOMIC_MOVE), keeping the newest
-    * `keep` versions' directories on disk. This is what turns a snapshot
-    * store into a TIME-TRAVELABLE one: yesterday's corpus stays readable
-    * (as-of reads, version diffs, incident rollback) until retention
-    * prunes it — the Iceberg/Delta snapshot-log + expire-snapshots pair,
-    * reduced to one log file and version directories.
-    *
-    * Version identity is the write-once spec (schema + caller
-    * fingerprint): re-publishing content whose version is already retained
-    * is a no-op reuse — idempotent daily pipelines re-publish their whole
-    * history every run and the log neither grows nor reorders. A NEW
-    * version appends, then directories that fell off the retained tail are
-    * reclaimed. Publishing never touches retained older versions' files
-    * (OperationalSpec pins byte-identity across a publish).
-    *
-    * Each version directory carries its frame's schema as JSON in
-    * `_graft_schema`, so [[readVersionAgo]] reads any retained version with
-    * the schema it was written with; the `schema-file` tag in the spec
-    * keeps versions written without that file from counting as intact. */
-  def publishRetained(df: DataFrame, table: String, dataFingerprint: String,
-      keep: Int): String = {
-    require(keep >= 1, s"publishRetained keep must be >= 1 (got $keep)")
-    val spark = df.sparkSession
-    val root = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
-    java.nio.file.Files.createDirectories(root)
-    val spec = s"${df.schema.toDDL}|schema-file|$dataFingerprint"
-    val ver = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      "v_" + md.digest(spec.getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.take(12)
-    }
-    val verDir = root.resolve(ver)
-    val log0 = readLog(root)
-    val intact = log0.contains(ver) &&
-      java.nio.file.Files.exists(verDir.resolve("_SUCCESS"))
-    if (!intact) {
-      val staging = root.resolve(s"${ver}__staging")
-      deleteRecursively(staging)
-      deleteRecursively(verDir)
-      df.write.mode("overwrite").parquet(staging.toString)
-      java.nio.file.Files.write(staging.resolve(SchemaFile), df.schema.json.getBytes("UTF-8"))
-      java.nio.file.Files.move(staging, verDir,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      val log1 = (log0.filterNot(_ == ver) :+ ver).takeRight(keep)
-      val tmp = root.resolve("_graft_log__tmp")
-      java.nio.file.Files.write(tmp, log1.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, root.resolve("_graft_log"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.list(root).forEach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("v_") && !log1.contains(n)) deleteRecursively(p)
-      }
-    }
-    root.toString
-  }
-
-  private val SchemaFile = "_graft_schema"
-
-  private def readLog(root: java.nio.file.Path): Seq[String] = {
-    val logFile = root.resolve("_graft_log")
-    if (java.nio.file.Files.exists(logFile))
-      new String(java.nio.file.Files.readAllBytes(logFile), "UTF-8")
-        .split("\n").toSeq.filter(_.nonEmpty)
-    else Seq.empty
-  }
-
-  /** Time-travel read: the version `ago` steps back from the newest
-    * retained one (0 = current). Throws if retention has already pruned
-    * that far back — time travel is bounded by `keep`, by design. The
-    * version is read with the schema stored beside its files. */
-  def readVersionAgo(spark: SparkSession, table: String, ago: Int): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
-    val log = readLog(root)
-    require(ago >= 0 && ago < log.size,
-      s"version $ago steps back is not retained (log has ${log.size} versions)")
-    val verDir = root.resolve(log(log.size - 1 - ago))
-    val schema = DataType.fromJson(new String(
-      java.nio.file.Files.readAllBytes(verDir.resolve(SchemaFile)), "UTF-8"))
-    Layout(verDir.toString, schema.asInstanceOf[StructType]).read(spark)
   }
 
   /** Z-order (Morton) interleave of two non-negative int columns, `bits`

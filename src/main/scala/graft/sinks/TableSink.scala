@@ -1,7 +1,6 @@
 package graft.sinks
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col

@@ -3626,12 +3626,16 @@ private class CatalogScan(dir: File, tableSchema: StructType,
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     // EVERY spec generation's source columns accept runtime filters: a
-    // DPP key on an OLD generation's column still prunes its files
+    // DPP key on an OLD generation's column still prunes its files. Only
+    // columns the pruned read schema kept are reported: Spark resolves
+    // each against the scan's output, so a pruned-away partition column
+    // would fail planning of any join keyed on other columns.
     specs.flatten.distinct.flatMap { p =>
       val i = mp.ids.indexOf(p.id)
       if (i < 0) None
-      else Some(Expressions.column(tableSchema.fields(i).name))
-    }.distinct.toArray
+      else Some(tableSchema.fields(i).name)
+    }.distinct.filter(required.fieldNames.contains)
+      .map(Expressions.column).toArray
   override def filter(filters: Array[Filter]): Unit =
     if (filters.nonEmpty)
       runtimeKept = Some(files.filter { e =>

@@ -1031,6 +1031,35 @@ class CatalogSpec extends SparkSpec {
     GraftTableCatalog.filesOpened.get() shouldBe nKeys * 4L
   }
 
+  test("runtime filter columns: joins, IN-subqueries, DELETE and MERGE keyed on a non-partition column of a partitioned table plan and answer") {
+    // the scan offers runtime filters only on partition columns its
+    // pruned read schema kept; offering a pruned-away one fails planning
+    // of every statement below ("Unable to resolve p given [k,v]")
+    spark.range(0, 100, 3).selectExpr("id AS k", "id * 1000 AS w")
+      .createOrReplaceTempView("rf_src")
+    val keys = (0L until 100L by 3L)
+    for (mode <- Seq("copy-on-write", "merge-on-read")) withClue(s"$mode: ") {
+      val t = freshTable("rfp", "k BIGINT, p BIGINT, v BIGINT",
+        s"PARTITIONED BY (p) TBLPROPERTIES ('update.mode'='$mode', " +
+          s"'delete.mode'='$mode')")
+      sql(s"INSERT INTO $t SELECT id, id % 4, id * 10 FROM range(0, 100, 1, 2)")
+      rows(s"SELECT sum(t.v) FROM $t t JOIN rf_src d ON t.k = d.k") shouldBe
+        Seq(Seq(keys.map(_ * 10).sum))
+      rows(s"SELECT count(*) FROM $t t WHERE t.k IN " +
+        "(SELECT k FROM rf_src WHERE w < 30000)") shouldBe Seq(Seq(10L))
+      sql(s"""MERGE INTO $t t USING rf_src b ON t.k = b.k
+             |WHEN MATCHED THEN UPDATE SET v = b.w
+             |WHEN NOT MATCHED THEN INSERT (k, p, v) VALUES (b.k, b.k % 4, b.w)
+             |""".stripMargin)
+      rows(s"SELECT count(*), sum(v) FROM $t") shouldBe
+        Seq(Seq(100L, (0L until 100L).filterNot(_ % 3 == 0).map(_ * 10).sum +
+          keys.map(_ * 1000).sum))
+      sql(s"DELETE FROM $t WHERE k IN (SELECT k FROM rf_src)")
+      rows(s"SELECT count(*), sum(v) FROM $t") shouldBe
+        Seq(Seq(100L - keys.length, (0L until 100L).filterNot(_ % 3 == 0).map(_ * 10).sum))
+    }
+  }
+
   test("write.upsert.key: INSERT supersedes same-key rows via a sequence-tagged equality delete file; compact repays the debt; the change feed resolves the retractions") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
     sql("DROP TABLE IF EXISTS graft_cat.db.ups")

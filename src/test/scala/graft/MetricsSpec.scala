@@ -246,6 +246,19 @@ class MetricsSpec extends SparkSpec {
     }
   }
 
+  test("one commit protocol: outside graft/sources, src/main moves no file and names no version pointer or log") {
+    // graft_cat's manifest commit is the one versioned-table protocol, so
+    // a second pointer file, version log or staged-directory swap fails here.
+    import scala.jdk.CollectionConverters._
+    val protocol = """Files\s*\.\s*move\(|ATOMIC_MOVE|_graft_current|_graft_log""".r
+    val entries = java.nio.file.Files.list(java.nio.file.Paths.get("src/main/scala/graft"))
+    val roots = try entries.iterator.asScala.filterNot(_.getFileName.toString == "sources")
+      .map(_.toString).toList.sorted
+      finally entries.close()
+    roots.flatMap(codeSites(_, protocol))
+      .map { case (f, line, m) => s"$f:$line $m" } shouldBe Nil
+  }
+
   test("one work root: src/main names no cwd-relative work/ path besides Bench's documented output default") {
     // Engine state lives under the configured work root
     // (GraftSession.WorkRoot); a path relative to the process cwd would

@@ -8,12 +8,12 @@ package graft
   * decomposition contract (q87), the BPE learner's greedy-merge mechanics
   * (q90), the global ranker's partitioning invariance (q100), and the CDC
   * chunker's boundary locality (q110), and the WAP publish's
-  * audit-gates-pointer contract (q115), and the MV rewrite's
+  * audit-gates-publish contract (q115), and the MV rewrite's
   * fingerprint-staleness contract (q245 — a regenerated source rebuilds
   * the summary before any registration can serve it), and the salted join's
-  * dilution guarantee (q119), and the retained-version store's
-  * byte-identity / retention / no-op-republish contract (q120), and the
-  * forget-delete's containment / no-op / emptied-partition contract (q127),
+  * dilution guarantee (q119), and the tagged versions' as-of reads
+  * surviving expiry (q120), and the forget-delete's containment / no-op /
+  * emptied-partition contract (q127),
   * and the zone map's real-skipping guarantee (q128), and the skyline's
   * partitioning invariance (q140), and the bitmap words' week-from-day
   * re-aggregation (q154), and the consistent-hash ring's movement bound
@@ -66,6 +66,50 @@ package graft
 class OperationalSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** File inventory of the partition directories under `dir` EXCLUDING the
+    * given partition values: (relative path, size, mtime-millis, md5) per
+    * regular file. Diffed across a refresh to prove the untouched
+    * partitions were not rewritten. */
+  private def partitionFileInventory(dir: String, partKey: String,
+      excludeValues: Set[String]): Map[String, (Long, Long, String)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val excluded = excludeValues.map(v => s"$partKey=$v")
+    def md5Of(p: java.nio.file.Path): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(java.nio.file.Files.readAllBytes(p)).map("%02x".format(_)).mkString
+    val s = java.nio.file.Files.walk(root)
+    try s.filter(java.nio.file.Files.isRegularFile(_)).iterator().asScala
+      .map(p => root.relativize(p).toString -> p)
+      .filter { case (rel, _) =>
+        val top = rel.split('/').head
+        top.startsWith(s"$partKey=") && !excluded.contains(top)
+      }
+      .map { case (rel, p) =>
+        rel -> ((java.nio.file.Files.size(p),
+          java.nio.file.Files.getLastModifiedTime(p).toMillis, md5Of(p)))
+      }
+      .toMap
+    finally s.close()
+  }
+
+  /** The `graft_cat` corpus copy `db.<stem>_<sf>`: (table, directory). */
+  private def corpusCat(stem: String): (String, java.io.File) = {
+    val full = s"${stem}_${ScaleQueries.sfTag(sf)}"
+    (s"graft_cat.db.$full", IngestQueries.catDir(spark, full))
+  }
+
+  /** The data files (`_file`) each lang's rows live in at `version`. */
+  private def filesByLang(t: String, version: Long): Map[String, Set[String]] =
+    spark.sql(s"SELECT DISTINCT lang, _file FROM $t VERSION AS OF $version")
+      .collect().groupBy(_.getString(0))
+      .map { case (l, rs) => l -> rs.map(_.getString(1)).toSet }
+
+  /** The data file names of `dir`'s head manifest. */
+  private def headFiles(dir: java.io.File): Set[String] =
+    graft.sources.GraftTableCatalog.readManifest(dir,
+      graft.sources.GraftTableCatalog.readLatest(dir)).files.map(_.name).toSet
 
   test("q245 MV staleness: a regenerated source changes the fingerprint and the summary rebuilds — a registration can never serve stale rows") {
     import org.apache.spark.sql.functions._
@@ -172,106 +216,61 @@ class OperationalSpec extends SparkSpec {
     }
   }
 
-  test("q120: publish leaves retained versions byte-identical; retention prunes; re-publish is a no-op") {
+  test("q120: tagged versions read as of 0 and 1 steps back; expiry keeps both tags readable") {
     import org.apache.spark.sql.functions._
-    import graft.operators.Scale
-    val table = "graft_tt_spec"
-    val root = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
-    Scale.deleteRecursively(root)
-
-    // full inventory (relative path -> size, mtime, content md5) of one version dir
-    def inv(ver: Int): Map[String, (Long, Long, String)] = {
-      val dirs = java.nio.file.Files.list(root).toArray.map(_.toString)
-        .filter(p => java.nio.file.Paths.get(p).getFileName.toString.startsWith("v_")).sorted
-      val d = java.nio.file.Paths.get(dirs(ver))
-      java.nio.file.Files.walk(d).toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map { f =>
-          val bytes = java.nio.file.Files.readAllBytes(f)
-          val md = java.security.MessageDigest.getInstance("MD5")
-          (d.relativize(f).toString,
-            (bytes.length.toLong, java.nio.file.Files.getLastModifiedTime(f).toMillis,
-              md.digest(bytes).map(b => f"$b%02x").mkString))
-        }.toMap
-    }
-    def nVerDirs: Int = java.nio.file.Files.list(root).toArray
-      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
-      .count(_.startsWith("v_"))
-
-    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("lang"), col("n_chars"))
-    val v1 = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-    val v2 = docs.filter(pmod(col("doc_id"), lit(3)) <= 1)
-
-    Scale.publishRetained(v1, table, "t1", keep = 2)
-    Scale.readVersionAgo(spark, table, 0).count() shouldBe v1.count()
-    val v1Inv = inv(0)
-    v1Inv.nonEmpty shouldBe true
-
-    // second publish: v1's retained files stay byte-identical (size, mtime, md5)
-    Scale.publishRetained(v2, table, "t2", keep = 2)
-    nVerDirs shouldBe 2
-    Scale.readVersionAgo(spark, table, 0).count() shouldBe v2.count()
-    Scale.readVersionAgo(spark, table, 1).count() shouldBe v1.count()
-    // locate v1's dir again by re-reading ago=1 — inventory must match exactly
-    val v1InvAfter = (0 until 2).map(inv).find(_.keySet == v1Inv.keySet).get
-    v1InvAfter shouldBe v1Inv
-
-    // third publish with keep=2 prunes v1; time travel past retention throws
-    Scale.publishRetained(docs, table, "t3", keep = 2)
-    nVerDirs shouldBe 2
-    Scale.readVersionAgo(spark, table, 0).count() shouldBe docs.count()
-    Scale.readVersionAgo(spark, table, 1).count() shouldBe v2.count()
-    an[IllegalArgumentException] should be thrownBy
-      Scale.readVersionAgo(spark, table, 2)
-
-    // idempotent re-publish: nothing rewrites (mtimes prove a true no-op)
-    val curInv = (inv(0), inv(1))
-    Scale.publishRetained(docs, table, "t3", keep = 2)
-    (inv(0), inv(1)) shouldBe curInv
+    val (t, dir) = corpusCat("docs_tt")
+    def profile(df: org.apache.spark.sql.DataFrame) = df.groupBy(col("lang"))
+      .agg(count(lit(1)), sum(col("n_chars"))).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    val out = ScaleQueries.q120TimeTravel(spark, sf).collect()
+    def agoRows(ago: Int) = out.filter(_.getAs[Int]("versions_ago") == ago)
+      .map(r => (r.getAs[String]("lang"), r.getAs[Long]("n_docs"),
+        r.getAs[Long]("total_chars"))).toSet
+    // versions_ago 1 is the raw corpus, 0 the corpus with q72's batch merged
+    val cols = Seq("doc_id", "lang", "source", "n_chars").map(col)
+    val raw = Tables.documents(spark, sf).select(cols: _*)
+    val batch = ScaleQueries.mergeBatch(Tables.documents(spark, sf)).select(cols: _*)
+    val merged = raw.join(batch.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      .unionByName(batch)
+    agoRows(1) shouldBe profile(raw)
+    agoRows(0) shouldBe profile(merged)
+    agoRows(0) shouldNot equal(agoRows(1))
+    // expiry down to one version: the tags pin both, so both stay readable
+    spark.sql("CALL graft_cat.sys.expire_versions('db', " +
+      s"'${dir.getName}', 1)").collect()
+    profile(spark.sql(s"SELECT * FROM $t VERSION AS OF 'raw'")) shouldBe profile(raw)
+    profile(spark.sql(s"SELECT * FROM $t VERSION AS OF 'merged'")) shouldBe profile(merged)
+    spark.sql(s"SELECT tag FROM $t.refs WHERE type = 'tag' ORDER BY version")
+      .collect().map(_.getString(0)).toSeq shouldBe Seq("raw", "merged")
   }
 
   test("q127: delete rewrites only containing partitions; re-delete touches nothing; emptied partitions drop") {
     import org.apache.spark.sql.functions._
-    import graft.operators.{Merge, Scale}
-    ScaleQueries.purgeLayouts(spark, sf, Seq("graft_docs_del"))
+    val (t, dir) = corpusCat("docs_del")
     val docs = Tables.documents(spark, sf)
-      .select(col("doc_id"), col("source"), col("n_chars"), col("lang"))
-    val lay = Scale.writePartitioned(docs,
-      s"graft_docs_del_${ScaleQueries.sfTag(sf)}", "lang",
-      Scale.dirFingerprint(s"$sf/documents.parquet"))
-    val targets = Tables.documents(spark, sf)
-      .filter(col("lang") === "de" && pmod(col("doc_id"), lit(5)) === 2)
-      .select(col("doc_id"), col("lang"))
-    val nTargets = targets.count()
+    val nTargets = docs
+      .filter(col("lang") === "de" && pmod(col("doc_id"), lit(5)) === 2).count()
     nTargets should be > 0L
-    val total = docs.count()
+    ScaleQueries.q127ForgetDelete(spark, sf).count() shouldBe docs.count() - nTargets
 
-    // delete 1: only lang=de rewrites
-    val before = Merge.partitionFileInventory(lay.dir, "lang", Set("de"))
-    Merge.deletePartitioned(spark, lay, "lang", "doc_id", targets)
-    Merge.partitionFileInventory(lay.dir, "lang", Set("de")) shouldBe before
-    val after = lay.read(spark)
-    after.count() shouldBe total - nTargets
-    after.join(targets.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .count() shouldBe 0L
+    // delete 1: only lang=de's files changed
+    val v = graft.sources.GraftTableCatalog.readLatest(dir)
+    val (before, after) = (filesByLang(t, v - 1), filesByLang(t, v))
+    after.keySet shouldBe before.keySet
+    (before.keySet - "de").foreach(l => withClue(s"$l: ")(after(l) shouldBe before(l)))
+    after("de") shouldNot equal(before("de"))
 
-    // delete 2 (same targets, now absent): a true filesystem no-op —
-    // EVERY file, including lang=de's, keeps its bytes and mtimes
-    val allBefore = Merge.partitionFileInventory(lay.dir, "lang", Set.empty)
-    Merge.deletePartitioned(spark, lay, "lang", "doc_id", targets)
-    Merge.partitionFileInventory(lay.dir, "lang", Set.empty) shouldBe allBefore
+    // delete 2 (same targets, now absent): no data file written or dropped
+    val files = headFiles(dir)
+    spark.sql(s"DELETE FROM $t WHERE lang = 'de' AND pmod(doc_id, 5) = 2")
+    headFiles(dir) shouldBe files
 
-    // delete 3: removing every zh row drops the partition directory
-    Merge.deletePartitioned(spark, lay, "lang", "doc_id",
-      Tables.documents(spark, sf).filter(col("lang") === "zh")
-        .select(col("doc_id"), col("lang")))
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(lay.dir).resolve("lang=zh")) shouldBe false
-    lay.read(spark).filter(col("lang") === "zh").count() shouldBe 0L
-    // leave a clean layout for the catalog query (write-once spec is
-    // still intact, so purge forces the next run to rebuild)
-    ScaleQueries.purgeLayouts(spark, sf, Seq("graft_docs_del"))
+    // delete 3: a whole partition drops metadata-only
+    spark.sql(s"DELETE FROM $t WHERE lang = 'zh'")
+    graft.sources.GraftTableCatalog.lastDeleteRewritten.get() shouldBe 0L
+    spark.sql(s"SELECT `partition` FROM $t.partitions").collect()
+      .map(_.getString(0)).toSeq shouldNot contain("lang=zh")
+    spark.table(t).filter(col("lang") === "zh").count() shouldBe 0L
   }
 
   test("q128: the zone map actually skips — hit files are a strict subset covering a narrow interval") {
@@ -434,60 +433,46 @@ class OperationalSpec extends SparkSpec {
   }
 
   test("q72: merge rewrites ONLY the affected partition; untouched partition files are byte-identical") {
-    ScaleQueries.purgeLayouts(spark, sf, Seq("graft_corpus_base"))
-    val otherLangs = Set("de", "es", "fr", "zh")
+    import org.apache.spark.sql.functions._
+    val (t, dir) = corpusCat("corpus_base")
+    val merged = ScaleQueries.q72MergeUpsert(spark, sf).count()
 
-    // run 1: cold — builds the partitioned base, then merges the en batch
-    val merged1 = ScaleQueries.q72MergeUpsert(spark, sf).count()
-    val dir = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath,
-      s"graft_corpus_base_${ScaleQueries.sfTag(sf)}").toString
-    val before = graft.operators.Merge.partitionFileInventory(dir, "lang", Set("en"))
-    val beforeEn = graft.operators.Merge.partitionFileInventory(dir, "lang", otherLangs)
-
-    // run 2: base layout reused (write-once spec intact), merge re-applied
-    val merged2 = ScaleQueries.q72MergeUpsert(spark, sf).count()
-    val after = graft.operators.Merge.partitionFileInventory(dir, "lang", Set("en"))
-    val afterEn = graft.operators.Merge.partitionFileInventory(dir, "lang", otherLangs)
-
-    // the contract: a merge touching only lang=en leaves every other
-    // partition's files untouched — same names, sizes, mtimes, and bytes
-    before should not be empty
-    after shouldBe before
-    // …while the affected partition really was rewritten (fresh task files)
-    beforeEn should not be empty
-    afterEn.keySet should not equal beforeEn.keySet
-    // idempotent: the batch derives from the SOURCE table, so re-merging an
-    // already-merged base reproduces the same corpus
-    merged2 shouldBe merged1
+    // the contract: the MERGE version references the CTAS version's
+    // de/es/fr/zh data files unchanged (graft_cat never rewrites a file in
+    // place, so same name means same bytes) and replaces en's
+    val v = graft.sources.GraftTableCatalog.readLatest(dir)
+    val (before, after) = (filesByLang(t, v - 1), filesByLang(t, v))
+    after.keySet shouldBe Set("en", "de", "es", "fr", "zh")
+    Seq("de", "es", "fr", "zh").foreach { l =>
+      withClue(s"$l: ")(after(l) shouldBe before(l))
+    }
+    (after("en") intersect before("en")) shouldBe empty
     val docs = Tables.documents(spark, sf)
-    val inserts = docs.filter(
-      org.apache.spark.sql.functions.col("lang") === "en" &&
-        org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.lit(11)) === 5).count()
-    merged1 shouldBe docs.count() + inserts
+    val inserts = docs.filter(col("lang") === "en" &&
+      pmod(col("doc_id"), lit(11)) === 5).count()
+    merged shouldBe docs.count() + inserts
   }
 
   test("q78: fingerprint refresh rewrites only the affected partition of each derived layout") {
-    val layouts = Seq("graft_corpus_base", "graft_corpus_fp", "graft_corpus_fpb")
+    val layouts = Seq("graft_corpus_fp", "graft_corpus_fpb")
     ScaleQueries.purgeLayouts(spark, sf, layouts)
     val otherLangs = Set("de", "es", "fr", "zh")
     def dirOf(base: String) = java.nio.file.Paths.get(
       new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath,
       s"${base}_${ScaleQueries.sfTag(sf)}").toString
     def untouched(base: String) =
-      graft.operators.Merge.partitionFileInventory(dirOf(base), "lang", Set("en"))
+      partitionFileInventory(dirOf(base), "lang", Set("en"))
     def enPart(base: String) =
-      graft.operators.Merge.partitionFileInventory(dirOf(base), "lang", otherLangs)
+      partitionFileInventory(dirOf(base), "lang", otherLangs)
 
-    // run 1: cold — base build, fingerprint build, merge, refresh, probe
+    // run 1: cold — base CTAS, fingerprint build, merge, refresh, probe
     val r1 = DedupQueries.q78IncrementalRefresh(spark, sf).count()
     r1 should be > 0L
     val before = layouts.map(t => t -> untouched(t)).toMap
     val beforeEn = layouts.map(t => t -> enPart(t)).toMap
 
-    // run 2: everything reused; merge + refresh re-applied (idempotent)
+    // run 2: fingerprint layouts reused; the base is re-created and the
+    // merge + dynamic-overwrite refresh re-applied (idempotent)
     val r2 = DedupQueries.q78IncrementalRefresh(spark, sf).count()
     r2 shouldBe r1
     layouts.foreach { t =>
@@ -791,28 +776,28 @@ class OperationalSpec extends SparkSpec {
 
   test("q115: a failing audit refuses to publish — the previous version stays current") {
     import org.apache.spark.sql.functions._
-    ScaleQueries.purgeLayouts(spark, sf, Seq("graft_docs_wap"))
-    val table = s"graft_docs_wap_${ScaleQueries.sfTag(sf)}"
+    val (t, dir) = corpusCat("docs_wap")
     val n1 = ScaleQueries.q115WapPublish(spark, sf).count()
     n1 should be > 0L
-    // a NEW candidate version (fresh spec) whose audit fails: the publish
-    // must throw, name the audit, and leave the pointer on the good version
+    val published = graft.sources.GraftTableCatalog.readLatest(dir)
+    def contents = spark.table(t).orderBy(col("doc_id")).collect().toSeq
+    val rows1 = contents
+    // a NEW candidate batch whose audits fail: the publish must throw,
+    // name every failed audit in order, and leave main where it was
     val df = Tables.documents(spark, sf)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    val boom = intercept[graft.operators.Scale.AuditFailure] {
-      graft.operators.Scale.writeAuditPublish(df, table,
-        "deliberately-new-spec",
+      .select((col("doc_id") + 1000000L).as("doc_id"), col("lang"),
+        col("source"), col("n_chars"))
+    val boom = intercept[ScaleQueries.AuditFailure] {
+      ScaleQueries.auditPublish(spark, t, df,
         Seq("always_fails" -> (_ => false),
+          "passes" -> (_ => true),
           "also_fails" -> (d => d.count() < 0)))
     }
     boom.failed shouldBe Seq("always_fails", "also_fails")
-    ScaleQueries.q115WapPublish(spark, sf).count() shouldBe n1
-    // no staged corpse, no unpublished version directory left behind
-    val root = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
-    val leftovers = java.nio.file.Files.list(root).toArray.map(_.toString)
-      .filter(p => p.contains("__staging"))
-    leftovers shouldBe empty
+    graft.sources.GraftTableCatalog.readLatest(dir) shouldBe published
+    contents shouldBe rows1
+    // no unpublished branch left behind
+    spark.sql(s"SELECT tag FROM $t.refs WHERE type = 'branch'").collect() shouldBe empty
   }
 
   test("q162: consistent hashing moves ~1/(k+1) of docs on scale-out; mod-N would move ~k/(k+1)") {
