@@ -190,7 +190,7 @@ object GraphQueries {
       var ranks = ranks0
       for (_ <- 1 to PR_ITERS)
         ranks = pagerankRound(edgeDeg, ranks,
-            df => nodeShape(s, keyed = true, np)(df, "node"))
+            df => nodeShape(keyed = true, np)(df, "node"))
           .localCheckpoint(true)
       // every round is checkpointed, so the edge cache has no remaining
       // consumer — release it rather than pinning edge-list-sized blocks
@@ -234,7 +234,7 @@ object GraphQueries {
       edgeDeg: org.apache.spark.sql.DataFrame,
       ranks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val np = s.sessionState.conf.numShufflePartitions
-    pagerankRound(edgeDeg, ranks, df => nodeShape(s, keyed = true, np)(df, "node"))
+    pagerankRound(edgeDeg, ranks, df => nodeShape(keyed = true, np)(df, "node"))
   }
 
   /** q178: k-hop BFS — exact minimum-hop distances from a seed set (the
@@ -333,7 +333,7 @@ object GraphQueries {
       var frontier = seeds.select(col("node"))
       for (i <- 1 to BFS_HOPS) {
         val next0 = bfsRound(edges, frontier, visited, i,
-          nodeShape(s, keyed, np))
+          nodeShape(keyed, np))
         // broadcast mode cuts lineage too, LAZILY: `visited` feeds each
         // round twice (anti-join + union accumulation), so an uncut chain
         // doubles the Catalyst plan per hop — 2^HOPS copies of the seed
@@ -355,8 +355,7 @@ object GraphQueries {
   /** Node-side physical shape: broadcast below the threshold, a
     * co-partitioned build-side hash above it — the ONE hook both loop
     * modes and the PlanSpec fragments share. */
-  private def nodeShape(s: org.apache.spark.sql.SparkSession,
-                        keyed: Boolean, np: Int)
+  private def nodeShape(keyed: Boolean, np: Int)
       : (org.apache.spark.sql.DataFrame, String) =>
         org.apache.spark.sql.DataFrame =
     (df, key) =>
@@ -391,7 +390,7 @@ object GraphQueries {
       .select((col("c_custkey") * 2).as("node")).distinct()
       .withColumn("dist", lit(0L)).localCheckpoint(true)
     bfsRound(edges, seeds.select(col("node")), seeds, 1,
-      nodeShape(s, keyed = false, np))
+      nodeShape(keyed = false, np))
   }
 
   /** One unexecuted BROADCAST-mode SSSP relaxation round, for the PlanSpec
@@ -404,7 +403,7 @@ object GraphQueries {
     val dist = Tables.customer(s, d).filter(col("c_nationkey") === 0)
       .select((col("c_custkey") * 2).as("node")).distinct()
       .withColumn("dist", lit(0L)).localCheckpoint(true)
-    ssspRound(edges, dist, nodeShape(s, keyed = false, np))
+    ssspRound(edges, dist, nodeShape(keyed = false, np))
   }
 
   /** Keyed setup + one unexecuted BFS round, for the PlanSpec pin. */
@@ -418,7 +417,7 @@ object GraphQueries {
       .select((col("c_custkey") * 2).as("node")).distinct()
       .withColumn("dist", lit(0L)).localCheckpoint(true)
     bfsRound(edges, seeds.select(col("node")), seeds, 1,
-      nodeShape(s, keyed = true, np))
+      nodeShape(keyed = true, np))
   }
 
   private val BFS_HOPS = 3
@@ -497,7 +496,7 @@ object GraphQueries {
         .select((col("c_custkey") * 2).as("node")).distinct()
         .withColumn("dist", lit(0L))
       for (_ <- 1 to SSSP_HOPS) {
-        val relaxed = ssspRound(edges, dist, nodeShape(s, keyed, np))
+        val relaxed = ssspRound(edges, dist, nodeShape(keyed, np))
         // keyed: eager checkpoint (the q44 lineage discipline). broadcast:
         // LAZY checkpoint — ssspRound nests `dist` TWICE (relax + union),
         // so an uncut lineage doubles the plan per round: 2^HOPS copies of
@@ -535,7 +534,7 @@ object GraphQueries {
     val dist = Tables.customer(s, d).filter(col("c_nationkey") === 0)
       .select((col("c_custkey") * 2).as("node")).distinct()
       .withColumn("dist", lit(0L)).localCheckpoint(true)
-    ssspRound(edges, dist, nodeShape(s, keyed = true, np))
+    ssspRound(edges, dist, nodeShape(keyed = true, np))
   }
 
   /** q191: connected components by STAR CONTRACTION (Kiveris et al.

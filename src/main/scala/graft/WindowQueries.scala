@@ -834,7 +834,7 @@ object WindowQueries {
   val q217IncrementalSessions: Q = (s, d) => {
     val ev = Tables.events(s, d).select(col("user_id"), col("ts"))
     val maxDay = ev.agg(max(expr("unix_micros(ts) div 86400000000")))
-      .head.getLong(0)
+      .head().getLong(0)
     val cutoffUs = (maxDay - 6) * US_PER_DAY_217
     val gapUs = SESS_GAP_MIN * 60000000L
     val state = graft.operators.Scale.writeOnce(

@@ -28,13 +28,13 @@ import graft.sources.{Fixtures, Footers, JsonSource}
   * `diststyle all`, README.md:73-75 — ~15k rows in the reference), so the
   * event stream never shuffles; the dims are full-tuple DISTINCTs (keyed
   * shuffles on low-cardinality outputs); nothing collects to the driver.
-  * The whole pipeline is 5 independent lazy plans over 2 materialized
-  * staging tables. Every read-back carries its schema (the frame just
-  * written, or [[Schemas.star]]), so no read pays an inference job. A cold
-  * build schedules 12 Spark jobs: one per staging write and two per insert
-  * (the DISTINCT's shuffle-map stage or songplay's broadcast, then the
-  * write). The validation counts come from the star files' parquet
-  * footers ([[Footers]]), so they schedule none.
+  * The whole pipeline is 5 independent lazy plans over 2 staging tables
+  * held in Spark's in-memory columnar cache, dropped by `unpersist` when
+  * the build ends, failed or not. A build makes 5 parquet writes, one per
+  * star table. A cold build schedules 12 Spark jobs: one per staging
+  * materialization and two per insert (the DISTINCT's shuffle-map stage or
+  * songplay's broadcast, then the write). The validation counts come from
+  * the star files' parquet footers ([[Footers]]), so they schedule none.
   */
 object Etl {
 
@@ -206,8 +206,7 @@ object Etl {
     val root = starRoot(sfDir)
     val sink = new ParquetSink(root)
     Files.createDirectories(Paths.get(root))      // S5: namespace
-    val staging = Seq("staging_events", "staging_songs")
-    (staging ++ tables).foreach(sink.drop)        // S4: idempotent drop ×7
+    tables.foreach(sink.drop)                     // S4: idempotent drop ×5
 
     // The pipeline is a dependency DAG, not a statement list: each insert
     // launches the moment its own staging inputs MATERIALIZE, instead of
@@ -221,15 +220,18 @@ object Etl {
     //   stage_songs ───┴─▶ songs, artists
     //
     // S1/S2 stay the COPY semantic (sql_queries.py:121-128): each staging
-    // table is physically materialized columnar BEFORE any insert reads
-    // it — one JSON parse total, inserts read pruned parquet. The read-back
-    // takes the written frame's schema, so it schedules no job. Staging
-    // tables are addressable by name for the pipeline's duration, like the
-    // reference's staging_events/staging_songs (sql_queries.py:28-64).
+    // table is materialized once, in Spark's in-memory columnar cache,
+    // BEFORE any insert reads it — one JSON parse total, inserts scan the
+    // cached columns pruned. The default MEMORY_AND_DISK level spills at
+    // scale instead of failing. One noop write is the materializing job
+    // (`count()` plans two under AQE); a failed one unpersists before it
+    // escapes. Staging tables are addressable by name for the pipeline's
+    // duration, like the reference's staging_events/staging_songs
+    // (sql_queries.py:28-64).
     def stage(table: String, staged: => DataFrame): Future[DataFrame] = Future {
-      val frame = staged
-      blocking(sink.write(frame, table))
-      val df = sink.read(spark, table, frame.schema)
+      val df = staged.persist()
+      try blocking(df.write.format("noop").mode("overwrite").save())
+      catch { case e: Throwable => df.unpersist(blocking = true); throw e }
       df.createOrReplaceTempView(table)
       df
     }
@@ -241,17 +243,22 @@ object Etl {
     val sgF = stage("staging_songs", stageSongs(spark, sfDir))
     // One await joins everything: a failed staging COPY fails its dependent
     // inserts without running them, and every other write drains first.
-    awaitAll(evF, sgF,
+    try awaitAll(evF, sgF,
       evF.map(ev => insert("users", users(ev))),
       evF.map(ev => insert("time", time(ev))),
       sgF.map(sg => insert("songs", songs(sg))),
       sgF.map(sg => insert("artists", artists(sg))),
       evF.zip(sgF).map { case (ev, sg) => insert("songplay", songplay(ev, sg)) })
-
-    // S8: drop staging (sql_queries.py:198, etl.py:31-34) — the materialized
-    // staging parquet goes away with the temp views, like the reference's
-    // post-ETL staging drop.
-    staging.foreach { t => spark.catalog.dropTempView(t); sink.drop(t) }
+    // S8: drop staging (sql_queries.py:198, etl.py:31-34) — the cached
+    // blocks and the temp views go, like the reference's post-ETL staging
+    // drop, on the failure path too: a failed build pins no cache for the
+    // rest of the session. Unpersist before the view drop, which would
+    // otherwise uncache without waiting for the blocks to go.
+    finally Seq("staging_events" -> evF, "staging_songs" -> sgF).foreach {
+      case (t, f) =>
+        f.value.flatMap(_.toOption).foreach(_.unpersist(blocking = true))
+        spark.catalog.dropTempView(t)
+    }
     // The reference's five count(*) validation queries, answered from the
     // parquet footers of the files just materialized, the way Redshift
     // answers count(*) from block metadata: a driver-side read, no Spark

@@ -1579,7 +1579,7 @@ object GraftTableCatalog {
     * eq-delete runs, epochs. Planning prunes `refs` by partition summary
     * before reading a single segment; everything else loads eagerly via
     * [[parseManifest]]. */
-  private[sources] def parseManifestList(f: File, version: Long)
+  private[sources] def parseManifestList(f: File)
       : (String, Long, Seq[Entry], Seq[SegRef], Set[String], Seq[EqDelete]) = {
     val lines = new String(Files.readAllBytes(f.toPath),
       StandardCharsets.UTF_8).linesIterator.filter(_.nonEmpty).toSeq
@@ -1622,7 +1622,7 @@ object GraftTableCatalog {
     }
 
   private[sources] def parseManifest(f: File, version: Long): Manifest = {
-    val (op, commitMs, inline, refs, epochs, eq) = parseManifestList(f, version)
+    val (op, commitMs, inline, refs, epochs, eq) = parseManifestList(f)
     val byName = loadSegments(f.getParentFile, refs.map(_.name))
     val segs = refs.map(r => Segment(r, byName(r.name)))
     Manifest(version, op, inline ++ segs.flatMap(_.entries), epochs,
@@ -1661,7 +1661,7 @@ object GraftTableCatalog {
 
   private[sources] def parsePlan(dir: File, f: File, version: Long)
       : PlanManifest = {
-    val (op, _, inline, refs, epochs, eq) = parseManifestList(f, version)
+    val (op, _, inline, refs, epochs, eq) = parseManifestList(f)
     new PlanManifest(dir, version, op, epochs, eq, inline, refs)
   }
 
@@ -1690,7 +1690,7 @@ object GraftTableCatalog {
     val retained: Set[String] = ls
       .filter(f => f.getName.matches("v\\d+\\.manifest") ||
         (f.getName.startsWith("b-") && f.getName.endsWith(".manifest")))
-      .flatMap(f => parseManifestList(f, 0)._4.map(_.name)).toSet
+      .flatMap(f => parseManifestList(f)._4.map(_.name)).toSet
     var n = 0L
     ls.foreach { f =>
       if (f.getName.startsWith("sg-") && f.getName.endsWith(".seg") &&
@@ -2458,16 +2458,16 @@ object GraftTableCatalog {
         false
       }
 
-      /** Boxed convenience for the driver-side (row-at-a-time) paths. */
+      /** Boxed convenience for the driver-side (row-at-a-time) paths. A
+        * probe of the other key kind than the runs hold is absent (it
+        * would otherwise read the runs in the wrong layout). */
       def contains(a: Any): Boolean = a match {
         case null => false
-        case l: java.lang.Long => containsLong(l)
-        case s: String =>
-          val b = s.getBytes(StandardCharsets.UTF_8)
-          containsBytes(b, b.length)
+        case l: java.lang.Long => !isStr && containsLong(l)
+        case s: String => isStr && contains(UTF8String.fromString(s))
         case u: UTF8String =>
           val b = u.getBytes
-          containsBytes(b, b.length)
+          isStr && containsBytes(b, b.length)
         case other => sys.error(s"unprobeable key $other")
       }
     }
@@ -3500,7 +3500,7 @@ private class CatalogScanBuilder(dir: File, schema: StructType,
         spec.indexWhere(p => p.kind == "identity" && p.id == id)
       }
       if (slotOf.exists(_ < 0)) return None
-      def decode(c: String, pv: String): Any = pv match {
+      def decode(pv: String): Any = pv match {
         case "n" => null
         case v if v.startsWith("s") =>
           UTF8String.fromString(URLDecoder.decode(v.tail, "UTF-8"))
@@ -3512,7 +3512,7 @@ private class CatalogScanBuilder(dir: File, schema: StructType,
       val rowsOpt = grouped.toSeq.map { case (key, sub) =>
         aggsOver(sub).map { aggs =>
           (aggs,
-            key.zip(groupCols.flatten).map { case (pv, c) => decode(c, pv) }
+            key.map(decode)
               ++ aggs.map(_._4))
         }
       }
@@ -5126,11 +5126,11 @@ private class ManifestsTable(dir: File, table: String) extends Table
         val v = readLatest(dir)
         if (v == 0) return Array(FileRows(Seq.empty))
         val (_, _, inline, refs, _, _) =
-          parseManifestList(new File(dir, s"v$v.manifest"), v)
+          parseManifestList(new File(dir, s"v$v.manifest"))
         val prior: Set[String] =
           if (v <= 1) Set.empty
           else parseManifestList(
-            new File(dir, s"v${v - 1}.manifest"), v - 1)._4
+            new File(dir, s"v${v - 1}.manifest"))._4
             .map(_.name).toSet
         val segRows = refs.map { r =>
           Seq[Any](r.name, r.count, r.rows, r.bytes, r.summary,

@@ -15,8 +15,9 @@ import graft.sinks.ParquetSink
   * reference's derived invariants (BASELINE.md): |time| = |distinct ts|,
   * |songplay| ≥ |events| (left outer + fanout), users excludes anonymous,
   * and the sortkey presort leaves each parquet file internally ordered.
-  * Also pins the build's declared read schemas, its Spark job budget and
-  * its footer-served validation counts. */
+  * Also pins the build's declared read schemas, its Spark job budget, its
+  * one JSON parse per build, its transient in-memory staging and its
+  * footer-served validation counts. */
 class EtlEndToEndSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -37,16 +38,18 @@ class EtlEndToEndSpec extends SparkSpec {
     // The pipeline reads parquet back with a declared schema, never an
     // inferred one; a column renamed on the write side would then read back
     // as all NULLs. This pins the two together for all 7 tables: the staging
-    // pair against the frame the pipeline writes, the star five against
-    // their DDL in Schemas.star — names, order AND types (users has no
-    // level; songs uses song_title; session_id is a varchar; artists is
-    // longitude-first). toNullable: parquet reads every column as nullable.
+    // pair against the frame ParquetSink lands (the pipeline caches staging
+    // in memory, but a parquet-staged decomposition of it reads it back the
+    // same way), the star five against their DDL in Schemas.star — names,
+    // order AND types (users has no level; songs uses song_title; session_id
+    // is a varchar; artists is longitude-first). toNullable: parquet reads
+    // every column as nullable.
     Etl.run(spark, sf)
     val star = new ParquetSink(Etl.starRoot(sf))
     Schemas.star.foreach { case (t, declared) =>
       spark.read.parquet(star.path(t)).schema.toNullable shouldBe declared.toNullable
     }
-    // staging is dropped at the end of a build: land it in a scratch root
+    // staging never lands in the star root: land it in a scratch root
     val root = java.nio.file.Files.createTempDirectory("etl-staging")
     val staging = new ParquetSink(root.toString)
     try Seq("staging_events" -> Etl.stageEvents(spark, sf),
@@ -56,13 +59,25 @@ class EtlEndToEndSpec extends SparkSpec {
     } finally graft.operators.Scale.deleteRecursively(root)
   }
 
+  /** Run `build` and check it leaves no staging behind: neither staging
+    * temp view, and no persisted RDD the session did not hold before. */
+  private def leavesNoStaging(build: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    build
+    Seq("staging_events", "staging_songs").foreach { t =>
+      withClue(s"$t: ")(spark.catalog.tableExists(t) shouldBe false)
+    }
+    sc.getPersistentRDDs.keySet shouldBe before
+  }
+
   test("failed staging: the build throws once, each distinct failure attached once") {
     // Both staging COPYs fail (no input tables); each failure also reaches
     // its dependent inserts, as the same instance. One exception escapes
     // with the other staging failure suppressed exactly once (Spark may add
-    // its own caller-stacktrace entry beside it).
+    // its own caller-stacktrace entry beside it). No staging is left behind.
     val missing = java.nio.file.Files.createTempDirectory("etl-no-input").toString
-    try {
+    try leavesNoStaging {
       val e = intercept[AnalysisException](Etl.run(spark, missing))
       val sibling = e.getSuppressed.toSeq.filter(_.isInstanceOf[AnalysisException])
       sibling should have size 1
@@ -90,9 +105,104 @@ class EtlEndToEndSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     val perBuild = try Seq(coldBuild(), coldBuild()) finally sc.removeSparkListener(listener)
-    // 2 staging writes + 2 per insert (shuffle map or broadcast, then the
-    // write); the validation counts come from footers and run no job
+    // 2 staging materializations + 2 per insert (shuffle map or broadcast,
+    // then the write); the validation counts come from footers and run no job
     perBuild shouldBe Seq(12, 12)
+  }
+
+  test("staging leaves nothing behind: after a cold build, and after an ANSI overflow in a staging COPY or in an insert") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.{Files, Paths}
+    import graft.sources.Fixtures
+    Etl.run(spark, sf) // fixtures landed outside the measured build
+    leavesNoStaging { Etl.invalidate(sf); Etl.run(spark, sf) }
+    // Scales whose one-line fixtures are landed by hand. A song length of
+    // 1e10 overflows staging_events' decimal(12,4) while the events cache
+    // fills; a latitude of 1000.000 stages fine as decimal(11,3) and
+    // overflows the artists insert's (11,3) -> (11,8) widening.
+    Seq("staging" -> ("1e10", "1.0"), "insert" -> ("1.5", "1000.0")).foreach {
+      case (failing, (length, latitude)) => withClue(s"$failing fails: ") {
+        val fake = Files.createTempDirectory(s"etl-overflow-$failing").toString
+        def land(dir: String, line: String): Unit = {
+          Files.createDirectories(Paths.get(dir))
+          Files.write(Paths.get(dir, "part-00000.json"), (line + "\n").getBytes(UTF_8))
+          Files.write(Paths.get(dir, "_SUCCESS"), Array.emptyByteArray)
+        }
+        land(Fixtures.eventsJsonDir(fake),
+          """{"eventId":1,"tsMillis":1541105830796,"registrationMs":1540919166796.5,""" +
+          """"userIdStr":"7","eventKind":"NextSong","artistName":"A","songTitle":"T",""" +
+          s""""songLenNum":$length,"sessionId":3,"levelStr":"free","firstName":"F",""" +
+          """"lastName":"L","gender":"M","locationStr":"X","userAgentStr":"U"}""")
+        land(Fixtures.songsJsonDir(fake),
+          """{"num_songs":1,"artist_id":"AR1","artist_name":"A","artist_longitude":1.5,""" +
+          s""""artist_latitude":$latitude,"artist_location":"X","song_id":"SO1",""" +
+          """"title":"T","duration":1.5,"year":2000}""")
+        try leavesNoStaging {
+          val e = intercept[Exception](Etl.run(spark, fake))
+          Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(_.isInstanceOf[ArithmeticException]) shouldBe true
+        } finally Seq(fake, Etl.starRoot(fake), Paths.get(Fixtures.eventsJsonDir(fake)).getParent.toString)
+          .foreach(d => graft.operators.Scale.deleteRecursively(Paths.get(d)))
+      }
+    }
+  }
+
+  test("one JSON parse per build: only the two staging materializations scan the fixtures, every insert reads the cache") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+    import org.apache.spark.sql.execution.metric.SQLMetric
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // Every node of an executed plan, AQE unwrapped; with `cached`, also the
+    // plans behind in-memory scans.
+    def nodes(p: SparkPlan, cached: Boolean): Seq[SparkPlan] = p +: ((p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec if cached => Seq(m.relation.cachedPlan)
+      case _ => Seq.empty
+    }) ++ p.children ++ p.subqueries).flatMap(nodes(_, cached))
+    def jsonScans(p: SparkPlan, cached: Boolean): Seq[FileSourceScanExec] =
+      nodes(p, cached).collect {
+        case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[JsonFileFormat] => s
+      }
+    final case class Execution(parsedJson: Boolean, writesParquet: Boolean,
+        readsCache: Boolean, scansJsonUncached: Boolean)
+
+    Etl.run(spark, sf) // fixtures landed outside the measured build
+    val sc = spark.sparkContext
+    // a JSON scan's row metric grows only in the execution that runs it
+    val rowsSeen = new java.util.IdentityHashMap[SQLMetric, java.lang.Long]
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[Execution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan
+        val grew = jsonScans(plan, cached = true).map(_.metrics("numOutputRows")).map { m =>
+          val before = Option(rowsSeen.put(m, m.value)).fold(0L)(_.longValue)
+          m.value > before
+        }
+        executions.add(Execution(grew.contains(true),
+          nodes(plan, cached = false).exists(_.isInstanceOf[DataWritingCommandExec]),
+          nodes(plan, cached = false).exists(_.isInstanceOf[InMemoryTableScanExec]),
+          jsonScans(plan, cached = false).nonEmpty))
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    GraftSqlShim.drainListenerBus(sc)
+    spark.listenerManager.register(listener)
+    try { Etl.invalidate(sf); Etl.run(spark, sf); GraftSqlShim.drainListenerBus(sc) }
+    finally spark.listenerManager.unregister(listener)
+
+    import scala.jdk.CollectionConverters._
+    val all = executions.asScala.toSeq
+    val (parses, others) = all.partition(_.parsedJson)
+    parses should have size 2
+    parses.foreach(_.writesParquet shouldBe false)
+    val inserts = others.filter(_.writesParquet)
+    inserts should have size 5
+    inserts.foreach(_.readsCache shouldBe true)
+    all.foreach(_.scansJsonUncached shouldBe false)
   }
 
   test("validation counts: each star table's footer count equals its declared-schema scan count; an empty table counts 0") {
