@@ -412,14 +412,6 @@ class GraftTableCatalog extends CatalogPlugin with TableCatalog
     var mapping = readMapping(dir, schema)
     var props = readProps(dir)
     val spec = readSpec(dir)
-    // RENAME/DROP resolve columns by FIELD ID; a pre-v2 data file carries
-    // no ids (positional only), so evolving over one would mis-map its
-    // columns. Compaction rewrites such files with ids — require it first.
-    lazy val allEntriesCarryIds: Boolean = {
-      val latest = readLatest(dir)
-      latest == 0 || readManifest(dir, latest).files.forall(e =>
-        e.fieldIds.nonEmpty)
-    }
     changes.foreach {
       case add: TableChange.AddColumn =>
         require(add.fieldNames.length == 1,
@@ -442,9 +434,6 @@ class GraftTableCatalog extends CatalogPlugin with TableCatalog
           nextId = mapping.nextId + 1)
       case rn: TableChange.RenameColumn =>
         require(rn.fieldNames.length == 1, "graft_cat has no nested columns")
-        require(allEntriesCarryIds,
-          "this table has pre-v2 data files without field ids; " +
-            "run sys.compact before RENAME COLUMN")
         val from = rn.fieldNames()(0)
         val to = rn.newName
         require(schema.fieldNames.contains(from), s"no column $from")
@@ -455,8 +444,7 @@ class GraftTableCatalog extends CatalogPlugin with TableCatalog
         val i = schema.fieldIndex(from)
         schema = StructType(schema.fields.updated(i,
           schema.fields(i).copy(name = to)))
-        // ids are untouched — old files keep reading; name-keyed stats in
-        // PRE-evolution manifests stop resolving (conservative, not wrong)
+        // ids are untouched — old files keep reading
         mapping = mapping.copy(evolved = true)
         props.get(WriteOrderByProp).foreach { cols =>
           props += WriteOrderByProp -> cols.split(",").map(_.trim)
@@ -466,9 +454,6 @@ class GraftTableCatalog extends CatalogPlugin with TableCatalog
           props += UpsertKeyProp -> to
       case del: TableChange.DeleteColumn =>
         require(del.fieldNames.length == 1, "graft_cat has no nested columns")
-        require(allEntriesCarryIds,
-          "this table has pre-v2 data files without field ids; " +
-            "run sys.compact before DROP COLUMN")
         val c = del.fieldNames()(0)
         if (!schema.fieldNames.contains(c)) {
           require(del.ifExists() == java.lang.Boolean.TRUE, s"no column $c")
@@ -997,35 +982,33 @@ object GraftTableCatalog {
     * planner needs without opening it.
     *
     *  - `stats`: per-LONG-column min/max over NON-NULL values, keyed
-    *    `#<fieldId>` (v2) or by column name (legacy manifests);
-    *  - `nullFree`: columns PROVEN to contain no nulls (same key space);
-    *    `None` means a legacy manifest with no null bookkeeping — every
-    *    "all rows match" proof then fails, never the other way (the
-    *    Iceberg strict-evaluator rule: a comparison predicate cannot
-    *    match a NULL, so metadata-only DELETE needs nullCount==0);
-    *  - `fieldIds`: positional field ids the file was written under
-    *    (empty = legacy 0..cols-1) — the column-mapping indirection that
-    *    makes RENAME free and DROP read-compatible;
-    *  - `typeCodes`: positional storage types (L/D/S; empty = legacy,
-    *    derive from the current schema prefix — valid because legacy
-    *    tables predate DROP);
+    *    `#<fieldId>`;
+    *  - `nullFree`: columns PROVEN to contain no nulls (same key space)
+    *    — a column absent here fails every "all rows match" proof, never
+    *    the other way (the Iceberg strict-evaluator rule: a comparison
+    *    predicate cannot match a NULL, so metadata-only DELETE needs
+    *    nullCount==0);
+    *  - `fieldIds`: positional field ids the file was written under —
+    *    the column-mapping indirection that makes RENAME free and DROP
+    *    read-compatible;
+    *  - `typeCodes`: positional storage types (L/D/S);
     *  - `partition`: this file's partition tuple under the spec
     *    GENERATION it was written under (encoded; empty = unpartitioned);
     *  - `specId`: index into the table's spec history (specs.json) — the
     *    Iceberg per-file spec id, so `SET PARTITION SPEC` never rewrites
     *    data: old files keep pruning under their own layout;
     *  - `sums`: per-LONG-column EXACT sums over non-null values (same
-    *    `#<fieldId>` key space; absent = legacy file or the writer hit
-    *    long overflow) — what SUM pushdown answers from;
+    *    `#<fieldId>` key space; absent = the writer hit long overflow)
+    *    — what SUM pushdown answers from;
     *  - `ndv`: per-column ESTIMATED distinct non-null values (linear
     *    counting at write; same `#<fieldId>` keys) — feeds CBO column
     *    statistics, never a correctness proof;
     *  - `deletes`: position delete files readers anti-merge. */
   case class Entry(name: String, rows: Long, bytes: Long, cols: Int,
       stats: Map[String, (Long, Long)],
-      nullFree: Option[Set[String]] = None,
-      fieldIds: Seq[Int] = Seq.empty,
-      typeCodes: String = "",
+      nullFree: Set[String],
+      fieldIds: Seq[Int],
+      typeCodes: String,
       partition: Seq[String] = Seq.empty,
       deletes: Seq[DeleteFile] = Seq.empty,
       seq: Long = 0L,
@@ -1036,8 +1019,6 @@ object GraftTableCatalog {
     /** Live rows MINUS positional deletes; an upper bound while equality
       * deletes are outstanding (they resolve per-row at read). */
     def liveRows: Long = rows - deletes.map(_.rows).sum
-    def idsOrLegacy: Seq[Int] =
-      if (fieldIds.nonEmpty) fieldIds else 0 until cols
   }
 
   /** `epochs` = committed streaming micro-batch markers, carried forward
@@ -1080,9 +1061,8 @@ object GraftTableCatalog {
 
   /** The column mapping (mapping.json): one STABLE field id per live
     * column, parallel to the current schema. `evolved` flips true on the
-    * first RENAME/DROP — from then on, name-keyed stats in pre-evolution
-    * manifests are ignored (conservative: pruning weakens, correctness
-    * holds). Absent file = legacy table: ids are schema positions. */
+    * first RENAME/DROP (rewrite_sorted's distributed mode declines such
+    * tables). Absent file = ids are schema positions. */
   case class ColMapping(ids: Seq[Int], nextId: Int, evolved: Boolean)
 
   /** One partition-spec transform: `kind` ∈ identity|bucket|days, `arg`
@@ -1525,68 +1505,68 @@ object GraftTableCatalog {
   def readManifest(dir: File, version: Long): Manifest =
     parseManifest(new File(dir, s"v$version.manifest"), version)
 
-  private[sources] def parseEntryLine(a: Array[String]): Entry = {
+  /** One segment entry line, as [[entryLine]] writes it: 17 tab-separated
+    * fields, ids and type codes for every column. Anything shorter or
+    * without them was written before manifest v2 and is refused. */
+  private[sources] def parseEntryLine(f: File, a: Array[String]): Entry = {
+    def preV2(why: String): Nothing = throw new IllegalStateException(
+      s"$f: $why; the table predates manifest v2 and must be recreated")
+    if (a.length < 17) preV2(s"an entry line has ${a.length} fields, not 17")
+    val cols = a(4).toInt
+    val ids = if (a(7).isEmpty) Seq.empty[Int]
+      else a(7).split(",").map(_.toInt).toSeq
+    if (ids.length != cols || a(8).length != cols ||
+        a(8).exists(c => "LDS".indexOf(c) < 0))
+      preV2(s"entry ${a(1)} lacks field ids or type codes")
+    def longs(i: Int): Map[String, Long] =
+      if (a(i) == "-") Map.empty
+      else a(i).split(";").map { s =>
+        val p = s.split(":"); (p(0), p(1).toLong)
+      }.toMap
     val stats = if (a(5).isEmpty) Map.empty[String, (Long, Long)]
       else a(5).split(";").map { s =>
         val p = s.split(":"); (p(0), (p(1).toLong, p(2).toLong))
       }.toMap
-    if (a.length >= 11) {
-      val nullFree = if (a(6) == "-") Set.empty[String]
-        else a(6).split(";").toSet
-      val ids = if (a(7).isEmpty) Seq.empty[Int]
-        else a(7).split(",").map(_.toInt).toSeq
-      val partition = if (a(9) == "-") Seq.empty[String]
-        else a(9).split(";").toSeq
-      val deletes = if (a(10) == "-") Seq.empty[DeleteFile]
-        else a(10).split(";").map { s =>
-          val p = s.split(":"); DeleteFile(p(0), p(1).toLong)
-        }.toSeq
-      val seq = if (a.length >= 12) a(11).toLong else 0L
-      val specId = if (a.length >= 13) a(12).toInt else 0
-      val sums = if (a.length >= 15 && a(13) != "-")
-        a(13).split(";").map { s =>
-          val p = s.split(":"); (p(0), p(1).toLong)
-        }.toMap
-      else Map.empty[String, Long]
-      val bloomCols = if (a.length >= 16 && a(14) != "-")
-        a(14).split(";").map(_.toInt).toSeq else Seq.empty[Int]
-      val ndv = if (a.length >= 16 && a(15) != "-")
-        a(15).split(";").map { s =>
-          val p = s.split(":"); (p(0), p(1).toLong)
-        }.toMap
-      else Map.empty[String, Long]
-      Entry(a(1), a(2).toLong, a(3).toLong, a(4).toInt, stats,
-        Some(nullFree), ids, a(8), partition, deletes, seq, specId, sums,
-        bloomCols, ndv)
-    } else {
-      // legacy (pre-v2) line: no null bookkeeping (nullFree = None →
-      // no metadata-only delete proof), ids/types positional
-      Entry(a(1), a(2).toLong, a(3).toLong, a(4).toInt, stats)
-    }
+    val nullFree = if (a(6) == "-") Set.empty[String]
+      else a(6).split(";").toSet
+    val partition = if (a(9) == "-") Seq.empty[String]
+      else a(9).split(";").toSeq
+    val deletes = if (a(10) == "-") Seq.empty[DeleteFile]
+      else a(10).split(";").map { s =>
+        val p = s.split(":"); DeleteFile(p(0), p(1).toLong)
+      }.toSeq
+    val bloomCols = if (a(14) == "-") Seq.empty[Int]
+      else a(14).split(";").map(_.toInt).toSeq
+    Entry(a(1), a(2).toLong, a(3).toLong, cols, stats, nullFree, ids, a(8),
+      partition, deletes, a(11).toLong, a(12).toInt, longs(13), bloomCols,
+      longs(15))
   }
 
   /** Parse one SEGMENT file (a block of F lines). Counted — the
     * planning-pruning pins read [[segmentsRead]]. */
   private[sources] def loadSegment(dir: File, name: String): Seq[Entry] = {
     segmentsRead.incrementAndGet()
-    new String(Files.readAllBytes(new File(dir, name).toPath),
+    val f = new File(dir, name)
+    new String(Files.readAllBytes(f.toPath),
       StandardCharsets.UTF_8).linesIterator.filter(_.nonEmpty)
-      .map(l => parseEntryLine(l.split("\t", -1))).toSeq
+      .map(l => parseEntryLine(f, l.split("\t", -1))).toSeq
   }
 
   /** The list-level pieces of a version manifest, WITHOUT loading any
-    * referenced segment: header, inline (legacy) entries, segment refs,
-    * eq-delete runs, epochs. Planning prunes `refs` by partition summary
-    * before reading a single segment; everything else loads eagerly via
-    * [[parseManifest]]. */
+    * referenced segment: header, segment refs, eq-delete runs, epochs.
+    * Planning prunes `refs` by partition summary before reading a single
+    * segment; everything else loads eagerly via [[parseManifest]]. File
+    * entries live only in segments: an inline `F` line is a pre-v2
+    * manifest and is refused. */
   private[sources] def parseManifestList(f: File)
-      : (String, Long, Seq[Entry], Seq[SegRef], Set[String], Seq[EqDelete]) = {
+      : (String, Long, Seq[SegRef], Set[String], Seq[EqDelete]) = {
     val lines = new String(Files.readAllBytes(f.toPath),
       StandardCharsets.UTF_8).linesIterator.filter(_.nonEmpty).toSeq
+    if (lines.exists(_.startsWith("F\t")))
+      throw new IllegalStateException(s"$f: inline F entries; the table " +
+        "predates manifest v2 and must be recreated")
     val op = lines.collectFirst { case l if l.startsWith("O\t") =>
       l.split("\t")(1) }.getOrElse("unknown")
-    val inline = lines.collect { case l if l.startsWith("F\t") =>
-      parseEntryLine(l.split("\t", -1)) }
     val refs = lines.collect { case l if l.startsWith("M\t") =>
       val a = l.split("\t", -1)
       SegRef(a(1), a(2).toLong, a(3).toLong, a(4).toLong, a(5))
@@ -1600,7 +1580,7 @@ object GraftTableCatalog {
       val a = l.split("\t")
       EqDelete(a(1), a(2).toLong, a(3).toLong)
     }
-    (op, commitMs, inline, refs, epochs, eq)
+    (op, commitMs, refs, epochs, eq)
   }
 
   /** Load a batch of segment files CONCURRENTLY (driver-side planning
@@ -1622,11 +1602,11 @@ object GraftTableCatalog {
     }
 
   private[sources] def parseManifest(f: File, version: Long): Manifest = {
-    val (op, commitMs, inline, refs, epochs, eq) = parseManifestList(f)
+    val (op, commitMs, refs, epochs, eq) = parseManifestList(f)
     val byName = loadSegments(f.getParentFile, refs.map(_.name))
     val segs = refs.map(r => Segment(r, byName(r.name)))
-    Manifest(version, op, inline ++ segs.flatMap(_.entries), epochs,
-      commitMs, eq, segs)
+    Manifest(version, op, segs.flatMap(_.entries), epochs, commitMs, eq,
+      segs)
   }
 
   /** The PLANNING view of a manifest: list-level facts (version, op,
@@ -1636,7 +1616,7 @@ object GraftTableCatalog {
     * whose partition ranges may match, not the whole file list. */
   private[sources] final class PlanManifest(val dir: File,
       val version: Long, val op: String, val epochs: Set[String],
-      val eqDeletes: Seq[EqDelete], inline: Seq[Entry], refs: Seq[SegRef]) {
+      val eqDeletes: Seq[EqDelete], refs: Seq[SegRef]) {
     private val cache =
       scala.collection.mutable.HashMap.empty[String, Seq[Entry]]
     /** Load the named segments, fetching the uncached ones in ONE
@@ -1646,23 +1626,22 @@ object GraftTableCatalog {
       if (missing.nonEmpty) cache ++= loadSegments(dir, missing)
       names.flatMap(cache)
     }
-    def files: Seq[Entry] = inline ++ segs(refs.map(_.name))
+    def files: Seq[Entry] = segs(refs.map(_.name))
     def pruned(filters: Array[Filter], schema: StructType, mp: ColMapping,
         specs: Seq[Seq[PT]]): Seq[Entry] =
       if (filters.isEmpty) files
-      else inline ++ segs(refs
+      else segs(refs
         .filter(r => segMayMatch(r.summary, filters, schema, mp, specs))
         .map(_.name))
   }
 
   private[sources] def emptyPlan(dir: File): PlanManifest =
-    new PlanManifest(dir, 0, "none", Set.empty, Seq.empty, Seq.empty,
-      Seq.empty)
+    new PlanManifest(dir, 0, "none", Set.empty, Seq.empty, Seq.empty)
 
   private[sources] def parsePlan(dir: File, f: File, version: Long)
       : PlanManifest = {
-    val (op, _, inline, refs, epochs, eq) = parseManifestList(f)
-    new PlanManifest(dir, version, op, epochs, eq, inline, refs)
+    val (op, _, refs, epochs, eq) = parseManifestList(f)
+    new PlanManifest(dir, version, op, epochs, eq, refs)
   }
 
   /** [[headManifest]]'s lazy twin for the read path. */
@@ -1690,7 +1669,7 @@ object GraftTableCatalog {
     val retained: Set[String] = ls
       .filter(f => f.getName.matches("v\\d+\\.manifest") ||
         (f.getName.startsWith("b-") && f.getName.endsWith(".manifest")))
-      .flatMap(f => parseManifestList(f)._4.map(_.name)).toSet
+      .flatMap(f => parseManifestList(f)._3.map(_.name)).toSet
     var n = 0L
     ls.foreach { f =>
       if (f.getName.startsWith("sg-") && f.getName.endsWith(".seg") &&
@@ -1757,18 +1736,8 @@ object GraftTableCatalog {
   private[sources] def entryLine(e: Entry): String = {
     val st = e.stats.toSeq.sortBy(_._1)
       .map { case (c, (lo, hi)) => s"$c:$lo:$hi" }.mkString(";")
-    val nf = e.nullFree match {
-      case Some(s) if s.isEmpty => "-"
-      case Some(s) => s.toSeq.sorted.mkString(";")
-      case None => "-" // writers always know; None only ever parses in
-    }
-    // a LEGACY entry (no recorded ids/types) must round-trip as legacy:
-    // fabricating positional ids here would satisfy the
-    // compact-before-RENAME/DROP guard while the '?' types still fall
-    // back to the current-schema prefix — after a DROP that prefix
-    // misaligns the codec and silently decodes garbage
-    val ids = e.fieldIds.mkString(",")
-    val types = if (e.typeCodes.nonEmpty) e.typeCodes else "?" * e.cols
+    val nf = if (e.nullFree.isEmpty) "-"
+      else e.nullFree.toSeq.sorted.mkString(";")
     val part = if (e.partition.isEmpty) "-" else e.partition.mkString(";")
     val dels = if (e.deletes.isEmpty) "-"
       else e.deletes.map(d => s"${d.name}:${d.rows}").mkString(";")
@@ -1781,7 +1750,7 @@ object GraftTableCatalog {
     val nv = if (e.ndv.isEmpty) "-"
       else e.ndv.toSeq.sortBy(_._1)
         .map { case (c, v) => s"$c:$v" }.mkString(";")
-    s"F\t${e.name}\t${e.rows}\t${e.bytes}\t${e.cols}\t$st\t$nf\t$ids\t$types\t$part\t$dels\t${e.seq}\t${e.specId}\t$sm\t$bl\t$nv\t-"
+    s"F\t${e.name}\t${e.rows}\t${e.bytes}\t${e.cols}\t$st\t$nf\t${e.fieldIds.mkString(",")}\t${e.typeCodes}\t$part\t$dels\t${e.seq}\t${e.specId}\t$sm\t$bl\t$nv\t-"
   }
 
   /** The partition-range summary planning prunes on (grammar on
@@ -2064,11 +2033,8 @@ object GraftTableCatalog {
       strVal: Map[String, String] = Map.empty,
       bucket: Map[String, (Int, Int)] = Map.empty)
 
-  /** Assemble [[FileFacts]] for one entry under the CURRENT schema.
-    * Stats keyed `#<id>` always resolve; legacy name-keyed stats resolve
-    * only while the table never renamed/dropped a column (`evolved` —
-    * after that, a stale name could alias a different field, so they are
-    * conservatively ignored). */
+  /** Assemble [[FileFacts]] for one entry under the CURRENT schema:
+    * stats and null proofs resolve by the column's field id (`#<id>`). */
   def fileFacts(e: Entry, schema: StructType, mp: ColMapping,
       spec: Seq[PT]): FileFacts = {
     var rng = Map.empty[String, (Long, Long)]
@@ -2076,18 +2042,14 @@ object GraftTableCatalog {
     var allNull = Set.empty[String]
     schema.fields.zipWithIndex.foreach { case (f, i) =>
       val id = mp.ids(i)
-      if (!e.idsOrLegacy.contains(id)) {
+      if (!e.fieldIds.contains(id)) {
         // the file PREDATES this column (or its id was dropped and
         // re-added): every read null-pads it — provably all-null, so
         // equality/IsNotNull predicates prune the file outright
         allNull += f.name
       } else {
-        e.stats.get(s"#$id")
-          .orElse(if (!mp.evolved) e.stats.get(f.name) else None)
-          .foreach(v => rng += f.name -> v)
-        val proven = e.nullFree.exists(s =>
-          s.contains(s"#$id") || (!mp.evolved && s.contains(f.name)))
-        if (proven) nullFree += f.name
+        e.stats.get(s"#$id").foreach(v => rng += f.name -> v)
+        if (e.nullFree(s"#$id")) nullFree += f.name
       }
     }
     var strVal = Map.empty[String, String]
@@ -2288,13 +2250,9 @@ object GraftTableCatalog {
     case _ => false
   }
 
-  /** Positional decode types for one file: recorded per entry (v2), or
-    * the current-schema prefix for legacy files (valid: legacy tables
-    * predate DROP COLUMN, so positions never shifted). */
-  private[sources] def fileTypes(e: Entry, schema: StructType): Array[String] =
-    if (e.typeCodes.nonEmpty && !e.typeCodes.contains('?'))
-      e.typeCodes.map(c => Codec.codeType(c).json).toArray
-    else schema.fields.take(e.cols).map(_.dataType.json)
+  /** Positional decode types for one file, as its entry recorded them. */
+  private[sources] def fileTypes(e: Entry): Array[String] =
+    e.typeCodes.map(c => Codec.codeType(c).json).toArray
 
   /** One reader task per data file: positional decode types, the
     * required projection's FILE positions (resolved by field id; -1 =
@@ -2307,7 +2265,7 @@ object GraftTableCatalog {
       keyVals: Array[Any] = Array.empty,
       eqCtx: Option[(Int, Seq[EqDelete])] = None,
       keysOnly: Array[String] = Array.empty): CatalogFilePartition = {
-    val fids = e.idsOrLegacy.toArray
+    val fids = e.fieldIds.toArray
     val srcIdx = required.fields.map { f =>
       if (f.name == FileMetaCol) -1
       else if (f.name == PosMetaCol) -3
@@ -2333,7 +2291,7 @@ object GraftTableCatalog {
       s"keys-only filter over ${e.name} without a resolvable key position")
     CatalogFilePartition(
       new File(new File(dir, "data"), e.name).getPath, e.name,
-      e.rows, fileTypes(e, tableSchema), srcIdx,
+      e.rows, fileTypes(e), srcIdx,
       e.deletes.map(d =>
         new File(new File(dir, "data"), d.name).getPath).toArray,
       positions, changeType, changeVersion, keyVals,
@@ -3383,8 +3341,7 @@ private class CatalogScanBuilder(dir: File, schema: StructType,
           val key = s"#${mp.ids(schema.fieldIndex(col))}"
           val per: Seq[Option[Option[Long]]] = sub.map { case (e, f) =>
             if (f.allNull(col)) Some(None)
-            else e.stats.get(key)
-              .orElse(if (!mp.evolved) e.stats.get(col) else None) match {
+            else e.stats.get(key) match {
               case Some(r) => Some(Some(if (lo) r._1 else r._2))
               case None => None
             }
@@ -3427,7 +3384,7 @@ private class CatalogScanBuilder(dir: File, schema: StructType,
               val per: Seq[Option[Option[Long]]] = sub.map { case (e, f) =>
                 if (f.allNull(col)) Some(None)
                 else if (f.rng.contains(col)) e.sums.get(key).map(Some(_))
-                else None // values unprovable (legacy / all-null-in-file)
+                else None // values unprovable (all-null-in-file)
               }
               if (per.exists(_.isEmpty)) None
               else {
@@ -3783,17 +3740,14 @@ private class CatalogScan(dir: File, tableSchema: StructType,
         if (tableSchema.fieldNames.contains(f.name)) {
           val id = mp.ids(tableSchema.fieldIndex(f.name))
           val key = s"#$id"
-          def statOf(e: Entry): Option[(Long, Long)] = e.stats.get(key)
-            .orElse(if (!mp.evolved) e.stats.get(f.name) else None)
-          val allNullFree = files.forall(e => e.nullFree.exists(s =>
-            s.contains(key) || (!mp.evolved && s.contains(f.name))))
+          val allNullFree = files.forall(_.nullFree(key))
           // ndv: estimated (sum of per-file linear-counting sketches,
           // capped at live rows); declined when any live file with rows
           // lacks a sketch for the column — an honest "unknown" beats a
           // confident undercount
           val dvOpt =
             if (totalRows > 0 && files.forall(e => e.rows == 0 ||
-                e.ndv.contains(key) || !e.idsOrLegacy.contains(id)))
+                e.ndv.contains(key) || !e.fieldIds.contains(id)))
               math.min(files.flatMap(_.ndv.get(key)).sum,
                 math.max(totalRows, 1L))
             else -1L
@@ -3808,11 +3762,11 @@ private class CatalogScan(dir: File, tableSchema: StructType,
             // file bounds the column (exact stats), is provably
             // value-free (predates the column, reads null-padded), or
             // DECLINES the whole estimate — stats-less entries prove
-            // nothing, so an evolved/legacy table never reports bounds
+            // nothing, so an evolved table never reports bounds
             // narrower than its data
             val per: Seq[Option[Option[(Long, Long)]]] = files.map { e =>
-              if (!e.idsOrLegacy.contains(id)) Some(None) // null-padded
-              else statOf(e).map(r => Some(r))
+              if (!e.fieldIds.contains(id)) Some(None) // null-padded
+              else e.stats.get(key).map(r => Some(r))
             }
             val (loOpt, hiOpt) =
               if (per.exists(_.isEmpty)) (None, None)
@@ -4666,7 +4620,7 @@ private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
           (ids(p), bloomSized(blooms(bi), rows))
         })
     Entry(name, rows, file.length(), types.length, statsMap,
-      Some(nullFree), ids.toSeq, types.map(Codec.typeCode).mkString,
+      nullFree, ids.toSeq, types.map(Codec.typeCode).mkString,
       tuple, Seq.empty, seq, specId, sumsMap,
       if (rows > 0) bloomPos.toSeq.map(ids(_)) else Seq.empty, ndvMap)
   }
@@ -5107,9 +5061,8 @@ private object FilesTable {
   * summary planning prunes on, and whether the segment was REUSED from
   * the prior version (the incremental-commit story made visible: a
   * healthy append chain shows every prior segment reused and one new
-  * one). Pre-segment legacy manifests surface their inline entries as
-  * one `-` row. Served from list-level metadata alone — no segment
-  * file is opened. */
+  * one). Served from list-level metadata alone — no segment file is
+  * opened. */
 private class ManifestsTable(dir: File, table: String) extends Table
     with SupportsRead {
   import GraftTableCatalog._
@@ -5125,22 +5078,16 @@ private class ManifestsTable(dir: File, table: String) extends Table
       override def planInputPartitions(): Array[InputPartition] = {
         val v = readLatest(dir)
         if (v == 0) return Array(FileRows(Seq.empty))
-        val (_, _, inline, refs, _, _) =
-          parseManifestList(new File(dir, s"v$v.manifest"))
+        val refs = parseManifestList(new File(dir, s"v$v.manifest"))._3
         val prior: Set[String] =
           if (v <= 1) Set.empty
           else parseManifestList(
-            new File(dir, s"v${v - 1}.manifest"))._4
+            new File(dir, s"v${v - 1}.manifest"))._3
             .map(_.name).toSet
-        val segRows = refs.map { r =>
+        Array(FileRows(refs.map { r =>
           Seq[Any](r.name, r.count, r.rows, r.bytes, r.summary,
             prior.contains(r.name))
-        }
-        val legacy =
-          if (inline.isEmpty) Seq.empty
-          else Seq(Seq[Any]("-", inline.length.toLong,
-            inline.map(_.rows).sum, inline.map(_.bytes).sum, "-", false))
-        Array(FileRows(segRows ++ legacy))
+        }))
       }
       override def createReaderFactory(): PartitionReaderFactory =
         FilesReaderFactory
@@ -5524,15 +5471,13 @@ private class CompactProcedure(cat: GraftTableCatalog)
         val latest = readLatest(dir)
         val m = readManifest(dir, latest)
         // candidates: small files, files carrying merge-on-read delete
-        // debt, files older than an outstanding equality delete (upsert
-        // debt), and pre-v2 files without field ids (compact is also the
-        // format upgrader — RENAME/DROP require ids)
+        // debt, and files older than an outstanding equality delete
+        // (upsert debt)
         val maxEqSeq = if (m.eqDeletes.isEmpty) 0L
           else m.eqDeletes.map(_.seq).max
         val eqCtx = upsertCtx(dir, schema, m.eqDeletes)
         val (cand, big) = m.files.partition(e =>
-          e.bytes < target || e.deletes.nonEmpty || e.fieldIds.isEmpty ||
-            e.seq < maxEqSeq)
+          e.bytes < target || e.deletes.nonEmpty || e.seq < maxEqSeq)
         val orderIdx = readProps(dir).get(WriteOrderByProp).toSeq
           .flatMap(_.split(",")).map(_.trim)
           .filter(schema.fieldNames.contains).map(schema.fieldIndex)
@@ -5552,7 +5497,7 @@ private class CompactProcedure(cat: GraftTableCatalog)
             }.map(_.reverse).reverse
             bins.map { bin =>
               if (bin.length == 1 && bin.head.deletes.isEmpty &&
-                  bin.head.fieldIds.nonEmpty && bin.head.seq >= maxEqSeq)
+                  bin.head.seq >= maxEqSeq)
                 bin.head // nothing to gain from a rewrite
               else {
                 val rows = bin.flatMap(e =>

@@ -395,6 +395,7 @@ class CatalogSpec extends SparkSpec {
       // ...so the post-crash replay of an already-committed epoch is a
       // NO-OP at the protocol level: no new version, no new rows
       val schema = GraftTableCatalog.readSchema(dir)
+      val ids = GraftTableCatalog.readMapping(dir, schema).ids
       // the replay arrives WITH freshly re-written task files: the no-op
       // commit must delete them, or they strand forever (referenced by no
       // manifest, so expire never touches them)
@@ -402,7 +403,8 @@ class CatalogSpec extends SparkSpec {
       java.nio.file.Files.write(staged.toPath, Array[Byte](1, 2, 3))
       new graft.sources.CatalogStreamingWrite(dir, schema, None, queryId)
         .commit(0L, Array(graft.sources.CatalogCommit(Seq(
-          GraftTableCatalog.Entry("fake-replay.bin", 1L, 3L, 2, Map.empty)))))
+          GraftTableCatalog.Entry("fake-replay.bin", 1L, 3L, 2, Map.empty,
+            Set.empty, ids, "LL")))))
       GraftTableCatalog.readLatest(dir) shouldBe versionsBefore
       staged.exists() shouldBe false
       rows(s"SELECT count(*) FROM $t") shouldBe Seq(Seq(landed.size + 1L))
@@ -414,7 +416,8 @@ class CatalogSpec extends SparkSpec {
       java.nio.file.Files.write(staged2.toPath, Array[Byte](1, 2, 3))
       new graft.sources.CatalogStreamingWrite(dir, schema, None, "other-q")
         .commit(0L, Array(graft.sources.CatalogCommit(Seq(
-          GraftTableCatalog.Entry("fresh-stream.bin", 0L, 3L, 2, Map.empty)))))
+          GraftTableCatalog.Entry("fresh-stream.bin", 0L, 3L, 2, Map.empty,
+            Set.empty, ids, "LL")))))
       GraftTableCatalog.readLatest(dir) shouldBe versionsBefore + 1
     }
     streamInto("strm", upsert = false)
@@ -1209,23 +1212,54 @@ class CatalogSpec extends SparkSpec {
   }
 
 
-  test("round-16 advice pins: legacy entries stay legacy through commits, live reservations never reclaim, CDF names reserved, RTAS respects view clash") {
-    // (1) forwarding a LEGACY entry (no field ids) through a commit must
-    // keep it legacy — fabricated ids would unlock RENAME/DROP while the
-    // '?' type codes still decode by current-schema prefix
+  test("pre-v2 manifests fail loudly: a short entry line, a '?' type code or an inline F line is refused with its file named") {
+    val t = freshTable("prev2", "k BIGINT, v BIGINT")
+    sql(s"INSERT INTO $t VALUES (1, 10)")
+    val dir = catFile("db/prev2")
+    val v = GraftTableCatalog.readLatest(dir)
+    val list = new File(dir, s"v$v.manifest")
+    val seg = new File(dir,
+      GraftTableCatalog.readManifest(dir, v).segs.head.ref.name)
+    def text(f: File) = new String(java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)
+    def put(f: File, s: String) = java.nio.file.Files.write(f.toPath,
+      s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val (listText, segText) = (text(list), text(seg))
+    val entry = segText.linesIterator.filter(_.nonEmpty).toSeq match {
+      case Seq(l) => l.split("\t", -1)
+      case ls => fail(s"one entry expected, got ${ls.length}")
+    }
+    entry.length shouldBe 17
+    def refused(f: File): Unit = {
+      val e = intercept[IllegalStateException](
+        GraftTableCatalog.readManifest(dir, v))
+      e.getMessage should include(f.getName)
+      e.getMessage should include("predates manifest v2")
+    }
+    // (1) a short (pre-v2) entry line in a segment; a query surfaces it too
+    put(seg, entry.take(11).mkString("\t") + "\n")
+    refused(seg)
+    def rootMsg(x: Throwable): String =
+      if (x == null) "" else x.getMessage + " | " + rootMsg(x.getCause)
+    rootMsg(intercept[Exception](sql(s"SELECT * FROM $t").collect())) should
+      include(seg.getName)
+    // (2) full length, but '?' type codes (no recorded storage types)
+    put(seg, entry.updated(8, "??").mkString("\t") + "\n")
+    refused(seg)
+    // (3) an inline F line in the manifest list itself
+    put(seg, segText)
+    put(list, listText + "\n" + entry.mkString("\t") + "\n")
+    refused(list)
+    put(list, listText)
+    rows(s"SELECT k, v FROM $t") shouldBe Seq(Seq(1L, 10L))
+  }
+
+  test("round-16 advice pins: live reservations never reclaim, CDF names reserved, RTAS respects view clash") {
     val t = freshTable("adv16", "k BIGINT, v BIGINT")
     sql(s"INSERT INTO $t VALUES (1, 10)")
     val dir = catFile("db/adv16")
-    val latest = GraftTableCatalog.readLatest(dir)
-    val m = GraftTableCatalog.readManifest(dir, latest)
-    val legacy = m.files.map(_.copy(fieldIds = Seq.empty, typeCodes = ""))
-    GraftTableCatalog.commitVersion(dir, latest, "append", legacy)
-    val reread = GraftTableCatalog.readManifest(dir, latest + 1)
-    reread.files.foreach(_.fieldIds shouldBe Seq.empty)
-    // ... and RENAME over such files demands sys.compact first
-    val err = intercept[Exception](
-      sql(s"ALTER TABLE $t RENAME COLUMN v TO w"))
-    err.getMessage should include("sys.compact")
+    val reread = GraftTableCatalog.readManifest(dir,
+      GraftTableCatalog.readLatest(dir))
     // (2) a FRESH zero-byte reservation is a live writer, not an orphan:
     // a racing commit must die loudly instead of reclaiming it
     val l2 = GraftTableCatalog.readLatest(dir)
@@ -1944,14 +1978,14 @@ class CatalogSpec extends SparkSpec {
     val clean = attrStats.get
     clean.min.map(_.toString.toLong) shouldBe Some(0L)
     clean.max.map(_.toString.toLong) shouldBe Some(999L)
-    // inject a LEGACY entry (no stats, no null bookkeeping): the column
-    // may now hold values outside [0,999] that nothing recorded —
-    // honest bounds must DECLINE, not keep the stale narrow range
+    // a live file the writer recorded WITHOUT stats (its LONG column is
+    // all NULL): nothing bounds that file's values, so honest bounds
+    // must DECLINE, not keep the narrow range of the other file
+    sql("INSERT INTO graft_cat.db.hb SELECT CAST(NULL AS BIGINT) " +
+      "FROM range(0, 5, 1, 1)")
     val m = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir))
-    GraftTableCatalog.commitVersion(dir, m.version, "append",
-      m.files :+ GraftTableCatalog.Entry("legacy-nostats.bin", 5L, 40L, 1,
-        Map.empty), m.epochs, m.eqDeletes)
+    m.files.map(_.stats.isEmpty) shouldBe Seq(false, true)
     attrStats match {
       case Some(cs) =>
         cs.min shouldBe None
