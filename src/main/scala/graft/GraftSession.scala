@@ -19,10 +19,12 @@ object GraftSession {
 
   /** The one root of the engine's on-disk state: the catalog, the
     * warehouse, the star-build memo and the fixtures all live under it.
-    * Absolute, so the directory a process is launched from never moves
-    * them; perfbench's build rewrites this one literal to give each run its
-    * own directory (`perfbench/build.sbt`). */
-  val WorkRoot: String = "/root/repo/work"
+    * It is `work` under the JVM's working directory, resolved once: sbt
+    * forks the tests in the checkout, a driver launched from the checkout
+    * lands there too, and perfbench starts each run in its own directory.
+    * So no two checkouts or benchmark runs share state; a process
+    * launched anywhere else starts cold. */
+  val WorkRoot: String = java.nio.file.Paths.get("work").toAbsolutePath.toString
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()

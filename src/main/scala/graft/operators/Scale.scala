@@ -91,45 +91,28 @@ object Scale {
     * regenerated in place, the spec no longer matches and the bucketed
     * copy is rebuilt instead of silently serving stale rows. */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int,
-      dataFingerprint: String = ""): Unit = {
-    val spark = df.sparkSession
-    val loc = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
+      dataFingerprint: String = ""): Unit =
     // The on-disk layout is only reusable if it was written with THIS exact
-    // spec — schema, key, and bucket count. A signature file next to
-    // _SUCCESS records the spec; any mismatch (changed bucket count,
-    // changed projection) forces a rebuild instead of silently attaching
-    // new metadata to an old physical layout. `1fpb` tags the one-file-
-    // per-bucket layout (below) so layouts written before it rebuild.
-    val spec = s"${df.schema.toDDL}|$key|$buckets|1fpb|$dataFingerprint"
-    val specFile = loc.resolve("_graft_bucket_spec")
-    val intact = java.nio.file.Files.exists(loc.resolve("_SUCCESS")) &&
-      java.nio.file.Files.exists(specFile) &&
-      new String(java.nio.file.Files.readAllBytes(specFile), "UTF-8") == spec
-    if (spark.catalog.tableExists(table) && intact) return
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    if (intact) {
-      // Files survive from a previous session; only the in-memory catalog
-      // forgot them. Re-attach the bucketing metadata over the same location.
-      spark.sql(
-        s"""CREATE TABLE $table (${df.schema.toDDL}) USING PARQUET
-           |CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS
-           |LOCATION '${loc.toUri}'""".stripMargin)
-      return
+    // spec — schema, key, and bucket count; any mismatch (changed bucket
+    // count, changed projection) forces a rebuild instead of silently
+    // attaching new metadata to an old physical layout. `1fpb` tags the
+    // one-file-per-bucket layout (below) so layouts written before it
+    // rebuild.
+    writeCatalogOnce(df, table, "_graft_bucket_spec",
+      s"${df.schema.toDDL}|$key|$buckets|1fpb|$dataFingerprint",
+      s"""CREATE TABLE $table (${df.schema.toDDL}) USING PARQUET
+         |CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS""".stripMargin) {
+      // ONE FILE PER BUCKET: a reader may only treat a bucket as sorted when
+      // the bucket is a single file — with the default many-writer layout
+      // (each task emits its own file per bucket) every bucketed merge join
+      // re-sorts both sides, defeating half the layout. repartition on the
+      // bucket key with numPartitions = buckets uses the same Murmur3
+      // hash-mod the bucket assignment uses, so each write task holds
+      // exactly one bucket and sortBy yields a genuinely sorted bucket the
+      // join consumes sort-free (PlanSpec pins zero Sort under q29's join).
+      df.repartition(buckets, col(key)).write.bucketBy(buckets, key).sortBy(key)
+        .mode("overwrite").saveAsTable(table)
     }
-    deleteRecursively(loc)
-    // ONE FILE PER BUCKET: a reader may only treat a bucket as sorted when
-    // the bucket is a single file — with the default many-writer layout
-    // (each task emits its own file per bucket) every bucketed merge join
-    // re-sorts both sides, defeating half the layout. repartition on the
-    // bucket key with numPartitions = buckets uses the same Murmur3
-    // hash-mod the bucket assignment uses, so each write task holds
-    // exactly one bucket and sortBy yields a genuinely sorted bucket the
-    // join consumes sort-free (PlanSpec pins zero Sort under q29's join).
-    df.repartition(buckets, col(key)).write.bucketBy(buckets, key).sortBy(key)
-      .mode("overwrite").saveAsTable(table)
-    java.nio.file.Files.write(specFile, spec.getBytes("UTF-8"))
-  }
 
   /** Plain write-once CATALOG table — [[writeBucketed]] without the bucket
     * layout: the same spec-file gating and fresh-session re-attach, but
@@ -138,26 +121,51 @@ object Scale {
     * catalog entry, which is what stats-driven planning (q239) consumes.
     * Data identity discipline is identical — a regenerated source parquet
     * flips the fingerprint and forces a rebuild. */
-  def writeTable(df: DataFrame, table: String, dataFingerprint: String = ""): Unit = {
-    val spark = df.sparkSession
-    val loc = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
-    val spec = s"${df.schema.toDDL}|$dataFingerprint"
-    val specFile = loc.resolve("_graft_table_spec")
+  def writeTable(df: DataFrame, table: String, dataFingerprint: String = ""): Unit =
+    writeCatalogOnce(df, table, "_graft_table_spec",
+      s"${df.schema.toDDL}|$dataFingerprint",
+      s"CREATE TABLE $table (${df.schema.toDDL}) USING PARQUET") {
+      df.write.mode("overwrite").saveAsTable(table)
+    }
+
+  /** The write-once gate every layout writer shares. The layout lives at
+    * `<warehouse>/<table>`; a `specName` file beside its `_SUCCESS`
+    * records the spec it was written under. When both are there and the
+    * spec matches, the files are reused as they are (`reuse`); otherwise
+    * the location is cleared, `write` lays the data out there, and the
+    * spec is recorded. Returns the location. */
+  private def writeOnceAt(df: DataFrame, table: String, specName: String,
+      spec: String)(reuse: java.nio.file.Path => Unit)(
+      write: java.nio.file.Path => Unit): java.nio.file.Path = {
+    val loc = java.nio.file.Paths.get(new java.net.URI(
+      df.sparkSession.conf.get("spark.sql.warehouse.dir")).getPath, table)
+    val specFile = loc.resolve(specName)
     val intact = java.nio.file.Files.exists(loc.resolve("_SUCCESS")) &&
       java.nio.file.Files.exists(specFile) &&
       new String(java.nio.file.Files.readAllBytes(specFile), "UTF-8") == spec
-    if (spark.catalog.tableExists(table) && intact) return
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    if (intact) {
-      spark.sql(
-        s"""CREATE TABLE $table (${df.schema.toDDL}) USING PARQUET
-           |LOCATION '${loc.toUri}'""".stripMargin)
-      return
+    if (intact) reuse(loc)
+    else {
+      deleteRecursively(loc)
+      write(loc)
+      java.nio.file.Files.write(specFile, spec.getBytes("UTF-8"))
     }
-    deleteRecursively(loc)
-    df.write.mode("overwrite").saveAsTable(table)
-    java.nio.file.Files.write(specFile, spec.getBytes("UTF-8"))
+    loc
+  }
+
+  /** [[writeOnceAt]] for a session-catalog table. Intact files from a
+    * previous session are re-attached by `createDdl` at the same location
+    * (only the in-memory catalog forgot them); a rebuild drops the old
+    * table first and `save`s a new one. */
+  private def writeCatalogOnce(df: DataFrame, table: String,
+      specName: String, spec: String, createDdl: String)(save: => Unit): Unit = {
+    val spark = df.sparkSession
+    writeOnceAt(df, table, specName, spec) { loc =>
+      if (!spark.catalog.tableExists(table))
+        spark.sql(s"$createDdl\nLOCATION '${loc.toUri}'")
+    } { _ =>
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      save
+    }
   }
 
   /** Idempotent `ANALYZE TABLE … COMPUTE STATISTICS FOR COLUMNS …`: a scan
@@ -197,18 +205,9 @@ object Scale {
     * files skips it. */
   def writePartitioned(df: DataFrame, table: String, partKey: String,
       dataFingerprint: String = ""): Layout = {
-    val spark = df.sparkSession
-    val loc = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
-    val spec = s"${df.schema.toDDL}|$partKey|$dataFingerprint"
-    val specFile = loc.resolve("_graft_part_spec")
-    val intact = java.nio.file.Files.exists(loc.resolve("_SUCCESS")) &&
-      java.nio.file.Files.exists(specFile) &&
-      new String(java.nio.file.Files.readAllBytes(specFile), "UTF-8") == spec
-    if (!intact) {
-      deleteRecursively(loc)
+    val loc = writeOnceAt(df, table, "_graft_part_spec",
+      s"${df.schema.toDDL}|$partKey|$dataFingerprint")(_ => ()) { loc =>
       df.write.partitionBy(partKey).mode("overwrite").parquet(loc.toString)
-      java.nio.file.Files.write(specFile, spec.getBytes("UTF-8"))
     }
     val (parts, data) = df.schema.partition(_.name == partKey)
     Layout(loc.toString, StructType(data ++ parts))
@@ -250,19 +249,10 @@ object Scale {
     * Returns the [[Layout]]. */
   def writeOnce(df: DataFrame, table: String, dataFingerprint: String,
       format: String = "parquet"): Layout = {
-    val spark = df.sparkSession
-    val loc = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
     val fmtKey = if (format == "parquet") "" else s"format=$format|"
-    val spec = s"${df.schema.toDDL}|$fmtKey$dataFingerprint"
-    val specFile = loc.resolve("_graft_spec")
-    val intact = java.nio.file.Files.exists(loc.resolve("_SUCCESS")) &&
-      java.nio.file.Files.exists(specFile) &&
-      new String(java.nio.file.Files.readAllBytes(specFile), "UTF-8") == spec
-    if (!intact) {
-      deleteRecursively(loc)
+    val loc = writeOnceAt(df, table, "_graft_spec",
+      s"${df.schema.toDDL}|$fmtKey$dataFingerprint")(_ => ()) { loc =>
       df.write.mode("overwrite").format(format).save(loc.toString)
-      java.nio.file.Files.write(specFile, spec.getBytes("UTF-8"))
     }
     Layout(loc.toString, df.schema, format)
   }
