@@ -20,10 +20,10 @@ object GraftSession {
   /** The one root of the engine's on-disk state: the catalog, the
     * warehouse, the star-build memo and the fixtures all live under it.
     * It is `work` under the JVM's working directory, resolved once: sbt
-    * forks the tests in the checkout, a driver launched from the checkout
-    * lands there too, and perfbench starts each run in its own directory.
-    * So no two checkouts or benchmark runs share state; a process
-    * launched anywhere else starts cold. */
+    * forks the tests in the checkout, Bench and Verify launched from the
+    * checkout land there too, and perfbench starts each run in its own
+    * directory. So no two checkouts or benchmark runs share state; a
+    * process launched anywhere else starts cold. */
   val WorkRoot: String = java.nio.file.Paths.get("work").toAbsolutePath.toString
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
