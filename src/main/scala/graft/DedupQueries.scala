@@ -120,23 +120,6 @@ object DedupQueries {
   val q110CdcChunks: Q = (s, d) =>
     cdcChunks(Tables.documentsDistributed(s, d))
 
-  /** The composable cut scan — the definition the native `cdc_cuts`
-    * expression must reproduce bit-for-bit (ExprEquivalenceSpec pins the
-    * equality). */
-  private[graft] def cdcCutsComposable: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.types.LongType
-    // boundary candidates W..len (guard: sequence() auto-steps DOWN when
-    // len < W and would invent phantom positions — the q47/q86 edge)
-    val cutsRaw = when(length(col("text")) < CDC_W, array().cast("array<long>"))
-      .otherwise(filter(
-        sequence(lit(CDC_W.toLong), length(col("text")).cast(LongType)),
-        i => pmod(TextOps.hash60(
-          substr(col("text"), (i - lit(CDC_W - 1)).cast("int"), lit(CDC_W))),
-          lit(CDC_MASK.toLong)) === 0L))
-    array_sort(array_distinct(concat(
-      array(lit(0L)), cutsRaw, array(length(col("text")).cast(LongType)))))
-  }
-
   /** The chunker over any (doc_id, text) frame — OperationalSpec drives it
     * with an edited twin to pin the boundary-locality property (a prefix
     * edit must leave suffix chunk digests intact). */

@@ -13,7 +13,9 @@ import org.apache.spark.sql.SparkSession
   *    otherwise rejects — surface it as int64 nanos and convert explicitly;
   *  - AQE on (runtime re-plan: skew joins, partition coalescing at scale);
   *  - shuffle partitions sized to the local core count (on a real cluster
-  *    this would be ~2-3× total executor cores, or left to AQE).
+  *    this would be ~2-3× total executor cores, or left to AQE);
+  *  - `file:` paths go through [[graft.sources.NioLocalFileSystem]], which
+  *    sets file modes with a `java.nio` call instead of forking `chmod`.
   */
 object GraftSession {
 
@@ -60,6 +62,14 @@ object GraftSession {
       // tables (bucketed joins) must land under the work root wherever
       // the process is launched from.
       .config("spark.sql.warehouse.dir", s"$WorkRoot/warehouse")
+      // Without libhadoop.so, Hadoop's local FileSystem forks `chmod` for
+      // every file and directory a parquet write or commit creates (about
+      // 62 processes per cold star build); this one sets the same mode
+      // through java.nio. Hadoop caches FileSystems by scheme and user,
+      // not conf, so the first `file:` instance in the JVM is the one every
+      // caller gets: build the session before any other Hadoop file access.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.NioLocalFileSystem].getName)
       .config("spark.ui.enabled", "false")
       // The UI is off, but every execution still feeds the driver's
       // in-memory status store — at Spark defaults it retains 1000 jobs,

@@ -135,7 +135,7 @@ object GraphQueries {
     * physical modes (and pinned by PlanSpec per mode) — the node-side
     * `shape` hook is `broadcast` below the threshold and a shuffle_hash
     * hint above it, so the semantics can never drift between paths. */
-  private def pagerankRound(edgeDeg: org.apache.spark.sql.DataFrame,
+  private[graft] def pagerankRound(edgeDeg: org.apache.spark.sql.DataFrame,
                             ranks: org.apache.spark.sql.DataFrame,
                             shape: org.apache.spark.sql.DataFrame =>
                               org.apache.spark.sql.DataFrame)
@@ -224,17 +224,6 @@ object GraphQueries {
     val ranks = deg.select(col("src").as("node"), lit(PR_SCALE).as("r"))
       .localCheckpoint(true)
     (edgeDeg, ranks)
-  }
-
-  /** One keyed PageRank round over pre-pinned inputs, exposed for the
-    * PlanSpec pin — the rank side routes through [[nodeShape]] exactly
-    * like the production loop. */
-  private[graft] def pagerankKeyedRoundFragment(
-      s: org.apache.spark.sql.SparkSession,
-      edgeDeg: org.apache.spark.sql.DataFrame,
-      ranks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val np = s.sessionState.conf.numShufflePartitions
-    pagerankRound(edgeDeg, ranks, df => nodeShape(keyed = true, np)(df, "node"))
   }
 
   /** q178: k-hop BFS — exact minimum-hop distances from a seed set (the
@@ -355,7 +344,7 @@ object GraphQueries {
   /** Node-side physical shape: broadcast below the threshold, a
     * co-partitioned build-side hash above it — the ONE hook both loop
     * modes and the PlanSpec fragments share. */
-  private def nodeShape(keyed: Boolean, np: Int)
+  private[graft] def nodeShape(keyed: Boolean, np: Int)
       : (org.apache.spark.sql.DataFrame, String) =>
         org.apache.spark.sql.DataFrame =
     (df, key) =>
@@ -364,7 +353,7 @@ object GraphQueries {
 
   /** One frontier expansion: edges ⋈ frontier → dst-distinct → anti-join
     * the visited set; shared verbatim by both physical modes. */
-  private def bfsRound(edges: org.apache.spark.sql.DataFrame,
+  private[graft] def bfsRound(edges: org.apache.spark.sql.DataFrame,
                        frontier: org.apache.spark.sql.DataFrame,
                        visited: org.apache.spark.sql.DataFrame,
                        i: Int,
@@ -376,49 +365,6 @@ object GraphQueries {
       .join(shape(visited.select(col("node").as("vnode")), "vnode"),
         col("node") === col("vnode"), "left_anti")
       .select(col("node")).withColumn("dist", lit(i.toLong))
-
-  /** One unexecuted BROADCAST-mode BFS round, for the PlanSpec pin — the
-    * per-round shape the loop repeats (the loop's lineage cuts mean the
-    * final plan no longer carries every round, so the pin reads the
-    * fragment, exactly like the keyed-mode pins). */
-  private[graft] def bfsBroadcastRoundFragment(
-      s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val np = s.sessionState.conf.numShufflePartitions
-    val edges = bipartiteEdges(s, d)
-    val seeds = Tables.customer(s, d).filter(col("c_nationkey") === 0)
-      .select((col("c_custkey") * 2).as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    bfsRound(edges, seeds.select(col("node")), seeds, 1,
-      nodeShape(keyed = false, np))
-  }
-
-  /** One unexecuted BROADCAST-mode SSSP relaxation round, for the PlanSpec
-    * pin (see [[bfsBroadcastRoundFragment]]). */
-  private[graft] def ssspBroadcastRoundFragment(
-      s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val np = s.sessionState.conf.numShufflePartitions
-    val edges = bipartiteEdges(s, d).withColumn("w", lit(1L))
-    val dist = Tables.customer(s, d).filter(col("c_nationkey") === 0)
-      .select((col("c_custkey") * 2).as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    ssspRound(edges, dist, nodeShape(keyed = false, np))
-  }
-
-  /** Keyed setup + one unexecuted BFS round, for the PlanSpec pin. */
-  private[graft] def bfsKeyedRoundFragment(s: org.apache.spark.sql.SparkSession,
-                                           d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val np = s.sessionState.conf.numShufflePartitions
-    val edges = bipartiteEdges(s, d)
-      .repartition(np, col("src")).persist()
-    val seeds = Tables.customer(s, d).filter(col("c_nationkey") === 0)
-      .select((col("c_custkey") * 2).as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    bfsRound(edges, seeds.select(col("node")), seeds, 1,
-      nodeShape(keyed = true, np))
-  }
 
   private val BFS_HOPS = 3
   private val SSSP_HOPS = 4
@@ -514,7 +460,7 @@ object GraphQueries {
   }
 
   /** One Bellman-Ford relaxation round, shared verbatim by both modes. */
-  private def ssspRound(edges: org.apache.spark.sql.DataFrame,
+  private[graft] def ssspRound(edges: org.apache.spark.sql.DataFrame,
                         dist: org.apache.spark.sql.DataFrame,
                         shape: (org.apache.spark.sql.DataFrame, String) =>
                           org.apache.spark.sql.DataFrame)
@@ -523,19 +469,6 @@ object GraphQueries {
       .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
       .unionByName(dist)
       .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-
-  /** Keyed setup + one unexecuted SSSP round, for the PlanSpec pin. */
-  private[graft] def ssspKeyedRoundFragment(s: org.apache.spark.sql.SparkSession,
-                                            d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val np = s.sessionState.conf.numShufflePartitions
-    val edges = bipartiteEdges(s, d).withColumn("w", lit(1L))
-      .repartition(np, col("src")).persist()
-    val dist = Tables.customer(s, d).filter(col("c_nationkey") === 0)
-      .select((col("c_custkey") * 2).as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    ssspRound(edges, dist, nodeShape(keyed = true, np))
-  }
 
   /** q191: connected components by STAR CONTRACTION (Kiveris et al.
     * SoCC'14) — the O(log n)-round algorithm that replaces q44's

@@ -265,43 +265,6 @@ object RetrievalQueries {
     (mergeDf, seqs)
   }
 
-  /** The one-merge-per-round sequential learner (the pre-batching shape):
-    * q90's semantic anchor — OperationalSpec proves bpeState(batch = 1)
-    * reproduces it merge-for-merge and bit-for-bit on the real corpus,
-    * and that batching itself is invisible when the batch is
-    * conflict-free. Never the production path (R merges = R driver
-    * round trips and R-deep lineage). */
-  private[graft] def bpeStateSeq(docs: org.apache.spark.sql.DataFrame,
-                                 rounds: Int) = {
-    val wf = docs.filter(col("text").isNotNull)
-      .select(explode(TextOps.words(col("text"))).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-    val chars = transform(sequence(lit(1), length(col("word"))),
-      i => substr(col("word"), i, lit(1)))
-    var seqs = wf.select(col("word"), col("freq"),
-      concat(lit(" "), array_join(chars, "  "), lit(" ")).as("seq"))
-    val merges = (1 to rounds).map { round =>
-      val toks = split(trim(col("seq")), "  ")
-      val best = seqs
-        .select(col("freq"), explode(zip_with(
-          slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
-          (a, b) => struct(a.as("ta"), b.as("tb")))).as("p"))
-        .groupBy(col("p.ta").as("term_a"), col("p.tb").as("term_b"))
-        .agg(sum(col("freq")).as("pair_count"))
-        .orderBy(col("pair_count").desc, col("term_a"), col("term_b"))
-        .limit(1)
-      seqs = seqs.crossJoin(broadcast(best))
-        .select(col("word"), col("freq"),
-          replace(col("seq"),
-            concat(lit(" "), col("term_a"), lit("  "), col("term_b"), lit(" ")),
-            concat(lit(" "), col("term_a"), col("term_b"), lit(" "))).as("seq"))
-      best.select(lit(round).as("round"), col("term_a"), col("term_b"),
-        col("pair_count"))
-    }
-    (merges.reduce(_ union _), seqs)
-  }
-
   /** q102: BPE encoding — APPLY the q90-learned merges: every corpus word
     * with its frequency and its final subword segmentation after
     * [[BPE_BATCH_ROUNDS]] batched rounds (the tokenizer-apply step between

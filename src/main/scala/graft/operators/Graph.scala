@@ -162,7 +162,7 @@ object Graph {
         // per-round signature job doubles as the set-equality probe, and
         // only the round whose signatures match pays the exact `except`
         // confirmation below.
-        val next = smallStar(largeStar(cur)).localCheckpoint(false)
+        val next = oneRound(cur).localCheckpoint(false)
         rounds += 1
         val nextSig = edgeSetSig(next)
         // The signature gates WHICH round pays an exact check; the exact
@@ -261,26 +261,7 @@ object Graph {
       .distinct()
   }
 
-  /** One (large-star + small-star) round — the fragment the loop repeats;
-    * exposed so PlanSpec can pin its physical shape. */
+  /** One (large-star + small-star) round — the fragment the loop repeats,
+    * and the one PlanSpec pins. */
   def oneRound(edges: DataFrame): DataFrame = smallStar(largeStar(edges))
-
-  /** q44's primitive at its honest cost, exposed for the round-count
-    * comparison spec: k rounds of min-label propagation; returns labels
-    * after EXACTLY k rounds (converged or not). */
-  def minLabelRounds(edges: DataFrame, k: Int): DataFrame = {
-    val sym = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
-    val nodes = sym.select(col("src").as("node")).distinct()
-    var labels = nodes.select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
-    for (_ <- 1 to k) {
-      val viaNeighbor = sym.join(labels, sym("dst") === labels("node"))
-        .select(sym("src").as("node"), col("label"))
-      labels = labels.select(col("node"), col("label")).union(viaNeighbor)
-        .groupBy(col("node")).agg(min(col("label")).as("label"))
-        .localCheckpoint(true)
-    }
-    labels
-  }
 }

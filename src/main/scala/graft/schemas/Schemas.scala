@@ -23,31 +23,6 @@ object Schemas {
   // Sparkify staging layer (sql_queries.py:28-64)
   // -------------------------------------------------------------------------
 
-  /** `staging_events` (sql_queries.py:28-49). Raw-JSON shape: `ts` and
-    * `registration` arrive as epoch-millis numbers (README.md:39-42;
-    * `registration` is a *float* ms value), `userId` as a string. The typed
-    * conversions happen in the jsonpaths projection, not here.
-    */
-  val stagingEventsRaw: StructType = StructType(Seq(
-    StructField("artist", StringType),
-    StructField("auth", StringType),
-    StructField("firstName", StringType),
-    StructField("gender", StringType),
-    StructField("itemInSession", IntegerType),
-    StructField("lastName", StringType),
-    StructField("length", DecimalType(12, 4)),
-    StructField("level", StringType),
-    StructField("location", StringType),
-    StructField("method", StringType),
-    StructField("page", StringType),
-    StructField("registration", DoubleType),   // float epoch-ms
-    StructField("sessionId", IntegerType),
-    StructField("song", StringType),
-    StructField("status", StringType),         // JSON number → varchar(10)
-    StructField("ts", LongType),               // epoch-ms
-    StructField("userAgent", StringType),
-    StructField("userId", StringType)))        // JSON string → int on project
-
   /** `staging_events` post-conversion (timestamps + int userId), the shape
     * the star build consumes (sql_queries.py:41,45,47). */
   val stagingEvents: StructType = StructType(Seq(

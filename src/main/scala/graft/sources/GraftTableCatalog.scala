@@ -1243,27 +1243,6 @@ object GraftTableCatalog {
   def readManifest(dir: File, version: Long): Manifest =
     parseManifest(new File(dir, s"v$version.manifest"), version)
 
-  /** Test doorway: a zero-grace sweep lets specs observe segment GC
-    * without waiting out the reclaim window. */
-  def gcSegmentsForTest(dir: File, graceMs: Long): Long =
-    gcSegments(dir, graceMs)
-
-  /** Test doorway: build an adaptively-sized bloom over `n` distinct
-    * longs, probe `probes` absent keys — (shipped words, measured fp). */
-  def bloomFpForTest(n: Int, probes: Int): (Int, Double) = {
-    val bits = new Array[Long](BloomWords)
-    var i = 0
-    while (i < n) { bloomSet(bits, bloomMixLong(i.toLong)); i += 1 }
-    val sized = bloomSized(bits, n.toLong)
-    var fp = 0
-    var j = 0
-    while (j < probes) {
-      if (bloomMightContain(sized, bloomMixLong((n + j).toLong))) fp += 1
-      j += 1
-    }
-    (sized.length, fp.toDouble / probes)
-  }
-
   /** Segment count ceiling: beyond it a commit folds the smallest half
     * into its new segment (array-doubling amortization — a full fold
     * costs O(folded entries) once per ~MaxSegments/2 commits, keeping

@@ -426,8 +426,8 @@ private class CatalogScanBuilder(dir: File, schema: StructType,
     *    (then every live row counts, deletes included);
     *  - MIN/MAX(col): LONG stats over non-null values (SQL min/max
     *    ignore nulls, same domain); any position delete on any file
-    *    declines — the extremal row may be the deleted one; every file
-    *    must either carry bounds for the column or prove it all-null. */
+    *    declines — the extremal row may be the deleted one; a file
+    *    without stats for the column holds no value of it. */
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Boolean = {
@@ -486,28 +486,19 @@ private class CatalogScanBuilder(dir: File, schema: StructType,
       def extremum(col: String, lo: Boolean): Option[Any] =
         if (hasPosDeletes || schema(col).dataType != LongType) None
         else {
-          // per file: Some(None) = provably all-null (contributes
-          // nothing), Some(Some(b)) = bound, None = unprovable → decline.
-          // Read the EXACT per-file stats, never facts.rng: for a
-          // days()-transform source column, fileFacts overwrites the
-          // stats with the synthesized day-wide pruning range
-          // [dayStart, dayStart+86399999] — sound for skipping, but an
-          // extremum served from it would be a value no row holds.
+          // The writer records a LONG column's stats exactly when the
+          // file holds a non-null value, so a file without them is
+          // value-free (all-null, or it predates the column) and
+          // contributes nothing. Read the EXACT per-file stats, never
+          // facts.rng: for a days()-transform source column, fileFacts
+          // overwrites the stats with the synthesized day-wide pruning
+          // range [dayStart, dayStart+86399999] — sound for skipping,
+          // but an extremum served from it would be a value no row holds.
           val key = s"#${mp.ids(schema.fieldIndex(col))}"
-          val per: Seq[Option[Option[Long]]] = sub.map { case (e, f) =>
-            if (f.allNull(col)) Some(None)
-            else e.stats.get(key) match {
-              case Some(r) => Some(Some(if (lo) r._1 else r._2))
-              case None => None
-            }
-          }
-          if (per.exists(_.isEmpty)) None
-          else {
-            val bounds = per.flatten.flatten
-            Some(if (bounds.isEmpty) null
-              else if (lo) (bounds.min: java.lang.Long)
-              else (bounds.max: java.lang.Long))
-          }
+          val bounds = sub.flatMap(_._1.stats.get(key)).map(r => if (lo) r._1 else r._2)
+          Some(if (bounds.isEmpty) null
+            else if (lo) (bounds.min: java.lang.Long)
+            else (bounds.max: java.lang.Long))
         }
       val cols = agg.aggregateExpressions().toSeq.map {
         case _: CountStar =>
@@ -528,18 +519,17 @@ private class CatalogScanBuilder(dir: File, schema: StructType,
             .map(v => ("max", LongType, true, v)))
         case s: Sum if !s.isDistinct =>
           // per-file EXACT sums over non-null values (the manifest's
-          // `sums` field): same proof shape as min/max — every file must
-          // either carry the sum or be provably value-free for the
-          // column; deletes or a recorded-overflow file decline; the
-          // final fold declines on overflow too (ANSI would fail there)
+          // `sums` field): same proof shape as min/max — a file without
+          // stats for the column is value-free, a file with stats must
+          // carry the sum; deletes or a recorded-overflow file decline;
+          // the final fold declines on overflow too (ANSI would fail there)
           colOf(s.column()).flatMap { col =>
             if (hasPosDeletes || schema(col).dataType != LongType) None
             else {
               val key = s"#${mp.ids(schema.fieldIndex(col))}"
-              val per: Seq[Option[Option[Long]]] = sub.map { case (e, f) =>
-                if (f.allNull(col)) Some(None)
-                else if (f.rng.contains(col)) e.sums.get(key).map(Some(_))
-                else None // values unprovable (all-null-in-file)
+              val per: Seq[Option[Option[Long]]] = sub.map { case (e, _) =>
+                if (!e.stats.contains(key)) Some(None)
+                else e.sums.get(key).map(Some(_))
               }
               if (per.exists(_.isEmpty)) None
               else {
@@ -907,29 +897,16 @@ private class CatalogScan(dir: File, tableSchema: StructType,
                 math.max(totalRows, 1L))
             else -1L
           if (f.dataType == LongType) {
-            // HONEST bounds — the extremum discipline on the estimate
-            // surface: min/max report only when EVERY live file either
-            // carries exact stats for the column or is provably
-            // value-free (all-null in-file, or it predates the column
-            // and reads null-padded); an evolved table never reports
-            // bounds narrower than its data
-            // same tri-state as the MIN/MAX pushdown's extremum proof: a
-            // file bounds the column (exact stats), is provably
-            // value-free (predates the column, reads null-padded), or
-            // DECLINES the whole estimate — stats-less entries prove
-            // nothing, so an evolved table never reports bounds
-            // narrower than its data
-            val per: Seq[Option[Option[(Long, Long)]]] = files.map { e =>
-              if (!e.fieldIds.contains(id)) Some(None) // null-padded
-              else e.stats.get(key).map(r => Some(r))
-            }
+            // HONEST bounds — the MIN/MAX pushdown's extremum proof on
+            // the estimate surface: the writer records a LONG column's
+            // exact stats whenever the file holds a non-null value, so
+            // every live file either bounds the column or is value-free
+            // (all-null in-file, or it predates the column and reads
+            // null-padded); the bounds are never narrower than the data
+            val bs = files.flatMap(_.stats.get(key))
             val (loOpt, hiOpt) =
-              if (per.exists(_.isEmpty)) (None, None)
-              else {
-                val bs = per.flatten.flatten
-                if (bs.isEmpty) (None, None)
-                else (Some(bs.map(_._1).min), Some(bs.map(_._2).max))
-              }
+              if (bs.isEmpty) (None, None)
+              else (Some(bs.map(_._1).min), Some(bs.map(_._2).max))
             val dv =
               if (dvOpt > 0) dvOpt
               else (loOpt, hiOpt) match {
@@ -939,16 +916,15 @@ private class CatalogScan(dir: File, tableSchema: StructType,
                     .toLong
                 case _ => -1L
               }
-            // histogram only when bounds did NOT decline — every live
-            // file contributed an exact span, so the piecewise density
-            // is honest
+            // histogram from every file's exact span; value-free files
+            // add none
             val hist =
               if (loOpt.isEmpty) None
               else manifestHistogram(
-                files.zip(per).collect {
-                  case (e, Some(Some((lo, hi)))) if e.liveRows > 0 =>
+                files.flatMap(e => e.stats.get(key).collect {
+                  case (lo, hi) if e.liveRows > 0 =>
                     (lo, hi, e.liveRows, e.ndv.getOrElse(key, 0L))
-                }, totalRows)
+                }), totalRows)
             if (loOpt.isDefined || allNullFree || dv > 0)
               put(f.name, loOpt, hiOpt, allNullFree, dv, 8L, hist)
           } else if (f.dataType == StringType) {

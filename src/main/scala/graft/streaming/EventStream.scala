@@ -94,13 +94,6 @@ object EventStream {
       }
   }
 
-  /** Run the windowed aggregation as a stream over a JSON feed directory
-    * into an in-memory table; used by the streaming spec. */
-  def runWindowedToMemory(spark: SparkSession, dir: String, queryName: String) =
-    windowedAgg(readEventsJson(spark, dir))
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete()).start()
-
   /** Stream-stream inner join with an event-time range: each left event
     * pairs with right events of the SAME user within ±`minutes` of event
     * time. Both sides carry watermarks, and the range condition bounds how

@@ -1808,9 +1808,9 @@ class CatalogSpec extends SparkSpec {
       Seq(0L, Double.PositiveInfinity, "x" * 100000),
       Seq(42L, 1.5e-300, "μδ→"),
       Seq(Long.MaxValue, Double.NaN, "abcd")))
-    // extreme values stay exact through the new encoder (the file with
-    // the all-NULL k row has no k stats, so this scans — correctness
-    // check; the 0-file metadata proof runs on vecs below)
+    // extreme values stay exact through the new encoder (a file holding
+    // only the all-NULL k row has no k stats and holds no k value —
+    // correctness check; the 0-file metadata proof runs on vecs below)
     rows("SELECT min(k), max(k), count(*) FROM graft_cat.db.vecw") shouldBe
       Seq(Seq(Long.MinValue, Long.MaxValue, 5L))
     // a sum that never overflows IS recorded
@@ -1960,7 +1960,7 @@ class CatalogSpec extends SparkSpec {
     planOff should include ("SortMergeJoin")
   }
 
-  test("honest CBO bounds: a live file without exact stats declines min/max instead of reporting bounds narrower than the data") {
+  test("honest CBO bounds: a live file without stats for a LONG column is value-free, so min/max keep the other files' bounds and MIN/MAX answers from the manifest") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
     sql("DROP TABLE IF EXISTS graft_cat.db.hb")
     sql("CREATE TABLE graft_cat.db.hb AS SELECT id AS k " +
@@ -1978,20 +1978,23 @@ class CatalogSpec extends SparkSpec {
     val clean = attrStats.get
     clean.min.map(_.toString.toLong) shouldBe Some(0L)
     clean.max.map(_.toString.toLong) shouldBe Some(999L)
-    // a live file the writer recorded WITHOUT stats (its LONG column is
-    // all NULL): nothing bounds that file's values, so honest bounds
-    // must DECLINE, not keep the narrow range of the other file
+    // a live file the writer recorded WITHOUT stats: the writer records a
+    // LONG column's min/max exactly when the file holds a non-null value,
+    // so this file holds none and the bounds stay the other file's
     sql("INSERT INTO graft_cat.db.hb SELECT CAST(NULL AS BIGINT) " +
       "FROM range(0, 5, 1, 1)")
     val m = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir))
     m.files.map(_.stats.isEmpty) shouldBe Seq(false, true)
-    attrStats match {
-      case Some(cs) =>
-        cs.min shouldBe None
-        cs.max shouldBe None
-      case None => () // no column stat at all is equally honest
-    }
+    val mixed = attrStats.get
+    mixed.min.map(_.toString.toLong) shouldBe Some(0L)
+    mixed.max.map(_.toString.toLong) shouldBe Some(999L)
+    // the MIN/MAX and SUM pushdowns take the same proof: no data file is
+    // opened
+    GraftTableCatalog.filesOpened.set(0)
+    rows("SELECT min(k), max(k), sum(k), count(*) FROM graft_cat.db.hb") shouldBe
+      Seq(Seq(0L, 999L, 499500L, 1005L))
+    GraftTableCatalog.filesOpened.get shouldBe 0L
   }
 
   test("column statistics reach the CBO: a selective range filter flips the join to broadcast; stats off keeps the shuffle") {
@@ -2340,7 +2343,7 @@ class CatalogSpec extends SparkSpec {
     segsOnDisk shouldBe allSegs
     // a zero-grace sweep (test-only) collects exactly the segments that
     // no surviving manifest references
-    GraftTableCatalog.gcSegmentsForTest(dir, 0L)
+    sources.CatalogSpecDoors.gcSegments(dir, 0L)
     val live = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir)).segs.map(_.ref.name).toSet
     segsOnDisk shouldBe live
@@ -2350,13 +2353,13 @@ class CatalogSpec extends SparkSpec {
 
   test("adaptive bloom sizing: fp <= 2% at 125k rows/file, small files ship small sidecars; DELETE keeps bloom-disproven boundary files unread") {
     // sizing + measured fp straight off the writer's fold logic
-    val (words125k, fp125k) = GraftTableCatalog.bloomFpForTest(125000, 20000)
+    val (words125k, fp125k) = sources.CatalogSpecDoors.bloomFp(125000, 20000)
     words125k shouldBe 32768 // 256 KiB cap holds the fp target
     fp125k should be <= 0.02
-    val (words1k, fp1k) = GraftTableCatalog.bloomFpForTest(1000, 20000)
+    val (words1k, fp1k) = sources.CatalogSpecDoors.bloomFp(1000, 20000)
     words1k should be <= 256 // ~2 KiB shipped for a 1k-row file
     fp1k should be <= 0.02
-    val (words50k, fp50k) = GraftTableCatalog.bloomFpForTest(50000, 20000)
+    val (words50k, fp50k) = sources.CatalogSpecDoors.bloomFp(50000, 20000)
     fp50k should be <= 0.02
     words50k should be <= 16384
     // end-to-end: a 125k-row single file + an absent-key point DELETE —
@@ -2787,4 +2790,32 @@ class CatalogSpec extends SparkSpec {
     sql("DROP TABLE graft_cat.db.zde")
   }
 
+}
+
+package sources {
+  /** CatalogSpec's doors into the catalog's package-private helpers. */
+  private[graft] object CatalogSpecDoors {
+    import CatalogFormat._
+
+    /** A sweep with grace `graceMs`: zero lets the spec observe segment
+      * GC without waiting out the reclaim window. */
+    def gcSegments(dir: File, graceMs: Long): Long =
+      CatalogManifests.gcSegments(dir, graceMs)
+
+    /** Build an adaptively-sized bloom over `n` distinct longs, probe
+      * `probes` absent keys — (shipped words, measured fp). */
+    def bloomFp(n: Int, probes: Int): (Int, Double) = {
+      val bits = new Array[Long](BloomWords)
+      var i = 0
+      while (i < n) { bloomSet(bits, bloomMixLong(i.toLong)); i += 1 }
+      val sized = bloomSized(bits, n.toLong)
+      var fp = 0
+      var j = 0
+      while (j < probes) {
+        if (bloomMightContain(sized, bloomMixLong((n + j).toLong))) fp += 1
+        j += 1
+      }
+      (sized.length, fp.toDouble / probes)
+    }
+  }
 }

@@ -17,7 +17,8 @@ import graft.sinks.ParquetSink
   * and the sortkey presort leaves each parquet file internally ordered.
   * Also pins the build's declared read schemas, its Spark job budget, its
   * one JSON parse per build, its transient in-memory staging and its
-  * footer-served validation counts. */
+  * footer-served validation counts, and that its local writes fork no
+  * process yet land Hadoop's default file modes. */
 class EtlEndToEndSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -254,5 +255,79 @@ class EtlEndToEndSpec extends SparkSpec {
       // against the DataFrame read must be empty
       five.exceptAll(sink.read(spark, t, Schemas.star(t))).count() shouldBe 0L
     }
+  }
+
+  /** Process starts during `body` whose stack has a frame in Hadoop's
+    * `org.apache.hadoop.fs` package, from an in-process JFR recording. */
+  private def hadoopFsSpawns(body: => Unit): Int = {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try body finally rec.stop()
+    val f = java.nio.file.Files.createTempFile("spawns", ".jfr")
+    try {
+      rec.dump(f)
+      RecordingFile.readAllEvents(f).asScala.count { e =>
+        e.getStackTrace != null && e.getStackTrace.getFrames.asScala
+          .exists(_.getMethod.getType.getName.startsWith("org.apache.hadoop.fs."))
+      }
+    } finally { rec.close(); java.nio.file.Files.delete(f) }
+  }
+
+  test("local writes: file: paths resolve to NioLocalFileSystem, and a cold star build plus a q128 layout write fork no process from Hadoop") {
+    import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    FileSystem.get(new java.net.URI("file:///"), spark.sessionState.newHadoopConf()) shouldBe
+      a[graft.sources.NioLocalFileSystem]
+    // the recording sees Hadoop's own fork: without libhadoop.so, the stock
+    // local FileSystem's permission change runs `chmod`
+    if (!org.apache.hadoop.io.nativeio.NativeIO.isAvailable) {
+      val f = java.nio.file.Files.createTempFile("chmod", ".bin")
+      try hadoopFsSpawns(new RawLocalFileSystem()
+          .setPermission(new Path(f.toUri), new FsPermission("640"))) should be >= 1
+      finally java.nio.file.Files.delete(f)
+    }
+    Etl.run(spark, sf) // fixtures landed outside the recording
+    val q128 = ScaleQueries.layoutsByQuery("q128_zone_map")
+    ScaleQueries.purgeLayouts(spark, sf, q128)
+    hadoopFsSpawns {
+      Etl.invalidate(sf)
+      Etl.run(spark, sf)
+      ScaleQueries.q128ZoneMap(spark, sf).write.format("noop").mode("overwrite").save()
+    } shouldBe 0
+  }
+
+  test("local writes: part files, .crc sidecars, _SUCCESS and table directories carry Hadoop's default modes; other modes, sticky too, land exactly") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    val umask = FsPermission.getUMask(conf)
+    def mode(p: java.nio.file.Path): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    Etl.invalidate(sf)
+    Etl.run(spark, sf)
+    val table = Paths.get(new ParquetSink(Etl.starRoot(sf)).path("users"))
+    val ls = Files.list(table)
+    val part = try ls.iterator.asScala.map(_.getFileName.toString)
+      .find(n => n.startsWith("part-") && n.endsWith(".parquet")).get
+    finally ls.close()
+    val files = Seq(part, s".$part.crc", "_SUCCESS").map(table.resolve)
+    files.foreach(f => withClue(s"$f: ")(mode(f) shouldBe FsPermission.getFileDefault.applyUMask(umask).toShort.toInt))
+    mode(table) shouldBe FsPermission.getDirDefault.applyUMask(umask).toShort.toInt
+    // any other mode lands exactly; 01777 (sticky) is no POSIX permission
+    // set, so Hadoop's own path sets it
+    val fs = FileSystem.get(new java.net.URI("file:///"), conf)
+    val dir = Files.createTempDirectory("modes")
+    val file = Files.createFile(dir.resolve("f"))
+    try {
+      fs.setPermission(new Path(file.toUri), new FsPermission("640"))
+      mode(file) shouldBe Integer.parseInt("640", 8)
+      fs.setPermission(new Path(dir.toUri), new FsPermission(Integer.parseInt("1777", 8).toShort))
+      mode(dir) shouldBe Integer.parseInt("1777", 8)
+    } finally { Files.delete(file); Files.delete(dir) }
   }
 }

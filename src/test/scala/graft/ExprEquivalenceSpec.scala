@@ -164,6 +164,24 @@ class ExprEquivalenceSpec extends SparkSpec {
     cmp.exists(r => r.getSeq[Long](0)(5) > 0) shouldBe true // the `other` bucket is hit
   }
 
+  /** The composable cut scan — the definition the native `cdc_cuts`
+    * expression must reproduce bit-for-bit. */
+  private def cdcCutsComposable: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{length => strLen}
+    import org.apache.spark.sql.types.LongType
+    import DedupQueries.{CDC_MASK, CDC_W}
+    // boundary candidates W..len (guard: sequence() auto-steps DOWN when
+    // len < W and would invent phantom positions — the q47/q86 edge)
+    val cutsRaw = when(strLen(col("text")) < CDC_W, array().cast("array<long>"))
+      .otherwise(filter(
+        sequence(lit(CDC_W.toLong), strLen(col("text")).cast(LongType)),
+        i => pmod(TextOps.hash60(
+          substr(col("text"), (i - lit(CDC_W - 1)).cast("int"), lit(CDC_W))),
+          lit(CDC_MASK.toLong)) === 0L))
+    array_sort(array_distinct(concat(
+      array(lit(0L)), cutsRaw, array(strLen(col("text")).cast(LongType)))))
+  }
+
   test("cdc_cuts equals the composable hash60 window chain (non-BMP, short, empty)") {
     val texts = Seq(
       (1 to 300).map(i => f"w${(i * 13) % 89}%02d").mkString(" "),
@@ -175,7 +193,7 @@ class ExprEquivalenceSpec extends SparkSpec {
     val cmp = generated(df).select(
       call_function("cdc_cuts", col("text"),
         lit(DedupQueries.CDC_W), lit(DedupQueries.CDC_MASK)).as("native"),
-      DedupQueries.cdcCutsComposable.as("composable"))
+      cdcCutsComposable.as("composable"))
       .collect()
     cmp.foreach(r => r.getSeq[Long](0) shouldBe r.getSeq[Long](1))
     cmp.map(_.getSeq[Long](0).size).max should be > 3 // long texts really split

@@ -67,6 +67,65 @@ class OperationalSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** The one-merge-per-round sequential BPE learner (the pre-batching
+    * shape): q90's semantic anchor — the q90 cases prove
+    * `RetrievalQueries.bpeState(batch = 1)` reproduces it merge-for-merge
+    * and bit-for-bit on the real corpus, and that batching itself is
+    * invisible when the batch is conflict-free. Never the production path
+    * (R merges = R driver round trips and R-deep lineage). */
+  private def bpeStateSeq(docs: org.apache.spark.sql.DataFrame, rounds: Int) = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.{length => strLen, size => arrLen}
+    val wf = docs.filter(col("text").isNotNull)
+      .select(explode(graft.operators.TextOps.words(col("text"))).as("word"))
+      .filter(strLen(col("word")) > 0)
+      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
+    val chars = transform(sequence(lit(1), strLen(col("word"))),
+      i => substr(col("word"), i, lit(1)))
+    var seqs = wf.select(col("word"), col("freq"),
+      concat(lit(" "), array_join(chars, "  "), lit(" ")).as("seq"))
+    val merges = (1 to rounds).map { round =>
+      val toks = split(trim(col("seq")), "  ")
+      val best = seqs
+        .select(col("freq"), explode(zip_with(
+          slice(toks, lit(1), arrLen(toks) - 1), slice(toks, lit(2), arrLen(toks) - 1),
+          (a, b) => struct(a.as("ta"), b.as("tb")))).as("p"))
+        .groupBy(col("p.ta").as("term_a"), col("p.tb").as("term_b"))
+        .agg(sum(col("freq")).as("pair_count"))
+        .orderBy(col("pair_count").desc, col("term_a"), col("term_b"))
+        .limit(1)
+      seqs = seqs.crossJoin(broadcast(best))
+        .select(col("word"), col("freq"),
+          replace(col("seq"),
+            concat(lit(" "), col("term_a"), lit("  "), col("term_b"), lit(" ")),
+            concat(lit(" "), col("term_a"), col("term_b"), lit(" "))).as("seq"))
+      best.select(lit(round).as("round"), col("term_a"), col("term_b"),
+        col("pair_count"))
+    }
+    (merges.reduce(_ union _), seqs)
+  }
+
+  /** q44's primitive at its honest cost, for the round-count comparison
+    * with star contraction: k rounds of min-label propagation; returns
+    * labels after EXACTLY k rounds (converged or not). */
+  private def minLabelRounds(edges: org.apache.spark.sql.DataFrame, k: Int)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    val sym = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
+    val nodes = sym.select(col("src").as("node")).distinct()
+    var labels = nodes.select(col("node"), col("node").as("label"))
+      .localCheckpoint(true)
+    for (_ <- 1 to k) {
+      val viaNeighbor = sym.join(labels, sym("dst") === labels("node"))
+        .select(sym("src").as("node"), col("label"))
+      labels = labels.select(col("node"), col("label")).union(viaNeighbor)
+        .groupBy(col("node")).agg(min(col("label")).as("label"))
+        .localCheckpoint(true)
+    }
+    labels
+  }
+
   /** File inventory of the partition directories under `dir` EXCLUDING the
     * given partition values: (relative path, size, mtime-millis, md5) per
     * regular file. Diffed across a refresh to prove the untouched
@@ -616,7 +675,7 @@ class OperationalSpec extends SparkSpec {
     // MUST see the merged symbol "ab" as a unit and merge (ab, c) — the
     // recursion a one-shot pair count cannot produce — then (abc, d).
     def seqMerges(docs: org.apache.spark.sql.DataFrame, rounds: Int) =
-      RetrievalQueries.bpeStateSeq(docs, rounds)._1.collect()
+      bpeStateSeq(docs, rounds)._1.collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
         .sortBy(_._1)
     val docs1 = Seq.fill(10)("abcd").toDF("text")
@@ -646,7 +705,7 @@ class OperationalSpec extends SparkSpec {
           .sortBy(_._1))
     }
     def sequential(docs: org.apache.spark.sql.DataFrame, rounds: Int) = {
-      val (m, s) = RetrievalQueries.bpeStateSeq(docs, rounds)
+      val (m, s) = bpeStateSeq(docs, rounds)
       (m.collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
           r.getLong(3))).sortBy(_._1),
         s.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
@@ -2079,7 +2138,7 @@ class OperationalSpec extends SparkSpec {
     // The q44 primitive after the SAME round budget has moved labels only
     // `rounds` hops: nodes farther than that from id 0 along the path are
     // provably unconverged — the O(diameter) vs O(log n) gap, on data.
-    val lp = operators.Graph.minLabelRounds(edges, rounds)
+    val lp = minLabelRounds(edges, rounds)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     lp.values.count(_ != 0L) should be > 150 // most of the path still wrong
   }

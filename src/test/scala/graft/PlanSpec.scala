@@ -14,6 +14,44 @@ class PlanSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  // One unexecuted round of each graph loop, built from the loop's own
+  // round and node-shape helpers: the loops cut lineage per round, so the
+  // final plan no longer carries every round and the shape is pinned here.
+
+  /** q178/q200's seed level: the customers of nation 0, checkpointed as
+    * the loop's later rounds see their input. */
+  private def graphSeeds(): DataFrame = {
+    import org.apache.spark.sql.functions._
+    Tables.customer(spark, sf).filter(col("c_nationkey") === 0)
+      .select((col("c_custkey") * 2).as("node")).distinct()
+      .withColumn("dist", lit(0L)).localCheckpoint(true)
+  }
+
+  private def np: Int = spark.sessionState.conf.numShufflePartitions
+
+  /** One keyed PageRank round over pre-pinned inputs. */
+  private def pagerankKeyedRoundFragment(edgeDeg: DataFrame, ranks: DataFrame): DataFrame =
+    GraphQueries.pagerankRound(edgeDeg, ranks,
+      df => GraphQueries.nodeShape(keyed = true, np)(df, "node"))
+
+  /** One BFS round; keyed mode pins the edge list on hash(src). */
+  private def bfsRoundFragment(keyed: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val edges0 = GraphQueries.bipartiteEdges(spark, sf)
+    val edges = if (keyed) edges0.repartition(np, col("src")).persist() else edges0
+    val seeds = graphSeeds()
+    GraphQueries.bfsRound(edges, seeds.select(col("node")), seeds, 1,
+      GraphQueries.nodeShape(keyed, np))
+  }
+
+  /** One SSSP relaxation round over unit weights; keyed as for BFS. */
+  private def ssspRoundFragment(keyed: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val edges0 = GraphQueries.bipartiteEdges(spark, sf).withColumn("w", lit(1L))
+    val edges = if (keyed) edges0.repartition(np, col("src")).persist() else edges0
+    GraphQueries.ssspRound(edges, graphSeeds(), GraphQueries.nodeShape(keyed, np))
+  }
+
   test("J1 analog joins broadcast the dim side — the fact never shuffles") {
     val p = plan(Queries.q02SongplayLeftJoin(spark, sf))
     p should include("BroadcastHashJoin")
@@ -469,7 +507,7 @@ class PlanSpec extends SparkSpec {
     // per-round lineage is cut (lazy localCheckpoint — linear plans instead
     // of the 2^rounds nesting), so the round shape is pinned on the
     // fragment the loop repeats, like the keyed-mode pins
-    val round = plan(GraphQueries.ssspBroadcastRoundFragment(spark, sf))
+    val round = plan(ssspRoundFragment(keyed = false))
     round should include("BroadcastHashJoin")
     round should not include "SortMergeJoin"
     round should not include "CartesianProduct"
@@ -802,7 +840,7 @@ class PlanSpec extends SparkSpec {
     // scope, covering both the cache compile and the consumer plan
     GraphQueries.withPinnedCachedPartitioning(spark) {
       val (e, r) = GraphQueries.pagerankKeyedSetup(spark, sf)
-      val df = GraphQueries.pagerankKeyedRoundFragment(spark, e, r)
+      val df = pagerankKeyedRoundFragment(e, r)
       // execute so AQE settles the final plan: the ENSURE_REQUIREMENTS
       // exchange the static planner provisionally places above the cache is
       // elided at runtime once the cached stage's hash(src,np) is known
@@ -822,7 +860,7 @@ class PlanSpec extends SparkSpec {
 
   test("q178 keyed mode: frontier expansion and visited anti-join are co-partitioned shuffled-hash joins over the cached edge list") {
     GraphQueries.withPinnedCachedPartitioning(spark) {
-      val df = GraphQueries.bfsKeyedRoundFragment(spark, sf)
+      val df = bfsRoundFragment(keyed = true)
       df.write.format("noop").mode("overwrite").save()
       val p = plan(df)
       (p should include).regex(
@@ -834,7 +872,7 @@ class PlanSpec extends SparkSpec {
 
   test("q200 keyed mode: relaxation joins the cached weighted edges co-partitioned; the per-node MIN still collapses map-side") {
     GraphQueries.withPinnedCachedPartitioning(spark) {
-      val df = GraphQueries.ssspKeyedRoundFragment(spark, sf)
+      val df = ssspRoundFragment(keyed = true)
       df.write.format("noop").mode("overwrite").save()
       val p = plan(df)
       (p should include).regex(
@@ -1177,7 +1215,7 @@ class PlanSpec extends SparkSpec {
   test("q178 BFS: every frontier and visited set joins by broadcast — the edge list never sort-merges") {
     // round shape pinned on the fragment (per-round lineage is cut — see
     // the q200 pin); the final plan keeps the negative pins
-    val round = plan(GraphQueries.bfsBroadcastRoundFragment(spark, sf))
+    val round = plan(bfsRoundFragment(keyed = false))
     round should include("BroadcastHashJoin")
     round should not include "SortMergeJoin"
     round should not include "CartesianProduct"
