@@ -1195,8 +1195,8 @@ object IngestQueries {
     // must recognize as referenced
     s.sql(s"DELETE FROM $t WHERE k % 10 = 3")
     val dataDir = new java.io.File(catDir(s, stem), "data")
-    val o1 = new java.io.File(dataDir, "orphan-q298.bin")
-    val o2 = new java.io.File(dataDir, "orphan-q298.bin.bloom")
+    val o1 = new java.io.File(dataDir, "orphan-q298.parquet")
+    val o2 = new java.io.File(dataDir, "orphan-q298.parquet.bloom")
     java.nio.file.Files.write(o1.toPath, Array.fill(64)(7.toByte))
     java.nio.file.Files.write(o2.toPath, Array.fill(32)(1.toByte))
     val aged = System.currentTimeMillis - 60000

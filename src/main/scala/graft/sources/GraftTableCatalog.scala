@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.{DataOutputStream, File, FileOutputStream}
-import java.net.URLEncoder
+import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
@@ -273,9 +273,6 @@ class GraftTableCatalog extends CatalogPlugin with TableCatalog
   private def setupTableDir(dir: File, schema: StructType,
       partitions: Array[Transform],
       properties: java.util.Map[String, String]): Unit = {
-    // the codec's null bitmap is one long — 65th column would wrap it
-    require(schema.fields.length <= 64,
-      s"graft_cat tables hold at most 64 columns; got ${schema.fields.length}")
     schema.fields.foreach { f =>
       require(Codec.supported(f.dataType),
         s"graft_cat stores LONG/DOUBLE/STRING; ${f.name} is ${f.dataType}")
@@ -417,8 +414,6 @@ class GraftTableCatalog extends CatalogPlugin with TableCatalog
           "added columns always append at the end")
         require(Codec.supported(add.dataType),
           s"graft_cat stores LONG/DOUBLE/STRING; got ${add.dataType}")
-        require(schema.fields.length < 64, // the codec's one-long null bitmap
-          "graft_cat tables hold at most 64 columns")
         val nm = add.fieldNames()(0)
         require(!ReservedCols(nm),
           s"$nm is a reserved metadata column name")
@@ -729,7 +724,9 @@ object GraftTableCatalog {
     *  - `fieldIds`: positional field ids the file was written under —
     *    the column-mapping indirection that makes RENAME free and DROP
     *    read-compatible;
-    *  - `typeCodes`: positional storage types (L/D/S);
+    *  - `typeCodes`: the storage type (L/D/S) each column was written
+    *    under, positionally — a record for planners and tools; the
+    *    reader decodes by the Parquet footer and maps by field id;
     *  - `partition`: this file's partition tuple under the spec
     *    GENERATION it was written under (encoded; empty = unpartitioned);
     *  - `specId`: index into the table's spec history (specs.json) — the
@@ -1232,6 +1229,16 @@ object GraftTableCatalog {
         s"l${Math.floorDiv(ms, DayMs)}"
       case other => sys.error(s"unknown transform $other")
     }
+
+  /** A slot back as a row value: null, an identity string as a
+    * UTF8String, a bucket ordinal as an Int, any other slot as a Long. */
+  def decodePartValue(kind: String, pv: String): Any = pv match {
+    case "n" => null
+    case v if v.startsWith("s") =>
+      UTF8String.fromString(URLDecoder.decode(v.tail, "UTF-8"))
+    case v if kind == "bucket" => Integer.valueOf(v.tail.toInt)
+    case v => java.lang.Long.valueOf(v.tail.toLong)
+  }
 
   def readLatest(dir: File): Long = {
     val f = new File(dir, "latest")
@@ -1777,9 +1784,11 @@ object GraftTableCatalog {
     * has no upsert key or no outstanding key files. */
   private[sources] def upsertCtx(dir: File, schema: StructType,
       eqDeletes: Seq[EqDelete]): Option[(Int, Seq[EqDelete])] =
-    readProps(dir).get(UpsertKeyProp) match {
-      case Some(k) if eqDeletes.nonEmpty && schema.fieldNames.contains(k) =>
-        Some((schema.fieldIndex(k), eqDeletes))
-      case _ => None
-    }
+    if (eqDeletes.isEmpty) None
+    else Some(upsertKeyIndex(dir, schema)).filter(_ >= 0).map((_, eqDeletes))
+
+  /** The upsert key column's schema index, or -1. */
+  private[sources] def upsertKeyIndex(dir: File, schema: StructType): Int =
+    readProps(dir).get(UpsertKeyProp).filter(schema.fieldNames.contains)
+      .map(schema.fieldIndex).getOrElse(-1)
 }

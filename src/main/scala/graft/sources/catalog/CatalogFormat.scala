@@ -2,43 +2,119 @@ package graft.sources
 
 import java.io.{BufferedInputStream, DataInputStream, DataOutputStream, File, FileInputStream, FileOutputStream}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructType}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetUtils, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
+import org.apache.spark.sql.graftshim.GraftSqlShim
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, Decimal, DoubleType, LongType, MetadataBuilder, StringType, StructField, StructType}
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarBatch, ColumnarMap}
 import org.apache.spark.unsafe.types.UTF8String
 
 import CatalogFormat._
 import CatalogPruning._
 
-/** The data-file format helpers: storage type codes, bloom sidecars
-  * and z-order keys, the NDV sketch, position delete files, and
-  * whole-file rewrite/decode through [[CatalogFileWriter]] and
-  * [[CatalogColumnarReader]]. */
+/** The data-file format helpers: storage type codes, the Parquet writer
+  * and reader confs, bloom sidecars and z-order keys, the NDV sketch,
+  * position delete files, and whole-file rewrite/decode through
+  * [[CatalogFileWriter]] and [[CatalogColumnarReader]]. */
 private[sources] object CatalogFormat {
   import GraftTableCatalog._
 
-  /** The storage types and their one-letter manifest codes. A data
-    * file's bytes are encoded by [[CatalogFileWriter]] alone and decoded
-    * by [[CatalogColumnarReader]] alone, with the types the FILE was
-    * written under (schema evolution maps by field id). */
+  /** The storage types and their one-letter manifest codes. */
   object Codec {
     def supported(t: DataType): Boolean =
       t == LongType || t == DoubleType || t == StringType
-
     def typeCode(t: DataType): Char = t match {
       case LongType => 'L'
       case DoubleType => 'D'
       case StringType => 'S'
       case other => sys.error(s"unsupported $other")
     }
-    def codeType(c: Char): DataType = c match {
-      case 'L' => LongType
-      case 'D' => DoubleType
-      case 'S' => StringType
-      case other => sys.error(s"unknown type code $other")
-    }
+  }
+
+  /** Data files are Parquet: [[CatalogFileWriter]] writes them through
+    * Spark's `ParquetWriteSupport`, and [[CatalogColumnarReader]] reads
+    * them through Spark's vectorized Parquet reader. */
+  private[sources] val DataFileSuffix = ".parquet"
+
+  /** `fields` tagged with their field ids (`parquet.field.id`): every
+    * file carries its ids, and readers resolve columns by id, so a
+    * rename reads old files and a file that predates a column reads it
+    * as NULL. */
+  private[sources] def withFieldIds(fields: Seq[StructField],
+      ids: Seq[Int]): StructType =
+    StructType(fields.zip(ids).map { case (f, id) =>
+      f.copy(nullable = true, metadata = new MetadataBuilder()
+        .putLong(ParquetUtils.FIELD_ID_METADATA_KEY, id).build())
+    })
+
+  /** The Hadoop conf every [[CatalogFileWriter]] over one file schema
+    * shares: `ParquetUtils.prepareWrite` sets each key
+    * `ParquetWriteSupport` reads. */
+  private[sources] def writerConf(fileSchema: StructType): Configuration = {
+    val job = Job.getInstance(new Configuration(false))
+    val sqlConf = SQLConf.get
+    ParquetUtils.prepareWrite(sqlConf, job, fileSchema,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    job.getConfiguration
+  }
+
+  /** One scan's reader factory. Parquet reads the `required` table
+    * columns by field id, then the upsert key column `keyIdx` when key
+    * files may apply and the scan does not project it, then Spark's
+    * row-index column, which carries `_pos` and positions the deletes.
+    * The conf keys mirror `ParquetScan.createReaderFactory`; reading by
+    * field id is switched on in this conf copy only. */
+  private[sources] def readerFactory(tableSchema: StructType, mp: ColMapping,
+      required: StructType, keyIdx: Int): CatalogColumnarReaderFactory = {
+    val cols = required.fieldNames.toSeq.filter(tableSchema.fieldNames.contains)
+    val keyCol = if (keyIdx >= 0) tableSchema(keyIdx).name else ""
+    val read = if (keyIdx < 0 || cols.contains(keyCol)) cols else cols :+ keyCol
+    val idx = read.map(tableSchema.fieldIndex)
+    val readSchema = withFieldIds(idx.map(tableSchema(_)), idx.map(mp.ids))
+      .add(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
+    val spark = SparkSession.active
+    val sqlConf = SQLConf.get
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, readSchema.json)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, readSchema.json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+    Seq(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED -> sqlConf.nestedSchemaPruningEnabled,
+      SQLConf.CASE_SENSITIVE -> sqlConf.caseSensitiveAnalysis,
+      SQLConf.PARQUET_BINARY_AS_STRING -> sqlConf.isParquetBinaryAsString,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> sqlConf.isParquetINT96AsTimestamp,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED ->
+        sqlConf.parquetInferTimestampNTZEnabled,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> sqlConf.legacyParquetNanosAsLong,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION ->
+        sqlConf.parquetReaderRespectUnknownTypeAnnotation,
+      SQLConf.PARQUET_FIELD_ID_READ_ENABLED -> true
+    ).foreach { case (entry, v) => conf.setBoolean(entry.key, v) }
+    CatalogColumnarReaderFactory(
+      GraftSqlShim.parquetReaderFactory(spark.sparkContext, sqlConf, conf,
+        readSchema),
+      required.fieldNames.map {
+        case FileMetaCol => -1
+        case PosMetaCol => read.length
+        case n => read.indexOf(n)
+      },
+      read.indexOf(keyCol), sqlConf.parquetVectorizedReaderBatchSize)
   }
 
   /** Writers BUILD at 2^21 bits (32768 longs, 256 KiB) and FOLD DOWN to
@@ -248,9 +324,10 @@ private[sources] object CatalogFormat {
       schema: StructType, mp: ColMapping, partition: Seq[String],
       rows: Iterable[Array[Any]], seq: Long = 0L, specId: Int = 0): Entry = {
     val bloomEnc = bloomEncOf(dir, schema)
+    val fileSchema = withFieldIds(schema.fields.toSeq, mp.ids)
     val w = new CatalogFileWriter(new File(dir, "data"),
       s"$prefix-${java.util.UUID.randomUUID().toString.take(12)}",
-      partition, schema.fields.map(_.dataType), mp.ids.toArray,
+      partition, fileSchema, writerConf(fileSchema),
       if (bloomEnc.isEmpty) Array.empty else bloomEnc.split(",").map(_.toInt))
     try {
       rows.foreach(r => w.writeRow(new GenericInternalRow(r.map {
@@ -261,50 +338,51 @@ private[sources] object CatalogFormat {
     } finally w.closeOut()
   }
 
-  /** Decode one whole file through [[CatalogColumnarReader]] (position
+  /** A whole-file decoder through [[CatalogColumnarReader]] (position
     * and equality deletes applied), each row ALIGNED to the current
     * schema by field id, strings as java String. Returns (rawPos,
     * alignedRow) pairs — the boundary-delete and compact machinery. The
-    * reader is built directly, not through the scan's factory, so
-    * driver-side maintenance never counts as a scan in `filesOpened`. */
-  private[graft] def readAligned(dir: File, e: Entry, schema: StructType,
-      mp: ColMapping,
-      eqCtx: Option[(Int, Seq[EqDelete])] = None)
-      : IndexedSeq[(Long, Array[Any])] = {
+    * reader factory is built once per call and each reader directly,
+    * not through [[CatalogColumnarReaderFactory.createColumnarReader]],
+    * so driver-side maintenance never counts as a scan in
+    * `filesOpened`. */
+  private[graft] def readAligned(dir: File, schema: StructType,
+      mp: ColMapping, eqCtx: Option[(Int, Seq[EqDelete])] = None)
+      : Entry => IndexedSeq[(Long, Array[Any])] = {
     val types = schema.fields.map(_.dataType)
-    val reader = new CatalogColumnarReader(filePartition(dir, schema, mp,
-      schema.add(PosMetaCol, LongType), e, eqCtx = eqCtx))
-    val out = IndexedSeq.newBuilder[(Long, Array[Any])]
-    try while (reader.next()) {
-      val batch = reader.get()
-      val pos = batch.column(types.length)
-      (0 until batch.numRows()).foreach { r =>
-        out += pos.getLong(r) -> Array.tabulate[Any](types.length) { i =>
-          val v = batch.column(i)
-          if (v.isNullAt(r)) null
-          else types(i) match {
-            case LongType => v.getLong(r)
-            case DoubleType => v.getDouble(r)
-            case _ => v.getUTF8String(r).toString
+    val factory = readerFactory(schema, mp, schema.add(PosMetaCol, LongType),
+      eqCtx.fold(-1)(_._1))
+    e => {
+      val reader = new CatalogColumnarReader(
+        filePartition(dir, schema, mp, e, eqCtx = eqCtx), factory)
+      val out = IndexedSeq.newBuilder[(Long, Array[Any])]
+      try while (reader.next()) {
+        val batch = reader.get()
+        (0 until batch.numRows()).foreach { r =>
+          val row = batch.getRow(r) // one reused row object
+          out += row.getLong(types.length) -> Array.tabulate[Any](types.length) {
+            i => if (row.isNullAt(i)) null else row.get(i, types(i)) match {
+              case u: UTF8String => u.toString
+              case v => v
+            }
           }
         }
-      }
-    } finally reader.close()
-    out.result()
+      } finally reader.close()
+      out.result()
+    }
   }
 }
 
-/** The one read path ([[PartitionReaderFactory.supportColumnarReads]]):
-  * [[CatalogColumnarReader]], the one decoder of [[CatalogFileWriter]]'s
-  * files, decodes straight into `OnHeapColumnVector`s — no per-row
-  * `GenericInternalRow`, no boxed values, and strings land as raw UTF-8
-  * bytes. Constant columns (`_file`, null-pads for columns a file
-  * predates, CDF stamps) ride `ConstantColumnVector`s. A row is skipped
-  * when a position delete names it, when a newer upsert key file holds
-  * its key, or (CDF positions-only mode) when it is not a listed
-  * position; a skipped row never advances the batch slot. Every
-  * partition reads columnar, so Spark never asks for a row reader. */
-private object CatalogColumnarReaderFactory extends PartitionReaderFactory {
+/** The one read path ([[PartitionReaderFactory.supportColumnarReads]]),
+  * built once per scan by [[CatalogFormat.readerFactory]]: every
+  * partition reads through [[CatalogColumnarReader]], so Spark never
+  * asks for a row reader. `outIdx` maps each required column to its
+  * Parquet batch column (-1 = `_file`; `_pos` maps to the row index, the
+  * last column); `keyAt` is the upsert key's batch column (-1 = none);
+  * `batchRows` is the Parquet reader's batch capacity. */
+private[sources] case class CatalogColumnarReaderFactory(
+    parquet: ParquetPartitionReaderFactory, outIdx: Array[Int], keyAt: Int,
+    batchRows: Int) extends PartitionReaderFactory {
   import GraftTableCatalog._
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     throw new UnsupportedOperationException(
@@ -312,86 +390,43 @@ private object CatalogColumnarReaderFactory extends PartitionReaderFactory {
         "for every partition, so no row reader exists")
   override def supportColumnarReads(p: InputPartition): Boolean = true
   override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+      : PartitionReader[ColumnarBatch] = {
     filesOpened.incrementAndGet()
-    new CatalogColumnarReader(p.asInstanceOf[CatalogFilePartition])
+    new CatalogColumnarReader(p.asInstanceOf[CatalogFilePartition], this)
   }
 }
 
-private class CatalogColumnarReader(fp: CatalogFilePartition)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+/** Reads one data file through Spark's vectorized Parquet reader.
+  * `_file` and the CDF stamps ride `ConstantColumnVector`s. A row is
+  * dropped when a position delete names it, when a newer upsert key
+  * file holds its key, or (CDF positions-only mode) when it is not a
+  * listed position. A batch that drops no row passes through
+  * untouched; one that drops rows is viewed through [[RowIdVector]]s. */
+private class CatalogColumnarReader(fp: CatalogFilePartition,
+    f: CatalogColumnarReaderFactory) extends PartitionReader[ColumnarBatch] {
   import GraftTableCatalog._
-  import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-  private val BatchRows = 4096
-  private val types: Array[DataType] = fp.typeJson.map(DataType.fromJson)
-  private val outTypes: Array[DataType] =
-    fp.outTypeJson.map(DataType.fromJson)
-  // memory-mapped decode: CatalogFileWriter writes big-endian, which is
-  // ByteBuffer's default order — values read straight off the
-  // page cache with no stream indirection (a DataInputStream pays
-  // method-call + bounds overhead per VALUE; at 4096-row batches that
-  // overhead, not boxing, dominated the first columnar cut)
-  private val buf: java.nio.ByteBuffer = {
-    val ch = java.nio.channels.FileChannel.open(
-      java.nio.file.Paths.get(fp.path))
-    try ch.map(java.nio.channels.FileChannel.MapMode.READ_ONLY, 0, ch.size())
-    finally ch.close()
-  }
+  private val in = f.parquet.buildColumnarReader(PartitionedFile(
+    InternalRow.empty, SparkPath.fromPathString(fp.path), 0L, fp.bytes,
+    fileSize = fp.bytes))
   private val skips = loadDeletePositions(fp.deletePaths)
-  private val eqKeys: GraftTableCatalog.EqKeys.Lookup =
-    EqKeys.lookup(fp.eqDeletePaths, fp.eqKeyIsStr, fp.fileSeq)
-  private val keysOnly: Option[GraftTableCatalog.EqKeys.Lookup] =
+  private val posAt = f.parquet.readDataSchema.length - 1
+  private val keyIsStr =
+    f.keyAt >= 0 && f.parquet.readDataSchema(f.keyAt).dataType == StringType
+  private val eqKeys: EqKeys.Lookup =
+    EqKeys.lookup(fp.eqDeletePaths, keyIsStr, fp.fileSeq)
+  private val keysOnly: Option[EqKeys.Lookup] =
     if (fp.keysOnlyPaths.isEmpty) None
-    else Some(EqKeys.lookup(fp.keysOnlyPaths, fp.eqKeyIsStr))
+    else Some(EqKeys.lookup(fp.keysOnlyPaths, keyIsStr))
   private val eqActive =
-    fp.eqKeyPos >= 0 && (fp.eqDeletePaths.nonEmpty || keysOnly.isDefined)
-  private val only = fp.positions.map(_.sorted)
+    f.keyAt >= 0 && (fp.eqDeletePaths.nonEmpty || keysOnly.isDefined)
+  private val only: Array[Long] = fp.positions.map(_.sorted).orNull
+  private val filtering = eqActive || only != null || skips.nonEmpty
 
-  // file position -> output slot (-1 = not projected); required names
-  // are unique, so at most one output per file column
-  private val fileToOut: Array[Int] = {
-    val a = Array.fill(types.length)(-1)
-    fp.srcIdx.zipWithIndex.foreach { case (s, i) => if (s >= 0) a(s) = i }
-    a
-  }
-  // output slots carrying the _pos metadata column (row-varying)
-  private val posOut: Array[Int] =
-    fp.srcIdx.zipWithIndex.collect { case (-3, i) => i }
-
-  private val writable = new Array[OnHeapColumnVector](fp.srcIdx.length)
-  private val vectors: Array[ColumnVector] = {
-    val base: Array[ColumnVector] = fp.srcIdx.indices.map { i =>
-      fp.srcIdx(i) match {
-        case -1 =>
-          val cv = new ConstantColumnVector(BatchRows, StringType)
-          cv.setUtf8String(UTF8String.fromString(fp.fileName))
-          cv: ColumnVector
-        case -3 =>
-          writable(i) = new OnHeapColumnVector(BatchRows, LongType)
-          writable(i): ColumnVector
-        case s if s >= 0 =>
-          writable(i) = new OnHeapColumnVector(BatchRows, outTypes(i))
-          writable(i): ColumnVector
-        case _ => // the file predates this (evolved) column: all null
-          val cv = new ConstantColumnVector(BatchRows, outTypes(i))
-          cv.setNull()
-          cv: ColumnVector
-      }
-    }.toArray
-    if (fp.changeType.isEmpty) base
-    else {
-      val ct = new ConstantColumnVector(BatchRows, StringType)
-      ct.setUtf8String(UTF8String.fromString(fp.changeType))
-      val cv = new ConstantColumnVector(BatchRows, LongType)
-      cv.setLong(fp.changeVersion)
-      base ++ Array[ColumnVector](ct, cv)
-    }
-  }
-  private val batch = new ColumnarBatch(vectors)
-
-  private var pos = -1L
+  private var whole: ColumnarBatch = _ // the Parquet batch's columns as-is
+  private var kept: ColumnarBatch = _ // the same columns through row ids
+  private val rowIds = new Array[Int](f.batchRows)
+  private var current: ColumnarBatch = _
   private var si = 0
   private var oi = 0
   private var read = 0L
@@ -401,140 +436,145 @@ private class CatalogColumnarReader(fp: CatalogFilePartition)
     Array(CatalogScanMetrics.task("filesOpened", 1L),
       CatalogScanMetrics.task("rowsRead", read))
 
-  /** Consume one row's bytes without materializing it. */
-  private def skipRow(): Unit = {
-    val bits = buf.getLong()
-    var c = 0
-    while (c < types.length) {
-      if ((bits & (1L << c)) == 0) types(c) match {
-        case StringType =>
-          val len = buf.getInt() // advances 4 first; THEN skip the bytes
-          buf.position(buf.position() + len)
-        case _ => buf.position(buf.position() + 8)
+  private def bind(src: ColumnarBatch): Unit = {
+    val file = new ConstantColumnVector(1, StringType)
+    file.setUtf8String(UTF8String.fromString(fp.fileName))
+    val base = f.outIdx.map(j => if (j < 0) file else src.column(j))
+    val cols: Array[ColumnVector] =
+      if (fp.changeType.isEmpty) base
+      else {
+        val ct = new ConstantColumnVector(1, StringType)
+        ct.setUtf8String(UTF8String.fromString(fp.changeType))
+        val cv = new ConstantColumnVector(1, LongType)
+        cv.setLong(fp.changeVersion)
+        base ++ Array[ColumnVector](ct, cv)
       }
-      c += 1
-    }
+    whole = new ColumnarBatch(cols)
+    kept = new ColumnarBatch(cols.map {
+      case c: ConstantColumnVector => c
+      case c => new RowIdVector(c, rowIds)
+    })
   }
 
-  /** Decode one row into batch slot `n`; returns whether it emits (a
-    * discarded row leaves slot `n` to be overwritten by the next). */
-  private def decodeRow(n: Int): Boolean = {
-    // clear null marks a discarded previous occupant may have left
-    var i = 0
-    while (i < writable.length) {
-      if (writable(i) != null) writable(i).putNotNull(n)
-      i += 1
-    }
-    i = 0
-    while (i < posOut.length) {
-      writable(posOut(i)).putLong(n, pos); i += 1
-    }
-    val bits = buf.getLong()
-    // key probes run AT the key column (raw bytes — no String per row)
-    var keyPresent = false
-    var keyInEq = false
-    var keyInOnly = false
-    var c = 0
-    while (c < types.length) {
-      val out = fileToOut(c)
-      if ((bits & (1L << c)) != 0) {
-        if (out >= 0) writable(out).putNull(n)
-      } else types(c) match {
-        case LongType =>
-          val v = buf.getLong()
-          if (out >= 0) writable(out).putLong(n, v)
-          if (eqActive && c == fp.eqKeyPos) {
-            keyPresent = true
-            keyInEq = eqKeys.containsLong(v)
-            keysOnly.foreach(inc => keyInOnly = inc.containsLong(v))
-          }
-        case DoubleType =>
-          val v = buf.getDouble()
-          if (out >= 0) writable(out).putDouble(n, v)
-        case _ =>
-          val len = buf.getInt()
-          if (len > scratch.length)
-            scratch = new Array[Byte](math.max(len, scratch.length * 2))
-          buf.get(scratch, 0, len)
-          if (out >= 0) writable(out).putByteArray(n, scratch, 0, len)
-          if (eqActive && c == fp.eqKeyPos) {
-            keyPresent = true
-            keyInEq = eqKeys.containsBytes(scratch, len)
-            keysOnly.foreach(inc => keyInOnly = inc.containsBytes(scratch, len))
-          }
-      }
-      c += 1
-    }
-    if (!eqActive) true
-    else {
-      var emit = !(keyPresent && keyInEq)
-      if (emit && keysOnly.isDefined) emit = keyPresent && keyInOnly
-      emit
+  /** Whether the row whose key sits at row `r` of `c` survives the key
+    * files: a newer key file holding it drops it, and in keys-only mode
+    * only a key the listed files hold survives. */
+  private def keyKeeps(c: ColumnVector, r: Int): Boolean = {
+    if (c.isNullAt(r)) return keysOnly.isEmpty
+    if (keyIsStr) {
+      val u = c.getUTF8String(r)
+      val len = u.numBytes()
+      if (len > scratch.length)
+        scratch = new Array[Byte](math.max(len, scratch.length * 2))
+      u.writeToMemory(scratch, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
+      !eqKeys.containsBytes(scratch, len) &&
+        keysOnly.forall(_.containsBytes(scratch, len))
+    } else {
+      val v = c.getLong(r)
+      !eqKeys.containsLong(v) && keysOnly.forall(_.containsLong(v))
     }
   }
-
-  private val onlyArr: Array[Long] = only.orNull
 
   override def next(): Boolean = {
-    var w = 0
-    while (w < writable.length) {
-      if (writable(w) != null) writable(w).reset()
-      w += 1
-    }
-    var n = 0
-    var exhausted = false
-    while (n < BatchRows && !exhausted && pos + 1 < fp.rows) {
-      if (onlyArr != null && oi >= onlyArr.length)
-        exhausted = true // no more CDF positions in this file
-      else {
-        pos += 1
-        val preEmit =
-          if (onlyArr != null) {
-            if (oi < onlyArr.length && onlyArr(oi) == pos) { oi += 1; true }
-            else false
-          } else if (si < skips.length && skips(si) == pos) {
-            si += 1; false
-          } else true
-        if (!preEmit) skipRow()
-        else if (decodeRow(n)) n += 1
+    while ((only == null || oi < only.length) && in.next()) {
+      val src = in.get()
+      if (whole == null) bind(src)
+      val n = src.numRows()
+      var k = n
+      if (filtering) {
+        val pos = src.column(posAt)
+        val key = if (eqActive) src.column(f.keyAt) else null
+        k = 0
+        var r = 0
+        while (r < n) {
+          val p = pos.getLong(r)
+          var keep = true
+          if (only != null) {
+            while (oi < only.length && only(oi) < p) oi += 1
+            keep = oi < only.length && only(oi) == p
+          } else {
+            while (si < skips.length && skips(si) < p) si += 1
+            keep = si >= skips.length || skips(si) != p
+          }
+          if (keep && key != null) keep = keyKeeps(key, r)
+          if (keep) { rowIds(k) = r; k += 1 }
+          r += 1
+        }
+      }
+      if (k > 0) {
+        current = if (k == n) whole else kept
+        current.setNumRows(k)
+        read += k
+        return true
       }
     }
-    batch.setNumRows(n)
-    read += n
-    n > 0
+    false
   }
 
-  override def get(): ColumnarBatch = batch
+  override def get(): ColumnarBatch = current
 
-  override def close(): Unit = batch.close() // the mapping frees with GC
+  override def close(): Unit = in.close()
+}
+
+/** A column viewed through a row-id map: row `i` of the view is row
+  * `ids(i)` of `base`. A batch that drops rows is compacted this way
+  * without copying a value (the shape of Iceberg's
+  * `ColumnVectorWithFilter`). Columns are flat, so there is no child. */
+private final class RowIdVector(base: ColumnVector, ids: Array[Int])
+    extends ColumnVector(base.dataType()) {
+  override def close(): Unit = ()
+  override def hasNull(): Boolean = base.hasNull()
+  override def numNulls(): Int =
+    throw new UnsupportedOperationException("a row-id view counts no nulls")
+  override def isNullAt(r: Int): Boolean = base.isNullAt(ids(r))
+  override def getBoolean(r: Int): Boolean = base.getBoolean(ids(r))
+  override def getByte(r: Int): Byte = base.getByte(ids(r))
+  override def getShort(r: Int): Short = base.getShort(ids(r))
+  override def getInt(r: Int): Int = base.getInt(ids(r))
+  override def getLong(r: Int): Long = base.getLong(ids(r))
+  override def getFloat(r: Int): Float = base.getFloat(ids(r))
+  override def getDouble(r: Int): Double = base.getDouble(ids(r))
+  override def getArray(r: Int): ColumnarArray = base.getArray(ids(r))
+  override def getMap(r: Int): ColumnarMap = base.getMap(ids(r))
+  override def getDecimal(r: Int, precision: Int, scale: Int): Decimal =
+    base.getDecimal(ids(r), precision, scale)
+  override def getUTF8String(r: Int): UTF8String = base.getUTF8String(ids(r))
+  override def getBinary(r: Int): Array[Byte] = base.getBinary(ids(r))
+  override def getChild(ordinal: Int): ColumnVector =
+    throw new UnsupportedOperationException("graft_cat columns are flat")
+}
+
+/** Builds a [[CatalogFileWriter]]'s Parquet writer over a local file. */
+private final class CatalogParquetBuilder(out: OutputFile)
+    extends ParquetWriter.Builder[InternalRow, CatalogParquetBuilder](out) {
+  override def self(): CatalogParquetBuilder = this
+  override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+    new ParquetWriteSupport
 }
 
 /** The one data-file encoder, used by the task writers
   * ([[CatalogWriterFactory]]) and the driver-side rewrites
-  * ([[CatalogFormat.writeLocalFile]]) alike. Each row is a null
-  * bitmap long, then every non-null value: LONG and DOUBLE as 8
-  * big-endian bytes, STRING as an int length and its UTF-8 bytes;
-  * [[CatalogColumnarReader]] is the one decoder. Rows encode straight
-  * from `InternalRow` accessors into a growable byte scratch (flushed in
-  * 64 KiB chunks), with per-column stats in PRIMITIVE arrays — no boxed
-  * values, no DataOutputStream, no per-row string-keyed map updates. */
+  * ([[CatalogFormat.writeLocalFile]]) alike. Rows go to Spark's
+  * `ParquetWriteSupport` through a `LocalOutputFile`, under `fileSchema`
+  * (the columns tagged with their field ids) and a `conf` built once by
+  * [[CatalogFormat.writerConf]]. Per-column stats ride alongside in
+  * PRIMITIVE arrays: min/max and exact sums for LONGs, null presence,
+  * NDV sketches and bloom bits. */
 private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
-    tuple: Seq[String], types: Array[DataType], ids: Array[Int],
+    tuple: Seq[String], fileSchema: StructType, conf: Configuration,
     bloomPos: Array[Int]) {
   import GraftTableCatalog._
-  val name = s"$stem.bin"
+  val name = stem + DataFileSuffix
   private val file = new File(dataDir, name)
-  // 0=LONG 1=DOUBLE 2=STRING — an int switch beats a DataType match
-  // in the per-value hot loop
-  private val tcodes: Array[Int] = types.map {
-    case LongType => 0
-    case DoubleType => 1
-    case StringType => 2
-    case t => sys.error(s"unsupported $t")
-  }
-  private val ch = new FileOutputStream(file)
-  private var buf = new Array[Byte](1 << 16)
-  private var pos = 0
+  private val types = fileSchema.fields.map(_.dataType)
+  private val ids = fileSchema.fields.map(ParquetUtils.getFieldId)
+  // a char switch beats a DataType match in the per-value hot loop
+  private val tcodes: Array[Char] = types.map(Codec.typeCode)
+  private val writer = new CatalogParquetBuilder(new LocalOutputFile(file.toPath))
+    .withConf(conf)
+    .withCompressionCodec(CompressionCodecName.fromConf(
+      conf.get(org.apache.parquet.hadoop.ParquetOutputFormat.COMPRESSION)))
+    .build()
   private var closed = false
   private var rows = 0L
   private val hasNull = new Array[Boolean](types.length)
@@ -550,44 +590,20 @@ private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
   // per-column distinct sketches (LONG + STRING), 2 KiB each —
   // one mix + one OR per non-null value on the hot path
   private val ndvs: Array[NdvSketch] = Array.tabulate(types.length)(i =>
-    if (tcodes(i) == 0 || tcodes(i) == 2) new NdvSketch else null)
+    if (tcodes(i) != 'D') new NdvSketch else null)
   // the string hash computed while the bytes sit in the scratch —
-  // the bloom loop reuses it instead of re-materializing the
-  // UTF8String's bytes (allocation-free hot path)
+  // the bloom loop reuses it instead of hashing the string again
   private val strHash = new Array[Long](types.length)
-
-  private def flushBuf(): Unit =
-    if (pos > 0) { ch.write(buf, 0, pos); pos = 0 }
-  private def ensure(n: Int): Unit =
-    if (pos + n > buf.length) {
-      flushBuf()
-      if (n > buf.length)
-        buf = new Array[Byte](Integer.highestOneBit(n) << 1)
-    }
-  private def putLong(v: Long): Unit = {
-    ensure(8); val p = pos
-    buf(p) = (v >>> 56).toByte; buf(p + 1) = (v >>> 48).toByte
-    buf(p + 2) = (v >>> 40).toByte; buf(p + 3) = (v >>> 32).toByte
-    buf(p + 4) = (v >>> 24).toByte; buf(p + 5) = (v >>> 16).toByte
-    buf(p + 6) = (v >>> 8).toByte; buf(p + 7) = v.toByte
-    pos = p + 8
-  }
+  private var scratch = new Array[Byte](64)
 
   def writeRow(row: InternalRow): Unit = {
     val n = tcodes.length
-    var bits = 0L
     var i = 0
     while (i < n) {
-      if (row.isNullAt(i)) { bits |= (1L << i); hasNull(i) = true }
-      i += 1
-    }
-    putLong(bits)
-    i = 0
-    while (i < n) {
-      if ((bits & (1L << i)) == 0) (tcodes(i): @annotation.switch) match {
-        case 0 =>
+      if (row.isNullAt(i)) hasNull(i) = true
+      else (tcodes(i): @annotation.switch) match {
+        case 'L' =>
           val v = row.getLong(i)
-          putLong(v)
           if (hasVal(i)) {
             if (v < lo(i)) lo(i) = v
             if (v > hi(i)) hi(i) = v
@@ -598,48 +614,43 @@ private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
             else sum(i) = s1
           }
           ndvs(i).add(bloomMixLong(v))
-        case 1 => // doubleToLongBits (not Raw): canonical NaN, the
-          // exact bytes DataOutputStream.writeDouble produced
-          putLong(java.lang.Double.doubleToLongBits(row.getDouble(i)))
-        case 2 =>
-          // a UTF8String's bytes ARE the encoding — copied once,
-          // straight into the scratch, no String/byte[] detour
+        case 'S' =>
+          // a UTF8String's bytes ARE the UTF-8 encoding the hashes mix
           val u = row.getUTF8String(i)
           val len = u.numBytes()
-          ensure(4 + len)
-          val p = pos
-          buf(p) = (len >>> 24).toByte; buf(p + 1) = (len >>> 16).toByte
-          buf(p + 2) = (len >>> 8).toByte; buf(p + 3) = len.toByte
-          u.writeToMemory(buf,
-            org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + p + 4)
-          pos = p + 4 + len
-          val h = bloomMixBytes(buf, len, p + 4)
+          if (len > scratch.length)
+            scratch = new Array[Byte](Integer.highestOneBit(len) << 1)
+          u.writeToMemory(scratch,
+            org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
+          val h = bloomMixBytes(scratch, len)
           ndvs(i).add(h)
           strHash(i) = h
+        case _ => ()
       }
       i += 1
     }
     var bi = 0
     while (bi < bloomPos.length) {
       val p = bloomPos(bi)
-      if ((bits & (1L << p)) == 0) {
-        val h = if (tcodes(p) == 0) bloomMixLong(row.getLong(p))
+      if (!row.isNullAt(p)) {
+        val h = if (tcodes(p) == 'L') bloomMixLong(row.getLong(p))
           else strHash(p)
         bloomSet(blooms(bi), h)
       }
       bi += 1
     }
+    writer.write(row)
     rows += 1
   }
 
   private def statsMap: Map[String, (Long, Long)] =
     types.indices.collect {
-      case i if tcodes(i) == 0 && hasVal(i) =>
+      case i if tcodes(i) == 'L' && hasVal(i) =>
         s"#${ids(i)}" -> (lo(i), hi(i))
     }.toMap
   private def sumsMap: Map[String, Long] =
     types.indices.collect {
-      case i if tcodes(i) == 0 && hasVal(i) && !sumBad(i) =>
+      case i if tcodes(i) == 'L' && hasVal(i) && !sumBad(i) =>
         s"#${ids(i)}" -> sum(i)
     }.toMap
   private def ndvMap: Map[String, Long] =
@@ -648,7 +659,7 @@ private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
         s"#${ids(i)}" -> ndvs(i).estimate(rows)
     }.toMap
   def closeOut(): Unit =
-    if (!closed) { closed = true; flushBuf(); ch.close() }
+    if (!closed) { closed = true; writer.close() }
 
   /** Close the file, write its bloom sidecar, and describe it as a
     * manifest entry: stats key by field id, and null presence is kept so
@@ -664,7 +675,7 @@ private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
           (ids(p), bloomSized(blooms(bi), rows))
         })
     Entry(name, rows, file.length(), types.length, statsMap,
-      nullFree, ids.toSeq, types.map(Codec.typeCode).mkString,
+      nullFree, ids.toSeq, tcodes.mkString,
       tuple, Seq.empty, seq, specId, sumsMap,
       if (rows > 0) bloomPos.toSeq.map(ids(_)) else Seq.empty, ndvMap)
   }

@@ -8,6 +8,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
+import CatalogFormat.DataFileSuffix
 import CatalogPruning._
 
 /** The manifest and segment file grammar: entry lines, manifest lists,
@@ -28,6 +29,9 @@ private[sources] object CatalogManifests {
     if (ids.length != cols || a(8).length != cols ||
         a(8).exists(c => "LDS".indexOf(c) < 0))
       preV2(s"entry ${a(1)} lacks field ids or type codes")
+    if (!a(1).endsWith(DataFileSuffix)) throw new IllegalStateException(
+      s"$f: entry ${a(1)} is not a Parquet data file; the table predates " +
+        "the Parquet data format and must be recreated")
     def longs(i: Int): Map[String, Long] =
       if (a(i) == "-") Map.empty
       else a(i).split(";").map { s =>

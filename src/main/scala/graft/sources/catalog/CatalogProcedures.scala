@@ -65,6 +65,7 @@ private class CompactProcedure(cat: GraftTableCatalog)
         val maxEqSeq = if (m.eqDeletes.isEmpty) 0L
           else m.eqDeletes.map(_.seq).max
         val eqCtx = upsertCtx(dir, schema, m.eqDeletes)
+        lazy val readLive = readAligned(dir, schema, mp, eqCtx)
         val (cand, big) = m.files.partition(e =>
           e.bytes < target || e.deletes.nonEmpty || e.seq < maxEqSeq)
         val orderIdx = readProps(dir).get(WriteOrderByProp).toSeq
@@ -89,8 +90,7 @@ private class CompactProcedure(cat: GraftTableCatalog)
                   bin.head.seq >= maxEqSeq)
                 bin.head // nothing to gain from a rewrite
               else {
-                val rows = bin.flatMap(e =>
-                  readAligned(dir, e, schema, mp, eqCtx).map(_._2))
+                val rows = bin.flatMap(e => readLive(e).map(_._2))
                 // a write.order_by table keeps its contract through
                 // maintenance: the bin's rows re-sort before writing
                 val sorted = if (orderIdx.isEmpty) rows
@@ -732,6 +732,7 @@ private class RewriteSortedProcedure(cat: GraftTableCatalog)
         val m = if (latest == 0) Manifest(0, "none", Seq.empty)
           else readManifest(dir, latest)
         val eqCtx = upsertCtx(dir, schema, m.eqDeletes)
+        lazy val readLive = readAligned(dir, schema, mp, eqCtx)
         def longAt(r: Array[Any], i: Int): Long = r(i) match {
           case l: Long => l
           case _ => Long.MinValue // nulls cluster first
@@ -742,8 +743,7 @@ private class RewriteSortedProcedure(cat: GraftTableCatalog)
         else m.files.groupBy(e => (e.specId, e.partition)).toSeq
           .sortBy { case ((sid, t), _) => (sid, t.mkString(";")) }
           .flatMap { case ((specId, tuple), es) =>
-            val rows = es.flatMap(e =>
-              readAligned(dir, e, schema, mp, eqCtx).map(_._2))
+            val rows = es.flatMap(e => readLive(e).map(_._2))
             if (rows.isEmpty) Seq.empty
             else {
               val sorted =

@@ -81,7 +81,7 @@ private class CatalogCowScan(base: CatalogScan, op: CatalogRowLevelOperation)
   override def supportedCustomMetrics(): Array[CustomMetric] =
     CatalogScanMetrics.supported
   override def createReaderFactory(): PartitionReaderFactory =
-    CatalogColumnarReaderFactory
+    base.createReaderFactory()
 
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =

@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsPartitionManagement, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
@@ -145,13 +146,6 @@ private class CatalogTable(dir: File, tableName: String,
     }
   }
 
-  private def decodeSlot(pt: PT, pv: String): Any = pv match {
-    case "n" => null
-    case v if v.startsWith("s") =>
-      UTF8String.fromString(URLDecoder.decode(v.tail, "UTF-8"))
-    case v if pt.kind == "bucket" => Integer.valueOf(v.tail.toInt)
-    case v => java.lang.Long.valueOf(v.tail.toLong)
-  }
   private def encodeSlot(v: Any): String = v match {
     case null => "n"
     case u: UTF8String => "s" + URLEncoder.encode(u.toString, "UTF-8")
@@ -174,7 +168,7 @@ private class CatalogTable(dir: File, tableName: String,
     liveManifest().files
       .filter(e => e.specId == cur && e.partition.length == spec.length)
       .map(_.partition).distinct
-      .map(t => spec.zip(t).map { case (pt, pv) => decodeSlot(pt, pv) })
+      .map(t => spec.zip(t).map { case (pt, pv) => decodePartValue(pt.kind, pv) })
       .filter(vals => nameIdx.indices.forall(i =>
         java.util.Objects.equals(vals(nameIdx(i)), wanted(i))))
       .map(vals => new GenericInternalRow(vals.toArray[Any]): InternalRow)
@@ -336,6 +330,7 @@ private class CatalogTable(dir: File, tableName: String,
     val latest = headVersion(dir, branch)
     val mor = readProps(dir).get(DeleteModeProp).contains("merge-on-read")
     val eqCtx = upsertCtx(dir, s, m.eqDeletes)
+    lazy val readLive = readAligned(dir, s, mp, eqCtx)
     var dropped = 0L; var rewritten = 0L; var kept = 0L; var morFiles = 0L
     var bloomKept = 0L
     val remaining = m.files.flatMap { e =>
@@ -351,7 +346,7 @@ private class CatalogTable(dir: File, tableName: String,
       } else {
         // boundary file: decode live rows (field-id aligned, existing
         // deletes applied) and split by the predicate
-        val live = readAligned(dir, e, s, mp, eqCtx)
+        val live = readLive(e)
         val (hit, miss) = live.partition { case (_, row) =>
           filters.forall(evalFilter(_, s, row)) }
         if (hit.isEmpty) { kept += 1; Some(e) }
@@ -602,20 +597,13 @@ private class CatalogScanBuilder(dir: File, schema: StructType,
         spec.indexWhere(p => p.kind == "identity" && p.id == id)
       }
       if (slotOf.exists(_ < 0)) return None
-      def decode(pv: String): Any = pv match {
-        case "n" => null
-        case v if v.startsWith("s") =>
-          UTF8String.fromString(URLDecoder.decode(v.tail, "UTF-8"))
-        case v => java.lang.Long.valueOf(v.tail.toLong)
-      }
       val grouped = facts.groupBy { case (e, _) =>
         slotOf.map(e.partition(_))
       }
       val rowsOpt = grouped.toSeq.map { case (key, sub) =>
         aggsOver(sub).map { aggs =>
           (aggs,
-            key.map(decode)
-              ++ aggs.map(_._4))
+            key.map(decodePartValue("identity", _)) ++ aggs.map(_._4))
         }
       }
       if (rowsOpt.exists(_.isEmpty) || rowsOpt.isEmpty) None
@@ -766,18 +754,11 @@ private class CatalogScan(dir: File, tableSchema: StructType,
   private def keyVals(e: Entry): Array[Any] =
     if (e.specId != curSpecId || e.partition.length != spec.length)
       Array.empty // an old-generation file has no key under the current spec
-    else spec.zip(e.partition).map {
-      case (_, "n") => null
-      case (PT("identity", _, _), v) if v.startsWith("s") =>
-        UTF8String.fromString(URLDecoder.decode(v.tail, "UTF-8"))
-      case (PT("identity", _, _), v) => java.lang.Long.valueOf(v.tail.toLong)
-      case (PT("bucket", _, _), v) => java.lang.Integer.valueOf(v.tail.toInt)
-      case (PT("days", _, _), v) => java.lang.Long.valueOf(v.tail.toLong)
-      case (_, other) => sys.error(s"bad partition value $other")
-    }.toArray[Any]
+    else spec.zip(e.partition)
+      .map { case (pt, pv) => decodePartValue(pt.kind, pv) }.toArray[Any]
 
   override def planInputPartitions(): Array[InputPartition] =
-    liveFiles.map(e => filePartition(dir, tableSchema, mp, required, e,
+    liveFiles.map(e => filePartition(dir, tableSchema, mp, e,
       keyVals = keyVals(e), eqCtx = eqCtx): InputPartition).toArray
 
   /** STORAGE-PARTITIONED JOIN through the catalog: every file carries
@@ -821,9 +802,9 @@ private class CatalogScan(dir: File, tableSchema: StructType,
       liveFiles.map(_.partition).distinct.length)
   }
 
-  /** Always COLUMNAR: the vectorized codec decode. */
+  /** Always COLUMNAR: Spark's vectorized Parquet reader. */
   override def createReaderFactory(): PartitionReaderFactory =
-    CatalogColumnarReaderFactory
+    readerFactory(tableSchema, mp, required, eqCtx.fold(-1)(_._1))
   /** V2 CUSTOM METRICS: files actually opened and rows decoded, as
     * first-class SQL metrics — the file-skipping story, observable on
     * every executed plan rather than only via the test counters. */
@@ -943,22 +924,19 @@ private class CatalogScan(dir: File, tableSchema: StructType,
   }
 }
 
-/** One reader task: `srcIdx` maps required output positions to file
-  * positions (-1 = `_file`, -2 = null-pad for columns the file
-  * predates); `deletePaths` anti-merge as a sorted position skip list;
-  * `positions` (CDF delta-deletes) restricts emission to exactly those
-  * raw positions; `changeType`/`changeVersion` stamp the two CDF
-  * columns; `keyVals` is the partition tuple for SPJ grouping. */
+/** One reader task, one data file: `deletePaths` anti-merge as a sorted
+  * position skip list; `positions` (CDF delta-deletes) restricts
+  * emission to exactly those raw positions; `changeType`/`changeVersion`
+  * stamp the two CDF columns; `keyVals` is the partition tuple for SPJ
+  * grouping. The projection is the scan's reader factory's. */
 private case class CatalogFilePartition(path: String, fileName: String,
-    rows: Long, typeJson: Array[String], srcIdx: Array[Int],
+    bytes: Long,
     deletePaths: Array[String] = Array.empty,
     positions: Option[Array[Long]] = None,
     changeType: String = "", changeVersion: Long = 0L,
     keyVals: Array[Any] = Array.empty,
     eqDeletePaths: Array[String] = Array.empty,
-    eqKeyPos: Int = -1, eqKeyIsStr: Boolean = false,
     keysOnlyPaths: Array[String] = Array.empty,
-    outTypeJson: Array[String] = Array.empty,
     fileSeq: Long = Long.MinValue)
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = new GenericInternalRow(keyVals)
@@ -1233,8 +1211,9 @@ private[sources] object CatalogPruning {
         case (a: Long, b: java.lang.Long) => Some(java.lang.Long.compare(a, b))
         case (a: Long, b: java.lang.Integer) =>
           Some(java.lang.Long.compare(a, b.longValue()))
-        case (a: Double, b: java.lang.Double) =>
-          Some(java.lang.Double.compare(a, b))
+        case (a: Double, b: java.lang.Double) => // Spark's order:
+          // -0.0 = 0.0, and NaN = NaN is the greatest value
+          Some(SQLOrderingUtil.compareDoubles(a, b))
         case (a: String, b: String) =>
           Some(UTF8String.fromString(a).compareTo(UTF8String.fromString(b)))
         case (a: String, b: UTF8String) =>
@@ -1271,53 +1250,28 @@ private[sources] object CatalogPruning {
     case _ => false
   }
 
-  /** Positional decode types for one file, as its entry recorded them. */
-  private[sources] def fileTypes(e: Entry): Array[String] =
-    e.typeCodes.map(c => Codec.codeType(c).json).toArray
-
-  /** One reader task per data file: positional decode types, the
-    * required projection's FILE positions (resolved by field id; -1 =
-    * the `_file` metadata column, -2 = null-pad), the delete files to
-    * anti-merge, and optional CDF stamping. */
+  /** One reader task per data file: the delete files to anti-merge,
+    * the key files newer than it (only when the file holds the key
+    * column), and optional CDF stamping. */
   private[sources] def filePartition(dir: File, tableSchema: StructType,
-      mp: ColMapping, required: StructType, e: Entry,
+      mp: ColMapping, e: Entry,
       changeType: String = "", changeVersion: Long = 0L,
       positions: Option[Array[Long]] = None,
       keyVals: Array[Any] = Array.empty,
       eqCtx: Option[(Int, Seq[EqDelete])] = None,
       keysOnly: Array[String] = Array.empty): CatalogFilePartition = {
-    val fids = e.fieldIds.toArray
-    val srcIdx = required.fields.map { f =>
-      if (f.name == FileMetaCol) -1
-      else if (f.name == PosMetaCol) -3
-      else {
-        val id = mp.ids(tableSchema.fieldIndex(f.name))
-        val p = fids.indexOf(id)
-        if (p >= 0) p else -2
-      }
+    val data = new File(dir, "data")
+    val (eqPaths, hasKey) = eqCtx match {
+      case Some((keyIdx, dels)) if e.fieldIds.contains(mp.ids(keyIdx)) =>
+        (dels.filter(_.seq > e.seq).map(d =>
+          new File(data, d.name).getPath).toArray, true)
+      case _ => (Array.empty[String], false)
     }
-    // the key column rides the FILE positionally (anti-join runs before
-    // projection, so it needn't survive column pruning)
-    val (eqPaths, eqPos, eqStr) = eqCtx match {
-      case Some((keyIdx, dels)) =>
-        val live = dels.filter(_.seq > e.seq)
-        val pos = fids.indexOf(mp.ids(keyIdx))
-        if (pos < 0) (Array.empty[String], -1, false)
-        else (live.map(d =>
-          new File(new File(dir, "data"), d.name).getPath).toArray,
-          pos, tableSchema.fields(keyIdx).dataType == StringType)
-      case None => (Array.empty[String], -1, false)
-    }
-    require(keysOnly.isEmpty || eqPos >= 0,
-      s"keys-only filter over ${e.name} without a resolvable key position")
-    CatalogFilePartition(
-      new File(new File(dir, "data"), e.name).getPath, e.name,
-      e.rows, fileTypes(e), srcIdx,
-      e.deletes.map(d =>
-        new File(new File(dir, "data"), d.name).getPath).toArray,
-      positions, changeType, changeVersion, keyVals,
-      eqPaths, eqPos, eqStr, keysOnly,
-      required.fields.map(_.dataType.json), e.seq)
+    require(keysOnly.isEmpty || hasKey,
+      s"keys-only filter over ${e.name} without a resolvable key column")
+    CatalogFilePartition(new File(data, e.name).getPath, e.name, e.bytes,
+      e.deletes.map(d => new File(data, d.name).getPath).toArray,
+      positions, changeType, changeVersion, keyVals, eqPaths, keysOnly, e.seq)
   }
 
   /** Bloom-sidecar file pruning: TRUE = cannot rule the file out. Only

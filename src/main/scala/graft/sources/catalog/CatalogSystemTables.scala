@@ -20,6 +20,13 @@ import CatalogPruning._
 private[sources] object CatalogChanges {
   import GraftTableCatalog._
 
+  /** The change feed's reader: every column of `base`, plus the upsert
+    * key files' anti-join. */
+  private[sources] def changesReader(dir: File, base: StructType)
+      : PartitionReaderFactory =
+    readerFactory(base, readMapping(dir, base), base,
+      upsertKeyIndex(dir, base))
+
   /** Derive the CHANGE DATA FEED splits for versions (fromV, toV]: diff
     * consecutive retained manifests — removed files' live rows become
     * deletes, added files' live rows become inserts, a same-file
@@ -50,9 +57,7 @@ private[sources] object CatalogChanges {
       }
     var prev: Map[String, Entry] = baseManifest
       .map(_.files.map(e => e.name -> e).toMap).getOrElse(Map.empty)
-    val upsertKeyIdx: Int = readProps(dir).get(UpsertKeyProp)
-      .filter(schema.fieldNames.contains).map(schema.fieldIndex)
-      .getOrElse(-1)
+    val upsertKeyIdx = upsertKeyIndex(dir, schema)
     // the baseline's OWN equality deletes: a restarted stream must not
     // re-retract them, and the rows they killed must not re-emit
     var prevEq: Seq[EqDelete] =
@@ -83,7 +88,7 @@ private[sources] object CatalogChanges {
           e => // removed file: its rows LIVE AS OF v-1 are deletes —
             // "live" includes the eq filter, else rows an upsert already
             // retracted would double-delete when a rewrite removes them
-            out += filePartition(dir, schema, mp, schema, e,
+            out += filePartition(dir, schema, mp, e,
               changeType = "delete", changeVersion = v,
               eqCtx = ctxOf(prevEq))
         }
@@ -91,7 +96,7 @@ private[sources] object CatalogChanges {
           e => // added file: its live rows are inserts (the eq filter
             // only matters for the first-retained-baseline case, where
             // "added" files are old and may carry superseded rows)
-            out += filePartition(dir, schema, mp, schema, e,
+            out += filePartition(dir, schema, mp, e,
               changeType = "insert", changeVersion = v,
               eqCtx = ctxOf(m.eqDeletes))
         }
@@ -101,7 +106,7 @@ private[sources] object CatalogChanges {
             if (delta.nonEmpty) {
               val positions = loadDeletePositions(delta.map(d =>
                 new File(new File(dir, "data"), d.name).getPath).toArray)
-              out += filePartition(dir, schema, mp, schema,
+              out += filePartition(dir, schema, mp,
                 pe.copy(deletes = Seq.empty),
                 changeType = "delete", changeVersion = v,
                 positions = Some(positions))
@@ -120,7 +125,7 @@ private[sources] object CatalogChanges {
           prev.valuesIterator.foreach { pe =>
             val earlier = m.eqDeletes.filter(d =>
               d.seq > pe.seq && !newDels.exists(_.name == d.name))
-            out += filePartition(dir, schema, mp, schema, pe,
+            out += filePartition(dir, schema, mp, pe,
               changeType = "delete", changeVersion = v,
               eqCtx = Some((upsertKeyIdx, earlier)),
               keysOnly = newPaths)
@@ -486,7 +491,7 @@ private class ChangesScan(dir: File, base: StructType, out: StructType,
     changeSplits(dir, base, startingVersion, readLatest(dir),
       failOnExpiredStart = false)
   override def createReaderFactory(): PartitionReaderFactory =
-    CatalogColumnarReaderFactory
+    changesReader(dir, base)
 }
 
 private class ChangesMicroBatchStream(dir: File, base: StructType,
@@ -514,7 +519,7 @@ private class ChangesMicroBatchStream(dir: File, base: StructType,
       end.asInstanceOf[VersionOffset].v,
       failOnExpiredStart = true)
   override def createReaderFactory(): PartitionReaderFactory =
-    CatalogColumnarReaderFactory
+    changesReader(dir, base)
 }
 
 /** The catalog table as a STREAMING SOURCE — version-offset tailing:
@@ -583,7 +588,7 @@ private class CatalogMicroBatchStream(dir: File, tableSchema: StructType,
       val cur = m.files.map(e => e.name -> e).toMap
       if (AppendOps.contains(m.op))
         m.files.filterNot(f => seen.contains(f.name)).foreach { f =>
-          out += filePartition(dir, tableSchema, mp, required, f)
+          out += filePartition(dir, tableSchema, mp, f)
         }
       else if (m.op == "fast_forward") {
         // a WAP publish that only INSERTED on its branch is an append:
@@ -603,7 +608,7 @@ private class CatalogMicroBatchStream(dir: File, tableSchema: StructType,
             "pre-existing rows — the append feed cannot represent it; " +
             "read the .changes change data feed instead")
         m.files.filterNot(f => seen.contains(f.name)).foreach { f =>
-          out += filePartition(dir, tableSchema, mp, required, f)
+          out += filePartition(dir, tableSchema, mp, f)
         }
       }
       seen = cur
@@ -612,7 +617,7 @@ private class CatalogMicroBatchStream(dir: File, tableSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    CatalogColumnarReaderFactory
+    readerFactory(tableSchema, readMapping(dir, tableSchema), required, -1)
 }
 
 private case class VersionOffset(v: Long)

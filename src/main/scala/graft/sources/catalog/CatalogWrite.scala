@@ -315,6 +315,11 @@ private case class CatalogWriterFactory(dirPath: String, jobUid: String,
     upsertEnc: String = "", specId: Int = 0, bloomEnc: String = "")
     extends DataWriterFactory {
   import GraftTableCatalog._
+  @transient private lazy val fileSchema = withFieldIds(
+    DataType.fromJson(schemaJson).asInstanceOf[StructType].fields.toSeq,
+    if (idsCsv.isEmpty) Seq.empty else idsCsv.split(",").map(_.toInt).toSeq)
+  // one Parquet writer conf per factory instance, shared by its files
+  @transient private lazy val conf = writerConf(fileSchema)
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
@@ -327,11 +332,7 @@ private case class CatalogWriterFactory(dirPath: String, jobUid: String,
           Some((p(0).toInt, p(1) == "S"))
         }
       private val upsertKeys = new java.util.LinkedHashSet[Any]()
-      private val schema =
-        DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      private val types = schema.fields.map(_.dataType)
-      private val ids: Array[Int] =
-        if (idsCsv.isEmpty) Array.empty else idsCsv.split(",").map(_.toInt)
+      private val types = fileSchema.fields.map(_.dataType)
       private val spec: Array[(String, Int, Int)] =
         if (specEnc.isEmpty) Array.empty
         else specEnc.split(";").map { s =>
@@ -345,8 +346,8 @@ private case class CatalogWriterFactory(dirPath: String, jobUid: String,
         if (bloomEnc.isEmpty) Array.empty
         else bloomEnc.split(",").map(_.toInt)
       private def newSink(tuple: Seq[String], suffix: String) =
-        new CatalogFileWriter(dataDir, s"$stem$suffix", tuple, types, ids,
-          bloomPos)
+        new CatalogFileWriter(dataDir, s"$stem$suffix", tuple, fileSchema,
+          conf, bloomPos)
 
       private val sinks =
         collection.mutable.LinkedHashMap[Seq[String], CatalogFileWriter]()

@@ -1,10 +1,16 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Dataset, ExpressionUtils,
   SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** The engine's private-API doorway: every `private[sql]`/`private[spark]`
@@ -32,7 +38,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * every [[org.apache.spark.scheduler.SparkListener]]
   * (`private[spark]` `listenerBus.waitUntilEmpty()`). Listener delivery is
   * asynchronous, so a job counter read right after an action can miss the
-  * last jobs; draining makes the count exact without sleeping. */
+  * last jobs; draining makes the count exact without sleeping.
+  *
+  * `parquetReaderFactory` builds Spark's vectorized Parquet reader
+  * factory over a broadcast Hadoop conf, as `ParquetScan` does
+  * (`private[spark]` `SerializableConfiguration.broadcast`). */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
@@ -42,4 +52,10 @@ object GraftSqlShim {
   def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  def parquetReaderFactory(sc: SparkContext, sqlConf: SQLConf, conf: Configuration,
+      readSchema: StructType): ParquetPartitionReaderFactory =
+    ParquetPartitionReaderFactory(sqlConf, SerializableConfiguration.broadcast(sc, conf),
+      readSchema, readSchema, new StructType(), Array.empty, None,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
 }

@@ -26,13 +26,16 @@ class CatalogSpec extends SparkSpec {
 
   /** An independent decoder of one data file, skipping the positions its
     * delete files name: (file, position, value of field `id`) for every
-    * row left. Each row is a null-bitmap long, then each non-null value:
-    * LONG and DOUBLE as 8 big-endian bytes, STRING as an int length and
-    * UTF-8 bytes. The catalog itself decodes only through its columnar
-    * reader, so this pins that reader and the writers against a second
-    * reading of the bytes. */
+    * row left. It reads through parquet-java's own `ParquetReader` with
+    * `GroupReadSupport` and finds the column by the footer's field id,
+    * sharing no code with the Spark vectorized reader the catalog decodes
+    * with, so this pins that reader and the writers against a second
+    * reading of the files. */
   private def referenceDecode(dir: File, e: GraftTableCatalog.Entry,
       id: Int): Seq[(String, Long, Any)] = {
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     val data = new File(dir, "data")
     e.typeCodes.length shouldBe e.cols
     val deleted = e.deletes.flatMap { d =>
@@ -40,25 +43,32 @@ class CatalogSpec extends SparkSpec {
         java.nio.file.Files.readAllBytes(new File(data, d.name).toPath))
       Seq.fill(b.remaining / 8)(b.getLong())
     }.toSet
-    val at = e.fieldIds.indexOf(id)
-    val buf = java.nio.ByteBuffer.wrap(
-      java.nio.file.Files.readAllBytes(new File(data, e.name).toPath))
-    val out = (0L until e.rows).flatMap { pos =>
-      val bits = buf.getLong()
-      val row = e.typeCodes.indices.map { i =>
-        if ((bits & (1L << i)) != 0) null
-        else e.typeCodes(i) match {
-          case 'L' => buf.getLong()
-          case 'D' => buf.getDouble()
-          case 'S' =>
-            val b = new Array[Byte](buf.getInt()); buf.get(b)
-            new String(b, java.nio.charset.StandardCharsets.UTF_8)
-        }
+    val reader = ParquetReader.builder(new GroupReadSupport,
+      new org.apache.hadoop.fs.Path(new File(data, e.name).getPath)).build()
+    val out = Seq.newBuilder[(String, Long, Any)]
+    var pos = 0L
+    try {
+      var g = reader.read()
+      while (g != null) {
+        val t = g.getType
+        val at = (0 until t.getFieldCount)
+          .filter(i => t.getType(i).getId != null &&
+            t.getType(i).getId.intValue == id) match { case Seq(i) => i }
+        val v: Any =
+          if (g.getFieldRepetitionCount(at) == 0) null
+          else t.getType(at).asPrimitiveType.getPrimitiveTypeName match {
+            case PrimitiveTypeName.INT64 => g.getLong(at, 0)
+            case PrimitiveTypeName.DOUBLE => g.getDouble(at, 0)
+            case PrimitiveTypeName.BINARY => g.getString(at, 0)
+            case other => fail(s"graft_cat writes no $other column")
+          }
+        if (!deleted(pos)) out += ((e.name, pos, v))
+        pos += 1
+        g = reader.read()
       }
-      if (deleted(pos)) None else Some((e.name, pos, row(at)))
-    }
-    buf.remaining shouldBe 0 // every byte of the file was one of its rows
-    out
+    } finally reader.close()
+    pos shouldBe e.rows // every row the manifest counts was read
+    out.result()
   }
 
   private def freshTable(name: String, ddlCols: String,
@@ -399,11 +409,11 @@ class CatalogSpec extends SparkSpec {
       // the replay arrives WITH freshly re-written task files: the no-op
       // commit must delete them, or they strand forever (referenced by no
       // manifest, so expire never touches them)
-      val staged = new File(dir, "data/fake-replay.bin")
+      val staged = new File(dir, "data/fake-replay.parquet")
       java.nio.file.Files.write(staged.toPath, Array[Byte](1, 2, 3))
       new graft.sources.CatalogStreamingWrite(dir, schema, None, queryId)
         .commit(0L, Array(graft.sources.CatalogCommit(Seq(
-          GraftTableCatalog.Entry("fake-replay.bin", 1L, 3L, 2, Map.empty,
+          GraftTableCatalog.Entry("fake-replay.parquet", 1L, 3L, 2, Map.empty,
             Set.empty, ids, "LL")))))
       GraftTableCatalog.readLatest(dir) shouldBe versionsBefore
       staged.exists() shouldBe false
@@ -412,11 +422,11 @@ class CatalogSpec extends SparkSpec {
       // checkpoint whose epochs restart at 0) is NOT a replay: its first
       // micro-batch commits instead of being silently dropped — replay
       // detection is namespaced per-stream
-      val staged2 = new File(dir, "data/fresh-stream.bin")
+      val staged2 = new File(dir, "data/fresh-stream.parquet")
       java.nio.file.Files.write(staged2.toPath, Array[Byte](1, 2, 3))
       new graft.sources.CatalogStreamingWrite(dir, schema, None, "other-q")
         .commit(0L, Array(graft.sources.CatalogCommit(Seq(
-          GraftTableCatalog.Entry("fresh-stream.bin", 0L, 3L, 2, Map.empty,
+          GraftTableCatalog.Entry("fresh-stream.parquet", 0L, 3L, 2, Map.empty,
             Set.empty, ids, "LL")))))
       GraftTableCatalog.readLatest(dir) shouldBe versionsBefore + 1
     }
@@ -888,8 +898,88 @@ class CatalogSpec extends SparkSpec {
     rows("SELECT count(*) FROM graft_cat.db.evo WHERE b IS NOT NULL") shouldBe
       Seq(Seq(0L))
     GraftTableCatalog.filesOpened.get() shouldBe 0L
+    // rows written after the re-add carry b; every older file predates
+    // its field id and reads it as NULL, next to the renamed a2
+    sql("INSERT INTO graft_cat.db.evo VALUES (5000, 'y5000')")
+    rows("SELECT a2, b FROM graft_cat.db.evo WHERE a2 IN (0, 1500, 5000) " +
+      "ORDER BY a2") shouldBe
+      Seq(Seq(0L, null), Seq(1500L, null), Seq(5000L, "y5000"))
     // rename clash guard
     intercept[Exception](sql("ALTER TABLE graft_cat.db.evo RENAME COLUMN a2 TO b"))
+  }
+
+  test("Parquet data files: a 100-column CTAS round-trips values and nulls, and ADD COLUMN goes past 64 columns") {
+    sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
+    sql("DROP TABLE IF EXISTS graft_cat.db.wide")
+    val cols = (0 until 100).map { i =>
+      if (i % 3 == 0) s"IF(id % 2 = 0, NULL, id + $i) AS c$i"
+      else if (i % 3 == 1) s"IF(id % 5 = 0, NULL, id * $i * 0.5D) AS c$i"
+      else s"IF(id % 7 = 0, NULL, concat('s', id, '_', $i)) AS c$i"
+    }
+    sql(s"CREATE TABLE graft_cat.db.wide AS SELECT ${cols.mkString(", ")} " +
+      "FROM range(0, 50, 1, 2)")
+    sql("SELECT * FROM graft_cat.db.wide").collect().toSet shouldBe
+      spark.range(0, 50, 1, 2).selectExpr(cols: _*).collect().toSet
+    val t = freshTable("wide64", (0 until 64).map(i => s"c$i BIGINT").mkString(", "))
+    val vals = (0 until 64).map(i => s"id + $i").mkString(", ")
+    sql(s"INSERT INTO $t SELECT $vals FROM range(0, 3)")
+    sql(s"ALTER TABLE $t ADD COLUMN c64 BIGINT")
+    sql(s"ALTER TABLE $t ADD COLUMN c65 STRING")
+    sql(s"INSERT INTO $t SELECT $vals, id * 100, 'n' FROM range(3, 5)")
+    rows(s"SELECT c0, c63, c64, c65 FROM $t ORDER BY c0") shouldBe Seq(
+      Seq(0L, 63L, null, null), Seq(1L, 64L, null, null),
+      Seq(2L, 65L, null, null), Seq(3L, 66L, 300L, "n"),
+      Seq(4L, 67L, 400L, "n"))
+  }
+
+  test("Parquet data files: inserts, a merge-on-read delete and sys.compact leave no .crc file in data/, and remove_orphans sweeps nothing") {
+    val t = freshTable("nocrc", "k BIGINT, s STRING",
+      "TBLPROPERTIES ('delete.mode'='merge-on-read')")
+    sql(s"INSERT INTO $t SELECT id, concat('s', id) FROM range(0, 100, 1, 2)")
+    sql(s"INSERT INTO $t VALUES (100, 'x')")
+    sql(s"DELETE FROM $t WHERE k % 7 = 3")
+    sql(s"CALL graft_cat.sys.compact('db', 'nocrc', ${64L * 1024 * 1024})")
+    val names = catFile("db/nocrc/data").listFiles().map(_.getName).toSeq
+    names.filter(_.endsWith(".crc")) shouldBe empty
+    names.count(_.endsWith(".parquet")) should be >= 3
+    names.exists(_.endsWith(".del")) shouldBe true
+    rows("CALL graft_cat.sys.remove_orphans('db', 'nocrc', 0)").head.head shouldBe 0L
+    rows(s"SELECT count(*) FROM $t") shouldBe Seq(Seq(101L - 14L))
+  }
+
+  test("a manifest entry naming a .bin data file fails loudly at planning and is never read") {
+    val t = freshTable("binent", "k BIGINT")
+    sql(s"INSERT INTO $t VALUES (1), (2)")
+    val dir = catFile("db/binent")
+    val latest = GraftTableCatalog.readLatest(dir)
+    val m = GraftTableCatalog.readManifest(dir, latest)
+    val e = m.files.head
+    java.nio.file.Files.copy(new File(dir, s"data/${e.name}").toPath,
+      new File(dir, "data/legacy.bin").toPath)
+    GraftTableCatalog.commitVersion(dir, latest, "append",
+      m.files :+ e.copy(name = "legacy.bin"))
+    def rootMsg(x: Throwable): String =
+      if (x == null) "" else x.getMessage + " | " + rootMsg(x.getCause)
+    GraftTableCatalog.filesOpened.set(0)
+    val err = intercept[Exception](sql(s"SELECT k FROM $t").collect())
+    rootMsg(err) should (include("legacy.bin") and include("recreated"))
+    GraftTableCatalog.filesOpened.get() shouldBe 0L
+  }
+
+  test("DELETE and SELECT agree on -0.0 and NaN: a DOUBLE predicate deletes exactly the rows SELECT matches") {
+    val preds = Seq("x < 0.0", "x <= 0.0", "x = 0.0", "x >= 0.0", "x > 0.0",
+      "x IN (0.0, 1.0)")
+    for (mode <- Seq("copy-on-write", "merge-on-read"); p <- preds) {
+      val t = freshTable("negzero", "k BIGINT, x DOUBLE",
+        s"TBLPROPERTIES ('delete.mode'='$mode')")
+      sql(s"INSERT INTO $t VALUES (1, -0.0D), (2, 0.0D), (3, -1.0D), " +
+        "(4, 1.0D), (5, double('NaN')), (6, NULL)")
+      val kept = rows(s"SELECT k FROM $t WHERE NOT ($p) OR x IS NULL ORDER BY k")
+      sql(s"DELETE FROM $t WHERE $p")
+      withClue(s"$mode, $p: ") {
+        rows(s"SELECT k FROM $t ORDER BY k") shouldBe kept
+      }
+    }
   }
 
   test(".changes: the feed folds back to the table exactly, a MOR delete emits its delta positions, compaction emits nothing") {
@@ -1917,7 +2007,7 @@ class CatalogSpec extends SparkSpec {
     val fileA = base.files.head
     pureAppendsSince(base, base) shouldBe true
     pureAppendsSince(base, base.copy(
-      files = base.files :+ fileA.copy(name = "new-append.bin"))) shouldBe true
+      files = base.files :+ fileA.copy(name = "new-append.parquet"))) shouldBe true
     pureAppendsSince(base, base.copy(
       files = base.files.tail)) shouldBe false // a scanned file vanished
     pureAppendsSince(base, base.copy(files =
@@ -2581,19 +2671,19 @@ class CatalogSpec extends SparkSpec {
     val before = dataDir.listFiles().map(_.getName).toSet
     before.size should be > 4
     // plant a crashed writer's strands: a data file and its bloom sidecar
-    val orphan = new File(dataDir, "deadbeef0001.bin")
+    val orphan = new File(dataDir, "deadbeef0001.parquet")
     java.nio.file.Files.write(orphan.toPath, Array.fill(64)(7.toByte))
-    java.nio.file.Files.write(new File(dataDir, "deadbeef0001.bin.bloom")
+    java.nio.file.Files.write(new File(dataDir, "deadbeef0001.parquet.bloom")
       .toPath, Array.fill(32)(1.toByte))
     // an IN-FLIGHT write (fresh mtime) with a generous grace: untouched
     val r0 = rows("CALL graft_cat.sys.remove_orphans('db', 'orph', " +
       s"${60L * 60 * 1000})")
     r0.head.head shouldBe 0L
     dataDir.listFiles().map(_.getName).toSet should
-      contain allElementsOf Set("deadbeef0001.bin", "deadbeef0001.bin.bloom")
+      contain allElementsOf Set("deadbeef0001.parquet", "deadbeef0001.parquet.bloom")
     // age the strands past the window -> exactly the two orphans go
     orphan.setLastModified(System.currentTimeMillis - 10000)
-    new File(dataDir, "deadbeef0001.bin.bloom")
+    new File(dataDir, "deadbeef0001.parquet.bloom")
       .setLastModified(System.currentTimeMillis - 10000)
     val r1 = rows("CALL graft_cat.sys.remove_orphans('db', 'orph', 5000)")
     r1.head.head shouldBe 2L

@@ -232,19 +232,22 @@ class MetricsSpec extends SparkSpec {
   }
 
   test("one table format: src/main/scala/graft/sources mints data-file names in one writer and registers only graft-series") {
-    // graft_cat is the one transactional table format and
-    // CatalogFileWriter its one data-file encoder, so a second sink or a
-    // second writer minting `.bin` files fails here, and so does a `.bin`
-    // name minted outside the format file.
-    val bins = codeSites("src/main/scala/graft/sources", """\.bin"""".r)
+    // graft_cat is the one transactional table format and its data files
+    // are Parquet written by CatalogFileWriter, so a second writer minting
+    // `.parquet` names inside graft/sources fails here, and so does any
+    // `.bin` name the retired row codec used.
+    val parquets = codeSites("src/main/scala/graft/sources", """\.parquet"""".r)
+      .map { case (f, line, _) => s"$f:$line" }
+    val bins = codeSites("src/main", """\.bin"""".r)
       .map { case (f, line, _) => s"$f:$line" }
     val registered = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/main/resources/META-INF/services/" +
         "org.apache.spark.sql.sources.DataSourceRegister")), "UTF-8")
       .split("\n").map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
-    withClue(s".bin sites: ${bins.mkString(", ")}; registered: ${registered.mkString(", ")}: ") {
-      (bins.map(_.takeWhile(_ != ':')), registered) shouldBe
-        ((Seq("CatalogFormat.scala"), Seq("graft.sources.SeriesSource")))
+    withClue(s".parquet sites: ${parquets.mkString(", ")}; .bin sites: " +
+        s"${bins.mkString(", ")}; registered: ${registered.mkString(", ")}: ") {
+      (parquets.map(_.takeWhile(_ != ':')), bins, registered) shouldBe
+        ((Seq("CatalogFormat.scala"), Nil, Seq("graft.sources.SeriesSource")))
     }
   }
 
