@@ -89,7 +89,9 @@ private[sources] object CatalogFormat {
       .add(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
     val spark = SparkSession.active
     val sqlConf = SQLConf.get
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    // only the keys the Parquet reader reads: a copy of the whole Hadoop
+    // conf would be serialized into every scan's broadcast
+    val conf = new Configuration(false)
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, readSchema.json)
@@ -575,7 +577,6 @@ private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
     .withCompressionCodec(CompressionCodecName.fromConf(
       conf.get(org.apache.parquet.hadoop.ParquetOutputFormat.COMPRESSION)))
     .build()
-  private var closed = false
   private var rows = 0L
   private val hasNull = new Array[Boolean](types.length)
   private val hasVal = new Array[Boolean](types.length)
@@ -658,8 +659,8 @@ private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
       case i if ndvs(i) != null && rows > 0 =>
         s"#${ids(i)}" -> ndvs(i).estimate(rows)
     }.toMap
-  def closeOut(): Unit =
-    if (!closed) { closed = true; writer.close() }
+  /** Idempotent: the Parquet writer closes once. */
+  def closeOut(): Unit = writer.close()
 
   /** Close the file, write its bloom sidecar, and describe it as a
     * manifest entry: stats key by field id, and null presence is kept so
