@@ -77,8 +77,8 @@ private[sources] object CatalogFormat {
     * columns by field id, then the upsert key column `keyIdx` when key
     * files may apply and the scan does not project it, then Spark's
     * row-index column, which carries `_pos` and positions the deletes.
-    * The conf keys mirror `ParquetScan.createReaderFactory`; reading by
-    * field id is switched on in this conf copy only. */
+    * The keys mirror `ParquetScan.createReaderFactory`, on a conf of its
+    * own; reading by field id is switched on in that conf only. */
   private[sources] def readerFactory(tableSchema: StructType, mp: ColMapping,
       required: StructType, keyIdx: Int): CatalogColumnarReaderFactory = {
     val cols = required.fieldNames.toSeq.filter(tableSchema.fieldNames.contains)
@@ -87,11 +87,8 @@ private[sources] object CatalogFormat {
     val idx = read.map(tableSchema.fieldIndex)
     val readSchema = withFieldIds(idx.map(tableSchema(_)), idx.map(mp.ids))
       .add(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
-    val spark = SparkSession.active
     val sqlConf = SQLConf.get
-    // only the keys the Parquet reader reads: a copy of the whole Hadoop
-    // conf would be serialized into every scan's broadcast
-    val conf = new Configuration(false)
+    val conf = new Configuration(false) // the broadcast carries these keys only
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, readSchema.json)
@@ -109,8 +106,8 @@ private[sources] object CatalogFormat {
       SQLConf.PARQUET_FIELD_ID_READ_ENABLED -> true
     ).foreach { case (entry, v) => conf.setBoolean(entry.key, v) }
     CatalogColumnarReaderFactory(
-      GraftSqlShim.parquetReaderFactory(spark.sparkContext, sqlConf, conf,
-        readSchema),
+      GraftSqlShim.parquetReaderFactory(SparkSession.active.sparkContext,
+        sqlConf, conf, readSchema),
       required.fieldNames.map {
         case FileMetaCol => -1
         case PosMetaCol => read.length
