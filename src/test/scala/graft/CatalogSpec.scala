@@ -967,19 +967,42 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("DELETE and SELECT agree on -0.0 and NaN: a DOUBLE predicate deletes exactly the rows SELECT matches") {
-    val preds = Seq("x < 0.0", "x <= 0.0", "x = 0.0", "x >= 0.0", "x > 0.0",
-      "x IN (0.0, 1.0)")
-    for (mode <- Seq("copy-on-write", "merge-on-read"); p <- preds) {
-      val t = freshTable("negzero", "k BIGINT, x DOUBLE",
-        s"TBLPROPERTIES ('delete.mode'='$mode')")
-      sql(s"INSERT INTO $t VALUES (1, -0.0D), (2, 0.0D), (3, -1.0D), " +
-        "(4, 1.0D), (5, double('NaN')), (6, NULL)")
-      val kept = rows(s"SELECT k FROM $t WHERE NOT ($p) OR x IS NULL ORDER BY k")
-      sql(s"DELETE FROM $t WHERE $p")
-      withClue(s"$mode, $p: ") {
-        rows(s"SELECT k FROM $t ORDER BY k") shouldBe kept
+    // a DELETE removes exactly the rows its predicate is TRUE for: rows
+    // where it is FALSE or NULL stay, as SELECT's NOT coalesce(p, false)
+    // keeps them
+    def agree(cols: String, rowsSql: String, preds: Seq[String],
+        oneFile: Boolean = false): Unit =
+      for (mode <- Seq("copy-on-write", "merge-on-read"); p <- preds) {
+        val t = freshTable("negzero", cols,
+          s"TBLPROPERTIES ('delete.mode'='$mode')")
+        sql(s"INSERT INTO $t SELECT /*+ COALESCE(1) */ * FROM VALUES $rowsSql")
+        if (oneFile) {
+          val dir = catFile("db/negzero")
+          GraftTableCatalog.readManifest(dir, GraftTableCatalog.readLatest(dir))
+            .files.length shouldBe 1
+        }
+        val kept =
+          rows(s"SELECT k FROM $t WHERE NOT coalesce(($p), false) ORDER BY k")
+        sql(s"DELETE FROM $t WHERE $p")
+        withClue(s"$mode, $p: ") {
+          rows(s"SELECT k FROM $t ORDER BY k") shouldBe kept
+        }
       }
-    }
+    agree("k BIGINT, x DOUBLE", "(1, -0.0D), (2, 0.0D), (3, -1.0D), " +
+      "(4, 1.0D), (5, double('NaN')), (6, CAST(NULL AS DOUBLE))",
+      Seq("x < 0.0", "x <= 0.0", "x = 0.0", "x >= 0.0", "x > 0.0",
+        "x IN (0.0, 1.0)"))
+    // NOT over a NULL comparison is NULL, never TRUE: the two NULL-x rows
+    // survive every negated predicate (the last two are controls)
+    agree("k BIGINT, x BIGINT", "(1L, 1L), (2L, 2L), (3L, 3L), " +
+      "(4L, CAST(NULL AS BIGINT)), (5L, CAST(NULL AS BIGINT)), (9L, 4L)",
+      Seq("x <> 1", "NOT (x = 1)", "NOT (x IN (1, 2))",
+        "NOT (x = 1 OR k = 9)", "NOT (x IN (1, 2)) AND k > 0",
+        "NOT (x > 1)", "NOT (x = 1 AND k = 1)"))
+    // a whole file whose non-NULL values all satisfy the predicate still
+    // keeps its NULL row
+    agree("k BIGINT, x BIGINT", "(1L, 2L), (2L, 4L), (3L, CAST(NULL AS BIGINT))",
+      Seq("x <> 1", "NOT (x IN (1, 7))"), oneFile = true)
   }
 
   test(".changes: the feed folds back to the table exactly, a MOR delete emits its delta positions, compaction emits nothing") {
