@@ -486,13 +486,13 @@ object IngestQueries {
              |FROM $t GROUP BY 1""".stripMargin)
   }
 
-  /** q268: SQL `DELETE FROM` through the catalog — the connector runs
-    * the Iceberg delete split (CatalogSpec pins it: stats-proven
-    * all-match files DROP from the manifest metadata-only, disjoint
-    * files stay byte-identical, only boundary files copy-on-write).
-    * At 100 TB that is the difference between a delete that rewrites
-    * the table and one that rewrites a file. Oracle: DuckDB aggregates
-    * the source rows the predicate keeps. */
+  /** q268: SQL `DELETE FROM` through the catalog. When file stats prove
+    * every file all-match or none-match, the connector commits it
+    * metadata-only: all-match files DROP from the manifest, the rest
+    * stay byte-identical. Otherwise (here: `cents` straddles 10000 inside
+    * the CTAS files) Spark runs its row-level plan, which copy-on-writes
+    * only the files holding matching rows (CatalogSpec pins both).
+    * Oracle: DuckDB aggregates the source rows the predicate keeps. */
   val q268CatalogDelete: Q = (s, d) => {
     val t = catTable(s, d, "ev268")
     s.sql(s"CREATE TABLE $t AS ${catEventsSql(s, d)}")

@@ -293,10 +293,12 @@ object ScaleQueries {
     * takedown/retention-purge) capability: a `DELETE FROM` over the
     * corpus's own lang-partitioned `graft_cat` copy ([[corpusTable]])
     * removes a deterministic target set (de docs with doc_id ≡ 2 mod 5)
-    * and the query returns the post-delete corpus. The `lang = 'de'`
-    * conjunct prunes the rewrite to de's files; a re-run finds no targets
-    * and writes no data file; a delete covering a whole partition is
-    * metadata-only (OperationalSpec pins all three). The oracle is the
+    * and the query returns the post-delete corpus. `pmod` rules out a
+    * metadata-only delete, so Spark's row-level plan runs, and the
+    * `lang = 'de'` conjunct prunes its rewrite to de's files; a re-run
+    * finds no targets and writes no data file; a delete covering a whole
+    * partition drops its files metadata-only (OperationalSpec pins all
+    * three). The oracle is the
     * source minus the target predicate — the delete machinery must be
     * invisible to surviving rows. */
   val q127ForgetDelete: Q = (s, d) => {

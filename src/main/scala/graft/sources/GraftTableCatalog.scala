@@ -678,12 +678,12 @@ object GraftTableCatalog {
     * values per file; a false positive costs one data-file scan, never
     * correctness. */
   val BloomColsProp = "write.bloom.columns"
-  /** Table property: how `DELETE FROM` treats boundary files.
-    * 'copy-on-write' (default) rewrites them; 'merge-on-read' commits a
-    * position delete file readers anti-merge — the Iceberg v2 read path,
-    * so a 10-row delete never rewrites a 1 GB file. It governs both DELETE
-    * paths: the metadata delete ([[deleteWhere]]) and the row-level one a
-    * predicate that is not a data-source `Filter` takes. */
+  /** Table property: how a `DELETE FROM` that is not metadata-only runs.
+    * 'copy-on-write' (default) rewrites the files holding matching rows;
+    * 'merge-on-read' commits a position delete file readers anti-merge —
+    * the Iceberg v2 read path, so a 10-row delete never rewrites a 1 GB
+    * file. A metadata-only DELETE (every file all-match or none-match)
+    * only drops manifest entries under either mode. */
   val DeleteModeProp = "delete.mode"
   /** The identifier suffix addressing a writable branch:
     * `db.t.branch_<name>` (the Iceberg Spark identifier shape). */
@@ -815,13 +815,9 @@ object GraftTableCatalog {
   val rewriteDeletesRaceHook =
     new java.util.concurrent.atomic.AtomicReference[Runnable](null)
   val lastDeleteDropped = new AtomicLong(-1)
-  val lastDeleteRewritten = new AtomicLong(-1)
   val lastDeleteKept = new AtomicLong(-1)
-  /** merge-on-read: boundary files that took a position-delete file
-    * instead of a rewrite in the last DELETE. */
-  val lastDeleteMorFiles = new AtomicLong(-1)
-  /** boundary files the last DELETE kept UNREAD because a bloom sidecar
-    * disproved its point predicate. */
+  /** files the last metadata-only DELETE kept UNREAD because a bloom
+    * sidecar disproved its point predicate. */
   val lastDeleteBloomKept = new AtomicLong(-1)
 
   private[sources] def deleteTree(f: File): Unit = {

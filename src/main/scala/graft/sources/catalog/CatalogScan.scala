@@ -6,7 +6,6 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsPartitionManagement, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
@@ -14,7 +13,7 @@ import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, Cus
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, LocalScan, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning => V2Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue, And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or}
+import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue, And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Or}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -208,7 +207,6 @@ private class CatalogTable(dir: File, tableName: String,
           prev = Some(cur))
       }
       lastDeleteDropped.set(hit.length.toLong)
-      lastDeleteRewritten.set(0L)
       lastDeleteKept.set(kept.length.toLong)
       true
     }
@@ -299,78 +297,61 @@ private class CatalogTable(dir: File, tableName: String,
       clusterOn, branch, info.queryId())
   }
 
-  override def canDeleteWhere(filters: Array[Filter]): Boolean = {
-    // decline filters touching columns outside the DATA schema (e.g. the
-    // _file metadata column): the row evaluator has no value for them —
-    // declining routes the delete to the group-based row-level path,
-    // whose scan DOES expose _file
-    val dataCols = schema().fieldNames.toSet
-    pinned.isEmpty && filters.forall(f =>
-      filterSupported(f) && f.references.forall(dataCols.contains))
-  }
+  /** A DELETE runs here only when it is METADATA-ONLY: every live file
+    * is proven all-match (it drops from the manifest) or none-match (by
+    * min/max and partition facts, or a bloom sidecar that rules its point
+    * predicate out; it stays untouched). Otherwise this says no, and
+    * Spark runs the row-level plan it already built: under copy-on-write
+    * [[CatalogRowLevelOperation]] rewrites the files holding matches and
+    * keeps rows where `NOT (cond <=> true)`; under
+    * `delete.mode`='merge-on-read' [[CatalogDeltaOperation]] writes
+    * position deletes. Spark evaluates every row either way, so a DELETE
+    * has one predicate evaluator and NULL stays NULL. */
+  override def canDeleteWhere(filters: Array[Filter]): Boolean =
+    pinned.isEmpty && deleteSplit(liveManifest(), filters).forall(_._2.isDefined)
 
-  /** The Iceberg delete split, now over FULL file facts (partition
-    * values + stats + null presence): proven all-match files DROP from
-    * the manifest (metadata-only — on an identity-partitioned table a
-    * partition-aligned DELETE never touches data), proven none-match
-    * files survive untouched, and only boundary files pay — a rewrite
-    * under copy-on-write, or a small position delete file under
-    * `delete.mode`='merge-on-read' (the Iceberg v2 read path: a 10-row
-    * delete on a 1 GB file writes 80 bytes, and `sys.compact` applies
-    * it later). The commit is one new manifest version; prior versions
-    * keep serving the old file set. */
-  override def deleteWhere(filters: Array[Filter]): Unit = {
+  /** Each live file under a DELETE's filters: `Some(true)` when every row
+    * matches, `Some(false)` when none can (`bloomKept` is set when only
+    * the bloom sidecar proves it), `None` for a boundary file, which
+    * only Spark's row-level plan can split. */
+  private def deleteSplit(m: Manifest, filters: Array[Filter])
+      : Seq[(Entry, Option[Boolean], Boolean)] = {
     val s = schema()
     val mp = readMapping(dir, s)
     val specs = readSpecs(dir)
-    def specOf(e: Entry): Seq[PT] =
-      if (e.specId >= 0 && e.specId < specs.length) specs(e.specId)
-      else Seq.empty
+    m.files.map { e =>
+      val spec =
+        if (e.specId >= 0 && e.specId < specs.length) specs(e.specId)
+        else Seq.empty
+      val facts = fileFacts(e, s, mp, spec)
+      if (filters.forall(allMatch(_, facts))) (e, Some(true), false)
+      else if (!filters.forall(mayMatch(_, facts))) (e, Some(false), false)
+      else if (!bloomMayMatch(dir, s, mp, e, filters)) (e, Some(false), true)
+      else (e, None, false)
+    }
+  }
+
+  /** The metadata-only DELETE [[canDeleteWhere]] accepted: all-match
+    * files drop, none-match files stay, as one new manifest version;
+    * prior versions keep serving the old file set. The split is taken
+    * again over the manifest this commits on: a non-append commit
+    * between planning and here (a `sys.compact` merging an all-match
+    * and a none-match file, say) can leave a boundary file, and the
+    * statement then fails rather than keep or drop that file whole. */
+  override def deleteWhere(filters: Array[Filter]): Unit = {
     val m = liveManifest()
     val latest = headVersion(dir, branch)
-    val mor = readProps(dir).get(DeleteModeProp).contains("merge-on-read")
-    val eqCtx = upsertCtx(dir, s, m.eqDeletes)
-    lazy val readLive = readAligned(dir, s, mp, eqCtx)
-    var dropped = 0L; var rewritten = 0L; var kept = 0L; var morFiles = 0L
-    var bloomKept = 0L
-    val remaining = m.files.flatMap { e =>
-      val facts = fileFacts(e, s, mp, specOf(e))
-      val every = filters.nonEmpty && filters.forall(allMatch(_, facts))
-      val any = filters.forall(mayMatch(_, facts))
-      if (every) { dropped += 1; None } // metadata-only drop
-      else if (!any) { kept += 1; Some(e) } // provably untouched
-      else if (!bloomMayMatch(dir, s, mp, e, filters)) {
-        // a point-predicate DELETE whose sidecar proves absence: the
-        // boundary file is untouched WITHOUT decoding a row
-        kept += 1; bloomKept += 1; Some(e)
-      } else {
-        // boundary file: decode live rows (field-id aligned, existing
-        // deletes applied) and split by the predicate
-        val live = readLive(e)
-        val (hit, miss) = live.partition { case (_, row) =>
-          filters.forall(evalFilter(_, s, row)) }
-        if (hit.isEmpty) { kept += 1; Some(e) }
-        else if (miss.isEmpty) { dropped += 1; None }
-        else if (mor) {
-          morFiles += 1
-          Some(e.copy(deletes =
-            e.deletes :+ writeDeleteFile(dir, hit.map(_._1))))
-        } else {
-          rewritten += 1
-          // survivors keep the file's partition tuple (rows of one file
-          // share it by construction) — the new file stays prunable; the
-          // rewrite MATERIALIZED any equality deletes, so it takes the
-          // new sequence and they never re-apply
-          Some(writeLocalFile(dir, "rw", s, mp, e.partition,
-            miss.map(_._2), seq = latest + 1, specId = e.specId))
-        }
-      }
+    val split = deleteSplit(m, filters)
+    split.collectFirst { case (e, None, _) => e }.foreach { e =>
+      throw new IllegalStateException(
+        s"DELETE on $dir raced a CONFLICTING commit: ${e.name} is no " +
+          "longer all-match or none-match: re-run")
     }
+    val remaining = split.collect { case (e, Some(false), _) => e }
     // OCC: rebase over pure appends (appended files are outside this
     // DELETE's snapshot and survive untouched — snapshot isolation);
-    // anything else fails loudly. The split decisions and any rewritten
-    // files were computed ONCE above and are reused across attempts.
-    // An emptied table needs no key files (nothing left to supersede).
+    // anything else fails loudly. An emptied table needs no key files
+    // (nothing left to supersede).
     retryingCommit(dir, branch, latest) { expected =>
       val cur = manifestAt(dir, branch, expected)
       if (expected != latest && !pureAppendsSince(m, cur))
@@ -384,11 +365,9 @@ private class CatalogTable(dir: File, tableName: String,
         if (remaining.isEmpty && appended.isEmpty) Seq.empty
         else m.eqDeletes, prev = Some(cur))
     }
-    lastDeleteDropped.set(dropped)
-    lastDeleteBloomKept.set(bloomKept)
-    lastDeleteRewritten.set(rewritten)
-    lastDeleteKept.set(kept)
-    lastDeleteMorFiles.set(morFiles)
+    lastDeleteDropped.set((split.length - remaining.length).toLong)
+    lastDeleteBloomKept.set(split.count(_._3).toLong)
+    lastDeleteKept.set(remaining.length.toLong)
   }
 }
 
@@ -1189,64 +1168,6 @@ private[sources] object CatalogPruning {
     // SQL TRUNCATE TABLE arrives as deleteWhere(AlwaysTrue) — every
     // file drops metadata-only (TRUE matches NULL rows too)
     case _: AlwaysTrue => true
-    case _ => false
-  }
-
-  /** Row-level predicate evaluation over decoded (boxed, CURRENT-schema-
-    * aligned) values — the authority DELETE's boundary path uses.
-    * Strings compare in UTF8String's UTF-8 binary order, the SAME order
-    * Spark applies to the identical residual predicate at scan time
-    * (java.lang.String.compareTo is UTF-16 code-unit order, which
-    * disagrees around supplementary characters — the round-14 advice
-    * fix). Supported shapes mirror `canDeleteWhere`. */
-  def evalFilter(f: Filter, schema: StructType, row: Array[Any]): Boolean = {
-    def col(c: String): Any = {
-      val i = schema.fieldIndex(c)
-      if (i < row.length) row(i) else null
-    }
-    def cmp(c: String, v: Any): Option[Int] = {
-      val x = col(c)
-      if (x == null || v == null) None
-      else (x, v) match {
-        case (a: Long, b: java.lang.Long) => Some(java.lang.Long.compare(a, b))
-        case (a: Long, b: java.lang.Integer) =>
-          Some(java.lang.Long.compare(a, b.longValue()))
-        case (a: Double, b: java.lang.Double) => // Spark's order:
-          // -0.0 = 0.0, and NaN = NaN is the greatest value
-          Some(SQLOrderingUtil.compareDoubles(a, b))
-        case (a: String, b: String) =>
-          Some(UTF8String.fromString(a).compareTo(UTF8String.fromString(b)))
-        case (a: String, b: UTF8String) =>
-          Some(UTF8String.fromString(a).compareTo(b))
-        case _ => sys.error(s"type mismatch comparing $c to $v")
-      }
-    }
-    f match {
-      case EqualTo(c, v) => cmp(c, v).contains(0)
-      case GreaterThan(c, v) => cmp(c, v).exists(_ > 0)
-      case GreaterThanOrEqual(c, v) => cmp(c, v).exists(_ >= 0)
-      case LessThan(c, v) => cmp(c, v).exists(_ < 0)
-      case LessThanOrEqual(c, v) => cmp(c, v).exists(_ <= 0)
-      case In(c, vs) => vs.exists(v => cmp(c, v).contains(0))
-      case IsNull(c) => col(c) == null
-      case IsNotNull(c) => col(c) != null
-      case And(l, r) => evalFilter(l, schema, row) && evalFilter(r, schema, row)
-      case Or(l, r) => evalFilter(l, schema, row) || evalFilter(r, schema, row)
-      case Not(x) => !evalFilter(x, schema, row)
-      case _: AlwaysTrue => true
-      case _: AlwaysFalse => false
-      case _ => sys.error(s"unsupported delete filter $f")
-    }
-  }
-
-  def filterSupported(f: Filter): Boolean = f match {
-    case EqualTo(_, _) | GreaterThan(_, _) | GreaterThanOrEqual(_, _) |
-         LessThan(_, _) | LessThanOrEqual(_, _) | In(_, _) |
-         IsNull(_) | IsNotNull(_) => true
-    case _: AlwaysTrue | _: AlwaysFalse => true
-    case And(l, r) => filterSupported(l) && filterSupported(r)
-    case Or(l, r) => filterSupported(l) && filterSupported(r)
-    case Not(x) => filterSupported(x)
     case _ => false
   }
 

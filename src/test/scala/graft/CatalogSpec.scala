@@ -114,12 +114,24 @@ class CatalogSpec extends SparkSpec {
     sql(s"INSERT INTO $t SELECT id, id * 10 FROM range(0, 100, 1, 1)")
     sql(s"INSERT INTO $t SELECT id, id * 10 FROM range(100, 200, 1, 1)")
     sql(s"INSERT INTO $t SELECT id, id * 10 FROM range(200, 300, 1, 1)")
-    // DELETE k >= 150: file [200,300) all-match -> dropped; [0,100)
-    // none-match -> kept; [100,200) boundary -> rewritten to [100,150)
+    val dir = catFile("db/del")
+    def entries() = GraftTableCatalog.readManifest(dir,
+      GraftTableCatalog.readLatest(dir)).files
+    def ranges(): Map[String, (Long, Long)] =
+      sql(s"SELECT _file, min(k), max(k) FROM $t GROUP BY _file").collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val before = ranges().map(_.swap)
+    before.keySet shouldBe Set((0L, 99L), (100L, 199L), (200L, 299L))
+    val untouched = entries().filter(_.name == before((0L, 99L)))
+    // DELETE k >= 150: [100,200) is a boundary file, so Spark's row-level
+    // plan runs: the none-match [0,100) keeps its entry byte-identical,
+    // the all-match [200,300) is gone, one new file holds [100,150)
     sql(s"DELETE FROM $t WHERE k >= 150")
-    GraftTableCatalog.lastDeleteDropped.get() shouldBe 1L
-    GraftTableCatalog.lastDeleteKept.get() shouldBe 1L
-    GraftTableCatalog.lastDeleteRewritten.get() shouldBe 1L
+    entries().filter(_.name == before((0L, 99L))) shouldBe untouched
+    val after = ranges()
+    after.keySet.intersect(before.values.toSet) shouldBe
+      Set(before((0L, 99L)))
+    (after - before((0L, 99L))).values.toSeq shouldBe Seq((100L, 149L))
     rows(s"SELECT count(*), min(k), max(k) FROM $t") shouldBe
       Seq(Seq(150L, 0L, 149L))
     // a predicate the metadata path cannot prove falls back to the
@@ -134,7 +146,7 @@ class CatalogSpec extends SparkSpec {
     sql(s"INSERT INTO $t SELECT id, id FROM range(0, 7, 1, 1)")
     sql(s"TRUNCATE TABLE $t")
     GraftTableCatalog.lastDeleteDropped.get() shouldBe 1L
-    GraftTableCatalog.lastDeleteRewritten.get() shouldBe 0L
+    entries() shouldBe empty
     rows(s"SELECT count(*) FROM $t") shouldBe Seq(Seq(0L))
   }
 
@@ -727,11 +739,14 @@ class CatalogSpec extends SparkSpec {
     rows("SELECT sum(v % 7) FROM graft_cat.db.pid WHERE g = 2")
       .head.head.asInstanceOf[Long] should be >= 0L
     GraftTableCatalog.filesOpened.get() shouldBe 4L // only g=2's files
-    // partition-aligned DELETE: every g=3 file drops metadata-only
+    // partition-aligned DELETE: every g=3 file drops metadata-only, the
+    // other twelve entries stay byte-identical, nothing new is written
+    GraftTableCatalog.filesOpened.set(0)
     sql("DELETE FROM graft_cat.db.pid WHERE g = 3")
+    GraftTableCatalog.filesOpened.get() shouldBe 0L
     GraftTableCatalog.lastDeleteDropped.get() shouldBe 4L
-    GraftTableCatalog.lastDeleteRewritten.get() shouldBe 0L
-    GraftTableCatalog.lastDeleteMorFiles.get() shouldBe 0L
+    GraftTableCatalog.readManifest(dir, GraftTableCatalog.readLatest(dir))
+      .files shouldBe files.filterNot(_.partition == Seq("l3"))
     rows("SELECT count(*) FROM graft_cat.db.pid") shouldBe Seq(Seq(6000L))
     rows("SELECT `partition`, files, `rows` FROM graft_cat.db.pid.partitions ORDER BY `partition`") shouldBe
       Seq(Seq("g=0", 4L, 2000L), Seq("g=1", 4L, 2000L), Seq("g=2", 4L, 2000L))
@@ -782,11 +797,10 @@ class CatalogSpec extends SparkSpec {
       .readManifest(dir, GraftTableCatalog.readLatest(dir)).files
     before.length shouldBe 1
     sql("DELETE FROM graft_cat.db.mor WHERE k >= 100 AND k < 110")
-    GraftTableCatalog.lastDeleteRewritten.get() shouldBe 0L
-    GraftTableCatalog.lastDeleteMorFiles.get() shouldBe 1L
     val after = GraftTableCatalog
       .readManifest(dir, GraftTableCatalog.readLatest(dir)).files
     after.map(_.name) shouldBe before.map(_.name) // data files untouched
+    after.head.deletes.length shouldBe 1 // one position delete file
     after.head.deletes.map(_.rows).sum shouldBe 10L
     after.head.liveRows shouldBe 9990L
     // a second delete layers another delete file; reads merge both
@@ -1559,11 +1573,21 @@ class CatalogSpec extends SparkSpec {
       .map(_.head.toString)
     labels.count(_.startsWith("g=")) shouldBe 4
     labels.count(_.startsWith("ms_day=")) shouldBe 3
-    // DELETE prunes per generation: the g=1 gen-0 file drops
-    // metadata-only; gen-1 boundary files rewrite under THEIR layout
+    // DELETE across generations: the gen-1 day files are boundary files
+    // for g = 1, so Spark's row-level plan runs. The other gen-0 files
+    // keep their entries byte-identical; the all-match g=1 gen-0 file is
+    // written away; each gen-1 file comes back under the days(ms) layout
+    val beforeDel = entries()
     sql("DELETE FROM graft_cat.db.specev WHERE g = 1")
-    GraftTableCatalog.lastDeleteDropped.get shouldBe 1L
-    GraftTableCatalog.lastDeleteRewritten.get shouldBe 3L
+    val afterDel = entries()
+    afterDel.filter(_.specId == 0).toSet shouldBe
+      beforeDel.filter(e => e.specId == 0 && e.partition != Seq("l1")).toSet
+    val rewritten = afterDel.filter(_.specId == 1)
+    rewritten.length shouldBe 3
+    rewritten.map(_.name).toSet.intersect(beforeDel.map(_.name).toSet) shouldBe
+      empty
+    rewritten.map(_.partition).toSet shouldBe
+      beforeDel.filter(_.specId == 1).map(_.partition).toSet
     rows("SELECT count(*) FROM graft_cat.db.specev") shouldBe Seq(Seq(60000L))
     entries().filter(_.specId == 1).foreach(_.partition.length shouldBe 1)
     // compaction packs per (generation, tuple): pruning survives it
@@ -1598,7 +1622,6 @@ class CatalogSpec extends SparkSpec {
     sql("ALTER TABLE graft_cat.db.pmgmt DROP PARTITION (g=1)")
     GraftTableCatalog.filesOpened.get shouldBe 0L
     GraftTableCatalog.lastDeleteDropped.get shouldBe 1L
-    GraftTableCatalog.lastDeleteRewritten.get shouldBe 0L
     rows("SELECT count(*), count(DISTINCT g) FROM graft_cat.db.pmgmt") shouldBe
       Seq(Seq(3000L, 3L))
     val after = GraftTableCatalog.readManifest(dir,
@@ -2475,20 +2498,39 @@ class CatalogSpec extends SparkSpec {
     val (words50k, fp50k) = sources.CatalogSpecDoors.bloomFp(50000, 20000)
     fp50k should be <= 0.02
     words50k should be <= 16384
-    // end-to-end: a 125k-row single file + an absent-key point DELETE —
-    // the sidecar disproves the predicate, the file is kept UNREAD
+    // end-to-end: four 31,250-row files whose k ranges all overlap, so
+    // min/max prunes nothing; file i holds the even keys 8n + 2i
     sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
     sql("DROP TABLE IF EXISTS graft_cat.db.blad")
     sql("""CREATE TABLE graft_cat.db.blad (k BIGINT, v BIGINT)
       |TBLPROPERTIES ('write.bloom.columns'='k')""".stripMargin)
-    sql("INSERT INTO graft_cat.db.blad SELECT id * 2, id " +
-      "FROM range(0, 125000, 1, 1)")
+    (0 until 4).foreach { i =>
+      sql(s"INSERT INTO graft_cat.db.blad SELECT id * 8 + ${2 * i}, id " +
+        "FROM range(0, 31250, 1, 1)")
+    }
+    val dir = catFile("db/blad")
+    def entries() = GraftTableCatalog.readManifest(dir,
+      GraftTableCatalog.readLatest(dir)).files
+    val before = entries()
+    before.length shouldBe 4
+    // an absent key: every sidecar disproves it, so the DELETE is
+    // metadata-only and opens no file
+    GraftTableCatalog.filesOpened.set(0)
     sql("DELETE FROM graft_cat.db.blad WHERE k = 124001") // odd: absent
-    GraftTableCatalog.lastDeleteBloomKept.get shouldBe 1L
-    GraftTableCatalog.lastDeleteRewritten.get shouldBe 0L
+    GraftTableCatalog.filesOpened.get shouldBe 0L
+    GraftTableCatalog.lastDeleteBloomKept.get shouldBe 4L
+    entries() shouldBe before
     rows("SELECT count(*) FROM graft_cat.db.blad") shouldBe Seq(Seq(125000L))
-    // a PRESENT key still deletes through the same path
+    // a present key (124000 = 8 * 15500, file 0) runs Spark's row-level
+    // plan, whose scans consult the same sidecars: only file 0 opens and
+    // is rewritten, the other three entries stay byte-identical
+    GraftTableCatalog.filesOpened.set(0)
     sql("DELETE FROM graft_cat.db.blad WHERE k = 124000")
+    GraftTableCatalog.filesOpened.get shouldBe 2L
+    val after = entries()
+    after.take(3) shouldBe before.tail
+    after.map(_.name) shouldNot contain(before.head.name)
+    after.map(_.rows) shouldBe Seq(31250L, 31250L, 31250L, 31249L)
     rows("SELECT count(*) FROM graft_cat.db.blad") shouldBe Seq(Seq(124999L))
   }
 
