@@ -2029,7 +2029,10 @@ class CatalogSpec extends SparkSpec {
     val info = new org.apache.spark.sql.connector.write.LogicalWriteInfo {
       override def queryId(): String = "occ-test"
       override def schema(): org.apache.spark.sql.types.StructType =
-        tbl.asInstanceOf[org.apache.spark.sql.connector.catalog.Table].schema()
+        org.apache.spark.sql.types.StructType(
+          tbl.asInstanceOf[org.apache.spark.sql.connector.catalog.Table]
+            .columns().toSeq.map(c => org.apache.spark.sql.types.StructField(
+              c.name(), c.dataType(), c.nullable())))
       override def options(): CaseInsensitiveStringMap =
         CaseInsensitiveStringMap.empty()
     }

@@ -247,7 +247,7 @@ class EtlEndToEndSpec extends SparkSpec {
       // the SQL surface must agree with the DataFrame results on the same
       // materialized tables.
       spark.sql(s"select count(*) from songsdwh.$t")
-        .head.getLong(0) shouldBe counts(t)
+        .head().getLong(0) shouldBe counts(t)
       val five = spark.sql(s"select * from songsdwh.$t limit(5)")
       five.schema shouldBe spark.read.parquet(sink.path(t)).schema
       five.count() shouldBe math.min(5L, counts(t))

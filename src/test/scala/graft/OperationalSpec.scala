@@ -1166,7 +1166,7 @@ class OperationalSpec extends SparkSpec {
         sum(when(col("ts") >= lit("2024-01-16").cast("timestamp"), col("cv"))
           .otherwise(0L)).cast("double").as("y"))
     val ref = u.agg((covar_pop(col("x"), col("y")) / var_pop(col("x"))).as("t"))
-      .head.getDouble(0)
+      .head().getDouble(0)
     math.abs(rows.head.getAs[Double]("theta") - ref) should be <
       math.abs(ref) * 1e-6 + 1e-9
   }
@@ -1256,7 +1256,7 @@ class OperationalSpec extends SparkSpec {
     hops.join(dist, Seq("node"), "left_anti").count() shouldBe 0L
     hops.join(dist, Seq("node"))
       .filter(col("dist") < col("hops")).count() shouldBe 0L
-    dist.agg(max(col("dist"))).head.getLong(0) should be <= 200L // 4 × 50
+    dist.agg(max(col("dist"))).head().getLong(0) should be <= 200L // 4 × 50
     // relaxation witness: every non-seed's cost is ≥ the best neighbor
     // extension (the shortest ≤4-edge path ends with SOME edge whose
     // source was reached one round earlier at no more than dv − w)
@@ -1325,7 +1325,7 @@ class OperationalSpec extends SparkSpec {
       .join(Tables.lineitem(spark, sf), col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
       .agg(max(floor(col("l_quantity")).cast("long")).as("r"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .groupBy(_._1)
     ratings.keySet shouldBe out.keySet
     // ridge objective ×det² stays integral: J(x) = Σ(r·det − v·x_num)² + λ|x_num|²
@@ -1401,7 +1401,7 @@ class OperationalSpec extends SparkSpec {
         (a, b) => struct(a.as("ta"), b.as("tb")))).as("p"))
       .groupBy(col("p.ta").as("ta"), col("p.tb").as("tb"))
       .agg(count(lit(1)).as("c_ab"))
-    bc.agg(count(lit(1))).head.getLong(0) shouldBe nt
+    bc.agg(count(lit(1))).head().getLong(0) shouldBe nt
     val bad = bc.groupBy(col("ta"))
       .agg(sum(col("c_ab")).as("ca2"), count(lit(1)).as("n1a2"))
       .filter(col("ca2") < col("n1a2")).count()
@@ -1502,7 +1502,7 @@ class OperationalSpec extends SparkSpec {
     out.head.getAs[Long]("n_pairs") shouldBe (40L * 39 / 2)
     val mean = series.agg(
       (max("x") - min("x")).cast("double") / (max("day") - min("day"))
-    ).head.getDouble(0)
+    ).head().getDouble(0)
     math.abs(mean - 3.0) should be > 1000.0
   }
 
@@ -1572,7 +1572,8 @@ class OperationalSpec extends SparkSpec {
           .cast("long").as("c"))
       .groupBy(col("event_type"), col("day"))
       .agg(sum(col("c")).as("cs"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .groupBy(_._1).view.mapValues(_.sortBy(_._2)).toMap
     def pava(pts: Seq[(Long, Long)]): Seq[Double] = {
       case class B(var cs: Long, var n: Long, var cnt: Int)
@@ -1657,7 +1658,7 @@ class OperationalSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val ev = Tables.events(spark, sf).select(col("user_id"), col("ts"))
     val maxDay = ev.agg(max(expr("unix_micros(ts) div 86400000000")))
-      .head.getLong(0)
+      .head().getLong(0)
     val cutoffUs = (maxDay - 6) * 86400000000L
     val gapUs = 30 * 60000000L
     val state = WindowQueries.sessionizeBatch(
@@ -2070,7 +2071,7 @@ class OperationalSpec extends SparkSpec {
         (col(c).cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
           .cast("double").as(c)): _*)
     got.foreach { case ((a, b), r) =>
-      val builtin = cents.agg(corr(col(a), col(b))).head.getDouble(0)
+      val builtin = cents.agg(corr(col(a), col(b))).head().getDouble(0)
       math.abs(r - builtin) should be < 1e-9
     }
   }
@@ -2428,7 +2429,7 @@ class OperationalSpec extends SparkSpec {
       .sortBy(_._1)
     def d2(a: Array[Long], b: Array[Long]): Long =
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
-    val dmin = scala.collection.mutable.Map(pts.map(_._1 -> Long.MaxValue): _*)
+    val dmin = scala.collection.mutable.Map.from(pts.map(_._1 -> Long.MaxValue))
     var center = pts.head._2
     val want = scala.collection.mutable.ArrayBuffer((1L, pts.head._1, 0L))
     for (i <- 2L to ClusterQueries.KC_K.toLong) {

@@ -49,7 +49,7 @@ class TablesSchemaSpec extends SparkSpec {
       declared.count() shouldBe plain.count()
       // arrays are not set-comparable in exceptAll; hash every row instead
       def digest(df: org.apache.spark.sql.DataFrame) =
-        df.select(xxhash64(df.columns.map(col): _*).as("h"))
+        df.select(xxhash64(df.columns.toSeq.map(col): _*).as("h"))
           .agg(sum(col("h").cast(DecimalType(38, 0))), count(lit(1))).head()
       digest(declared) shouldBe digest(plain)
     }
