@@ -316,8 +316,7 @@ private[sources] object CatalogFormat {
 
   /** Write CURRENT-schema-aligned boxed rows (strings as java String)
     * as one data file through [[CatalogFileWriter]] — the driver-side
-    * rewrite path: DELETE's copy-on-write boundary, sys.compact and
-    * rewrite_sorted. The table's bloom sidecars are rebuilt, so
+    * rewrite path of sys.compact and rewrite_sorted. The table's bloom sidecars are rebuilt, so
     * point-lookup pruning survives table maintenance. */
   private[sources] def writeLocalFile(dir: File, prefix: String,
       schema: StructType, mp: ColMapping, partition: Seq[String],
@@ -340,7 +339,7 @@ private[sources] object CatalogFormat {
   /** A whole-file decoder through [[CatalogColumnarReader]] (position
     * and equality deletes applied), each row ALIGNED to the current
     * schema by field id, strings as java String. Returns (rawPos,
-    * alignedRow) pairs — the boundary-delete and compact machinery. The
+    * alignedRow) pairs — the compact and rewrite_sorted machinery. The
     * reader factory is built once per call and each reader directly,
     * not through [[CatalogColumnarReaderFactory.createColumnarReader]],
     * so driver-side maintenance never counts as a scan in

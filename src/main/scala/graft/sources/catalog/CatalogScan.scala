@@ -311,9 +311,9 @@ private class CatalogTable(dir: File, tableName: String,
     pinned.isEmpty && deleteSplit(liveManifest(), filters).forall(_._2.isDefined)
 
   /** Each live file under a DELETE's filters: `Some(true)` when every row
-    * matches, `Some(false)` when none can (`bloomKept` is set when only
-    * the bloom sidecar proves it), `None` for a boundary file, which
-    * only Spark's row-level plan can split. */
+    * matches, `Some(false)` when none can (the third field is true when
+    * only the bloom sidecar proves that), `None` for a boundary file,
+    * which only Spark's row-level plan can split. */
   private def deleteSplit(m: Manifest, filters: Array[Filter])
       : Seq[(Entry, Option[Boolean], Boolean)] = {
     val s = schema()

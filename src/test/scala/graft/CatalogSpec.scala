@@ -2525,8 +2525,10 @@ class CatalogSpec extends SparkSpec {
     entries() shouldBe before
     rows("SELECT count(*) FROM graft_cat.db.blad") shouldBe Seq(Seq(125000L))
     // a present key (124000 = 8 * 15500, file 0) runs Spark's row-level
-    // plan, whose scans consult the same sidecars: only file 0 opens and
-    // is rewritten, the other three entries stay byte-identical
+    // plan, whose scans consult the same sidecars: the group filter's
+    // scan and the rewrite's scan each open file 0 and no other file, and
+    // only file 0 is rewritten; the other three entries stay
+    // byte-identical
     GraftTableCatalog.filesOpened.set(0)
     sql("DELETE FROM graft_cat.db.blad WHERE k = 124000")
     GraftTableCatalog.filesOpened.get shouldBe 2L
