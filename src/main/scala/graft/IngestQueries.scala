@@ -1066,7 +1066,7 @@ object IngestQueries {
     * range partitioning orders the unsigned key), `repartitionByRange`
     * + `sortWithinPartitions` land each z-run in one task, and the
     * VECTORIZED WRITER rebuilds stats, sums, ndv sketches and bloom
-    * sidecars for free; files move by same-filesystem rename and commit
+    * filters for free; files move by same-filesystem rename and commit
     * as one CDF-invisible version. Zero rows ever materialize on the
     * driver — the shape that holds at 100 TB. Oracle: identical to
     * q299's (clustering moved bytes, never rows). */
@@ -1172,12 +1172,13 @@ object IngestQueries {
 
   /** q298: ORPHAN-FILE SWEEP — `sys.remove_orphans`, the Iceberg
     * `remove_orphan_files` maintenance verb: crashed writers strand
-    * data files, sidecars and delete runs by design (a failed commit
-    * leaves garbage, never a dangling reference), and the sweep deletes
-    * every `data/` file no manifest — main history or branch commit —
+    * data files and delete files by design (a failed commit leaves
+    * garbage, never a dangling reference), and the sweep deletes every
+    * `data/` file no manifest — main history or branch commit —
     * references, guarded by an age window so in-flight writes survive.
     * The query plants a crashed writer's strands (a fake data file plus
-    * its bloom sidecar, back-dated past the window), sweeps, REQUIREs
+    * a position-delete file named the way `writeDeleteFile` names them,
+    * back-dated past the window), sweeps, REQUIREs
     * exactly those two files and their bytes reclaimed, and hash-gates
     * that the table reads identically afterwards — the sweep touched
     * nothing referenced, across both live data and the MOR delete files
@@ -1196,7 +1197,7 @@ object IngestQueries {
     s.sql(s"DELETE FROM $t WHERE k % 10 = 3")
     val dataDir = new java.io.File(catDir(s, stem), "data")
     val o1 = new java.io.File(dataDir, "orphan-q298.parquet")
-    val o2 = new java.io.File(dataDir, "orphan-q298.parquet.bloom")
+    val o2 = new java.io.File(dataDir, "del-orphan-q298.del")
     java.nio.file.Files.write(o1.toPath, Array.fill(64)(7.toByte))
     java.nio.file.Files.write(o2.toPath, Array.fill(32)(1.toByte))
     val aged = System.currentTimeMillis - 60000
@@ -1269,15 +1270,16 @@ object IngestQueries {
              |FROM $t.files GROUP BY 1, 2""".stripMargin)
   }
 
-  /** q295: BLOOM-SIDECAR FILE SKIPPING — `write.bloom.columns` attaches
-    * a 64 KiB per-file bloom filter sidecar (the Iceberg puffin model)
-    * to LONG/STRING columns: point predicates (`=` / `IN`) on an
+  /** q295: BLOOM-FILTER FILE SKIPPING — `write.bloom.columns` gives
+    * LONG/STRING columns a Parquet bloom filter inside each data file,
+    * sized adaptively per file: point predicates (`=` / `IN`) on an
     * UNSORTED column — where every file's min/max covers the whole
     * domain and zone maps prune NOTHING — skip files by definite-absence
-    * proof, reading kilobytes of sidecar instead of the data (CatalogSpec
-    * pins 1-of-8 filesOpened for the holder, 0 for an absent value, the
-    * 8-of-8 no-property control, sidecar lifecycle following the data
-    * file, and the loud non-LONG/STRING guard). The 100 TB shape: id
+    * proof, reading the footer's kilobytes of filter instead of the data
+    * (CatalogSpec pins 1-of-8 filesOpened for the holder, 0 for an absent
+    * value, the 8-of-8 no-property control, a fresh filter after
+    * compaction, pruning across a column rename, and the loud
+    * non-LONG/STRING guard). The 100 TB shape: id
     * lookups on an append-ordered fact table open one file, not the
     * table. Oracle: DuckDB replays the same multiplicative scramble. */
   val q295CatalogBloomSkip: Q = (s, d) => {

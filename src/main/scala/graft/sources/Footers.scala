@@ -6,16 +6,18 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.format.converter.ParquetMetadataConverter.MetadataFilter
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 
 /** Answers from parquet footers, read on the driver: row counts, per-file
-  * column ranges and the file schema, with no Spark job. This is the
-  * engine's one footer reader, the analog of Redshift serving `count(*)`
-  * and sortkey zone maps from block metadata.
+  * column ranges, the file schema and bloom filter probes, with no Spark
+  * job. This is the engine's one footer reader, the analog of Redshift
+  * serving `count(*)` and sortkey zone maps from block metadata.
   *
   * A path is a file or a directory. A directory is walked recursively and
   * names starting with `_` or `.` are skipped (`_SUCCESS`, `.crc`,
@@ -71,6 +73,39 @@ object Footers {
     val (_, file) = dataFiles(conf, path).headOption
       .getOrElse(throw new IllegalArgumentException(s"no parquet data file under $path"))
     read(conf, file, ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData.getSchema
+  }
+
+  /** For each `(fieldId, value)` probe of the data file `path`, whether
+    * the column with that field id may hold the value: `Some(true)` when
+    * the bloom filter of some row group may hold it, `Some(false)` when
+    * none does, and `None` when a row group has no filter for the column.
+    * A value is a `Long` for an INT64 column or a `String` for a BINARY
+    * one. The file opens once, and each probed column's filters are read
+    * once. The column resolves by field id, so a renamed column still
+    * finds its filters. */
+  def bloomMayHold(spark: SparkSession, path: String,
+      probes: Seq[(Int, Any)]): Seq[Option[Boolean]] = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(path), spark.sessionState.newHadoopConf()))
+    try {
+      val footer = reader.getFooter
+      val fields = footer.getFileMetaData.getSchema.getFields.asScala
+      val blocks = footer.getBlocks.asScala.toSeq
+      val filters = probes.map(_._1).distinct.map { id =>
+        id -> fields.find(f => f.getId != null && f.getId.intValue == id).flatMap { f =>
+          val perGroup = blocks.map(_.getColumns.asScala
+            .find(_.getPath.toDotString == f.getName)
+            .flatMap(c => Option(reader.readBloomFilter(c))))
+          if (perGroup.forall(_.isDefined)) Some(perGroup.flatten) else None
+        }
+      }.toMap
+      probes.map { case (id, v) =>
+        filters(id).map(_.exists(bf => bf.findHash(v match {
+          case l: Long => bf.hash(l)
+          case s: String => bf.hash(Binary.fromString(s))
+        })))
+      }
+    } finally reader.close()
   }
 
   /** The data files under `path` in path order, each with its name

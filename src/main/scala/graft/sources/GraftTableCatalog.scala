@@ -669,14 +669,14 @@ object GraftTableCatalog {
     * expected key-unique (the CDC contract). */
   val UpsertKeyProp = "write.upsert.key"
 
-  /** `write.bloom.columns` — comma-separated LONG/STRING columns that get
-    * a PER-FILE BLOOM FILTER SIDECAR (`<file>.bloom`, 64 KiB per column,
-    * the Iceberg puffin model): point predicates (`=` / `IN`) on an
-    * UNSORTED column then skip files min/max ranges cannot — the filter
-    * proves definite ABSENCE, planning opens the sidecar (kilobytes)
-    * instead of the data file. ~0.1% false-positive rate at 50k distinct
-    * values per file; a false positive costs one data-file scan, never
-    * correctness. */
+  /** `write.bloom.columns` — comma-separated LONG/STRING columns whose
+    * values each data file indexes in a PARQUET BLOOM FILTER (split-block,
+    * in the file itself, sized adaptively up to 256 KiB per column):
+    * point predicates (`=` / `IN`) on an UNSORTED column then skip files
+    * min/max ranges cannot — the filter proves definite ABSENCE, and
+    * planning reads the footer and the filter (kilobytes) instead of the
+    * data. Filters are sized for 0.1% false positives; a false
+    * positive costs one data-file scan, never correctness. */
   val BloomColsProp = "write.bloom.columns"
   /** Table property: how a `DELETE FROM` that is not metadata-only runs.
     * 'copy-on-write' (default) rewrites the files holding matching rows;
@@ -806,19 +806,13 @@ object GraftTableCatalog {
   case class PT(kind: String, arg: Int, id: Int)
 
   // Test-only observability (single-JVM local mode), the SeriesSource
-  // counters' discipline: data files actually opened by readers, and the
-  // last DELETE's split.
+  // counters' discipline: data files actually opened by readers.
   val filesOpened = new AtomicLong(0)
   /** Test-only: runs once inside rewrite_deletes' OCC attempt, after the
     * head manifest is read — a spec injects a concurrent CDC commit here
     * to drive the rebase path deterministically. */
   val rewriteDeletesRaceHook =
     new java.util.concurrent.atomic.AtomicReference[Runnable](null)
-  val lastDeleteDropped = new AtomicLong(-1)
-  val lastDeleteKept = new AtomicLong(-1)
-  /** files the last metadata-only DELETE kept UNREAD because a bloom
-    * sidecar disproved its point predicate. */
-  val lastDeleteBloomKept = new AtomicLong(-1)
 
   private[sources] def deleteTree(f: File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(deleteTree)
@@ -1766,7 +1760,7 @@ object GraftTableCatalog {
     EqKeys.firstOverlap(taskKeys.map(t =>
       new File(new File(dir, "data"), t._1).getPath), isStr) match {
       case Some(dup) =>
-        cleanup.foreach(n => deleteDataAndSidecar(new File(dir, "data"), n))
+        cleanup.foreach(n => deleteDataFile(new File(dir, "data"), n))
         throw new IllegalStateException(
           s"upsert batch carries key $dup in more than one task — " +
             "one row per key per batch is the CDC contract; " +

@@ -28,7 +28,7 @@ import CatalogFormat._
 import CatalogPruning._
 
 /** The data-file format helpers: storage type codes, the Parquet writer
-  * and reader confs, bloom sidecars and z-order keys, the NDV sketch,
+  * and reader confs, z-order keys, the NDV sketch,
   * position delete files, and whole-file rewrite/decode through
   * [[CatalogFileWriter]] and [[CatalogColumnarReader]]. */
 private[sources] object CatalogFormat {
@@ -116,34 +116,6 @@ private[sources] object CatalogFormat {
       read.indexOf(keyCol), sqlConf.parquetVectorizedReaderBatchSize)
   }
 
-  /** Writers BUILD at 2^21 bits (32768 longs, 256 KiB) and FOLD DOWN to
-    * the smallest power-of-2 size with expected fp <= ~2% for the rows
-    * actually flushed (OR-ing halves preserves `h mod m` probe positions
-    * for power-of-2 m) — a 50k-row file ships ~64 KiB, a 1k-row file
-    * ~2 KiB, a 125k-row file keeps the full 256 KiB instead of the fixed
-    * 64 KiB that measured ~14% fp. Readers size probes from the sidecar
-    * (`nWords` rides the format), so old fixed-size sidecars keep
-    * probing identically. */
-  private[sources] val BloomWords = 32768
-  private[sources] val BloomMinWords = 32 // 2 Kib floor
-  /** Fold a build-size filter to its ship size for `rows` values: need
-    * m >= ~8.7*n bits for fp(k=4) <= 2%. */
-  private[sources] def bloomSized(bits: Array[Long], rows: Long)
-      : Array[Long] = {
-    val neededBits = math.max(1L, 9L * rows)
-    var targetWords = BloomMinWords
-    while (targetWords.toLong * 64 < neededBits && targetWords < bits.length)
-      targetWords <<= 1
-    var cur = bits
-    while (cur.length > targetWords) {
-      val half = cur.length >> 1
-      val next = new Array[Long](half)
-      var i = 0
-      while (i < half) { next(i) = cur(i) | cur(i + half); i += 1 }
-      cur = next
-    }
-    cur
-  }
   /** Normalize a LONG into the unsigned 32-bit code space its z-order
     * bits interleave from: position within the column's [lo, hi] span,
     * computed in doubles (monotone to within double precision — exact
@@ -174,73 +146,21 @@ private[sources] object CatalogFormat {
     key
   }
 
-  /** splitmix64 — the value hash bloom bits derive from (LONGs). */
-  private[sources] def bloomMixLong(v0: Long): Long = {
+  /** splitmix64 — the value hash the NDV sketch buckets LONGs by. */
+  private[sources] def mixLong(v0: Long): Long = {
     var v = v0 + 0x9E3779B97F4A7C15L
     v = (v ^ (v >>> 30)) * 0xBF58476D1CE4E5B9L
     v = (v ^ (v >>> 27)) * 0x94D049BB133111EBL
     v ^ (v >>> 31)
   }
-  /** FNV-1a 64 over UTF-8 bytes (STRINGs) — identical on write + probe.
-    * `off` lets the vectorized writer mix straight out of its scratch
-    * buffer without re-copying the string bytes. */
-  private[sources] def bloomMixBytes(b: Array[Byte], len: Int,
-      off: Int = 0): Long = {
+  /** FNV-1a 64 over the first `len` UTF-8 bytes of `b`, then
+    * [[mixLong]] — the NDV sketch's STRING hash, mixed straight out of
+    * the writer's scratch buffer. */
+  private[sources] def mixBytes(b: Array[Byte], len: Int): Long = {
     var h = 0xCBF29CE484222325L
-    var i = off
-    val end = off + len
-    while (i < end) { h ^= (b(i) & 0xffL); h *= 0x100000001B3L; i += 1 }
-    bloomMixLong(h)
-  }
-  /** k=4 double-hashed probes; the bit-space is the ARRAY's size (always
-    * a power of 2), so a folded filter and the build filter agree. */
-  private[sources] def bloomSet(bits: Array[Long], h: Long): Unit = {
-    val h2 = (h >>> 32) | (h << 32)
-    val m = bits.length * 64L
     var i = 0
-    while (i < 4) {
-      val idx = ((h + i * h2) & Long.MaxValue) % m
-      bits((idx >>> 6).toInt) |= (1L << (idx & 63))
-      i += 1
-    }
-  }
-  private[sources] def bloomMightContain(bits: Array[Long], h: Long)
-      : Boolean = {
-    val h2 = (h >>> 32) | (h << 32)
-    val m = bits.length * 64L
-    var i = 0
-    while (i < 4) {
-      val idx = ((h + i * h2) & Long.MaxValue) % m
-      if ((bits((idx >>> 6).toInt) & (1L << (idx & 63))) == 0L) return false
-      i += 1
-    }
-    true
-  }
-  /** Sidecar format: per column `int32 fieldId, int32 nWords, longs`. */
-  private[sources] def writeBloomSidecar(f: File,
-      cols: Seq[(Int, Array[Long])]): Unit = {
-    val out = new DataOutputStream(new java.io.BufferedOutputStream(
-      new FileOutputStream(f), 1 << 16))
-    try cols.foreach { case (id, bits) =>
-      out.writeInt(id); out.writeInt(bits.length)
-      bits.foreach(out.writeLong)
-    } finally out.close()
-  }
-  private[sources] def readBloomSidecar(f: File): Map[Int, Array[Long]] = {
-    if (!f.exists()) return Map.empty
-    val in = new DataInputStream(new BufferedInputStream(
-      new FileInputStream(f), 1 << 16))
-    try {
-      val out = Map.newBuilder[Int, Array[Long]]
-      while (in.available() > 0) {
-        val id = in.readInt(); val n = in.readInt()
-        val bits = new Array[Long](n)
-        var i = 0
-        while (i < n) { bits(i) = in.readLong(); i += 1 }
-        out += id -> bits
-      }
-      out.result()
-    } finally in.close()
+    while (i < len) { h ^= (b(i) & 0xffL); h *= 0x100000001B3L; i += 1 }
+    mixLong(h)
   }
   /** Writer-facing bloom config: schema POSITIONS of the indexed
     * columns (validated: present, LONG or STRING). */
@@ -258,14 +178,11 @@ private[sources] object CatalogFormat {
       case None => ""
     }
 
-  /** Deleting a data file always removes its bloom sidecar with it. */
-  private[sources] def deleteDataAndSidecar(dataDir: File, n: String)
-      : Boolean = {
+  /** Delete one file of `dataDir`; true when it existed. */
+  private[sources] def deleteDataFile(dataDir: File, n: String): Boolean = {
     val f = new File(dataDir, n)
     val existed = f.exists()
     if (existed) f.delete()
-    val b = new File(dataDir, n + ".bloom")
-    if (b.exists()) b.delete()
     existed
   }
 
@@ -316,8 +233,9 @@ private[sources] object CatalogFormat {
 
   /** Write CURRENT-schema-aligned boxed rows (strings as java String)
     * as one data file through [[CatalogFileWriter]] — the driver-side
-    * rewrite path of sys.compact and rewrite_sorted. The table's bloom sidecars are rebuilt, so
-    * point-lookup pruning survives table maintenance. */
+    * rewrite path of sys.compact and rewrite_sorted. The rewritten file
+    * carries fresh bloom filters, so point-lookup pruning survives table
+    * maintenance. */
   private[sources] def writeLocalFile(dir: File, prefix: String,
       schema: StructType, mp: ColMapping, partition: Seq[String],
       rows: Iterable[Array[Any]], seq: Long = 0L, specId: Int = 0): Entry = {
@@ -548,6 +466,19 @@ private final class CatalogParquetBuilder(out: OutputFile)
   override def self(): CatalogParquetBuilder = this
   override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
     new ParquetWriteSupport
+
+  /** Parquet's split-block bloom filter on each of `cols`, sized
+    * adaptively: the writer keeps 8 candidate sizes from 256 KiB down to
+    * 2 KiB, each sized for a 0.1% false-positive rate, and ships the
+    * smallest that holds the distinct values it saw: 2 KiB for 1,000
+    * longs, 128 KiB for 50,000 and 256 KiB for 125,000. */
+  def withBlooms(cols: Seq[String]): CatalogParquetBuilder =
+    if (cols.isEmpty) this
+    else cols.foldLeft(withAdaptiveBloomFilterEnabled(true)
+        .withMaxBloomFilterBytes(256 * 1024)) { (b, c) =>
+      b.withBloomFilterEnabled(c, true).withBloomFilterCandidateNumber(c, 8)
+        .withBloomFilterFPP(c, 0.001)
+    }
 }
 
 /** The one data-file encoder, used by the task writers
@@ -556,8 +487,9 @@ private final class CatalogParquetBuilder(out: OutputFile)
   * `ParquetWriteSupport` through a `LocalOutputFile`, under `fileSchema`
   * (the columns tagged with their field ids) and a `conf` built once by
   * [[CatalogFormat.writerConf]]. Per-column stats ride alongside in
-  * PRIMITIVE arrays: min/max and exact sums for LONGs, null presence,
-  * NDV sketches and bloom bits. */
+  * PRIMITIVE arrays: min/max and exact sums for LONGs, null presence and
+  * NDV sketches. The columns at `bloomPos` get Parquet bloom filters
+  * ([[CatalogParquetBuilder.withBlooms]]). */
 private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
     tuple: Seq[String], fileSchema: StructType, conf: Configuration,
     bloomPos: Array[Int]) {
@@ -572,6 +504,7 @@ private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
     .withConf(conf)
     .withCompressionCodec(CompressionCodecName.fromConf(
       conf.get(org.apache.parquet.hadoop.ParquetOutputFormat.COMPRESSION)))
+    .withBlooms(bloomPos.toSeq.map(fileSchema(_).name))
     .build()
   private var rows = 0L
   private val hasNull = new Array[Boolean](types.length)
@@ -582,15 +515,10 @@ private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
   // overflows Long drops out (SUM pushdown then declines)
   private val sum = new Array[Long](types.length)
   private val sumBad = new Array[Boolean](types.length)
-  private val blooms: Array[Array[Long]] =
-    Array.fill(bloomPos.length)(new Array[Long](BloomWords))
   // per-column distinct sketches (LONG + STRING), 2 KiB each —
   // one mix + one OR per non-null value on the hot path
   private val ndvs: Array[NdvSketch] = Array.tabulate(types.length)(i =>
     if (tcodes(i) != 'D') new NdvSketch else null)
-  // the string hash computed while the bytes sit in the scratch —
-  // the bloom loop reuses it instead of hashing the string again
-  private val strHash = new Array[Long](types.length)
   private var scratch = new Array[Byte](64)
 
   def writeRow(row: InternalRow): Unit = {
@@ -610,31 +538,19 @@ private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
             if (((s0 ^ s1) & (v ^ s1)) < 0) sumBad(i) = true
             else sum(i) = s1
           }
-          ndvs(i).add(bloomMixLong(v))
+          ndvs(i).add(mixLong(v))
         case 'S' =>
-          // a UTF8String's bytes ARE the UTF-8 encoding the hashes mix
+          // a UTF8String's bytes ARE the UTF-8 encoding the hash mixes
           val u = row.getUTF8String(i)
           val len = u.numBytes()
           if (len > scratch.length)
             scratch = new Array[Byte](Integer.highestOneBit(len) << 1)
           u.writeToMemory(scratch,
             org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
-          val h = bloomMixBytes(scratch, len)
-          ndvs(i).add(h)
-          strHash(i) = h
+          ndvs(i).add(mixBytes(scratch, len))
         case _ => ()
       }
       i += 1
-    }
-    var bi = 0
-    while (bi < bloomPos.length) {
-      val p = bloomPos(bi)
-      if (!row.isNullAt(p)) {
-        val h = if (tcodes(p) == 'L') bloomMixLong(row.getLong(p))
-          else strHash(p)
-        bloomSet(blooms(bi), h)
-      }
-      bi += 1
     }
     writer.write(row)
     rows += 1
@@ -658,7 +574,7 @@ private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
   /** Idempotent: the Parquet writer closes once. */
   def closeOut(): Unit = writer.close()
 
-  /** Close the file, write its bloom sidecar, and describe it as a
+  /** Close the file and describe it as a
     * manifest entry: stats key by field id, and null presence is kept so
     * pruning and metadata DELETE keep their proofs. */
   def finish(seq: Long, specId: Int): Entry = {
@@ -666,11 +582,6 @@ private[sources] final class CatalogFileWriter(dataDir: File, stem: String,
     val nullFree = types.indices.collect {
       case i if !hasNull(i) => s"#${ids(i)}"
     }.toSet
-    if (bloomPos.nonEmpty && rows > 0)
-      writeBloomSidecar(new File(dataDir, name + ".bloom"),
-        bloomPos.toSeq.zipWithIndex.map { case (p, bi) =>
-          (ids(p), bloomSized(blooms(bi), rows))
-        })
     Entry(name, rows, file.length(), types.length, statsMap,
       nullFree, ids.toSeq, tcodes.mkString,
       tuple, Seq.empty, seq, specId, sumsMap,

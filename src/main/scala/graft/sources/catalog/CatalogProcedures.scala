@@ -183,7 +183,7 @@ private class ExpireProcedure(cat: GraftTableCatalog)
         expired.foreach { v =>
           allRefs(readManifest(dir, v)).foreach { n =>
             if (!retainedRefs.contains(n)) {
-              if (deleteDataAndSidecar(new File(dir, "data"), n))
+              if (deleteDataFile(new File(dir, "data"), n))
                 filesDeleted += 1
             }
           }
@@ -384,7 +384,7 @@ private class DropBranchProcedure(cat: GraftTableCatalog)
                 .flatMap(f => allRefs(parseManifest(f, 0)))
             }).toSet
           (mine -- retained).foreach { n =>
-            if (deleteDataAndSidecar(new File(dir, "data"), n))
+            if (deleteDataFile(new File(dir, "data"), n))
               filesDeleted += 1
           }
           manifests.foreach(_.delete())
@@ -599,12 +599,11 @@ private object RewriteDeletesProcedure {
 
 /** `CALL graft_cat.sys.remove_orphans(ns, table, older_than_ms)` — the
   * Iceberg `remove_orphan_files` maintenance verb: crashed writers
-  * strand data files, bloom sidecars and delete runs by DESIGN (a
-  * failed commit leaves garbage, never a dangling reference), and this
-  * sweep reclaims them. A file in `data/` is an ORPHAN iff no existing
-  * manifest — any main version still on disk, any branch commit —
-  * references it (a `.bloom` sidecar is referenced through its base
-  * data file). The grace window is the in-flight-writer guard: a file
+  * strand data files and delete files by DESIGN (a failed commit
+  * leaves garbage, never a dangling reference), and this sweep reclaims
+  * them. A file in `data/` is an ORPHAN iff no existing manifest — any
+  * main version still on disk, any branch commit — references it. The
+  * grace window is the in-flight-writer guard: a file
   * younger than `older_than_ms` may belong to a commit whose manifest
   * is not yet published, so it always survives; size the window above
   * the longest plausible write (Iceberg defaults to 3 days). Also
@@ -645,11 +644,7 @@ private class RemoveOrphansProcedure(cat: GraftTableCatalog)
         var bytes = 0L
         Option(new File(dir, "data").listFiles()).map(_.toSeq)
           .getOrElse(Seq.empty).foreach { f =>
-            val base =
-              if (f.getName.endsWith(".bloom"))
-                f.getName.dropRight(".bloom".length)
-              else f.getName
-            if (!referenced.contains(base) &&
+            if (!referenced.contains(f.getName) &&
                 now - f.lastModified() > grace) {
               val len = f.length()
               if (f.delete()) { removed += 1; bytes += len }
@@ -682,7 +677,7 @@ private object RemoveOrphansProcedure {
   * (spec-generation, partition-tuple) — files of different partitions
   * never merge, so partition pruning survives. The rewrite materializes
   * all outstanding position/equality-delete debt (same as `compact`),
-  * output files split at `target_bytes`, bloom sidecars rebuild, rows
+  * output files split at `target_bytes`, bloom filters rebuild, rows
   * are byte-equivalent before and after, prior versions keep serving
   * the original files, and the change feed skips the commit (no rows
   * changed). LONG columns only — loud error otherwise; nulls cluster
@@ -822,7 +817,7 @@ private object RewriteSortedProcedure {
     * signed range partitioning orders the unsigned key correctly), a
     * `repartitionByRange(nFiles)` + `sortWithinPartitions` lands each
     * z-run in ONE task, and the VECTORIZED WRITER writes the files —
-    * stats, sums, ndv sketches and bloom sidecars all rebuild for free
+    * stats, sums, ndv sketches and bloom filters all rebuild for free
     * — into a scratch table whose files then MOVE (same-filesystem
     * rename) into the target's data directory and commit as the
     * rewrite version. Scope: unpartitioned, non-evolved tables with
@@ -902,9 +897,6 @@ private object RewriteSortedProcedure {
         require(new java.io.File(srcData, e.name)
           .renameTo(new java.io.File(dstData, e.name)),
           s"could not move ${e.name} into ${dstData}")
-        val bl = new java.io.File(srcData, e.name + ".bloom")
-        if (bl.exists()) bl.renameTo(new java.io.File(dstData,
-          e.name + ".bloom"))
         e.copy(seq = latest + 1, specId = specs.length - 1,
           partition = Seq.empty)
       }

@@ -168,14 +168,14 @@ private class CatalogReplaceGroupsWrite(dir: File, schema: StructType,
       all.filter(_.rows == 0).map(_.name)
     }
     (dropped ++ dropKeys).foreach(n =>
-      deleteDataAndSidecar(new File(dir, "data"), n))
+      deleteDataFile(new File(dir, "data"), n))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case CatalogCommit(es, k) =>
         (es.map(_.name) ++ k.map(_._1)).foreach(n =>
-          deleteDataAndSidecar(new File(dir, "data"), n))
+          deleteDataFile(new File(dir, "data"), n))
       case _ => ()
     }
 }
@@ -283,13 +283,13 @@ private class CatalogDeltaBatchWrite(dir: File, schema: StructType,
         files, m.epochs, m.eqDeletes, prev = Some(m))
       parts.flatMap(_.entries).filter(_.rows == 0).map(_.name)
     }
-    dropped.foreach(n => deleteDataAndSidecar(new File(dir, "data"), n))
+    dropped.foreach(n => deleteDataFile(new File(dir, "data"), n))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case d: CatalogDeltaCommit => d.entries.foreach(e =>
-        deleteDataAndSidecar(new File(dir, "data"), e.name))
+        deleteDataFile(new File(dir, "data"), e.name))
       case _ => ()
     }
 }

@@ -2,8 +2,8 @@ package graft.sources
 
 import java.io.File
 import java.net.{URLDecoder, URLEncoder}
-import java.nio.charset.StandardCharsets
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsPartitionManagement, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
@@ -206,8 +206,6 @@ private class CatalogTable(dir: File, tableName: String,
           if (kept.isEmpty && appended.isEmpty) Seq.empty else m.eqDeletes,
           prev = Some(cur))
       }
-      lastDeleteDropped.set(hit.length.toLong)
-      lastDeleteKept.set(kept.length.toLong)
       true
     }
   }
@@ -299,7 +297,7 @@ private class CatalogTable(dir: File, tableName: String,
 
   /** A DELETE runs here only when it is METADATA-ONLY: every live file
     * is proven all-match (it drops from the manifest) or none-match (by
-    * min/max and partition facts, or a bloom sidecar that rules its point
+    * min/max and partition facts, or a bloom filter that rules its point
     * predicate out; it stays untouched). Otherwise this says no, and
     * Spark runs the row-level plan it already built: under copy-on-write
     * [[CatalogRowLevelOperation]] rewrites the files holding matches and
@@ -311,11 +309,11 @@ private class CatalogTable(dir: File, tableName: String,
     pinned.isEmpty && deleteSplit(liveManifest(), filters).forall(_._2.isDefined)
 
   /** Each live file under a DELETE's filters: `Some(true)` when every row
-    * matches, `Some(false)` when none can (the third field is true when
-    * only the bloom sidecar proves that), `None` for a boundary file,
-    * which only Spark's row-level plan can split. */
+    * matches, `Some(false)` when none can (by file facts or its bloom
+    * filters), `None` for a boundary file, which only Spark's row-level
+    * plan can split. */
   private def deleteSplit(m: Manifest, filters: Array[Filter])
-      : Seq[(Entry, Option[Boolean], Boolean)] = {
+      : Seq[(Entry, Option[Boolean])] = {
     val s = schema()
     val mp = readMapping(dir, s)
     val specs = readSpecs(dir)
@@ -324,10 +322,10 @@ private class CatalogTable(dir: File, tableName: String,
         if (e.specId >= 0 && e.specId < specs.length) specs(e.specId)
         else Seq.empty
       val facts = fileFacts(e, s, mp, spec)
-      if (filters.forall(allMatch(_, facts))) (e, Some(true), false)
-      else if (!filters.forall(mayMatch(_, facts))) (e, Some(false), false)
-      else if (!bloomMayMatch(dir, s, mp, e, filters)) (e, Some(false), true)
-      else (e, None, false)
+      if (filters.forall(allMatch(_, facts))) (e, Some(true))
+      else if (!filters.forall(mayMatch(_, facts)) ||
+        !bloomMayMatch(dir, s, mp, e, filters)) (e, Some(false))
+      else (e, None)
     }
   }
 
@@ -342,12 +340,12 @@ private class CatalogTable(dir: File, tableName: String,
     val m = liveManifest()
     val latest = headVersion(dir, branch)
     val split = deleteSplit(m, filters)
-    split.collectFirst { case (e, None, _) => e }.foreach { e =>
+    split.collectFirst { case (e, None) => e }.foreach { e =>
       throw new IllegalStateException(
         s"DELETE on $dir raced a CONFLICTING commit: ${e.name} is no " +
           "longer all-match or none-match: re-run")
     }
-    val remaining = split.collect { case (e, Some(false), _) => e }
+    val remaining = split.collect { case (e, Some(false)) => e }
     // OCC: rebase over pure appends (appended files are outside this
     // DELETE's snapshot and survive untouched — snapshot isolation);
     // anything else fails loudly. An emptied table needs no key files
@@ -365,9 +363,6 @@ private class CatalogTable(dir: File, tableName: String,
         if (remaining.isEmpty && appended.isEmpty) Seq.empty
         else m.eqDeletes, prev = Some(cur))
     }
-    lastDeleteDropped.set((split.length - remaining.length).toLong)
-    lastDeleteBloomKept.set(split.count(_._3).toLong)
-    lastDeleteKept.set(remaining.length.toLong)
   }
 }
 
@@ -921,7 +916,7 @@ private case class CatalogFilePartition(path: String, fileName: String,
   override def partitionKey(): InternalRow = new GenericInternalRow(keyVals)
 }
 
-/** Per-file pruning facts and filter evaluation (bloom sidecars
+/** Per-file pruning facts and filter evaluation (bloom filters
   * included), reader task construction, and the manifest-derived CBO
   * histogram. */
 private[sources] object CatalogPruning {
@@ -1195,34 +1190,42 @@ private[sources] object CatalogPruning {
       positions, changeType, changeVersion, keyVals, eqPaths, keysOnly, e.seq)
   }
 
-  /** Bloom-sidecar file pruning: TRUE = cannot rule the file out. Only
-    * `=` / `IN` shapes on indexed columns consult the sidecar (64 KiB
-    * read, lazily, only for files that survived partition + min/max
-    * pruning); a missing sidecar or unindexed column is conservative. */
+  /** Bloom filter file pruning: TRUE = cannot rule the file out. Only
+    * `=` / `IN` shapes on the entry's bloom columns probe the Parquet
+    * bloom filters in the data file's footer, read through
+    * [[Footers.bloomMayHold]] once per file and only for files that
+    * survived partition and min/max pruning. A listed column with no
+    * filter in the file fails loudly: the table predates native Parquet
+    * bloom filters. */
   private[sources] def bloomMayMatch(dir: File, schema: StructType,
       mp: ColMapping, e: Entry, filters: Array[Filter]): Boolean = {
     if (e.bloomCols.isEmpty) return true
-    lazy val side = readBloomSidecar(
-      new File(new File(dir, "data"), e.name + ".bloom"))
-    def hashOf(c: String, v: Any): Option[(Int, Long)] = {
+    def probe(c: String, v: Any): Option[(Int, Any)] = {
       val i = schema.fieldNames.indexOf(c)
-      if (i < 0) None
-      else {
-        val id = mp.ids(i)
-        if (!e.bloomCols.contains(id)) None
-        else longLit(v).map(x => (id, bloomMixLong(x)))
-          .orElse(strLit(v).map { sv =>
-            val b = sv.getBytes(StandardCharsets.UTF_8)
-            (id, bloomMixBytes(b, b.length))
-          })
-      }
+      if (i < 0 || !e.bloomCols.contains(mp.ids(i))) None
+      else (schema(i).dataType match {
+        case LongType => longLit(v)
+        case StringType => strLit(v)
+        case _ => None
+      }).map(mp.ids(i) -> _)
     }
+    def probes(f: Filter): Seq[(Int, Any)] = f match {
+      case EqualTo(c, v) => probe(c, v).toSeq
+      case In(c, vs) => vs.toSeq.flatMap(probe(c, _))
+      case And(l, r) => probes(l) ++ probes(r)
+      case Or(l, r) => probes(l) ++ probes(r)
+      case _ => Seq.empty
+    }
+    val all = filters.toSeq.flatMap(probes).distinct
+    if (all.isEmpty) return true
+    val path = new File(new File(dir, "data"), e.name).getPath
+    val held = all.zip(Footers.bloomMayHold(SparkSession.active, path, all))
+      .map { case (p, h) => p -> h.getOrElse(throw new IllegalStateException(
+        s"$path has no Parquet bloom filter for field id ${p._1}; the table " +
+          "predates native Parquet bloom filters and must be recreated")) }
+      .toMap
     def ok(f: Filter): Boolean = f match {
-      case EqualTo(c, v) => hashOf(c, v) match {
-        case Some((id, h)) =>
-          side.get(id).forall(bits => bloomMightContain(bits, h))
-        case None => true
-      }
+      case EqualTo(c, v) => probe(c, v).forall(held)
       case In(c, vs) => vs.isEmpty || vs.exists(v => ok(EqualTo(c, v)))
       case And(l, r) => ok(l) && ok(r)
       case Or(l, r) => ok(l) || ok(r)

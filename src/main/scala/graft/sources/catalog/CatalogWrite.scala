@@ -190,7 +190,7 @@ private[graft] class CatalogStreamingWrite(dir: File, schema: StructType,
         empty.map(_.name) ++ dropKeys // zero-row leftovers
       }
     }
-    toDelete.foreach(n => deleteDataAndSidecar(new File(dir, "data"), n))
+    toDelete.foreach(n => deleteDataFile(new File(dir, "data"), n))
   }
 
   override def abort(epochId: Long,
@@ -198,7 +198,7 @@ private[graft] class CatalogStreamingWrite(dir: File, schema: StructType,
     messages.foreach {
       case CatalogCommit(es, k) =>
         (es.map(_.name) ++ k.map(_._1)).foreach(n =>
-          deleteDataAndSidecar(new File(dir, "data"), n))
+          deleteDataFile(new File(dir, "data"), n))
       case _ => ()
     }
 }
@@ -292,14 +292,14 @@ private class CatalogBatchWrite(dir: File, schema: StructType,
         base ++ added, epochs, eq, prev = Some(m))
       all.filter(_.rows == 0).map(_.name) ++ dropKeys
     }
-    dropped.foreach(n => deleteDataAndSidecar(new File(dir, "data"), n))
+    dropped.foreach(n => deleteDataFile(new File(dir, "data"), n))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case CatalogCommit(es, k) =>
         (es.map(_.name) ++ k.map(_._1)).foreach(n =>
-          deleteDataAndSidecar(new File(dir, "data"), n))
+          deleteDataFile(new File(dir, "data"), n))
       case _ => ()
     }
 }
@@ -341,7 +341,7 @@ private case class CatalogWriterFactory(dirPath: String, jobUid: String,
       private val stem = s"part-$jobUid-p$partitionId-t$taskId"
       private val dataDir = new File(dirPath, "data")
 
-      // schema positions carrying a per-file bloom sidecar
+      // schema positions whose Parquet bloom filters the writer builds
       private val bloomPos: Array[Int] =
         if (bloomEnc.isEmpty) Array.empty
         else bloomEnc.split(",").map(_.toInt)
@@ -421,7 +421,7 @@ private case class CatalogWriterFactory(dirPath: String, jobUid: String,
       override def abort(): Unit = {
         sinks.values.foreach { sk =>
           sk.closeOut()
-          deleteDataAndSidecar(dataDir, sk.name)
+          deleteDataFile(dataDir, sk.name)
         }
         ()
       }

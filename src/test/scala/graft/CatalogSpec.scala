@@ -144,8 +144,8 @@ class CatalogSpec extends SparkSpec {
     // SQL TRUNCATE arrives as deleteWhere(AlwaysTrue): metadata-only,
     // every prior version still readable
     sql(s"INSERT INTO $t SELECT id, id FROM range(0, 7, 1, 1)")
+    entries().map(_.rows) shouldBe Seq(7L)
     sql(s"TRUNCATE TABLE $t")
-    GraftTableCatalog.lastDeleteDropped.get() shouldBe 1L
     entries() shouldBe empty
     rows(s"SELECT count(*) FROM $t") shouldBe Seq(Seq(0L))
   }
@@ -744,7 +744,7 @@ class CatalogSpec extends SparkSpec {
     GraftTableCatalog.filesOpened.set(0)
     sql("DELETE FROM graft_cat.db.pid WHERE g = 3")
     GraftTableCatalog.filesOpened.get() shouldBe 0L
-    GraftTableCatalog.lastDeleteDropped.get() shouldBe 4L
+    files.count(_.partition == Seq("l3")) shouldBe 4
     GraftTableCatalog.readManifest(dir, GraftTableCatalog.readLatest(dir))
       .files shouldBe files.filterNot(_.partition == Seq("l3"))
     rows("SELECT count(*) FROM graft_cat.db.pid") shouldBe Seq(Seq(6000L))
@@ -1617,17 +1617,17 @@ class CatalogSpec extends SparkSpec {
     // data file is read or rewritten
     val dir = catFile("db/pmgmt")
     val before = GraftTableCatalog.readManifest(dir,
-      GraftTableCatalog.readLatest(dir)).files.map(_.name).toSet
+      GraftTableCatalog.readLatest(dir)).files
+    before.count(_.partition == Seq("l1")) shouldBe 1
     GraftTableCatalog.filesOpened.set(0)
     sql("ALTER TABLE graft_cat.db.pmgmt DROP PARTITION (g=1)")
     GraftTableCatalog.filesOpened.get shouldBe 0L
-    GraftTableCatalog.lastDeleteDropped.get shouldBe 1L
     rows("SELECT count(*), count(DISTINCT g) FROM graft_cat.db.pmgmt") shouldBe
       Seq(Seq(3000L, 3L))
     val after = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir))
     after.op shouldBe "drop_partition"
-    after.files.map(_.name).toSet.subsetOf(before) shouldBe true
+    after.files shouldBe before.filterNot(_.partition == Seq("l1"))
     // time travel still serves the dropped partition (nothing deleted)
     val v = GraftTableCatalog.readLatest(dir) - 1
     rows(s"SELECT count(*) FROM graft_cat.db.pmgmt VERSION AS OF $v") shouldBe
@@ -2490,17 +2490,31 @@ class CatalogSpec extends SparkSpec {
       Seq(Seq(400L, (0L until 400L).sum))
   }
 
-  test("adaptive bloom sizing: fp <= 2% at 125k rows/file, small files ship small sidecars; DELETE keeps bloom-disproven boundary files unread") {
-    // sizing + measured fp straight off the writer's fold logic
-    val (words125k, fp125k) = sources.CatalogSpecDoors.bloomFp(125000, 20000)
-    words125k shouldBe 32768 // 256 KiB cap holds the fp target
-    fp125k should be <= 0.02
-    val (words1k, fp1k) = sources.CatalogSpecDoors.bloomFp(1000, 20000)
-    words1k should be <= 256 // ~2 KiB shipped for a 1k-row file
-    fp1k should be <= 0.02
-    val (words50k, fp50k) = sources.CatalogSpecDoors.bloomFp(50000, 20000)
-    fp50k should be <= 0.02
-    words50k should be <= 16384
+  test("adaptive bloom sizing: Parquet's filter ships <= 2/128/256 KiB at 1k/50k/125k keys with fp <= 2%; DELETE keeps bloom-disproven files unread; a rename keeps pruning; a filter-less file fails planning") {
+    sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
+    // one file of n distinct keys: its native filter is probed from the
+    // footer with every present key (no false negative) and 20,000
+    // absent ones (measured fp)
+    Seq((1000, 2 * 1024), (50000, 128 * 1024), (125000, 256 * 1024))
+      .foreach { case (n, cap) =>
+        sql("DROP TABLE IF EXISTS graft_cat.db.blsz")
+        sql("""CREATE TABLE graft_cat.db.blsz (k BIGINT)
+          |TBLPROPERTIES ('write.bloom.columns'='k')""".stripMargin)
+        sql(s"INSERT INTO graft_cat.db.blsz SELECT id FROM range(0, $n, 1, 1)")
+        val dir = catFile("db/blsz")
+        val Seq(e) = GraftTableCatalog.readManifest(dir,
+          GraftTableCatalog.readLatest(dir)).files
+        val path = new File(dir, s"data/${e.name}").getPath
+        val id = e.bloomCols.head
+        def held(keys: Range): Seq[Option[Boolean]] = sources.Footers
+          .bloomMayHold(spark, path, keys.map(k => id -> (k.toLong: Any)))
+        all(held(0 until n)) shouldBe Some(true)
+        val fp = held(n until n + 20000).count(_.contains(true)) / 20000.0
+        val bytes = bloomBytes(path, "k")
+        info(s"$n keys: filter $bytes bytes, fp $fp")
+        bytes should be <= cap
+        fp should be <= 0.02
+      }
     // end-to-end: four 31,250-row files whose k ranges all overlap, so
     // min/max prunes nothing; file i holds the even keys 8n + 2i
     sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
@@ -2516,16 +2530,15 @@ class CatalogSpec extends SparkSpec {
       GraftTableCatalog.readLatest(dir)).files
     val before = entries()
     before.length shouldBe 4
-    // an absent key: every sidecar disproves it, so the DELETE is
+    // an absent key: every file's filter disproves it, so the DELETE is
     // metadata-only and opens no file
     GraftTableCatalog.filesOpened.set(0)
     sql("DELETE FROM graft_cat.db.blad WHERE k = 124001") // odd: absent
     GraftTableCatalog.filesOpened.get shouldBe 0L
-    GraftTableCatalog.lastDeleteBloomKept.get shouldBe 4L
     entries() shouldBe before
     rows("SELECT count(*) FROM graft_cat.db.blad") shouldBe Seq(Seq(125000L))
     // a present key (124000 = 8 * 15500, file 0) runs Spark's row-level
-    // plan, whose scans consult the same sidecars: the group filter's
+    // plan, whose scans consult the same filters: the group filter's
     // scan and the rewrite's scan each open file 0 and no other file, and
     // only file 0 is rewritten; the other three entries stay
     // byte-identical
@@ -2537,6 +2550,25 @@ class CatalogSpec extends SparkSpec {
     after.map(_.name) shouldNot contain(before.head.name)
     after.map(_.rows) shouldBe Seq(31250L, 31250L, 31250L, 31249L)
     rows("SELECT count(*) FROM graft_cat.db.blad") shouldBe Seq(Seq(124999L))
+    // the filters resolve their column by field id, so a renamed column
+    // keeps its pruning
+    sql("ALTER TABLE graft_cat.db.blad RENAME COLUMN k TO kk")
+    GraftTableCatalog.filesOpened.set(0)
+    rows("SELECT count(*) FROM graft_cat.db.blad WHERE kk = 124001") shouldBe
+      Seq(Seq(0L))
+    GraftTableCatalog.filesOpened.get shouldBe 0L
+    // an entry that lists a bloom column on a file written without a
+    // filter (a table from before native filters) fails at planning
+    sql("DROP TABLE IF EXISTS graft_cat.db.blleg")
+    sql("CREATE TABLE graft_cat.db.blleg (k BIGINT)")
+    sql("INSERT INTO graft_cat.db.blleg SELECT id FROM range(0, 100, 1, 1)")
+    sources.CatalogSpecDoors.listBloomCols(catFile("db/blleg"))
+    def rootMsg(x: Throwable): String =
+      if (x == null) "" else x.getMessage + " | " + rootMsg(x.getCause)
+    rootMsg(intercept[Exception](
+      rows("SELECT count(*) FROM graft_cat.db.blleg WHERE k = 7"))) should
+      include("must be recreated")
+    sql("DROP TABLE graft_cat.db.blleg")
   }
 
   test("ref-addressable time travel: VERSION AS OF resolves tags AND branch names; dangling refs fail listing both") {
@@ -2572,7 +2604,7 @@ class CatalogSpec extends SparkSpec {
     sql("CALL graft_cat.sys.drop_tag('db', 'vref', 'first')")
   }
 
-  test("bloom sidecar file skipping: point predicates on an unsorted column open only the holder file; cleanup follows the data file") {
+  test("bloom filter file skipping: point predicates on an unsorted column open only the holder file; each data file carries its own filters") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
     sql("DROP TABLE IF EXISTS graft_cat.db.bloomt")
     // h is a hash-scrambled LONG: every file's min/max range covers the
@@ -2587,8 +2619,8 @@ class CatalogSpec extends SparkSpec {
       GraftTableCatalog.readLatest(dir))
     m.files.length shouldBe 8
     m.files.foreach(_.bloomCols.length shouldBe 2)
-    m.files.foreach(e =>
-      new File(dir, s"data/${e.name}.bloom").exists() shouldBe true)
+    m.files.foreach(footerHasFilters(dir, _))
+    new File(dir, "data").list().filter(_.endsWith(".bloom")) shouldBe empty
     // pick a real value and its holder file count via full scan
     val probe = rows("SELECT h, s, v FROM graft_cat.db.bloomt " +
       "WHERE v = 41234").head
@@ -2599,7 +2631,7 @@ class CatalogSpec extends SparkSpec {
     rows(s"SELECT v FROM graft_cat.db.bloomt WHERE h = $hVal") shouldBe
       Seq(Seq(41234L))
     GraftTableCatalog.filesOpened.get should be <= 2L
-    // STRING point probe through the same sidecar
+    // STRING point probe through the same file's filter
     GraftTableCatalog.filesOpened.set(0)
     rows(s"SELECT v FROM graft_cat.db.bloomt WHERE s = '$sVal'") shouldBe
       Seq(Seq(41234L))
@@ -2624,14 +2656,14 @@ class CatalogSpec extends SparkSpec {
     GraftTableCatalog.filesOpened.set(0)
     rows(s"SELECT count(*) FROM graft_cat.db.bloomc WHERE h = $hVal")
     GraftTableCatalog.filesOpened.get shouldBe 8L
-    // compaction REBUILDS the sidecars: point pruning survives
-    // maintenance (the rewritten file carries a fresh bloom)
+    // compaction REBUILDS the filters: point pruning survives
+    // maintenance (the rewritten file carries fresh filters)
     sql("CALL graft_cat.sys.compact('db', 'bloomt', 1073741824)")
     val mc = GraftTableCatalog.readManifest(dir,
       GraftTableCatalog.readLatest(dir))
     mc.files.length shouldBe 1
     mc.files.head.bloomCols.length shouldBe 2
-    new File(dir, s"data/${mc.files.head.name}.bloom").exists() shouldBe true
+    footerHasFilters(dir, mc.files.head)
     GraftTableCatalog.filesOpened.set(0)
     rows("SELECT count(*) FROM graft_cat.db.bloomt WHERE s = 'nope'") shouldBe
       Seq(Seq(0L))
@@ -2643,11 +2675,29 @@ class CatalogSpec extends SparkSpec {
     sql("CREATE TABLE graft_cat.db.bloomg (k BIGINT, x DOUBLE) " +
       "TBLPROPERTIES ('write.bloom.columns'='x')")
     intercept[Exception](sql("INSERT INTO graft_cat.db.bloomg VALUES (1, 1.0)"))
-    // DELETE of a whole file removes its sidecar with it
+    // DELETE of a whole file and expiry leave no data file behind
     sql("DELETE FROM graft_cat.db.bloomt WHERE v >= 0") // all files drop
     sql("CALL graft_cat.sys.expire_versions('db', 'bloomt', 1)")
-    new File(dir, "data").listFiles()
-      .count(_.getName.endsWith(".bloom")) shouldBe 0
+    new File(dir, "data").list() shouldBe empty
+  }
+
+  /** The footer of `e`'s data file carries a filter for the file's first
+    * two columns (`h` and `s`), read through [[sources.Footers]]. */
+  private def footerHasFilters(dir: File, e: GraftTableCatalog.Entry): Unit =
+    sources.Footers.bloomMayHold(spark, new File(dir, s"data/${e.name}").getPath,
+      Seq(e.fieldIds(0) -> (0L: Any), e.fieldIds(1) -> ("": Any)))
+      .map(_.isDefined) shouldBe Seq(true, true)
+
+  /** Bytes of the one row group's bloom filter for `col` in `path`. */
+  private def bloomBytes(path: String, col: String): Int = {
+    import scala.jdk.CollectionConverters._
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(java.nio.file.Paths.get(path)))
+    try {
+      val Seq(g) = r.getFooter.getBlocks.asScala.toSeq
+      r.readBloomFilter(g.getColumns.asScala.find(_.getPath.toDotString == col)
+        .get).getBitsetSize
+    } finally r.close()
   }
 
   test("round-17 advice pins: days-partition extremes exact, branch refs survive concurrent mutation, spec swap is one record, absent partition errors") {
@@ -2740,20 +2790,20 @@ class CatalogSpec extends SparkSpec {
     val dataDir = new File(dir, "data")
     val before = dataDir.listFiles().map(_.getName).toSet
     before.size should be > 4
-    // plant a crashed writer's strands: a data file and its bloom sidecar
+    // plant a crashed writer's strands: a data file and a delete file
     val orphan = new File(dataDir, "deadbeef0001.parquet")
     java.nio.file.Files.write(orphan.toPath, Array.fill(64)(7.toByte))
-    java.nio.file.Files.write(new File(dataDir, "deadbeef0001.parquet.bloom")
+    java.nio.file.Files.write(new File(dataDir, "del-deadbeef0001.del")
       .toPath, Array.fill(32)(1.toByte))
     // an IN-FLIGHT write (fresh mtime) with a generous grace: untouched
     val r0 = rows("CALL graft_cat.sys.remove_orphans('db', 'orph', " +
       s"${60L * 60 * 1000})")
     r0.head.head shouldBe 0L
     dataDir.listFiles().map(_.getName).toSet should
-      contain allElementsOf Set("deadbeef0001.parquet", "deadbeef0001.parquet.bloom")
+      contain allElementsOf Set("deadbeef0001.parquet", "del-deadbeef0001.del")
     // age the strands past the window -> exactly the two orphans go
     orphan.setLastModified(System.currentTimeMillis - 10000)
-    new File(dataDir, "deadbeef0001.parquet.bloom")
+    new File(dataDir, "del-deadbeef0001.del")
       .setLastModified(System.currentTimeMillis - 10000)
     val r1 = rows("CALL graft_cat.sys.remove_orphans('db', 'orph', 5000)")
     r1.head.head shouldBe 2L
@@ -2955,27 +3005,19 @@ class CatalogSpec extends SparkSpec {
 package sources {
   /** CatalogSpec's doors into the catalog's package-private helpers. */
   private[graft] object CatalogSpecDoors {
-    import CatalogFormat._
-
     /** A sweep with grace `graceMs`: zero lets the spec observe segment
       * GC without waiting out the reclaim window. */
     def gcSegments(dir: File, graceMs: Long): Long =
       CatalogManifests.gcSegments(dir, graceMs)
 
-    /** Build an adaptively-sized bloom over `n` distinct longs, probe
-      * `probes` absent keys — (shipped words, measured fp). */
-    def bloomFp(n: Int, probes: Int): (Int, Double) = {
-      val bits = new Array[Long](BloomWords)
-      var i = 0
-      while (i < n) { bloomSet(bits, bloomMixLong(i.toLong)); i += 1 }
-      val sized = bloomSized(bits, n.toLong)
-      var fp = 0
-      var j = 0
-      while (j < probes) {
-        if (bloomMightContain(sized, bloomMixLong((n + j).toLong))) fp += 1
-        j += 1
-      }
-      (sized.length, fp.toDouble / probes)
+    /** Commit a new head whose entries list every column as a bloom
+      * column, on files written without filters: the shape of a table
+      * from before native Parquet bloom filters. */
+    def listBloomCols(dir: File): Unit = {
+      val v = GraftTableCatalog.readLatest(dir)
+      val m = GraftTableCatalog.readManifest(dir, v)
+      GraftTableCatalog.commitVersion(dir, v, "legacy",
+        m.files.map(e => e.copy(bloomCols = e.fieldIds)), prev = Some(m))
     }
   }
 }

@@ -235,19 +235,23 @@ class MetricsSpec extends SparkSpec {
     // graft_cat is the one transactional table format and its data files
     // are Parquet written by CatalogFileWriter, so a second writer minting
     // `.parquet` names inside graft/sources fails here, and so does any
-    // `.bin` name the retired row codec used.
+    // `.bin` name the retired row codec used or `.bloom` name of the
+    // retired bloom sidecar (bloom filters live in the Parquet file).
     val parquets = codeSites("src/main/scala/graft/sources", """\.parquet"""".r)
       .map { case (f, line, _) => s"$f:$line" }
     val bins = codeSites("src/main", """\.bin"""".r)
+      .map { case (f, line, _) => s"$f:$line" }
+    val blooms = codeSites("src/main", """\.bloom"""".r)
       .map { case (f, line, _) => s"$f:$line" }
     val registered = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/main/resources/META-INF/services/" +
         "org.apache.spark.sql.sources.DataSourceRegister")), "UTF-8")
       .split("\n").map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
     withClue(s".parquet sites: ${parquets.mkString(", ")}; .bin sites: " +
-        s"${bins.mkString(", ")}; registered: ${registered.mkString(", ")}: ") {
-      (parquets.map(_.takeWhile(_ != ':')), bins, registered) shouldBe
-        ((Seq("CatalogFormat.scala"), Nil, Seq("graft.sources.SeriesSource")))
+        s"${bins.mkString(", ")}; .bloom sites: ${blooms.mkString(", ")}; " +
+        s"registered: ${registered.mkString(", ")}: ") {
+      (parquets.map(_.takeWhile(_ != ':')), bins, blooms, registered) shouldBe
+        ((Seq("CatalogFormat.scala"), Nil, Nil, Seq("graft.sources.SeriesSource")))
     }
   }
 

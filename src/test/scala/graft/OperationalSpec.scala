@@ -451,6 +451,36 @@ class OperationalSpec extends SparkSpec {
     } finally graft.operators.Scale.deleteRecursively(root)
   }
 
+  test("footer bloom probe: a key held only in the last of several row groups may match, an absent key does not") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft-footer-bloom")
+    try {
+      // one file, keys in order, row groups of a few KiB, field id 7 on k
+      val dir = root.resolve("t").toString
+      val id7 = new org.apache.spark.sql.types.MetadataBuilder()
+        .putLong("parquet.field.id", 7L).build()
+      spark.range(0, 20000, 1, 1).select(col("id").as("k", id7))
+        .write.option("parquet.block.size", "16384")
+        .option("parquet.bloom.filter.enabled#k", "true")
+        .option("parquet.bloom.filter.expected.ndv#k", "20000")
+        .parquet(dir)
+      val Seq(file) = new java.io.File(dir).listFiles().toSeq
+        .filter(_.getName.endsWith(".parquet")).map(_.getPath)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(java.nio.file.Paths.get(file)))
+      val groups = try r.getFooter.getBlocks.asScala.toSeq finally r.close()
+      groups.size should be >= 2
+      // 19999 lies in the last row group's range only
+      val maxes = groups.map(_.getColumns.get(0).getStatistics.genericGetMax)
+      maxes.init.map(_.asInstanceOf[Long]).max should be < 19999L
+      maxes.last shouldBe 19999L
+      graft.sources.Footers.bloomMayHold(spark, file,
+        Seq(7 -> (19999L: Any), 7 -> (-5L: Any))) shouldBe
+        Seq(Some(true), Some(false))
+    } finally graft.operators.Scale.deleteRecursively(root)
+  }
+
   test("writeOnce: spec-gated reuse byte-for-byte, and a format flip rebuilds instead of serving the old bytes") {
     import org.apache.spark.sql.functions.col // not functions._: `not` would shadow the matcher
     import graft.operators.Scale
